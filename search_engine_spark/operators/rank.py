@@ -23,12 +23,16 @@ Execution paths:
   ``groupBy(docId)`` agg -> ``orderBy().limit(k)`` (Catalyst's
   TakeOrderedAndProject ≙ the reference's bounded PQ, IIM:1290-1313; partial
   + final aggregation come free).
-- :func:`score_query_daat` — per-segment ``applyInPandas`` DAAT kernel with
-  MaxScore/block-max pruning (Ding & Suel, SIGIR 2011): term-level and
-  block-level upper bounds decide which blocks are byte-decoded at all
-  (delta chains restart per block — see build.py), partition-local top-k,
-  driver-side k-merge. This mirrors the reference's per-segment
-  top-k -> global PQ two-stage shape at cluster scale.
+- :func:`score_query_daat` — DAAT kernel with MaxScore/block-max pruning
+  (Ding & Suel, SIGIR 2011): term-level and block-level upper bounds
+  decide which blocks are byte-decoded at all (delta chains restart per
+  block — see build.py). A workload that fits one bucket (the common
+  interactive query) runs as ONE task: term-pushed segment scan ->
+  ``coalesce(1)`` -> one kernel call over the whole packed rows ->
+  TakeOrderedAndProject. Bigger workloads re-key the compressed blocks by
+  docId-range bucket (one shuffle), score each bucket with a local top-k,
+  and merge globally — the reference's per-segment top-k -> global PQ
+  two-stage shape at cluster scale.
 """
 
 from __future__ import annotations
@@ -1149,10 +1153,11 @@ def _candidate_scan(segments: DataFrame, live_terms: list[str], term_stats) -> D
 
     Skipping the filter is semantically safe: the batch kernel touches rows
     only through qmeta-term lookups (``rows_by_term``), so non-query rows
-    ride the splitter shuffle but are never decoded or scored. The trade is
-    (1-coverage) extra shuffled bytes vs ~seconds of fixed predicate cost —
-    at >50% coverage the bytes are cheaper at every level, and MORE so at
-    high parallelism (bytes scale out, fixed cost does not). The coverage
+    ride the splitter shuffle (or the one-task scan) but are never decoded
+    or scored. The trade is (1-coverage) extra shuffled bytes vs ~seconds
+    of fixed predicate cost — at >50% coverage the bytes are cheaper at
+    every level, and MORE so at high parallelism (bytes scale out, fixed
+    cost does not). The coverage
     test needs the vocabulary size driver-side, so it only engages on the
     serving path (``term_stats`` as a pandas frame via
     ``load_term_stats_pdf``); Spark-DataFrame stats keep the pushdown."""
@@ -1170,37 +1175,47 @@ def _auto_buckets(spark: SparkSession, est_work: int | None) -> int:
     kernel overhead (64 buckets measured ~35% slower than 32 on a 4096-query
     workload); too few serializes the kernel stage. Scale with the work
     estimate, capped at the session's shuffle parallelism — a workload whose
-    candidate postings fit one task's budget gets ONE bucket and skips the
-    wide shuffle entirely (a 60-query rank-identity batch pays 1 kernel call
-    instead of 32 near-empty ones)."""
+    candidate postings fit one task's budget gets ONE bucket, and the DAAT
+    entry points then skip the splitter and the bucket shuffle entirely
+    (:func:`_one_task`: a 60-query rank-identity batch pays 1 kernel call in
+    1 task instead of 32 near-empty ones)."""
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if est_work is None:
         return cap
     return max(1, min(cap, -(-int(est_work) // _WORK_PER_BUCKET)))
 
 
+# Packed segment columns the DAAT kernels read (block metadata as Arrow
+# lists here; _blk_i64/_blk_i32 read both these and the bucketed bytes).
+_SEG_KERNEL_COLS = [
+    "term", "max_tf", "docids", "tfs", "dls", "block_last_docid",
+    "block_max_tf", "block_docid_off", "block_tf_off", "block_dl_off",
+]
+
+
 def _bucketize_segments(
     spark: SparkSession,
     seg: DataFrame,
-    n_buckets: int | None,
+    n_buckets: int,
     docid_span: tuple[int, int] | None = None,
     est_work: int | None = None,
 ) -> DataFrame | None:
     """Re-key packed segment rows by docId-range bucket (whole-block byte
     slicing with kernel-side range masks; sparse rows take one vectorized
     exact split — see :func:`_split_row_by_bucket`). Shared by the
-    single-query and batch DAAT paths. Returns None when no candidate rows
-    exist.
+    multi-bucket single-query and batch DAAT plans and by the serving
+    cache, which writes these rows as its shards at any bucket count.
 
     ``docid_span``: (lo, hi) inclusive docId bounds to bucket over. Pass the
     index-global span from the manifest (``stats.docid_lo/docid_hi``,
     written by finalize_index) to skip the span-agg job — a fixed ~1.5s
-    driver round-trip per workload. The span is a bucket-SIZING hint only:
+    driver round-trip per workload. Without a span, the span-agg job runs
+    and None is returned when no candidate rows exist; with one, no job
+    runs here and an empty candidate set yields an empty frame. The span is
+    a bucket-SIZING hint only:
     edge buckets are open-ended (see ``_bucket_bounds``), so a span that is
     narrower OR wider than the candidate docIds still scores every posting
     exactly once; surplus buckets are empty and cost nothing."""
-    if n_buckets is None:
-        n_buckets = _auto_buckets(spark, est_work)
     if docid_span is not None:
         lo, hi = int(docid_span[0]), int(docid_span[1])
     else:
@@ -1229,12 +1244,7 @@ def _bucketize_segments(
                 cols = zip(BUCKETED_SCHEMA.fieldNames(), zip(*out))
                 yield pd.DataFrame(dict(cols))
 
-    seg_cols = [
-        "term", "max_tf", "docids", "tfs", "dls", "block_last_docid",
-        "block_max_tf", "block_docid_off", "block_tf_off", "block_dl_off",
-        "min_docid", "ndocs",
-    ]
-    narrowed = seg.select(*seg_cols)
+    narrowed = seg.select(*_SEG_KERNEL_COLS, "min_docid", "ndocs")
     # The parquet scan coalesces by FILE bytes (maxPartitionBytes), which
     # lands big-workload candidate scans on a handful of partitions — the
     # python splitter then runs e.g. 9 tasks on 8 cores: one full wave plus
@@ -1259,6 +1269,30 @@ def _bucketize_segments(
     return bucketed.repartition(len(edges), "bucket")
 
 
+def _pdf_bounds(pdf: pd.DataFrame) -> tuple[int, int] | None:
+    """Inclusive docId range one kernel call owns. Bucketed rows carry their
+    bucket's [lo_docid, hi_docid]; whole segment rows (:func:`_one_task`)
+    own every docId, so their decoded postings need no range mask."""
+    if "lo_docid" not in pdf.columns:
+        return None
+    return int(pdf["lo_docid"].iat[0]), int(pdf["hi_docid"].iat[0])
+
+
+def _one_task(seg: DataFrame, kernel, schema: StructType) -> DataFrame:
+    """The one-bucket DAAT plan: candidate segment rows -> ``coalesce(1)``
+    -> ONE ``kernel(pdf)`` call over every whole packed row. No splitter
+    stage and no bucket exchange, so the plan is a single stage of one
+    task; the kernel's local top-k is already global. Emits no rows when
+    no candidate row exists."""
+
+    def run(batches):
+        pdfs = [pdf for pdf in batches if len(pdf)]
+        if pdfs:
+            yield kernel(pd.concat(pdfs, ignore_index=True))
+
+    return seg.select(*_SEG_KERNEL_COLS).coalesce(1).mapInPandas(run, schema)
+
+
 def _n_merge_tasks(spark: SparkSession, blob_ceiling: int) -> int:
     """Merge-shard count for the packed-blob top-k: ~0.5M entries per task,
     capped at the session's parallelism (1 for small workloads = the old
@@ -1281,17 +1315,17 @@ def _score_bucket_rows(
     ties: str,
     deleted: np.ndarray | None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Score one bucket's packed rows for a whole workload — the shared core
-    of the in-plan blob kernel and the serving-cache kernel (operators/
-    serving.py). Bucket bounds come from the rows themselves."""
-    bounds = (int(pdf["lo_docid"].iat[0]), int(pdf["hi_docid"].iat[0]))
+    """Score one bucket's packed rows for a whole workload — the shared
+    vectorized core of the in-plan kernels and the serving-cache kernel
+    (operators/serving.py). Bounds come from the rows themselves
+    (:func:`_pdf_bounds`)."""
     all_rows = list(pdf.itertuples(index=False))
     rows_by_term_i: dict[str, list[int]] = {}
     for i, r in enumerate(all_rows):
         rows_by_term_i.setdefault(r.term, []).append(i)
     return _daat_rows_batch(
         all_rows, rows_by_term_i, qmetas, scorer, avgdl, k, ties, deleted,
-        bounds,
+        _pdf_bounds(pdf),
     )
 
 
@@ -1398,7 +1432,12 @@ def score_queries_daat_batch(
     """Batch DAAT for a WHOLE QUERY WORKLOAD -> (qid, docId, score).
 
     One ``term IN (union of all query terms)`` segment scan, one bucketized
-    block shuffle, then ONE kernel per bucket. ``vectorized=True`` runs
+    block shuffle, then ONE kernel per bucket. When the bucket count
+    (explicit ``n_buckets`` or :func:`_auto_buckets`) is 1, the scan feeds
+    one kernel call in one task instead (:func:`_one_task`) and the merge
+    exchange goes too: that call's per-qid top-k is final.
+
+    ``vectorized=True`` runs
     :func:`_daat_rows_batch`: each packed row decodes once per bucket
     and the whole workload reduces with L2-resident accumulators — decode
     sharing beats per-query block pruning for batches, and the result is
@@ -1428,9 +1467,6 @@ def score_queries_daat_batch(
     if n_buckets is None:
         n_buckets = _auto_buckets(spark, est_work)
     seg = _candidate_scan(segments, live_terms, term_stats)
-    bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
-    if bucketed is None:
-        return spark.createDataFrame([], BATCH_SCHEMA)
     # big workloads ship qmetas via broadcast, not closure capture: a
     # 16k-query qmetas cloudpickles to ~1 MB, and a captured closure is
     # re-shipped and re-unpickled PER TASK (48+ tasks/workload); a broadcast
@@ -1440,25 +1476,20 @@ def score_queries_daat_batch(
     )
     qmetas_local = None if qmetas_ref is not None else qmetas
 
-    def kernel(key, pdf):
-        # one itertuples pass per bucket; the vectorized core decodes each
-        # row once and reduces the whole workload in numpy, the per-query
-        # core keeps θ/block-max pruning per query — no per-query pandas
-        # in either
+    def score_rows(pdf):
+        # one itertuples pass per kernel call; the vectorized core decodes
+        # each row once and reduces the whole workload in numpy, the
+        # per-query core keeps θ/block-max pruning per query — no per-query
+        # pandas in either
         qmetas = qmetas_local if qmetas_ref is None else qmetas_ref.value
-        bounds = (int(pdf["lo_docid"].iat[0]), int(pdf["hi_docid"].iat[0]))
         if vectorized:
-            all_rows = list(pdf.itertuples(index=False))
-            rows_by_term_i: dict[str, list[int]] = {}
-            for i, r in enumerate(all_rows):
-                rows_by_term_i.setdefault(r.term, []).append(i)
-            qv, dv, sv = _daat_rows_batch(
-                all_rows, rows_by_term_i, qmetas, scorer, avgdl, k, ties,
-                deleted, bounds,
+            qv, dv, sv = _score_bucket_rows(
+                pdf, qmetas, scorer, avgdl, k, ties, deleted
             )
             return pd.DataFrame(
                 {"qid": qv, "docId": dv.astype("int64"), "score": sv}
             )
+        bounds = _pdf_bounds(pdf)
         rows_by_term: dict[str, list] = {}
         for r in pdf.itertuples(index=False):
             rows_by_term.setdefault(r.term, []).append(r)
@@ -1488,6 +1519,19 @@ def score_queries_daat_batch(
                 "score": pd.Series(dtype="float64"),
             }
         )
+
+    if n_buckets == 1:
+        # one bucket's per-qid top-k is already final: no merge exchange,
+        # only the blob merge's (qid asc, score desc, docId tie) order
+        if k is None:
+            return _one_task(seg, score_rows, BATCH_SCHEMA)
+        return _one_task(
+            seg, lambda pdf: _topk_pdf_for(score_rows(pdf), k, ties),
+            BATCH_SCHEMA,
+        )
+    bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
+    if bucketed is None:
+        return spark.createDataFrame([], BATCH_SCHEMA)
 
     # Merge strategy for the per-bucket top-k. The row merge shuffles every
     # per-(bucket, query) candidate as a JVM row (2M rows for a 16k-query
@@ -1526,7 +1570,9 @@ def score_queries_daat_batch(
             merge_blobs, BATCH_SCHEMA
         )
 
-    local = bucketed.groupBy("bucket").applyInPandas(kernel, BATCH_SCHEMA)
+    local = bucketed.groupBy("bucket").applyInPandas(
+        lambda key, pdf: score_rows(pdf), BATCH_SCHEMA
+    )
     if k is None:
         return local
     return _batch_topk(local, k, ties)
@@ -1554,6 +1600,13 @@ def score_query_daat(
     top-k -> global TakeOrderedAndProject (≙ the reference's per-segment
     top-k + global PQ, IIM:1282-1313).
 
+    When the bucket count (explicit ``n_buckets`` or :func:`_auto_buckets`
+    over the query's Σdf) is 1 — any interactive query whose postings fit
+    one task — the re-key is skipped: pushed scan -> ``coalesce(1)`` -> one
+    kernel call over the whole packed rows -> TakeOrderedAndProject, one
+    Spark job of one task with no exchange (:func:`_one_task`). It needs no
+    ``docid_span`` either, so the span-agg job never runs on that plan.
+
     ``deleted``: sorted int64 tombstone array (operators/delete.py
     ``deleted_array``) — masked inside the kernel as blocks decode, so
     pruning and lazy deletion compose.
@@ -1573,16 +1626,22 @@ def score_query_daat(
     qmeta = {t: (idf, qtf) for t, df_, idf, qtf in rows}
     est_work = sum(df_ for _, df_, _, _ in rows)
     seg = segments.where(isin_expr("term", list(qmeta)))
-    bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
-    if bucketed is None:
-        return spark.createDataFrame([], SCORE_SCHEMA)
+    if n_buckets is None:
+        n_buckets = _auto_buckets(spark, est_work)
 
-    def kernel(key, pdf):
-        bounds = (int(pdf["lo_docid"].iat[0]), int(pdf["hi_docid"].iat[0]))
+    def score_rows(pdf):
         return _daat_segment(pdf, qmeta, scorer, avgdl, k, prune, ties,
-                             deleted=deleted, bounds=bounds)
+                             deleted=deleted, bounds=_pdf_bounds(pdf))
 
-    local = bucketed.groupBy("bucket").applyInPandas(kernel, SCORE_SCHEMA)
+    if n_buckets == 1:
+        local = _one_task(seg, score_rows, SCORE_SCHEMA)
+    else:
+        bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
+        if bucketed is None:
+            return spark.createDataFrame([], SCORE_SCHEMA)
+        local = bucketed.groupBy("bucket").applyInPandas(
+            lambda key, pdf: score_rows(pdf), SCORE_SCHEMA
+        )
     order = [F.desc("score"), F.desc("docId") if ties == "desc" else F.asc("docId")]
     out = local.orderBy(*order)
     return out.limit(k) if k is not None else out

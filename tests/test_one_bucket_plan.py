@@ -1,0 +1,244 @@
+"""The one-bucket DAAT plan (rank._one_task): a workload whose postings fit
+one bucket skips the splitter and the bucket shuffle and scores the whole
+packed segment rows in one task.
+
+Pins its cost (one Spark job, no exchange) and its answers: equal to the
+multi-bucket plan and to the single-node oracle on every option the entry
+points take, including empty hit sets.
+"""
+
+from __future__ import annotations
+
+import io
+import os
+from contextlib import redirect_stdout
+
+import numpy as np
+import pytest
+
+from search_engine_spark.operators import rank as R
+from search_engine_spark.operators.query import analyze_query
+from search_engine_spark.plans.oracle import OracleIndex
+from search_engine_spark.sources import segments as S
+
+QUERIES = {
+    0: ["def", "import"],
+    1: ["apple", "rotten", "tok3"],
+    2: ["tok1"],
+    3: ["tok3", "tok3", "string"],
+}
+
+
+@pytest.fixture(scope="module")
+def idx(spark, tmp_path_factory):
+    from search_engine_spark.sources.corpus import synthetic_corpus
+
+    # two batches and salted heavy terms: several packed rows per term
+    p = str(tmp_path_factory.mktemp("onebucket") / "idx")
+    corpus = synthetic_corpus(spark, n_docs=300, vocab_size=400, seed=29)
+    m = S.build_index(spark, corpus, p, analyzer="porter", n_batches=2,
+                      heavy_threshold=50, n_salts=4)
+    pdf = corpus.select("docId", "content").toPandas()
+    oracle = OracleIndex(dict(zip(pdf.docId, pdf.content)))
+    segs, stats = S.load_segments(spark, p), S.load_term_stats(spark, p)
+    return p, m, segs, stats, oracle
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def _collect_jobs(spark, df, group: str):
+    """Collect ``df`` under its own job group -> (rows, Spark job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _same(got, want):
+    assert [d for d, _ in got] == [d for d, _ in want]
+    assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want))
+
+
+def _oracle(oracle, kw, k, kind="bm25", ties="desc", deleted=()):
+    """Lazy deletion keeps N/df/avgdl of the index: tombstones only drop
+    docs from the ranking."""
+    ranked = [it for it in oracle.topk(kw, None, kind, ties) if it[0] not in deleted]
+    return ranked[:k] if k is not None else ranked
+
+
+def _single(spark, idx, kw, k=10, **kw_args):
+    p, m, segs, stats, _ = idx
+    nd, avg = m["stats"]["n_docs"], m["stats"]["avgdl"]
+    return R.score_query_daat(spark, segs, stats, kw, nd, avg, k=k, **kw_args)
+
+
+def _batch(spark, idx, queries, k=10, **kw_args):
+    p, m, segs, stats, _ = idx
+    nd, avg = m["stats"]["n_docs"], m["stats"]["avgdl"]
+    return R.score_queries_daat_batch(
+        spark, segs, stats, queries, nd, avg, k=k, **kw_args
+    )
+
+
+def _by_qid(rows):
+    out: dict[int, list] = {}
+    for r in rows:
+        out.setdefault(r.qid, []).append((r.docId, r.score))
+    return out
+
+
+def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
+    """A one-bucket query is one Spark job of a single Python stage; an
+    auxiliary job or a reinstated shuffle fails here."""
+    span = S.docid_span(idx[0])
+    one = _single(spark, idx, QUERIES[1], docid_span=span)
+    plan = _plan(one)
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 1
+    assert "TakeOrderedAndProject" in plan
+    rows, jobs = _collect_jobs(spark, one, "one_bucket_single")
+    assert rows and jobs == 1
+
+    batch = _batch(spark, idx, QUERIES, docid_span=span)
+    plan = _plan(batch)
+    assert "Exchange" not in plan, plan
+    assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 1
+    rows, jobs = _collect_jobs(spark, batch, "one_bucket_batch")
+    assert rows and jobs == 1
+
+    # an explicit multi-bucket count keeps the bucket re-key shuffle
+    for df in (_single(spark, idx, QUERIES[1], n_buckets=4, docid_span=span),
+               _batch(spark, idx, QUERIES, n_buckets=4, docid_span=span)):
+        assert "Exchange hashpartitioning(bucket" in _plan(df)
+
+
+@pytest.mark.parametrize("kind", ["bm25", "tfidf_cosine"])
+@pytest.mark.parametrize("ties", ["asc", "desc"])
+def test_one_bucket_equals_multi_bucket_and_oracle(spark, idx, kind, ties):
+    oracle = idx[4]
+    sc = R.Scorer(kind)
+    one = _by_qid(_batch(spark, idx, QUERIES, scorer=sc, ties=ties).collect())
+    four = _by_qid(_batch(spark, idx, QUERIES, scorer=sc, ties=ties,
+                          n_buckets=4).collect())
+    for qid, kw in QUERIES.items():
+        want = _oracle(oracle, kw, 10, kind, ties)
+        assert want
+        _same(one[qid], want)
+        _same(four[qid], want)
+    for kw in (QUERIES[0], QUERIES[3]):
+        want = _oracle(oracle, kw, 10, kind, ties)
+        for nb in (None, 4):
+            got = _single(spark, idx, kw, scorer=sc, ties=ties, n_buckets=nb)
+            _same([(r.docId, r.score) for r in got.collect()], want)
+
+
+def test_one_bucket_options_match_oracle(spark, idx):
+    """Tombstones, k=None, a narrow docid_span and pre-analyzed weights,
+    each on both plans."""
+    p, m, segs, stats, oracle = idx
+    kw = QUERIES[1]
+    everything = _oracle(oracle, kw, None)
+    deleted = np.array(sorted(d for d, _ in everything[:5]), dtype=np.int64)
+    narrow = (2**61, 2**61 + 1000)  # a sizing hint only: nearly all docs lie outside
+    for nb in (None, 4):
+        got = _single(spark, idx, kw, n_buckets=nb, deleted=deleted).collect()
+        _same([(r.docId, r.score) for r in got],
+              _oracle(oracle, kw, 10, deleted=set(deleted.tolist())))
+        got = _single(spark, idx, kw, k=None, n_buckets=nb).collect()
+        _same([(r.docId, r.score) for r in got], everything)
+        got = _single(spark, idx, kw, n_buckets=nb, docid_span=narrow).collect()
+        _same([(r.docId, r.score) for r in got], everything[:10])
+        full = _batch(spark, idx, QUERIES, k=None, n_buckets=nb,
+                      docid_span=narrow).collect()
+        for qid, got in _by_qid(full).items():
+            got.sort(key=lambda it: (-it[1], -it[0]))
+            _same(got, _oracle(oracle, QUERIES[qid], None))
+
+    # parser-style {term: weight} boosts: BM25 is linear in the query weight
+    words = {"apple": 2.5, "def": 0.5}
+    weights = {analyze_query([w])[0]: wt for w, wt in words.items()}
+    want: dict[int, float] = {}
+    for w, wt in words.items():
+        for d, s in oracle.score([w]).items():
+            want[d] = want.get(d, 0.0) + wt * s
+    want_top = sorted(want.items(), key=lambda it: (-it[1], -it[0]))[:10]
+    for nb in (None, 4):
+        got = _single(spark, idx, weights, n_buckets=nb, pre_analyzed=True)
+        _same([(r.docId, r.score) for r in got.collect()], want_top)
+
+
+def test_empty_hit_sets_return_typed_empty_frames(spark, idx):
+    """Unknown terms, and a query whose every hit is tombstoned, answer with
+    an empty frame of the entry point's schema on both plans."""
+    oracle = idx[4]
+    kw = ["tok1"]
+    all_hits = np.array(sorted(d for d, _ in _oracle(oracle, kw, None)), dtype=np.int64)
+    assert len(all_hits)
+
+    def dtypes(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for nb in (None, 4):
+        for df in (_single(spark, idx, ["zzz_absent"], n_buckets=nb),
+                   _single(spark, idx, kw, n_buckets=nb, deleted=all_hits)):
+            assert dtypes(df.schema) == dtypes(R.SCORE_SCHEMA)
+            assert df.collect() == []
+        for df in (_batch(spark, idx, {0: ["zzz_absent"]}, n_buckets=nb),
+                   _batch(spark, idx, {0: kw}, n_buckets=nb, deleted=all_hits),
+                   _batch(spark, idx, {0: kw}, k=None, n_buckets=nb,
+                          deleted=all_hits)):
+            assert dtypes(df.schema) == dtypes(R.BATCH_SCHEMA)
+            assert df.collect() == []
+
+
+def test_one_bucket_serving_cache_keeps_bucketed_shards(spark, tmp_path_factory):
+    """The serving cache still writes BUCKETED_SCHEMA shards at one bucket
+    (binary block metadata, through prepare AND refresh), and serving from
+    them answers like the in-plan one-bucket batch."""
+    import pyarrow.feather as feather
+    from pyspark.sql import functions as F
+
+    from search_engine_spark.operators.serving import (
+        prepare_serving_cache,
+        refresh_serving_cache,
+        score_queries_cached,
+    )
+    from search_engine_spark.sources.corpus import synthetic_corpus
+
+    root = tmp_path_factory.mktemp("onebucket_cache")
+    p, cdir = str(root / "idx"), str(root / "cache")
+    corpus = synthetic_corpus(spark, n_docs=240, vocab_size=300, seed=3)
+    delta = F.col("docId") % 6 == 0
+    S.build_index(spark, corpus.where(~delta), p, analyzer="porter", n_batches=1)
+    prepare_serving_cache(spark, p, cdir, n_buckets=1)
+    S.build_one_batch(spark, corpus.where(delta), p, key="delta1", analyzer="porter")
+    m = S.finalize_index(spark, p)
+    cache = refresh_serving_cache(spark, p, cdir)
+    assert cache["n_buckets"] == 1
+    files = [f for fs in cache["shards"].values() for f in fs]
+    assert any(".d" in f for f in files)  # the refresh wrote a delta shard
+    want_schema = [(f.name, f.dataType.simpleString()) for f in R.BUCKETED_SCHEMA]
+    type_names = {"int32": "int", "int64": "bigint", "string": "string",
+                  "binary": "binary"}
+    for f in files:
+        schema = feather.read_table(os.path.join(cdir, f)).schema
+        got = [(n, type_names[str(t)]) for n, t in zip(schema.names, schema.types)]
+        assert got == want_schema, f
+
+    stats = S.load_term_stats_pdf(p)
+    cached = _by_qid(score_queries_cached(spark, cache, stats, QUERIES, k=10).collect())
+    plan = _by_qid(R.score_queries_daat_batch(
+        spark, S.load_segments(spark, p), stats, QUERIES, m["stats"]["n_docs"],
+        m["stats"]["avgdl"], k=10).collect())
+    assert plan and cached.keys() == plan.keys()
+    for qid in plan:
+        _same(cached[qid], plan[qid])

@@ -90,6 +90,7 @@ def main() -> int:
         Scorer,
         score_queries_batch,
         score_query,
+        score_query_daat,
     )
     from search_engine_spark.operators.similarity import cosine_topk
     from search_engine_spark.session import get_spark
@@ -133,6 +134,16 @@ def main() -> int:
                     Scorer("bm25"), k=10, analyzer="naive"),
         ["pushed_term_filter", "broadcast_join", "partial_final_agg",
          "take_ordered_topk", "no_cartesian"],
+        out, results,
+    )
+    audit(
+        "one-bucket interactive BM25 (DAAT: pushed scan -> coalesce(1) -> one"
+        " kernel task -> TakeOrdered; no splitter, no bucket shuffle)",
+        score_query_daat(spark, segs, stats, terms, nd, avg, Scorer("bm25"),
+                         k=10, analyzer="naive",
+                         docid_span=(m["stats"]["docid_lo"], m["stats"]["docid_hi"])),
+        ["pushed_term_filter", "take_ordered_topk", "no_shuffle", "no_join",
+         "no_window"],
         out, results,
     )
     audit(

@@ -90,9 +90,9 @@ def main() -> int:
             mismatches.append({"q": q, "ids_ok": ids_ok, "err": err})
     sec = round(time.time() - t0, 2)
 
-    # SAME query set as ONE batched job (shared scan + one bucketized block
-    # shuffle): identity must hold query-for-query, and the wall-clock ratio
-    # is the throughput win of batching over per-query jobs.
+    # SAME query set as ONE batched job (shared scan, one kernel call per
+    # docId bucket): identity must hold query-for-query, and the wall-clock
+    # ratio is the throughput win of batching over per-query jobs.
     t1 = time.time()
     batch_rows = R.score_queries_daat_batch(
         spark, segs, stats, dict(enumerate(queries)), nd, avg, R.Scorer(), k,
@@ -154,7 +154,8 @@ max |score err| = {r['max_abs_score_err']:.2e}, {r['queries_per_sec']} queries/s
 end-to-end (each query a full Spark job at local[8]).
 
 Batched (same {r['n_queries']} queries as ONE ``score_queries_daat_batch``
-job — shared scan, one bucketized block shuffle, per-query θ):
+job — shared scan, one kernel call per docId bucket; a single task
+when the workload fits one bucket):
 **rank-identical {r['batch_rank_identical']}/{r['n_queries']},
 {r['batch_queries_per_sec']} queries/s** ({r['batch_sec']}s total —
 {r['sec'] / r['batch_sec']:.0f}× the per-job throughput).
