@@ -508,7 +508,8 @@ def load_term_stats_pdf(index_dir: str) -> pd.DataFrame:
     """Term stats as a driver-local pandas frame (pyarrow read, no Spark
     job). A serving process loads this ONCE and passes it to the rank
     entry points (`rank._term_dfs` accepts either form) — per-workload idf
-    lookup then costs a local isin instead of a ~1.5s Spark round-trip.
+    lookup then costs a local isin instead of a Spark round-trip (0.12-0.14 s
+    at local[2] on a 4-vCPU host, 2,000-doc index).
     Holds the whole vocabulary in driver RAM: ~24 bytes/term + strings, so
     fine to ~10^8 terms; beyond that keep the Spark DataFrame path."""
     import pyarrow.parquet as pq
