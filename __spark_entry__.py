@@ -2,7 +2,7 @@
 
 ``entry(spark)`` — flagship: build the inverted index over the sf0.001
 documents table (segments on disk, salted term-range shuffle, delta+varbyte
-packing) and run a BM25 top-10 via the distributed block-max DAAT path.
+packing) and run a BM25 top-10 via the distributed DAAT path.
 
 ``queries()`` / ``oracle_sql()`` — one entry per implemented operator family
 from SURVEY.md §2 plus the training-data pipeline operators (40 queries,
@@ -80,7 +80,7 @@ RANGE_FACET_COL = "n_chars"
 RANGE_FACET_EDGES = [150.0, 300.0, 450.0]
 COLLAPSE_K = 5
 DBQ_QUERY = "table AND NOT filter"  # delete-by-query boolean tree
-STATS_COLS = ["n_chars", "doc_id"]  # q14s metric-stats fields
+STATS_COLS = ["n_chars"]  # q14s metric-stats fields (bounded numeric metadata)
 PCT_FRACTIONS = [0.25, 0.5, 0.75, 0.95]  # q14p exact percentiles
 DH_EVENT_TYPE, DH_INTERVAL = "click", "day"  # q14d date-histogram scope
 RESCORE_WINDOW, RESCORE_BOOST = 40, 0.5  # q27 rescore window / phrase boost
@@ -200,7 +200,7 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: segment build + distributed BM25 block-max DAAT top-10."""
+    """Flagship: segment build + distributed BM25 DAAT top-10."""
     from search_engine_spark.operators.rank import Scorer, score_query_daat
     from search_engine_spark.sources.segments import load_segments, load_term_stats
 
@@ -508,7 +508,7 @@ RANKED_PARSED = '(query AND "hash join") OR sl*'
 
 def q_q19_ranked_parsed(spark, sf_dir):
     """q19: BM25-ranked query string — parse -> one-plan boolean filter ->
-    block-max DAAT over the tree's scoring terms (positive bare terms +
+    DAAT over the tree's scoring terms (positive bare terms +
     phrase constituents; the prefix leaf is a constant-score filter, so
     docs matching only via ``sl*`` rank with score 0.0). The Lucene
     parse->score path over the reference's Q8 scoring surface."""
@@ -789,7 +789,7 @@ def q_q14d_date_histogram(spark, sf_dir):
 
 def q_q27_rescore_phrase(spark, sf_dir):
     """q27: rescore window (Lucene QueryRescorer / ES rescore) — BM25
-    top-RESCORE_WINDOW via block-max DAAT, then ONLY those rows re-ranked
+    top-RESCORE_WINDOW via DAAT, then ONLY those rows re-ranked
     with an exact positional phrase signal (+RESCORE_BOOST on match);
     top-TOPK of the rescored window."""
     from search_engine_spark.operators.rank import Scorer, rescore_phrase
@@ -1052,8 +1052,8 @@ def q_e6_ivfpq_residual(spark, sf_dir):
 def q_q8_tfidf(spark, sf_dir):
     """TF-IDF cosine, ALL matching docs (reference §2.6 semantics).
 
-    Runs through the packed DAAT kernel (exhaustive — the kernel never
-    prunes the tfidf scorer): parquet `term IN` pushdown + byte-level block
+    Runs through the packed DAAT kernel (exhaustive, ``k=None``): parquet
+    `term IN` pushdown + byte-level block
     decode, no Python-object position lists anywhere on this path."""
     from search_engine_spark.operators.rank import Scorer, score_query_daat
     from search_engine_spark.sources.segments import load_segments, load_term_stats
@@ -1068,7 +1068,7 @@ def q_q8_tfidf(spark, sf_dir):
 
 
 def q_q8_bm25_topk(spark, sf_dir):
-    """BM25 top-10 through the full segment + block-max DAAT path."""
+    """BM25 top-10 through the full segment + DAAT path."""
     from search_engine_spark.operators.rank import Scorer, score_query_daat
     from search_engine_spark.sources.segments import load_segments, load_term_stats
 
@@ -1123,7 +1123,7 @@ _SHARDED_CACHE: dict = {}
 def q_q8s_sharded_bm25(spark, sf_dir):
     """BM25 top-10 over a FEDERATED 3-shard index (operators/federation.py,
     scatter mode): corpus hash-partitioned by docId into three independent
-    indexes, each scored by its own block-max DAAT job using GLOBAL stats
+    indexes, each scored by its own DAAT job using GLOBAL stats
     (df summed across shards, global n_docs/avgdl), per-shard top-k merged.
     Rank-identical to the single-index q8 path by construction — so the
     oracle is the SAME global BM25 SQL as q8_bm25_topk. This is the
@@ -1196,7 +1196,7 @@ def q_q8_bm25_batch(spark, sf_dir):
 
 
 def q_q8_bm25_batch_daat(spark, sf_dir):
-    """Q8 batched, block-max DAAT flavor: the SAME workload as
+    """Q8 batched, DAAT flavor: the SAME workload as
     q8_bm25_batch through ``score_queries_daat_batch`` — packed segment
     scan with term pushdown, zero-decode docId-bucket re-key (whole-block
     byte slices + kernel range mask), decode-once vectorized kernel, two
@@ -1920,7 +1920,7 @@ def q_q8_bm25_porter(spark, sf_dir):
     """BM25 top-10 through the FLAGSHIP analyzer chain (A3 punctuation
     tokenize -> A4 stopwords -> A5 porter stem, composed per A6
     ComposableAnalyzer.java:13-23 / Team2StressTest.java:30-31) and the full
-    segment + block-max DAAT path. Also writes the porter-postings side
+    segment + DAAT path. Also writes the porter-postings side
     table the oracle scores independently."""
     from search_engine_spark.operators.rank import Scorer, score_query_daat
     from search_engine_spark.sources.segments import load_segments, load_term_stats
@@ -3171,7 +3171,7 @@ def oracle_sql() -> dict[str, str]:
             WITH {_TOKS},
             stats AS (SELECT term, count(*)::int64 AS df FROM postings GROUP BY term)
             SELECT term, df FROM stats
-            WHERE term LIKE '{COMPLETE_PREFIX}%'
+            WHERE starts_with(term, '{COMPLETE_PREFIX.replace("'", "''")}')
             ORDER BY df DESC, term ASC LIMIT {COMPLETE_K}
         """,
         "q30_rescore_vector": f"""

@@ -16,7 +16,7 @@ a loaded window during one pass cannot poison every number.
 Timed stages (per trial, fresh temp dirs each):
 - ``index_build``      full resumable segment build over the sf documents table
   (tokenize -> salted hash shuffle -> delta+varbyte packed segments + stats)
-- ``bm25_topk_daat``   distributed block-max DAAT BM25 top-10
+- ``bm25_topk_daat``   distributed DAAT BM25 top-10
 - ``bm25_topk_decl``   declarative decode->agg->TakeOrdered BM25 top-10
 - ``tfidf_all``        reference-parity TF-IDF cosine, all matching docs
 - ``boolean_and`` / ``phrase``  boolean + positional phrase retrieval

@@ -59,8 +59,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "--clustered-ids", action="store_true",
         help="assign docIds clustered by repo (contiguous per-repo ranges) "
-        "so block-max WAND skips whole block runs on repo-correlated "
-        "queries; only applies when the input has no docId column",
+        "so repo-correlated postings share blocks; only applies when the "
+        "input has no docId column",
     )
     ap.add_argument("--master", default=None, help="local testing only")
     a = ap.parse_args(argv)

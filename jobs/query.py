@@ -5,7 +5,7 @@ Usage::
     spark-submit --py-files search_engine_spark.zip jobs/query.py \
         --index <index dir> --mode bm25 --k 10 -- spark query join
 
-Modes: bm25 (block-max DAAT), tfidf (reference-parity cosine), and/or/phrase
+Modes: bm25 (DAAT), tfidf (reference-parity cosine), and/or/phrase
 (boolean + positional), keyword, prefix (term-dictionary range seek),
 near (--window positional proximity), not (--exclude anti-terms),
 fuzzy (--max-dist/--max-expansions typo-tolerant dictionary expansion),

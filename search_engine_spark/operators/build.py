@@ -83,7 +83,7 @@ SEGMENT_SCHEMA = StructType(
         StructField("block_max_tf", ArrayType(IntegerType()), False),
         # byte offsets of each block inside docids/tfs/dls — the delta chain
         # restarts at every block, so a block is independently decodable
-        # (block-max WAND skips whole blocks without touching their bytes)
+        # (the bucket splitter ships whole blocks as byte slices)
         StructField("block_docid_off", ArrayType(IntegerType()), False),
         StructField("block_tf_off", ArrayType(IntegerType()), False),
         StructField("block_dl_off", ArrayType(IntegerType()), False),

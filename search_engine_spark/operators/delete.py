@@ -11,9 +11,7 @@ using the standard segmented-index design:
 - **query** anti-filters against the tombstone union: declaratively via
   :func:`live` (broadcast ``left_anti``), or inside the distributed DAAT
   kernel via ``score_query_daat(..., deleted=deleted_array(...))`` — the
-  kernel masks decoded candidates, so block-max pruning and deletion
-  compose (masking only ever removes candidates, and block upper bounds
-  stay valid over-estimates);
+  kernel masks decoded postings before they are scored;
 - **corpus statistics stay as-built until purge** (df/idf/avgdl do not
   shift when a doc is tombstoned) — the standard lazy-deletion semantics:
   deleted docs stop matching immediately, surviving docs' scores move only

@@ -18,7 +18,7 @@ Execution shapes (both rank-identical to the single-index DAAT path):
   bucketizer re-keys blocks across shards (docIds are globally unique, so
   shard boundaries are invisible to the kernel). The co-located-cluster
   shape: no per-shard fan-out cost, one global top-k.
-* ``mode="scatter"`` — per-shard block-max DAAT top-k scored with the
+* ``mode="scatter"`` — per-shard DAAT top-k scored with the
   GLOBAL stats, then a merge that only ever sees S·k rows. The
   serving-fleet shape: each shard search is an independent job that could
   run on a different cluster; only (docId, score) pairs cross the wire.

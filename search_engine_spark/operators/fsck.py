@@ -19,8 +19,9 @@ emitting violation rows — no posting data ever reaches the driver):
   * docIds strictly increasing within each packed row; decoded count ==
     ``ndocs``; ``min_docid`` == first; tf/dl blob lengths match;
   * block metadata truthful: ``block_last_docid[i]`` is the i-th block's
-    actual last docId and ``block_max_tf[i]`` its actual max tf (block-max
-    WAND prunes on these — an understated max silently DROPS results);
+    actual last docId and ``block_max_tf[i]`` its actual max tf (the bucket
+    splitter routes blocks by the first; any bound-based block skipping
+    would trust the second, and an understated max would DROP results);
   * ``sum_tf``/``max_tf`` match the decoded tf sum/max; every tf ≥ 1;
     every dl ≥ tf (a posting can't occur more often than its doc is long);
   * positions (when present): per-posting varbyte position counts equal

@@ -637,8 +637,8 @@ def rank_query_string(
 
     Plan shape: the filter side is the :func:`search_parsed` plan (shared
     In-pushed decodes + one collect_set agg); the scoring side is the usual
-    block-max DAAT over ONLY the scoring terms' postings (``k=None`` — the
-    filter decides membership, so per-bucket top-k pruning cannot apply);
+    DAAT kernel over ONLY the scoring terms' postings (``k=None`` — the
+    filter decides membership, so a per-bucket top-k cut cannot apply);
     one left join stitches them, both sides candidate-sized, never the
     corpus. Scoring terms are already analyzed by the parser, so the DAAT
     path is entered with ``pre_analyzed=True`` (no double stemming).

@@ -1,5 +1,5 @@
 """Ranked retrieval (reference Q8 ``searchTfIdf``, IIM:1131-1315) + the
-north-rule BM25 top-k with block-max pruning.
+north-rule BM25 top-k.
 
 Two scorers share one posting-level kernel (SURVEY.md §2.6):
 
@@ -19,20 +19,20 @@ Tie-breaks, pinned from the reference:
   (``CompareResults`` IIM:1103-1114).
 
 Execution paths:
-- :func:`score_query` — declarative: decoded postings × broadcast idf map ->
-  ``groupBy(docId)`` agg -> ``orderBy().limit(k)`` (Catalyst's
-  TakeOrderedAndProject ≙ the reference's bounded PQ, IIM:1290-1313; partial
-  + final aggregation come free).
-- :func:`score_query_daat` — DAAT kernel with MaxScore/block-max pruning
-  (Ding & Suel, SIGIR 2011): term-level and block-level upper bounds
-  decide which blocks are byte-decoded at all (delta chains restart per
-  block — see build.py). A workload that fits one bucket (the common
-  interactive query) runs as ONE task: term-pushed segment scan ->
-  ``coalesce(1)`` -> one kernel call over the whole packed rows ->
-  TakeOrderedAndProject. Bigger workloads re-key the compressed blocks by
-  docId-range bucket (one shuffle), score each bucket with a local top-k,
-  and merge globally — the reference's per-segment top-k -> global PQ
-  two-stage shape at cluster scale.
+- :func:`score_query_daat` / :func:`score_queries_daat_batch` — the serving
+  paths, both running ONE DAAT kernel (:func:`_daat_rows_batch`, decode-once
+  with per-query accumulators; a single query is its Q=1 case). A workload
+  that fits one bucket (the common interactive query) runs as ONE task:
+  term-pushed segment scan -> ``coalesce(1)`` -> one kernel call over the
+  whole packed rows -> TakeOrderedAndProject. Bigger workloads re-key the
+  compressed blocks by docId-range bucket (one shuffle), score each bucket
+  with a local top-k, and merge globally — the reference's per-segment
+  top-k -> global PQ two-stage shape at cluster scale.
+- :func:`score_query` / :func:`score_queries_batch` — declarative: decoded
+  postings × broadcast idf map -> ``groupBy(docId)`` agg ->
+  ``orderBy().limit(k)`` (Catalyst's TakeOrderedAndProject ≙ the
+  reference's bounded PQ, IIM:1290-1313). The plan-audited second
+  implementation that tests compare the kernel against.
 """
 
 from __future__ import annotations
@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -119,9 +120,10 @@ def _idf_rows(term_stats, qtfs: dict[str, float], scorer: Scorer, n_docs: int):
 
 def _bm25_contrib(scorer: Scorer, avgdl: float):
     """THE per-(doc, term) BM25 contribution expression, over columns
-    (qtf, idf, tf, dl) — shared by :func:`score_query` (summed) and
-    :func:`explain_score` (exposed row-wise), so explain's factor rows can
-    never drift from the score they claim to decompose."""
+    (qtf, idf, tf, dl) — shared by :func:`score_query` and
+    :func:`score_queries_batch` (summed) and :func:`explain_score` (exposed
+    row-wise), so explain's factor rows can never drift from the score they
+    claim to decompose."""
     return (
         F.col("qtf")
         * F.col("idf")
@@ -360,16 +362,9 @@ def score_queries_batch(
         F.broadcast(qdf), "term"
     )
     if scorer.kind == "bm25":
-        contrib = (
-            F.col("qtf")
-            * F.col("idf")
-            * (F.col("tf") * (scorer.k1 + 1.0))
-            / (
-                F.col("tf")
-                + scorer.k1 * (1.0 - scorer.b + scorer.b * F.col("dl") / F.lit(avgdl))
-            )
+        scores = p.groupBy("qid", "docId").agg(
+            F.sum(_bm25_contrib(scorer, avgdl)).alias("score")
         )
-        scores = p.groupBy("qid", "docId").agg(F.sum(contrib).alias("score"))
     elif scorer.kind == "tfidf_cosine":
         wd = F.col("tf") * F.col("idf")
         scores = p.groupBy("qid", "docId").agg(
@@ -453,32 +448,16 @@ def _batch_topk(scores: DataFrame, k: int, ties: str) -> DataFrame:
     return pruned.repartition(n_final, "qid").mapInPandas(final, BATCH_SCHEMA)
 
 
-# --- DAAT kernel with MaxScore / block-max pruning --------------------------
-
-
-def _tf_upper(scorer: Scorer, max_tf: np.ndarray) -> np.ndarray:
-    """Upper bound of the tf-normalization for any dl (dl -> 0)."""
-    mt = np.asarray(max_tf, dtype=np.float64)
-    if scorer.kind == "bm25":
-        return mt * (scorer.k1 + 1.0) / (mt + scorer.k1 * (1.0 - scorer.b))
-    return mt  # tfidf: wd = tf*idf grows with tf; cosine norm ignored (≥)
+# --- DAAT kernel ----------------------------------------------------------
 
 
 def _tf_upper_scalar(scorer: Scorer, mt: float) -> float:
-    """Scalar twin of :func:`_tf_upper` — the batch kernel calls it once per
-    (query, packed row); going through numpy there costs more than the math."""
+    """Upper bound of a row's tf-normalization for any dl (dl -> 0). The
+    kernel orders each query's rows by it; called once per (query, packed
+    row), so plain floats — numpy there costs more than the math."""
     if scorer.kind == "bm25":
         return mt * (scorer.k1 + 1.0) / (mt + scorer.k1 * (1.0 - scorer.b))
     return mt
-
-
-def _blk_i64(v) -> np.ndarray:
-    """Block-metadata field -> int64 array. Bucketed shuffle rows pack these
-    as little-endian bytes (no per-element boxing through Arrow — the list
-    cells were ~half the bucketize stage), segment rows carry Arrow lists."""
-    if isinstance(v, (bytes, bytearray)):
-        return np.frombuffer(v, dtype="<i8")
-    return np.asarray(v, dtype=np.int64)
 
 
 def _blk_i32(v) -> np.ndarray:
@@ -487,14 +466,11 @@ def _blk_i32(v) -> np.ndarray:
     return np.asarray(v, dtype=np.int64)
 
 
-def _decode_row_blocks(r, take: np.ndarray | None):
-    """Byte-decode only the selected blocks of one packed row
-    (``take=None`` = all blocks)."""
+def _decode_row_blocks(r):
+    """Byte-decode every block of one packed row -> (docIds, tfs, dls)."""
     offs = _blk_i32(r.block_docid_off)
     toffs = _blk_i32(r.block_tf_off)
     dloffs = _blk_i32(r.block_dl_off)
-    if take is None:
-        take = np.ones(len(offs), dtype=bool)
     ends_d = np.append(offs[1:], len(r.docids))
     ends_t = np.append(toffs[1:], len(r.tfs))
     ends_l = np.append(dloffs[1:], len(r.dls))
@@ -504,7 +480,7 @@ def _decode_row_blocks(r, take: np.ndarray | None):
     memb_tf = len(r.tfs) == 0
     memb_dl = len(r.dls) == 0
     ds, ts, ls = [], [], []
-    for i in np.flatnonzero(take):
+    for i in range(len(offs)):
         deltas = varbyte_decode(r.docids, int(offs[i]), int(ends_d[i] - offs[i]))
         ds.append(np.cumsum(deltas))
         ones = np.ones(len(deltas), dtype=np.int64)
@@ -518,214 +494,6 @@ def _decode_row_blocks(r, take: np.ndarray | None):
     return np.concatenate(ds), np.concatenate(ts), np.concatenate(ls)
 
 
-def _daat_segment(
-    pdf: pd.DataFrame,
-    qmeta: dict[str, tuple[float, int]],
-    scorer: Scorer,
-    avgdl: float,
-    k: int | None,
-    prune: bool,
-    ties: str = "desc",
-    stats: dict | None = None,
-    deleted: np.ndarray | None = None,
-    bounds: tuple[int, int] | None = None,
-) -> pd.DataFrame:
-    """Score one segment's packed rows for the query terms.
-
-    Block-max WAND with per-block admission on EVERY row (bm25 only — the
-    tfidf cosine norm is non-monotone in added terms, so that scorer runs
-    exhaustive, exactly like the reference):
-
-    Rows decode in UB-desc order; θ = k-th best partial sum so far (a valid
-    lower bound on the k-th final score for bm25). Once θ is live, a block
-    decodes only if someone in it could still reach θ:
-
-    - a NEW doc, bounded by ``block_ub + rest_other`` (rest_other = later
-      rows of OTHER terms — a doc has exactly one salted row per term), or
-    - a KNOWN viable candidate in the block's docId range, bounded by its
-      ACTUAL accumulated partial + ``block_ub + rest_other`` (theoretical
-      prior-row UB sums are so loose they never prune).
-
-    Docs whose partial + total remaining UB < θ are non-viable and neither
-    keep blocks alive nor finish accumulating — they cannot enter the top
-    k, and θ only under-estimates, so pruned and exhaustive top-k are
-    identical (asserted continuously by tools/wand_audit.py).
-    """
-    uq, score = _daat_rows(
-        list(pdf.itertuples(index=False)), qmeta, scorer, avgdl, k, prune,
-        ties, stats=stats, deleted=deleted, bounds=bounds,
-    )
-    return pd.DataFrame({"docId": uq.astype("int64"), "score": score})
-
-
-def _daat_rows(
-    row_objs: list,
-    qmeta: dict[str, tuple[float, int]],
-    scorer: Scorer,
-    avgdl: float,
-    k: int | None,
-    prune: bool,
-    ties: str = "desc",
-    stats: dict | None = None,
-    deleted: np.ndarray | None = None,
-    bounds: tuple[int, int] | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Numpy core of :func:`_daat_segment` -> (docIds, scores), already
-    truncated to the local top-k with the global tie order. Takes bare row
-    objects (anything exposing the packed-segment fields) so the batch
-    kernel can group rows by term ONCE per bucket and skip the per-query
-    pandas filter/itertuples/DataFrame round-trip — at 256 queries x 64
-    buckets that pandas overhead was 85% of kernel CPU (profiled).
-
-    ``bounds=(lo, hi)``: keep only decoded docIds in the inclusive range —
-    bucketed rows ship whole blocks, so a bucket may receive postings that
-    belong to a neighbor and MUST drop them (a doc scores in exactly one
-    bucket)."""
-    rows = []
-    for r in row_objs:
-        idf, qtf = qmeta[r.term]
-        ub = qtf * idf * _tf_upper_scalar(scorer, float(r.max_tf))
-        rows.append((ub, r))
-    rows.sort(key=lambda x: -x[0])
-    # Per-doc remaining-gain bounds, SALT-AWARE: a doc appears in at most ONE
-    # row per term (salt = f(docId); batches partition docIds), so the gain
-    # still available to any doc from rows i.. is Σ over TERMS of that term's
-    # max row-UB among rows i.. — NOT the sum over all remaining rows, which
-    # over-counts salted terms by n_salts and (measured) never prunes.
-    n_rows = len(rows)
-    terms_of = [r.term for _, r in rows]
-    ubs = np.array([ub for ub, _ in rows], dtype=np.float64)
-    suffix_max: dict[str, np.ndarray] = {
-        t: np.zeros(n_rows + 1) for t in set(terms_of)
-    }
-    for t, arr in suffix_max.items():
-        for i in range(n_rows - 1, -1, -1):
-            arr[i] = max(arr[i + 1], ubs[i] if terms_of[i] == t else 0.0)
-    # suffix_ub[i] = max TOTAL gain from rows i.. for any single doc
-    suffix_ub = np.zeros(n_rows + 1)
-    for arr in suffix_max.values():
-        suffix_ub += arr
-
-    can_prune = prune and k is not None and scorer.kind == "bm25"
-
-    def contribs(r, tfs, dls):
-        idf, qtf = qmeta[r.term]
-        tfs = tfs.astype(np.float64)
-        if scorer.kind == "bm25":
-            c = qtf * idf * tfs * (scorer.k1 + 1.0) / (
-                tfs + scorer.k1 * (1.0 - scorer.b + scorer.b * dls / avgdl)
-            )
-            return c, None
-        wd = tfs * idf
-        return wd * (qtf * idf), wd * wd
-
-    acc_doc: list[np.ndarray] = []
-    acc_dot: list[np.ndarray] = []
-    acc_len: list[np.ndarray] = []
-    theta = -np.inf
-    # running (sorted candidate docIds, their accumulated partial scores) —
-    # refreshed after every decoded row; drives both θ and the block bounds
-    cand: np.ndarray | None = None
-    cpart: np.ndarray | None = None
-    for i, (ub, r) in enumerate(rows):
-        # strict <: a doc tying θ exactly could still enter top-k on tiebreak
-        blast = _blk_i64(r.block_last_docid)
-        take = np.ones(len(blast), dtype=bool)
-        if can_prune and theta > -np.inf:
-            # Per-block admission (block-max WAND, every row): a block must
-            # decode iff SOMEONE in it could still reach the k-th final
-            # score. Two cases, both bounded by this block's UB plus later
-            # rows of OTHER terms only (a doc has exactly one salted row per
-            # term, so this row is its single row for this term):
-            #   new doc   : bub + rest_other            (cpart = 0)
-            #   known doc : maxp + bub + rest_other     (maxp over VIABLE
-            #               candidates in the block's docId range)
-            # VIABLE = cpart + suffix_ub[i] >= θ: a doc below that can never
-            # reach the k-th final (bm25 partials only grow) and must not
-            # keep blocks alive. Top-k docs stay viable at all times (their
-            # partial + remaining UB ≥ their final ≥ θ), so every block a
-            # top-k doc needs still decodes; skipped docs may report
-            # under-accumulated scores but are truncated away, and θ only
-            # ever UNDER-estimates, so pruning stays sound. Clustered docIds
-            # bite exactly here: viable candidates concentrate in few docId
-            # ranges, and block runs outside them fail both cases.
-            idf, qtf = qmeta[r.term]
-            bub = qtf * idf * _tf_upper(scorer, _blk_i32(r.block_max_tf))
-            rest_other = suffix_ub[i + 1] - suffix_max[r.term][i + 1]
-            new_ok = (bub + rest_other) >= theta
-            if cand is not None:
-                viable = (cpart + suffix_ub[i]) >= theta
-                want, wpart = cand[viable], cpart[viable]
-            else:
-                want = np.empty(0, np.int64)
-                wpart = np.empty(0, np.float64)
-            prev = np.concatenate(([np.int64(-1)], blast[:-1]))
-            lo = np.searchsorted(want, prev, "right")
-            hi = np.searchsorted(want, blast, "right")
-            known_ok = np.zeros(len(blast), dtype=bool)
-            for b in np.flatnonzero(hi > lo):
-                known_ok[b] = (wpart[lo[b] : hi[b]].max() + bub[b] + rest_other) >= theta
-            take = new_ok | known_ok
-        if stats is not None:  # pruning-effectiveness audit (tools/wand_audit.py)
-            stats["blocks_total"] = stats.get("blocks_total", 0) + int(len(take))
-            stats["blocks_decoded"] = stats.get("blocks_decoded", 0) + int(take.sum())
-        d, t, l = _decode_row_blocks(r, take)
-        if bounds is not None and len(d):
-            i0 = np.searchsorted(d, bounds[0], "left")
-            i1 = np.searchsorted(d, bounds[1], "right")
-            d, t, l = d[i0:i1], t[i0:i1], l[i0:i1]
-        if deleted is not None and len(d):
-            # tombstone mask (operators/delete.py): drop deleted docs as
-            # they decode — θ then only ever reflects live docs, and block
-            # upper bounds remain valid over-estimates, so lazy deletion
-            # composes with block-max pruning. `deleted` is sorted.
-            pos = np.searchsorted(deleted, d)
-            pos[pos == deleted.size] = 0
-            keep = deleted[pos] != d if deleted.size else np.ones(len(d), bool)
-            d, t, l = d[keep], t[keep], l[keep]
-        if len(d) == 0:
-            continue
-        dot, ln = contribs(r, t, l)
-        acc_doc.append(d)
-        acc_dot.append(dot)
-        if ln is not None:
-            acc_len.append(ln)
-        if can_prune:
-            all_doc = np.concatenate(acc_doc)
-            cand, inv = np.unique(all_doc, return_inverse=True)
-            cpart = np.bincount(inv, weights=np.concatenate(acc_dot))
-            if len(cpart) >= k:
-                theta = float(np.partition(cpart, -k)[-k])
-    if not acc_doc:
-        z = np.empty(0, dtype=np.int64)
-        return z, np.empty(0, dtype=np.float64)
-    all_doc = np.concatenate(acc_doc)
-    uq, inv = np.unique(all_doc, return_inverse=True)
-    dot = np.bincount(inv, weights=np.concatenate(acc_dot))
-    if scorer.kind == "bm25":
-        score = dot
-    else:
-        ln = (
-            np.bincount(inv, weights=np.concatenate(acc_len))
-            if acc_len
-            else np.zeros(len(uq))
-        )
-        with np.errstate(divide="ignore", invalid="ignore"):
-            score = np.where(ln > 0, dot / np.sqrt(ln), 0.0)
-    if k is not None and len(uq) > k:
-        # local top-k truncation MUST use the same tie-break as the global
-        # sort (score desc, then docId per `ties`): with the global order
-        # docId-asc, a bucket breaking ties docId-desc would locally drop
-        # the smaller docId — the global winner. Reference comparators:
-        # per-segment docId-desc IIM:1266-1288, combined-mode docId-asc
-        # IIM:1103-1114. Integer tie key (no float cast — docIds > 2^53
-        # would lose precision).
-        tie = uq if ties == "asc" else -uq
-        order = np.lexsort((tie, -score))[:k]
-        uq, score = uq[order], score[order]
-    return uq, score
-
-
 def _daat_rows_batch(
     all_rows: list,
     rows_by_term: dict[str, list[int]],
@@ -737,17 +505,15 @@ def _daat_rows_batch(
     deleted: np.ndarray | None = None,
     bounds: tuple[int, int] | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode-once vectorized twin of the per-query :func:`_daat_rows` loop
-    for a whole workload -> (qids, docIds, scores), per-qid top-k applied.
+    """THE DAAT kernel: score a workload of queries over one bucket's packed
+    rows -> (qids, docIds, scores), per-qid top-k applied. A single query is
+    the Q=1 case (:func:`score_query_daat`).
 
-    The per-query loop re-decodes a packed row for EVERY query that touches
-    its term and pays ~100-200µs of small-numpy fixed cost per (query,
-    bucket) call — at 4096 queries x 64 buckets that is ~260k kernel calls
-    and decode of shared heavy terms repeats thousands of times. Here each
-    packed row decodes exactly once per bucket, each (row, qtf) contribution
-    array is computed once and shared by every query using that term, and
-    the whole bucket reduces with ONE unique/bincount + ONE segmented top-k
-    pass, so work scales with total postings, not query count.
+    Each packed row decodes exactly once per bucket, each (row, qtf)
+    contribution array is computed once and shared by every query using
+    that term, and the whole bucket reduces with ONE unique/bincount + ONE
+    segmented top-k pass, so work scales with total postings, not query
+    count.
 
     Reduction is ACCUMULATOR-based, not sort-based: the bucket builds ONE
     dense doc dictionary (``np.unique`` over the DISTINCT decoded postings —
@@ -762,17 +528,19 @@ def _daat_rows_batch(
     bucket) — L2-resident at any sane bucket size — so throughput scales
     with cores, not with one memory controller.
 
-    Output is BIT-IDENTICAL to running :func:`_daat_rows` per query with
-    ``prune=False`` (and rank/score-identical to ``prune=True``, whose
-    returned top-k scores are exact — asserted by tools/wand_audit.py):
+    Scores match the single-node oracle (plans/oracle.py) within float
+    rounding and do not depend on the rest of the workload: each
+    contribution uses the query's own scalar (qtf, idf) — parser ``^W``
+    weights arrive as float qtfs, used as-is — and per (qid, docId) the
+    partial sums add in one fixed row order (term order, then a stable sort
+    by row upper bound desc; a doc absent from a row adds bincount's exact
+    +0.0). The local top-k uses the global (score desc, docId ``ties``)
+    lexsort, so a bucket never drops a doc the global order keeps.
 
-    - contribution arrays evaluate the same expression with the same scalar
-      (qtf, idf) bindings, so they are the same floats;
-    - per (qid, docId) the partial sums add in UB-desc row order (stable
-      sort, same key), exactly the order the per-query loop feeds its own
-      bincount; a doc absent from a row contributes bincount's +0.0, which
-      is exact (contributions are never -0.0/NaN);
-    - the local top-k uses the same (score desc, docId ``ties``) lexsort.
+    ``bounds=(lo, hi)``: keep only decoded docIds in the inclusive range —
+    bucketed rows ship whole blocks, so a bucket may receive postings that
+    belong to a neighbor and MUST drop them (a doc scores in exactly one
+    bucket). ``deleted``: sorted int64 tombstones, dropped as rows decode.
     """
     decode_cache: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
     contrib_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray | None]] = {}
@@ -780,7 +548,7 @@ def _daat_rows_batch(
     def decoded(ri: int):
         got = decode_cache.get(ri)
         if got is None:
-            d, t, l = _decode_row_blocks(all_rows[ri], None)
+            d, t, l = _decode_row_blocks(all_rows[ri])
             if bounds is not None and len(d):
                 i0 = np.searchsorted(d, bounds[0], "left")
                 i1 = np.searchsorted(d, bounds[1], "right")
@@ -835,8 +603,8 @@ def _daat_rows_batch(
     out_doc: list[np.ndarray] = []
     out_score: list[np.ndarray] = []
     for qno, (qid, qm) in enumerate(qmetas.items(), start=1):
-        # same row order as the per-query path: qm iteration order, then a
-        # STABLE sort by UB desc (equal-UB rows keep their relative order)
+        # fixed summation order: qm iteration order, then a STABLE sort by
+        # UB desc (equal-UB rows keep their relative order)
         pairs = [
             (qm[t][1] * qm[t][0] * _tf_upper_scalar(scorer, float(all_rows[ri].max_tf)), ri, t)
             for t in qm
@@ -887,6 +655,7 @@ def _daat_rows_batch(
         else:
             score_q = dot_q
         if k is not None and len(docs_q) > k:
+            # integer tie key: docIds > 2^53 would lose precision as floats
             tie = docs_q if ties == "asc" else -docs_q
             order = np.lexsort((tie, -score_q))[:k]
             docs_q, score_q = docs_q[order], score_q[order]
@@ -918,8 +687,6 @@ def _daat_rows_batch(
 # bucket then holds every query-term posting for its docId range => the
 # per-bucket kernel computes complete scores and a valid local top-k.
 
-from pyspark.sql.types import BinaryType, IntegerType, StringType
-
 # per-(bucket, merge-shard) packed top-k results (little-endian i64/i64/f8
 # arrays): the blob merge path of score_queries_daat_batch. ``mkey`` shards
 # the merge by qid (qid % n_merge) so the final selection parallelizes —
@@ -948,8 +715,8 @@ BUCKETED_SCHEMA = StructType(
         StructField("dls", BinaryType(), False),
         # block metadata packed as little-endian bytes (i64 / i32): Arrow
         # list<int> cells box every element twice (python list build at the
-        # splitter, list-array build at serialization); these are zero-copy
-        # numpy views via _blk_i64/_blk_i32
+        # splitter, list-array build at serialization); the kernel reads the
+        # offsets as zero-copy numpy views via _blk_i32
         StructField("block_last_docid", BinaryType(), False),
         StructField("block_max_tf", BinaryType(), False),
         StructField("block_docid_off", BinaryType(), False),
@@ -986,9 +753,8 @@ def _split_row_exact(r, edges: np.ndarray, lo_global: int):
     3.4x wall on a 4096-query workload at 64 buckets). The re-encoded slice
     is a single block; the dispatch condition bounds postings per covered
     bucket to BLOCK_SIZE/2 ON AVERAGE (a skewed bucket can exceed it), so
-    slices stay well under one block in expectation and block-max
-    granularity is effectively preserved."""
-    d, t, l = _decode_row_blocks(r, None)
+    slices stay well under one block in expectation."""
+    d, t, l = _decode_row_blocks(r)
     bks = np.minimum(np.searchsorted(edges, d, "left"), len(edges) - 1)
     starts = np.flatnonzero(np.diff(bks)) + 1
     bnds = np.concatenate(([0], starts, [len(d)]))
@@ -1045,7 +811,7 @@ def _split_row_by_bucket(r, edges: np.ndarray, lo_global: int):
     dispatch to :func:`_split_row_exact` instead: duplicating a whole block
     to every bucket a 128-posting rare term touches is pure waste, while for
     dense rows (heavy terms, blocks spanning 2-4 buckets) byte-duplication
-    beats decode/re-encode and keeps real block-max granularity."""
+    beats decode/re-encode."""
     blast = np.asarray(r.block_last_docid, dtype=np.int64)
     bmax = np.asarray(r.block_max_tf, dtype=np.int64)
     offs_d = np.append(np.asarray(r.block_docid_off, np.int64), len(r.docids))
@@ -1112,18 +878,6 @@ _WORK_PER_BUCKET = 1 << 19
 # amplification at 2x packed bytes.
 _MAX_AVG_BLOCK_DUP = 2
 
-# Kernel crossover for score_queries_daat_batch(vectorized=None): below this
-# many queries the per-query block-max pruning loop would win. Measured by
-# tools/kernel_crossover.py (Q in 1..128, fixed 480k-doc index, BENCH.md):
-# the accumulator kernel won or tied at EVERY Q — including Q=1 over
-# all-heavy-term queries, pruning's best case by posting volume — because
-# the pruned loop's per-row candidate/θ refresh costs more than the decode
-# it skips once decode is shared and the reduce is L2-resident. So auto
-# always picks the accumulator kernel; ``vectorized=False`` remains for
-# explicit use (tools/wand_audit.py measures its decode-skip rate, which
-# still matters when a single query's candidate postings dwarf cache).
-_AUTO_VECTORIZED_MIN_Q = 1
-
 # Packed-blob merge ceiling (entries = Q x k x buckets): below this, the
 # per-bucket top-k results ship as packed binary rows and merge in a few
 # vectorized tasks; above it, the distributed row merge takes over
@@ -1186,8 +940,8 @@ def _auto_buckets(spark: SparkSession, est_work: int | None) -> int:
     return max(1, min(cap, -(-int(est_work) // _WORK_PER_BUCKET)))
 
 
-# Packed segment columns the DAAT kernels read (block metadata as Arrow
-# lists here; _blk_i64/_blk_i32 read both these and the bucketed bytes).
+# Packed segment columns the splitter and the DAAT kernel read (block
+# metadata as Arrow lists here; _blk_i32 reads these and bucketed bytes).
 _SEG_KERNEL_COLS = [
     "term", "max_tf", "docids", "tfs", "dls", "block_last_docid",
     "block_max_tf", "block_docid_off", "block_tf_off", "block_dl_off",
@@ -1423,48 +1177,33 @@ def score_queries_daat_batch(
     scorer: Scorer = Scorer(),
     k: int | None = 10,
     analyzer: str = "porter",
-    prune: bool = True,
     ties: str = "desc",
     n_buckets: int | None = None,
     deleted: np.ndarray | None = None,
     docid_span: tuple[int, int] | None = None,
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """Batch DAAT for a WHOLE QUERY WORKLOAD -> (qid, docId, score).
 
     One ``term IN (union of all query terms)`` segment scan, one bucketized
-    block shuffle, then ONE kernel per bucket. When the bucket count
-    (explicit ``n_buckets`` or :func:`_auto_buckets`) is 1, the scan feeds
-    one kernel call in one task instead (:func:`_one_task`) and the merge
-    exchange goes too: that call's per-qid top-k is final.
-
-    ``vectorized=True`` runs
-    :func:`_daat_rows_batch`: each packed row decodes once per bucket
-    and the whole workload reduces with L2-resident accumulators — decode
-    sharing beats per-query block pruning for batches, and the result is
-    bit-identical to the per-query path (see its docstring).
-    ``vectorized=False`` keeps the per-query :func:`_daat_rows` loop, where
-    each query gets its own θ / block-max admission — the path
-    tools/wand_audit.py measures, and the better shape for small Q over
-    huge postings (pruning skips decode the batch kernel would pay).
-    ``vectorized=None`` (default) auto-selects at the measured crossover
-    (tools/kernel_crossover.py): pruning wins only while Q is small enough
-    that per-query decode still beats shared decode — see
-    ``_AUTO_VECTORIZED_MIN_Q``. Per-qid results merge through the same
-    two-stage top-k as :func:`score_queries_batch`.
+    block shuffle, then ONE kernel call (:func:`_daat_rows_batch`) per
+    bucket: each packed row decodes once per bucket and the whole workload
+    reduces with L2-resident accumulators. When the bucket count (explicit
+    ``n_buckets`` or :func:`_auto_buckets`) is 1, the scan feeds one kernel
+    call in one task instead (:func:`_one_task`) and the merge exchange goes
+    too: that call's per-qid top-k is final. Per-bucket results merge as
+    packed blobs, or past ``_BLOB_MERGE_CAP`` through the same two-stage
+    top-k as :func:`score_queries_batch`.
 
     With ``k=None`` every (qid, docId, score) row is returned unordered
     (each docId lives in exactly one bucket, so rows are already final)."""
     # workload work estimate (est_work): one posting-score evaluation per
-    # (query, term, posting) — drives bucket count and the kernel
-    # crossover, driver-local (df comes from term stats, no job)
+    # (query, term, posting) — drives the bucket count, driver-local (df
+    # comes from term stats, no job)
     qmetas, live_terms, est_work = _prep_workload(
         term_stats, queries, scorer, n_docs, analyzer
     )
     if not qmetas:
         return spark.createDataFrame([], BATCH_SCHEMA)
-    if vectorized is None:
-        vectorized = len(qmetas) >= _AUTO_VECTORIZED_MIN_Q
     if n_buckets is None:
         n_buckets = _auto_buckets(spark, est_work)
     seg = _candidate_scan(segments, live_terms, term_stats)
@@ -1478,56 +1217,20 @@ def score_queries_daat_batch(
     qmetas_local = None if qmetas_ref is not None else qmetas
 
     def score_rows(pdf):
-        # one itertuples pass per kernel call; the vectorized core decodes
-        # each row once and reduces the whole workload in numpy, the
-        # per-query core keeps θ/block-max pruning per query — no per-query
-        # pandas in either
         qmetas = qmetas_local if qmetas_ref is None else qmetas_ref.value
-        if vectorized:
-            qv, dv, sv = _score_bucket_rows(
-                pdf, qmetas, scorer, avgdl, k, ties, deleted
-            )
-            return pd.DataFrame(
-                {"qid": qv, "docId": dv.astype("int64"), "score": sv}
-            )
-        bounds = _pdf_bounds(pdf)
-        rows_by_term: dict[str, list] = {}
-        for r in pdf.itertuples(index=False):
-            rows_by_term.setdefault(r.term, []).append(r)
-        qid_arrs, doc_arrs, score_arrs = [], [], []
-        for qid, qm in qmetas.items():
-            rows = [r for t in qm if t in rows_by_term for r in rows_by_term[t]]
-            if not rows:
-                continue
-            uq, sc = _daat_rows(rows, qm, scorer, avgdl, k, prune, ties,
-                                deleted=deleted, bounds=bounds)
-            if len(uq):
-                qid_arrs.append(np.full(len(uq), qid, dtype=np.int64))
-                doc_arrs.append(uq)
-                score_arrs.append(sc)
-        if qid_arrs:
-            return pd.DataFrame(
-                {
-                    "qid": np.concatenate(qid_arrs),
-                    "docId": np.concatenate(doc_arrs).astype("int64"),
-                    "score": np.concatenate(score_arrs),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "qid": pd.Series(dtype="int64"),
-                "docId": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
+        return _score_bucket_rows(pdf, qmetas, scorer, avgdl, k, ties, deleted)
+
+    def score_frame(pdf):
+        qv, dv, sv = score_rows(pdf)
+        return pd.DataFrame({"qid": qv, "docId": dv, "score": sv})
 
     if n_buckets == 1:
         # one bucket's per-qid top-k is already final: no merge exchange,
         # only the blob merge's (qid asc, score desc, docId tie) order
         if k is None:
-            return _one_task(seg, score_rows, BATCH_SCHEMA)
+            return _one_task(seg, score_frame, BATCH_SCHEMA)
         return _one_task(
-            seg, lambda pdf: _topk_pdf_for(score_rows(pdf), k, ties),
+            seg, lambda pdf: _topk_pdf_for(score_frame(pdf), k, ties),
             BATCH_SCHEMA,
         )
     bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
@@ -1544,19 +1247,11 @@ def score_queries_daat_batch(
     # vectorized segmented top-k at the end. Selection-only — scores are
     # untouched bytes, so results are bit-identical to the row merge.
     blob_ceiling = len(qmetas) * (k or 0) * max(int(n_buckets or 0), 1)
-    use_blobs = (
-        vectorized and k is not None
-        and 0 < blob_ceiling <= _BLOB_MERGE_CAP
-    )
-    if use_blobs:
+    if k is not None and 0 < blob_ceiling <= _BLOB_MERGE_CAP:
         n_merge = _n_merge_tasks(spark, blob_ceiling)
 
         def kernel_blob(key, pdf):
-            qmetas_b = qmetas_local if qmetas_ref is None else qmetas_ref.value
-            qv, dv, sv = _score_bucket_rows(
-                pdf, qmetas_b, scorer, avgdl, k, ties, deleted
-            )
-            return _packed_shards(qv, dv, sv, n_merge)
+            return _packed_shards(*score_rows(pdf), n_merge)
 
         def merge_blobs(batches):
             yield from _merge_packed(batches, k, ties)
@@ -1572,7 +1267,7 @@ def score_queries_daat_batch(
         )
 
     local = bucketed.groupBy("bucket").applyInPandas(
-        lambda key, pdf: score_rows(pdf), BATCH_SCHEMA
+        lambda key, pdf: score_frame(pdf), BATCH_SCHEMA
     )
     if k is None:
         return local
@@ -1589,17 +1284,17 @@ def score_query_daat(
     scorer: Scorer = Scorer(),
     k: int | None = 10,
     analyzer: str = "porter",
-    prune: bool = True,
     ties: str = "desc",
     n_buckets: int | None = None,
     deleted: np.ndarray | None = None,
     docid_span: tuple[int, int] | None = None,
     pre_analyzed: bool = False,
 ) -> DataFrame:
-    """Distributed block-max DAAT: parquet pushdown on term -> byte-level
-    block re-key by docId bucket -> per-bucket MaxScore kernel with local
+    """Distributed DAAT for one query: parquet pushdown on term ->
+    byte-level block re-key by docId bucket -> per-bucket kernel with local
     top-k -> global TakeOrderedAndProject (≙ the reference's per-segment
-    top-k + global PQ, IIM:1282-1313).
+    top-k + global PQ, IIM:1282-1313). The kernel is the batch one
+    (:func:`_daat_rows_batch`) at Q=1.
 
     When the bucket count (explicit ``n_buckets`` or :func:`_auto_buckets`
     over the query's Σdf) is 1 — any interactive query whose postings fit
@@ -1609,8 +1304,7 @@ def score_query_daat(
     ``docid_span`` either, so the span-agg job never runs on that plan.
 
     ``deleted``: sorted int64 tombstone array (operators/delete.py
-    ``deleted_array``) — masked inside the kernel as blocks decode, so
-    pruning and lazy deletion compose.
+    ``deleted_array``) — masked inside the kernel as rows decode.
 
     ``pre_analyzed``: keywords are already index terms (e.g. produced by
     the query parser's analysis pass) — count them as-is instead of
@@ -1631,8 +1325,10 @@ def score_query_daat(
         n_buckets = _auto_buckets(spark, est_work)
 
     def score_rows(pdf):
-        return _daat_segment(pdf, qmeta, scorer, avgdl, k, prune, ties,
-                             deleted=deleted, bounds=_pdf_bounds(pdf))
+        _, dv, sv = _score_bucket_rows(
+            pdf, {0: qmeta}, scorer, avgdl, k, ties, deleted
+        )
+        return pd.DataFrame({"docId": dv, "score": sv})
 
     if n_buckets == 1:
         local = _one_task(seg, score_rows, SCORE_SCHEMA)
@@ -1835,7 +1531,7 @@ def rescore_phrase(
     docid_span: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Rescore window — the Lucene ``QueryRescorer`` / ES ``rescore`` API:
-    rank with the cheap primary scorer (block-max DAAT BM25), then re-rank
+    rank with the cheap primary scorer (DAAT BM25), then re-rank
     ONLY the top-``window`` hits with a more expensive secondary signal —
     here an exact positional phrase match adding ``boost`` to the primary
     score — and return the top-``k`` of the rescored window. Docs outside
@@ -1963,7 +1659,7 @@ def score_query_fielded(
     mix; for one-token fields like ``lang`` the saturation term is exactly 1
     and the field contribution reduces to ``w_f · idf_f``).
 
-    Scale shape: one block-max DAAT pass per field (each with its own term
+    Scale shape: one DAAT pass per field (each with its own term
     pushdown + bucketized kernel), then the per-field candidate score sets —
     NOT the corpus — union and sum in one partial+final agg before
     TakeOrderedAndProject. Weighting selective fields (path, repo) is cheap;
@@ -2081,7 +1777,7 @@ def score_query_filtered(
     e.g. ``parse_bool("lang:en AND NOT draft")`` against fielded terms).
 
     Composition: the filter evaluates through the index (leaf-term pushdown,
-    one collect_set agg), the query scores through the usual block-max DAAT,
+    one collect_set agg), the query scores through the usual DAAT kernel,
     and a semi-join keeps scored docs inside the filter before the top-k.
     Both sides are candidate-sized (posting lists of their own terms), never
     the corpus; the join key is docId so AQE broadcasts the smaller side.

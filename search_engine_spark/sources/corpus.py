@@ -64,8 +64,8 @@ FIXTURE_SENTENCES = (
 # Zipf-ish vocabulary: a few extremely heavy code terms + a long tail.
 # Heavy terms are LANGUAGE-BIASED (each repo is one language, like real
 # corpora): term frequency correlates with repo, which is exactly the
-# structure that makes clustered docId assignment (below) pay off for
-# block-max WAND skipping. A shared slice keeps some terms corpus-wide.
+# structure that gives clustered docId assignment (below) per-block max_tf
+# variance. A shared slice keeps some terms corpus-wide.
 _HEAVY_BY_LANG = {
     "java": "public static void class new final int string import".split(),
     "py": "def import return self class none lambda for in".split(),
@@ -85,16 +85,15 @@ def doc_id_expr(repo="repo", path="path", commit="commit", clustered: bool = Fal
     collision the salt can be bumped.
 
     ``clustered=False``: uniform xxhash64 over the full key — ids spread
-    evenly, which is the WORST case for block-max WAND (strong candidates
-    land in every 128-posting block, so block skipping never bites —
-    measured in tools/wand_audit.py).
+    evenly, which is the WORST case for skipping blocks by their max-tf
+    bound (strong candidates land in every 128-posting block).
 
     ``clustered=True``: the top ``_CLUSTER_PREFIX_BITS`` bits come from
     xxhash64(repo), the rest from the full key — docs of one repo share a
     contiguous docId range, so posting lists sorted by docId group same-repo
     docs into the same blocks. Queries whose candidates concentrate in few
     repos (the realistic case: vocabulary correlates with repo/language)
-    then skip whole block runs. The trade is suffix width: 45 bits within a
+    then touch few block runs. The trade is suffix width: 45 bits within a
     repo — fine up to ~10^5-10^6 files/repo; at 10^12 total files with
     monster repos, switch to dense range assignment (sort by (repo, path),
     per-partition offsets from a count pass) — same contract, two-pass.
@@ -135,7 +134,7 @@ def dense_doc_ids(corpus: DataFrame, num_partitions: int | None = None) -> DataF
     variant promised in :func:`doc_id_expr`'s docstring: hashed clustered
     ids spend 45 suffix bits per repo, which monster repos (>~10^6 files)
     can exhaust; dense assignment has no per-repo width at all while
-    keeping the property block-max WAND exploits (same-repo docs occupy one
+    keeping the clustered-ids property (same-repo docs occupy one
     contiguous docId range, since repo is the leading sort key).
 
     Two passes, both scale-safe:

@@ -89,12 +89,12 @@ def test_adversarial_id_distributions(spark, tmp_path_factory, dist):
     assert max(r.b for r in per_bucket) <= src_bytes * (
         R._MAX_AVG_BLOCK_DUP + 0.5)
 
-    # 3) exactness under pruning for a mixed query, both distributions
+    # 3) exactness for a mixed query, both distributions
     q = ["heavy", "tok3", "tok17"]
     exhaustive = R.score_query(
         spark, S.decode_postings(segs), ts, q, nd, avg, R.Scorer(), k=10,
         analyzer="naive", ties="asc")
     daat = R.score_query_daat(
         spark, segs, ts, q, nd, avg, R.Scorer(), k=10, analyzer="naive",
-        prune=True, ties="asc", n_buckets=n_buckets, docid_span=span)
+        ties="asc", n_buckets=n_buckets, docid_span=span)
     assert _score_rows(daat) == _score_rows(exhaustive)

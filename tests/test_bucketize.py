@@ -48,7 +48,7 @@ def _edges(span, n_buckets):
 
 def _row_covered(r, edges):
     """Bucket span of a row, mirroring the splitter's computation."""
-    blast = R._blk_i64(r.block_last_docid)
+    blast = np.asarray(r.block_last_docid, dtype=np.int64)
     b_hi = int(np.searchsorted(edges, blast[-1], "left"))
     b_lo = int(np.searchsorted(edges, r.min_docid, "left"))
     return b_hi - b_lo + 1
@@ -72,12 +72,12 @@ def test_split_reassembles_every_row(packed_rows, n_buckets):
             n_exact += 1
         else:
             n_dup += 1
-        full_d, full_t, full_l = R._decode_row_blocks(r, None)
+        full_d, full_t, full_l = R._decode_row_blocks(r)
         got = []
         seen_docs: set[int] = set()
         for tup in R._split_row_by_bucket(r, edges, span[0]):
             ns = types.SimpleNamespace(**dict(zip(names, tup)))
-            d, t, l = R._decode_row_blocks(ns, None)
+            d, t, l = R._decode_row_blocks(ns)
             i0 = np.searchsorted(d, ns.lo_docid, "left")
             i1 = np.searchsorted(d, ns.hi_docid, "right")
             d, t, l = d[i0:i1], t[i0:i1], l[i0:i1]
@@ -120,7 +120,7 @@ def test_exact_split_block_is_small(packed_rows):
         for tup in R._split_row_by_bucket(r, edges, span[0]):
             ns = types.SimpleNamespace(**dict(zip(names, tup)))
             assert len(ns.block_last_docid) // 8 == 1  # one block per slice
-            d, _, _ = R._decode_row_blocks(ns, None)
+            d, _, _ = R._decode_row_blocks(ns)
             sizes.append(len(d))
     assert sizes
     assert float(np.mean(sizes)) < BLOCK_SIZE // 2

@@ -81,7 +81,7 @@ def test_delete_by_keyword_uses_index_lookup(spark, tmp_index):
 def test_daat_deleted_mask(spark, tmp_index):
     """The kernel-side mask: (a) exhaustive scoring with `deleted` equals
     exhaustive scoring without it minus the deleted docs (live scores are
-    untouched — lazy-deletion stats semantics), and (b) pruned top-k equals
+    untouched — lazy-deletion stats semantics), and (b) the top-k equals
     the top-k of that filtered ranking."""
     corpus, m = _build(spark, tmp_index, heavy_threshold=5, n_salts=2)
     segs, stats = S.load_segments(spark, tmp_index), S.load_term_stats(spark, tmp_index)
@@ -105,7 +105,7 @@ def test_daat_deleted_mask(spark, tmp_index):
     k = 5
     topk = score_query_daat(
         spark, segs, stats, q, nd, avg, Scorer(), k=k, analyzer="naive",
-        prune=True, deleted=deleted,
+        deleted=deleted,
     ).toPandas()
     exp_k = exp.sort_values(
         ["score", "docId"], ascending=[False, False]

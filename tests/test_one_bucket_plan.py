@@ -4,7 +4,8 @@ packed segment rows in one task.
 
 Pins its cost (one Spark job, no exchange) and its answers: equal to the
 multi-bucket plan and to the single-node oracle on every option the entry
-points take, including empty hit sets.
+points take, including empty hit sets. Also pins the Spark job count of the
+fixture's index build.
 """
 
 from __future__ import annotations
@@ -29,15 +30,28 @@ QUERIES = {
 }
 
 
-@pytest.fixture(scope="module")
-def idx(spark, tmp_path_factory):
+# The build's Spark job count on the fixture below (local[4], 4 shuffle
+# partitions), measured and stable across runs.
+BUILD_JOBS = 34
+
+
+def _corpus(spark):
     from search_engine_spark.sources.corpus import synthetic_corpus
 
+    return synthetic_corpus(spark, n_docs=300, vocab_size=400, seed=29)
+
+
+def _build(spark, corpus, p):
     # two batches and salted heavy terms: several packed rows per term
+    return S.build_index(spark, corpus, p, analyzer="porter", n_batches=2,
+                         heavy_threshold=50, n_salts=4)
+
+
+@pytest.fixture(scope="module")
+def idx(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("onebucket") / "idx")
-    corpus = synthetic_corpus(spark, n_docs=300, vocab_size=400, seed=29)
-    m = S.build_index(spark, corpus, p, analyzer="porter", n_batches=2,
-                      heavy_threshold=50, n_salts=4)
+    corpus = _corpus(spark)
+    m = _build(spark, corpus, p)
     pdf = corpus.select("docId", "content").toPandas()
     oracle = OracleIndex(dict(zip(pdf.docId, pdf.content)))
     segs, stats = S.load_segments(spark, p), S.load_term_stats(spark, p)
@@ -51,16 +65,16 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def _collect_jobs(spark, df, group: str):
-    """Collect ``df`` under its own job group -> (rows, Spark job count)."""
+def _run_jobs(spark, fn, group: str):
+    """Run ``fn()`` under its own job group -> (result, Spark job count)."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        rows = df.collect()
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _same(got, want):
@@ -105,20 +119,31 @@ def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
     assert "Exchange" not in plan, plan
     assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 1
     assert "TakeOrderedAndProject" in plan
-    rows, jobs = _collect_jobs(spark, one, "one_bucket_single")
+    rows, jobs = _run_jobs(spark, one.collect, "one_bucket_single")
     assert rows and jobs == 1
 
     batch = _batch(spark, idx, QUERIES, docid_span=span)
     plan = _plan(batch)
     assert "Exchange" not in plan, plan
     assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 1
-    rows, jobs = _collect_jobs(spark, batch, "one_bucket_batch")
+    rows, jobs = _run_jobs(spark, batch.collect, "one_bucket_batch")
     assert rows and jobs == 1
 
     # an explicit multi-bucket count keeps the bucket re-key shuffle
     for df in (_single(spark, idx, QUERIES[1], n_buckets=4, docid_span=span),
                _batch(spark, idx, QUERIES, n_buckets=4, docid_span=span)):
         assert "Exchange hashpartitioning(bucket" in _plan(df)
+
+
+def test_build_job_count_is_pinned(spark, tmp_path_factory):
+    """The fixture's build runs exactly BUILD_JOBS Spark jobs: a new
+    auxiliary build job (or a removed one) fails here until the pin moves
+    with it."""
+    p = str(tmp_path_factory.mktemp("onebucket_build") / "idx")
+    m, jobs = _run_jobs(spark, lambda: _build(spark, _corpus(spark), p),
+                        "one_bucket_build")
+    assert m["stats"]["n_docs"] == 300
+    assert jobs == BUILD_JOBS
 
 
 @pytest.mark.parametrize("kind", ["bm25", "tfidf_cosine"])

@@ -83,17 +83,6 @@ def test_rank_identity_both_paths_both_scorers(spark, tfidf_index):
             assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, exp))
 
 
-def test_wand_prune_equals_exhaustive(spark, tfidf_index):
-    p, m, _ = tfidf_index
-    segs, stats = S.load_segments(spark, p), S.load_term_stats(spark, p)
-    nd, avg = m["stats"]["n_docs"], m["stats"]["avgdl"]
-    a = R.score_query_daat(spark, segs, stats, ["apple", "rotten"], nd, avg,
-                           R.Scorer(), 2, prune=True).collect()
-    b = R.score_query_daat(spark, segs, stats, ["apple", "rotten"], nd, avg,
-                           R.Scorer(), 2, prune=False).collect()
-    assert [(r.docId, r.score) for r in a] == [(r.docId, r.score) for r in b]
-
-
 def test_boolean_queries(spark, phrase_index):
     p, m, corpus = phrase_index
     dec = S.decode_postings(S.load_segments(spark, p))
@@ -140,7 +129,7 @@ def test_full_scan_oracle_matches_index(spark, phrase_index):
 
 def test_rank_identity_synthetic(spark, tmp_path_factory):
     """North-rule check at a less trivial scale: 250-doc synthetic corpus,
-    multi-batch + salting, BM25 top-10 rank-identical with pruning on."""
+    multi-batch + salting, BM25 top-10 rank-identical to the oracle."""
     from search_engine_spark.sources.corpus import synthetic_corpus
 
     p = str(tmp_path_factory.mktemp("synth") / "idx")
@@ -206,9 +195,9 @@ def test_batch_scoring_matches_per_query(spark, tmp_path_factory):
 
 
 def test_batch_daat_matches_per_query_daat(spark, tmp_path_factory):
-    """score_queries_daat_batch (one bucketized block shuffle, per-query θ)
-    must reproduce score_query_daat exactly with pruning ON, and agree with
-    the declarative batch path."""
+    """score_queries_daat_batch (one workload through the kernel) must
+    reproduce score_query_daat (its Q=1 case) per query, and agree with the
+    declarative batch path."""
     from search_engine_spark.sources.corpus import synthetic_corpus
 
     p = str(tmp_path_factory.mktemp("bdaat") / "idx")
@@ -264,13 +253,12 @@ def test_batch_daat_matches_per_query_daat(spark, tmp_path_factory):
     assert a == b
 
 
-def test_vectorized_batch_kernel_bit_exact(spark, tmp_path_factory):
-    """The decode-once vectorized batch kernel must reproduce the per-query
-    kernel loop BIT-exactly (same float scores, not merely same ranks):
-    same contribution expressions with the same scalar bindings, bincount
-    accumulation in the same UB-desc row order, same tie-break. Covers both
-    scorers, duplicate-term queries (qtf=2), shared terms across queries,
-    and both tie orders."""
+def test_batch_daat_matches_oracle(spark, tmp_path_factory):
+    """The batch DAAT kernel must give every qid the oracle's top-10 (same
+    docIds in order, scores within 1e-9) on the one-task plan and the
+    bucketed plan alike. Covers both scorers, both tie orders, a term
+    shared across queries, a duplicate-term query (qtf=2) and an absent
+    term (no rows for that qid)."""
     from search_engine_spark.sources.corpus import synthetic_corpus
 
     p = str(tmp_path_factory.mktemp("vbatch") / "idx")
@@ -279,6 +267,8 @@ def test_vectorized_batch_kernel_bit_exact(spark, tmp_path_factory):
                       heavy_threshold=60, n_salts=4)
     segs, stats = S.load_segments(spark, p), S.load_term_stats(spark, p)
     nd, avg = m["stats"]["n_docs"], m["stats"]["avgdl"]
+    pdf = corpus.select("docId", "content").toPandas()
+    oracle = OracleIndex(dict(zip(pdf.docId, pdf.content)), "porter")
     queries = {
         0: ["def", "import"],
         1: ["apple", "rotten", "tok3"],
@@ -286,40 +276,25 @@ def test_vectorized_batch_kernel_bit_exact(spark, tmp_path_factory):
         3: ["tok3", "tok3", "string"],   # qtf=2
         4: ["zzz_absent"],
     }
-    for kind in ("bm25", "tfidf"):
+    for kind in ("bm25", "tfidf_cosine"):
         sc = R.Scorer(kind)
         for ties in ("asc", "desc"):
-            vec = sorted(
-                (r.qid, r.docId, r.score)
+            for n_buckets in (1, 4):
+                by_q = {}
                 for r in R.score_queries_daat_batch(
                     spark, segs, stats, queries, nd, avg, sc, k=10,
-                    ties=ties, vectorized=True,
-                ).collect()
-            )
-            loop = sorted(
-                (r.qid, r.docId, r.score)
-                for r in R.score_queries_daat_batch(
-                    spark, segs, stats, queries, nd, avg, sc, k=10,
-                    ties=ties, prune=False, vectorized=False,
-                ).collect()
-            )
-            assert vec == loop and vec, (kind, ties)  # bit-exact, non-empty
-    # and rank/value-identical to the PRUNED per-query loop (bm25)
-    sc = R.Scorer("bm25")
-    vec = sorted(
-        (r.qid, r.docId, round(r.score, 9))
-        for r in R.score_queries_daat_batch(
-            spark, segs, stats, queries, nd, avg, sc, k=10, vectorized=True,
-        ).collect()
-    )
-    pruned = sorted(
-        (r.qid, r.docId, round(r.score, 9))
-        for r in R.score_queries_daat_batch(
-            spark, segs, stats, queries, nd, avg, sc, k=10, prune=True,
-            vectorized=False,
-        ).collect()
-    )
-    assert vec == pruned
+                    ties=ties, n_buckets=n_buckets,
+                ).collect():
+                    by_q.setdefault(r.qid, []).append((r.docId, r.score))
+                case = (kind, ties, n_buckets)
+                assert 4 not in by_q, case
+                for qid, kw in queries.items():
+                    want = oracle.topk(kw, 10, kind, ties)
+                    got = by_q.get(qid, [])
+                    assert [d for d, _ in got] == [d for d, _ in want], (case, qid)
+                    assert all(
+                        abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want)
+                    ), (case, qid)
 
 
 def test_serving_fast_paths_identical(spark, tmp_path_factory):
@@ -442,44 +417,6 @@ def test_daat_local_topk_tiebreak_both_modes(spark, tmp_path_factory):
         assert [r.docId for r in decl] == expect, ties
 
 
-def test_wand_pruning_skips_blocks_and_preserves_topk(spark, tmp_path_factory):
-    """Block-max MaxScore must actually SKIP blocks on an idf-skewed query
-    (salt-aware bounds: a doc has at most one salted row per term) and be a
-    pure I/O optimization — pruned and exhaustive top-k identical."""
-    import numpy as np
-
-    from search_engine_spark.operators.build import term_stats_from_segments
-    from search_engine_spark.operators.rank import _daat_segment, query_tfs
-    from search_engine_spark.sources.corpus import synthetic_corpus
-
-    p = str(tmp_path_factory.mktemp("wand") / "idx")
-    src = str(tmp_path_factory.mktemp("wand_src") / "corpus")
-    synthetic_corpus(spark, n_docs=8000, vocab_size=8000, seed=5).write.parquet(src)
-    corpus = spark.read.parquet(src)
-    m = S.build_index(spark, corpus, p, analyzer="naive", n_batches=1,
-                      num_segments=8, heavy_threshold=400, heavy_sample_mod=1)
-    segs = S.load_segments(spark, p)
-    nd, avg = m["stats"]["n_docs"], m["stats"]["avgdl"]
-    sc = R.Scorer("bm25")
-    q = ["tok3", "tok31", "tok900"]  # heavy + mid + rare: idf-skewed
-    qtfs = query_tfs(q, "naive")
-    ts = term_stats_from_segments(segs)
-    rows = ts.where(ts.term.isin(list(qtfs))).collect()
-    qmeta = {
-        r.term: (float(sc.idf(float(nd), np.array([r.df]))[0]), qtfs[r.term])
-        for r in rows
-    }
-    pdf = segs.where(segs.term.isin(list(qmeta))).select(
-        "term", "max_tf", "docids", "tfs", "dls", "block_last_docid",
-        "block_max_tf", "block_docid_off", "block_tf_off", "block_dl_off"
-    ).toPandas()
-    stats = {}
-    pruned = _daat_segment(pdf, qmeta, sc, avg, 10, prune=True, ties="asc", stats=stats)
-    exhaustive = _daat_segment(pdf, qmeta, sc, avg, 10, prune=False, ties="asc")
-    assert pruned.reset_index(drop=True).equals(exhaustive.reset_index(drop=True))
-    assert stats["blocks_decoded"] < stats["blocks_total"], stats
-
-
 def test_narrow_docid_span_is_a_hint_not_a_constraint(spark, tmp_path_factory):
     """A docid_span NARROWER than the data (stale manifest span: a batch
     committed after the last finalize_index, or a caller passing bad bounds)
@@ -509,14 +446,12 @@ def test_narrow_docid_span_is_a_hint_not_a_constraint(spark, tmp_path_factory):
                                   10, n_buckets=8, docid_span=narrow))
     assert got == full
     queries = {0: q, 1: ["tok1"]}
-    for vec in (True, False):
-        bfull = rows(R.score_queries_daat_batch(
-            spark, segs, stats, queries, nd, avg, R.Scorer(), 10,
-            n_buckets=8, vectorized=vec))
-        bgot = rows(R.score_queries_daat_batch(
-            spark, segs, stats, queries, nd, avg, R.Scorer(), 10,
-            n_buckets=8, docid_span=narrow, vectorized=vec))
-        assert bgot == bfull and bfull
+    bfull = rows(R.score_queries_daat_batch(
+        spark, segs, stats, queries, nd, avg, R.Scorer(), 10, n_buckets=8))
+    bgot = rows(R.score_queries_daat_batch(
+        spark, segs, stats, queries, nd, avg, R.Scorer(), 10, n_buckets=8,
+        docid_span=narrow))
+    assert bgot == bfull and bfull
 
 
 def test_more_like_this(spark, phrase_index):

@@ -707,8 +707,8 @@ def main() -> int:
     from search_engine_spark.operators.parser import rank_query_string
 
     audit(
-        "ranked query string (q19: parsed filter left-joined to block-max"
-        " DAAT scores, constant-score leaves rank at 0)",
+        "ranked query string (q19: parsed filter left-joined to DAAT"
+        " scores, constant-score leaves rank at 0)",
         rank_query_string(
             spark, segs, stats, '(spark AND "table scan") OR s*',
             nd, avg, k=10, analyzer="naive",

@@ -6,8 +6,8 @@ measured over a deterministic df-stratified sample of the indexed
 vocabulary — rare / mid / heavy document-frequency terms mixed into 1-3
 term queries — which is the honest generalization of "the reference query
 set" once the corpus is synthetic. A query counts as rank-identical when
-the distributed block-max DAAT top-10 (pruning ON, salted heavy terms,
-multi-batch index) returns the oracle's exact docID sequence AND every
+the distributed DAAT top-10 (salted heavy terms, multi-batch index)
+returns the oracle's exact docID sequence AND every
 score agrees within 1e-9.
 
 Usage::
@@ -78,7 +78,7 @@ def main() -> int:
         got = [
             (r.docId, r.score)
             for r in R.score_query_daat(
-                spark, segs, stats, q, nd, avg, R.Scorer(), k, prune=True
+                spark, segs, stats, q, nd, avg, R.Scorer(), k
             ).collect()
         ]
         ids_ok = [d for d, _ in got] == [d for d, _ in exp]
@@ -96,7 +96,6 @@ def main() -> int:
     t1 = time.time()
     batch_rows = R.score_queries_daat_batch(
         spark, segs, stats, dict(enumerate(queries)), nd, avg, R.Scorer(), k,
-        prune=True,
     ).collect()
     batch_sec = round(time.time() - t1, 2)
     by_q: dict[int, list] = {}
@@ -143,7 +142,7 @@ def _write_bench_section(r: dict) -> None:
     block = f"""{MARK_A}
 ## BM25 top-{r['k']} rank-identity rate (north-star metric)
 
-Distributed block-max DAAT (pruning ON, salted heavy terms, 2-batch index)
+Distributed DAAT (salted heavy terms, 2-batch index)
 vs the single-node numpy oracle, over {r['n_queries']} df-stratified 1-3 term
 queries on a {r['n_docs']:,}-doc porter-analyzed corpus; a query counts only
 if the full top-{r['k']} docID sequence is identical AND every score agrees
