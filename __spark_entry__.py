@@ -777,9 +777,11 @@ def q_q14d_date_histogram(spark, sf_dir):
     from search_engine_spark.operators.query import date_histogram
 
     # bucket boundaries follow the session tz; the DuckDB oracle reads the
-    # parquet timestamps as naive UTC, so pin UTC (idempotent under the
-    # engine's own get_spark, and the same dependency st1 already has)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # parquet timestamps as naive UTC. get_spark pins UTC (st1 depends on it
+    # too); a query must not change session state, so check it instead.
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz != "UTC":
+        raise RuntimeError(f"q14d needs spark.sql.session.timeZone=UTC, got {tz!r}")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").where(
         F.col("event_type") == DH_EVENT_TYPE
     )
@@ -2392,6 +2394,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the driver consumes this dict in order and may stop at its
         # per-round budget (r04 reached 50/91), so never-verified keys
         # must not sit behind already-green ones.
+        "d7_decontaminate": q_d7_decontaminate,
+        "t8_repetition_stats": q_t8_repetition,
+        "t10_pii_scrub": q_t10_pii_scrub,
+        "t11_sequence_pack": q_t11_sequence_pack,
+        "t12_domain_mix": q_t12_domain_mix,
+        "st2_user_sessions": q_st2_user_sessions,
+        "st3_trending_terms": q_st3_trending_terms,
         "q6c_complete": q_q6c_complete,
         "q30_rescore_vector": q_q30_rescore_vector,
         "q28_significant_terms": q_q28_significant_terms,
@@ -2442,13 +2451,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "t1b_lang_id_nb": q_t1b_lang_id_nb,
         "t2_quality_score": q_t2_quality,
         "t3_fingerprint": q_t3_fingerprint,
-        "t8_repetition_stats": q_t8_repetition,
-        "d7_decontaminate": q_d7_decontaminate,
-        "t10_pii_scrub": q_t10_pii_scrub,
-        "st2_user_sessions": q_st2_user_sessions,
-        "st3_trending_terms": q_st3_trending_terms,
-        "t11_sequence_pack": q_t11_sequence_pack,
-        "t12_domain_mix": q_t12_domain_mix,
         "m1_media_meta": q_m1_media_meta,
         "m2_media_features": q_m2_media_features,
         # --- driver-verified green in CORRECTNESS_r04:
@@ -3223,11 +3225,11 @@ def oracle_sql() -> dict[str, str]:
             {_bm25_scored_ctes(_qterm_values(Q_RANKED))},
             dec AS (
               SELECT s.doc_id,
-                     s.score * exp(
+                     s.score * CASE WHEN d.n_chars IS NULL THEN 1.0 ELSE exp(
                        -pow(abs(d.n_chars::double - {DECAY_ORIGIN}), 2)
                        / (2.0 * {_DECAY_SIGMA2!r})
-                     ) AS s2
-              FROM scored s JOIN documents d USING (doc_id)
+                     ) END AS s2
+              FROM scored s LEFT JOIN documents d USING (doc_id)
             )
             SELECT doc_id, round(s2, 6) AS score FROM dec
             ORDER BY s2 DESC, doc_id ASC LIMIT {TOPK}
@@ -3262,7 +3264,7 @@ def oracle_sql() -> dict[str, str]:
             )
             SELECT unnest({PCT_FRACTIONS})::double AS p,
                    round(unnest(vals), 6) AS value
-            FROM agg
+            FROM agg WHERE vals IS NOT NULL
         """,
         "q14d_date_histogram": f"""
             SELECT strftime(date_trunc('{DH_INTERVAL}', ts),

@@ -355,10 +355,6 @@ def main() -> None:
     print(json.dumps(result))
 
 
-BENCH_MD = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md")
-MARK_A, MARK_B = "<!-- bench:auto -->", "<!-- /bench:auto -->"
-
-
 def _latest_prior_bench() -> tuple[str, dict]:
     """Most recent driver-recorded BENCH_r{N}.json — the carry-forward
     column that makes regressions visible round over round."""
@@ -392,6 +388,8 @@ def write_bench_md(times: dict, thr: dict, sf, corpus_mb: float) -> None:
       for its ~1 GB corpus (IcsSearchEngineTest) => 900 * corpus_MB / 1024.
     Ratio < 1 means faster than the reference envelope at equivalent bytes.
     """
+    from tools.harness import write_section
+
     prior_name, prior = _latest_prior_bench()
     # build rows compare THROUGHPUT against the reference floor (0.85 MB/s
     # single-thread, Team2StressTest): size-independent, so meaningful at
@@ -404,7 +402,6 @@ def write_bench_md(times: dict, thr: dict, sf, corpus_mb: float) -> None:
         build_mb["synthetic_build_40k"] = thr["synthetic_corpus_mb"]
 
     lines = [
-        MARK_A,
         "## Per-query bench vs baseline envelope (auto-generated by bench.py)",
         "",
         f"sf={sf}, corpus ≈ {corpus_mb:.1f} MB, best of {thr.get('trials', 1)} "
@@ -433,18 +430,7 @@ def write_bench_md(times: dict, thr: dict, sf, corpus_mb: float) -> None:
         )
     for k, v in thr.items():
         lines.append(f"| {k} | {v} | — | — | — | — |")
-    lines.append(MARK_B)
-    block = "\n".join(lines)
-
-    text = open(BENCH_MD).read() if os.path.exists(BENCH_MD) else "# BENCH\n"
-    if MARK_A in text and MARK_B in text:
-        pre = text.split(MARK_A)[0]
-        post = text.split(MARK_B, 1)[1]
-        text = pre + block + post
-    else:
-        text = text.rstrip() + "\n\n" + block + "\n"
-    with open(BENCH_MD, "w") as f:
-        f.write(text)
+    write_section("bench:auto", "\n".join(lines))
 
 
 if __name__ == "__main__":

@@ -33,18 +33,22 @@ def compute_pagerank(
 ) -> DataFrame:
     """nodes: (docId); edges: (src, dst). Returns (docId, pagerank).
 
-    At cluster scale: `edges` is re-used every iteration — cache it; outdeg
-    is joined per iteration on src (sort-merge or broadcast per AQE). The
-    rank vector (one row per node) is the only state carried.
+    At cluster scale: `edges` is re-used every iteration — it is cached as
+    (src, dst, outdeg), so each iteration joins the rank vector to it once
+    (sort-merge or broadcast per AQE). The rank vector (one row per node) is
+    the only state carried.
     """
     nodes = nodes.select("docId").distinct()
-    edges = edges.select("src", "dst").cache()
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg")).cache()
+    edges = edges.select("src", "dst")
+    # pr / outdeg below stays a division (not pr * a precomputed 1/outdeg)
+    # so ranks are bit-identical to the reference update.
+    edges = edges.join(
+        edges.groupBy("src").agg(F.count("*").alias("outdeg")), "src"
+    ).cache()
     ranks = nodes.withColumn("pr", F.lit(1.0))
     for i in range(num_iterations):
         contribs = (
             ranks.join(edges, ranks["docId"] == edges["src"])
-            .join(outdeg, "src")
             .select(F.col("dst").alias("docId"), (F.col("pr") / F.col("outdeg")).alias("c"))
             .groupBy("docId")
             .agg(F.sum("c").alias("s"))

@@ -11,12 +11,9 @@ Usage: python tools/ann_recall.py [sf_dir] [k] [n_queries]
 from __future__ import annotations
 
 import json
-import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from harness import write_section
 
 
 # expected fraction of the corpus each method scans (its recall ceiling on
@@ -174,23 +171,19 @@ def main() -> int:
         "isotropic": iso, "clustered": clu,
     }
     print(json.dumps(report))
-    _write_bench_section(report)
+    write_section("ann_recall:auto", render(report))
     spark.stop()
     return 0
 
 
-MARK_A, MARK_B = "<!-- ann_recall:auto -->", "<!-- /ann_recall:auto -->"
-
-
-def _write_bench_section(r: dict) -> None:
+def render(r: dict) -> str:
     iso, clu = r["isotropic"], r["clustered"]
     rows = "\n".join(
         f"| {m} | {SCAN_FRAC[m]:.3f} | {iso['recall'][m]:.3f} | "
         f"{clu['recall'][m]:.3f} | {clu['sec_per_q'][m]:.2f} |"
         for m in iso["recall"]
     )
-    block = f"""{MARK_A}
-## ANN recall@{r['k']} vs exact cosine (quality audit)
+    return f"""## ANN recall@{r['k']} vs exact cosine (quality audit)
 
 {iso['n_queries']} deterministic query vectors, {r['n_vectors']:,} vectors,
 recall = overlap of the ANN top-{r['k']} with the exact brute-force
@@ -213,16 +206,7 @@ s/query. Two corpora:
 Per-query wall time at this corpus size is Spark job-launch overhead; the
 candidate-set reduction (scan frac) is the figure that scales.
 
-Reproduce: `python tools/ann_recall.py {r['sf_dir']} {r['k']} {iso['n_queries']}`
-{MARK_B}"""
-    p = os.path.join(REPO, "BENCH.md")
-    text = open(p).read() if os.path.exists(p) else ""
-    if MARK_A in text and MARK_B in text:
-        text = text.split(MARK_A)[0] + block + text.split(MARK_B, 1)[1]
-    else:
-        text = text.rstrip() + "\n\n" + block + "\n"
-    with open(p, "w") as f:
-        f.write(text)
+Reproduce: `python tools/ann_recall.py {r['sf_dir']} {r['k']} {iso['n_queries']}`"""
 
 
 if __name__ == "__main__":

@@ -5,170 +5,87 @@ The Spark query-scaling series (tools/query_scaling.py) mixes the kernel
 with scan/shuffle/scheduler machinery and this shared SMT host's noise.
 This tool isolates the kernel: it materializes the EXACT bucketized kernel
 input (the rows `score_queries_daat_batch`'s applyInPandas receives) to
-parquet once, then runs the ACTUAL `rank._daat_rows_batch` over those
+parquet once, then runs the ACTUAL `rank._score_bucket_rows` over those
 buckets with a plain multiprocessing pool at N and 4N processes —
 interleaved trials, fresh pool per measurement, one task per bucket, no
 JVM anywhere. Efficiency = (T_N * N) / (T_4N * 4N).
 
 Usage: python tools/kernel_scaling_mp.py [n_docs] [N] [trials] [n_queries]
-Defaults: 480000 2 3 16384. Reuses /tmp/query_scale_idx when present.
-Writes a marked BENCH.md section.
+Defaults: 480000 2 3 16384. Reuses /tmp/query_scale_idx when it holds
+n_docs; writes a marked BENCH.md section.
 """
 
 from __future__ import annotations
 
-import json
-import os
+import multiprocessing as mp
 import pickle
-import subprocess
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-IDX = "/tmp/query_scale_idx"
+import pyarrow.parquet as pq
+from harness import (
+    QUERY_IDX, cli, ensure_index, fresh, local_spark, n_vs_4n, secs,
+    stratified_queries, write_section)
+
+from search_engine_spark.functions.predicates import isin_expr
+from search_engine_spark.operators import rank as R
+from search_engine_spark.sources.segments import (
+    docid_span, load_segments, load_term_stats_pdf, read_manifest)
+
 BUCKETED = "/tmp/kernel_mp_bucketed"
 QMETAS = "/tmp/kernel_mp_qmetas.pkl"
 
-DUMP_SRC = r"""
-import json, os, pickle, random, sys
-sys.path.insert(0, __REPO__)
-import numpy as np
-from search_engine_spark.session import get_spark
-from search_engine_spark.operators import rank as R
-from search_engine_spark.operators.rank import Scorer, query_tfs
-from search_engine_spark.sources.segments import (
-    load_segments, docid_span, load_term_stats_pdf,
-)
-from search_engine_spark.functions.predicates import isin_expr
 
-idx, bucketed_out, qmetas_out, n_q = (
-    sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-)
-spark = get_spark(master="local[8]", shuffle_partitions=32)
-spark.sparkContext.setLogLevel("ERROR")
-segs = load_segments(spark, idx)
-stats = load_term_stats_pdf(idx)
-span = docid_span(idx)
-m = json.load(open(os.path.join(idx, "manifest.json")))
-avg, nd = m["stats"]["avgdl"], m["stats"]["n_docs"]
-
-# the query-scaling workload construction (df-stratified 1-3 terms)
-terms = sorted(zip(stats["term"], (int(d) for d in stats["df"])))
-terms.sort(key=lambda td: (td[1], td[0]))
-third = max(len(terms) // 3, 1)
-pools = [terms[:third], terms[third:2 * third], terms[2 * third:]]
-rng = random.Random(221)
-queries = {i: [rng.choice(pools[(i + j) % 3])[0] for j in range(1 + i % 3)]
-           for i in range(n_q)}
-
-sc = Scorer()
-per_q = {qid: query_tfs(kw, "porter") for qid, kw in queries.items()}
-union_terms = sorted({t for q in per_q.values() for t in q})
-df_map = R._term_dfs(stats, union_terms)
-idf_map = {t: float(sc.idf(float(nd), np.array([df]))[0])
-           for t, df in df_map.items()}
-qmetas = {}
-for qid, qtfs in per_q.items():
-    qm = {t: (idf_map[t], int(qtf)) for t, qtf in qtfs.items() if t in idf_map}
-    if qm:
-        qmetas[qid] = qm
-pickle.dump({"qmetas": qmetas, "avgdl": avg}, open(qmetas_out, "wb"))
-
-seg = segs.where(isin_expr("term", union_terms))
-R._bucketize_segments(spark, seg, 32, span).write.mode("overwrite").parquet(
-    bucketed_out
-)
-print("dumped")
-spark.stop()
-""".replace("__REPO__", repr(REPO))
+def dump(idx: str, n_q: int) -> dict:
+    """Write the workload's bucketized kernel input and per-query metas;
+    return the bucket ids (run in a fresh JVM)."""
+    stats, m = load_term_stats_pdf(idx), read_manifest(idx)["stats"]
+    queries = dict(enumerate(stratified_queries(zip(stats["term"], stats["df"]), n_q)))
+    qmetas, terms, _ = R._prep_workload(stats, queries, R.Scorer(), m["n_docs"], "porter")
+    with open(QMETAS, "wb") as f:
+        pickle.dump({"qmetas": qmetas, "avgdl": m["avgdl"]}, f)
+    with local_spark(8) as spark:
+        seg = load_segments(spark, idx).where(isin_expr("term", terms))
+        R._bucketize_segments(spark, seg, 32, docid_span(idx)).write.mode(
+            "overwrite").parquet(BUCKETED)
+    buckets = pq.read_table(BUCKETED, columns=["bucket"]).column("bucket")
+    return {"buckets": sorted(set(buckets.to_pylist()))}
 
 
-def _run_bucket(bk: int):
-    import pyarrow.parquet as pq
-
-    sys.path.insert(0, REPO)
-    from search_engine_spark.operators.rank import Scorer, _daat_rows_batch
-
-    meta = pickle.load(open(QMETAS, "rb"))
+def _run_bucket(bk: int) -> int:
+    with open(QMETAS, "rb") as f:
+        meta = pickle.load(f)
     pdf = pq.read_table(BUCKETED, filters=[("bucket", "=", bk)]).to_pandas()
-    bounds = (int(pdf["lo_docid"].iat[0]), int(pdf["hi_docid"].iat[0]))
-    all_rows = list(pdf.itertuples(index=False))
-    rbt: dict[str, list[int]] = {}
-    for i, r in enumerate(all_rows):
-        rbt.setdefault(r.term, []).append(i)
-    qv, _, _ = _daat_rows_batch(
-        all_rows, rbt, meta["qmetas"], Scorer(), meta["avgdl"], 10, "desc",
-        None, bounds,
-    )
+    qv, _, _ = R._score_bucket_rows(pdf, meta["qmetas"], R.Scorer(), meta["avgdl"],
+                                    10, "desc", None)
     return len(qv)
 
 
-def _measure(procs: int, buckets: list[int]) -> float:
-    import multiprocessing as mp
-
+def measure(procs: int, buckets: list[int]) -> dict:
     with mp.Pool(procs) as pool:
         pool.map(abs, range(procs))  # warm worker processes
         t0 = time.time()
         pool.map(_run_bucket, buckets)
-        return time.time() - t0
+        return {"procs": procs, "sec": round(time.time() - t0, 2)}
 
 
-MARK_A = "<!-- kernel_scaling_mp:auto -->"
-MARK_B = "<!-- /kernel_scaling_mp:auto -->"
+def render(r: dict) -> str:
+    n, lo, hi = r["N"], r["lo"], r["hi"]
+    return f"""## Kernel-only scaling, no Spark (controlled same-host experiment)
 
-
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 480000
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    trials = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    n_q = int(sys.argv[4]) if len(sys.argv) > 4 else 16384
-
-    if not os.path.exists(os.path.join(IDX, "manifest.json")):
-        from query_scaling import BUILD_SRC
-
-        subprocess.run([sys.executable, "-c", BUILD_SRC, IDX, str(n_docs)],
-                       check=True, cwd=REPO)
-    subprocess.run(
-        [sys.executable, "-c", DUMP_SRC, IDX, BUCKETED, QMETAS, str(n_q)],
-        check=True, cwd=REPO, capture_output=True, text=True,
-    )
-    import pyarrow.parquet as pq
-
-    buckets = sorted(
-        set(pq.read_table(BUCKETED, columns=["bucket"]).to_pandas()["bucket"])
-    )
-    los, his = [], []
-    for _ in range(trials):  # interleaved: both levels see the same noise
-        los.append(_measure(n, buckets))
-        his.append(_measure(4 * n, buckets))
-    lo, hi = min(los), min(his)
-    eff = round((lo * n) / (hi * 4 * n), 3)
-    report = {
-        "n_docs": n_docs, "n_queries": n_q, "N": n, "trials": trials,
-        "buckets": len(buckets), "lo_sec": round(lo, 2),
-        "hi_sec": round(hi, 2), "efficiency": eff,
-        "all_lo": [round(s, 2) for s in los],
-        "all_hi": [round(s, 2) for s in his],
-    }
-    print(json.dumps(report))
-
-    block = f"""{MARK_A}
-## Kernel-only scaling, no Spark (controlled same-host experiment)
-
-The exact bucketized input of the {n_q:,}-query batch workload above
-({len(buckets)} buckets, {n_docs:,}-doc index), scored by the ACTUAL
+The exact bucketized input of the {r['n_queries']:,}-query batch workload above
+({r['buckets']} buckets, {r['n_docs']:,}-doc index), scored by the ACTUAL
 `rank._daat_rows_batch` kernel through a plain multiprocessing pool — no
 JVM, no shuffle, no scheduler. One task per bucket, fresh pool per
-measurement, {trials} interleaved trials per level, best shown (all
-trials: N=[{", ".join(f"{s:.2f}" for s in los)}]s,
-4N=[{", ".join(f"{s:.2f}" for s in his)}]s).
+measurement, {r['trials']} interleaved trials per level, best shown (all
+trials: N=[{secs(r['all_lo'])}]s,
+4N=[{secs(r['all_hi'])}]s).
 
 | procs | wall (s) |
 |---|---|
-| {n} | {lo:.2f} |
-| {4 * n} | {hi:.2f} |
+| {n} | {lo['sec']:.2f} |
+| {4 * n} | {hi['sec']:.2f} |
 
-Kernel-only scaling efficiency (T_N·N)/(T_4N·4N) = **{eff}**.
+Kernel-only scaling efficiency (T_N·N)/(T_4N·4N) = **{r['efficiency']}**.
 
 This isolates the engine's scoring design from Spark machinery and host
 noise: the kernel's reduce state is L2-resident (bucket-local accumulator
@@ -177,16 +94,16 @@ The gap between this number and the full Spark series above is
 scan/shuffle/scheduling overhead plus shared-host interference — costs a
 real multi-executor cluster spreads across machines.
 
-Reproduce: `python tools/kernel_scaling_mp.py {n_docs} {n} {trials} {n_q}`
-{MARK_B}"""
-    p = os.path.join(REPO, "BENCH.md")
-    text = open(p).read() if os.path.exists(p) else ""
-    if MARK_A in text and MARK_B in text:
-        text = text.split(MARK_A)[0] + block + text.split(MARK_B, 1)[1]
-    else:
-        text = text.rstrip() + "\n\n" + block + "\n"
-    with open(p, "w") as f:
-        f.write(text)
+Reproduce: `python tools/kernel_scaling_mp.py {r['n_docs']} {n} {r['trials']} {r['n_queries']}`"""
+
+
+def main() -> None:
+    n_docs, n, trials, n_q = cli(480000, 2, 3, 16384)
+    ensure_index(QUERY_IDX, n_docs)
+    buckets = fresh(dump, QUERY_IDX, n_q)["buckets"]
+    r = n_vs_4n(n, trials, lambda p: measure(p, buckets), n_docs=n_docs,
+                n_queries=n_q, buckets=len(buckets))
+    write_section("kernel_scaling_mp:auto", render(r))
 
 
 if __name__ == "__main__":

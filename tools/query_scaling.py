@@ -8,155 +8,89 @@ is built once (untimed, deterministic) and shared read-only. Efficiency =
 (T_N * N) / (T_4N * 4N).
 
 Usage: python tools/query_scaling.py [n_docs] [N] [trials] [n_queries]
-Defaults: 120000 2 3 64. Writes a marked BENCH.md section.
+Defaults: 120000 2 3 64. Reuses /tmp/query_scale_idx when it holds n_docs;
+writes a marked BENCH.md section.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
+import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-IDX = "/tmp/query_scale_idx"
+from harness import (
+    QUERY_IDX, cli, ensure_index, fresh, local_spark, n_vs_4n, secs,
+    stratified_queries, write_section)
 
-BUILD_SRC = r"""
-import json, shutil, sys
-sys.path.insert(0, {repo!r})
-from search_engine_spark.session import get_spark
-from search_engine_spark.sources.corpus import synthetic_corpus
-from search_engine_spark.sources.segments import build_index
-
-idx, n_docs = sys.argv[1], int(sys.argv[2])
-shutil.rmtree(idx, ignore_errors=True)
-spark = get_spark(master="local[8]", shuffle_partitions=32)
-spark.sparkContext.setLogLevel("ERROR")
-corpus = synthetic_corpus(spark, n_docs=n_docs, vocab_size=20000, seed=42,
-                          partitions=128)
-m = build_index(spark, corpus, idx, analyzer="porter", n_batches=1,
-                num_segments=32, heavy_threshold=n_docs // 20, n_salts=8,
-                heavy_sample_mod=64)
-print(json.dumps({{"n_docs": m["stats"]["n_docs"],
-                  "avgdl": m["stats"]["avgdl"]}}))
-spark.stop()
-""".format(repo=REPO)
-
-QUERY_SRC = r"""
-import json, random, sys, time
-sys.path.insert(0, {repo!r})
-from search_engine_spark.session import get_spark
 from search_engine_spark.operators.rank import Scorer, score_queries_daat_batch
-from search_engine_spark.sources.segments import load_segments, load_term_stats
-
-from search_engine_spark.sources.segments import docid_span, load_term_stats_pdf
-
-idx, cores, n_q = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
-nd, avg = float(sys.argv[4]), float(sys.argv[5])
-spark = get_spark(master=f"local[{{cores}}]", shuffle_partitions=4 * cores)
-spark.sparkContext.setLogLevel("ERROR")
-segs = load_segments(spark, idx)
-# serving-process setup, done once per process: vocabulary stats local to
-# the driver + global docId span from the manifest — per-workload scoring
-# then launches NO auxiliary Spark jobs (idf lookup + bucket edges are local)
-stats = load_term_stats_pdf(idx)
-span = docid_span(idx)
-
-# df-stratified deterministic workload (rank_identity's construction)
-terms = sorted(zip(stats["term"], (int(d) for d in stats["df"])))
-terms.sort(key=lambda td: (td[1], td[0]))
-third = max(len(terms) // 3, 1)
-pools = [terms[:third], terms[third:2 * third], terms[2 * third:]]
-rng = random.Random(221)
-queries = {{}}
-for i in range(n_q):
-    queries[i] = [rng.choice(pools[(i + j) % 3])[0] for j in range(1 + i % 3)]
-
-# warm python workers + decode kernels on a 4-query slice (steady-state
-# serving throughput is the metric), then time the full workload.
-# n_buckets is FIXED across levels so both do identical total work and the
-# 4N level wins only by scheduling buckets across more cores — varying it
-# with cores would change the per-(bucket, query) kernel-call overhead and
-# confound the comparison. 32 = 4x the high level's cores: enough slack for
-# stragglers while keeping block duplication and per-bucket overhead low
-# (64 buckets measured ~35% slower at BOTH levels).
-N_BUCKETS = 32
-score_queries_daat_batch(spark, segs, stats,
-                         {{i: queries[i] for i in range(4)}},
-                         int(nd), avg, Scorer(), 10,
-                         n_buckets=N_BUCKETS, docid_span=span).collect()
-t0 = time.time()
-rows = score_queries_daat_batch(spark, segs, stats, queries, int(nd), avg,
-                                Scorer(), 10, n_buckets=N_BUCKETS,
-                                docid_span=span).collect()
-dt = time.time() - t0
-print(json.dumps({{"cores": cores, "sec": round(dt, 2), "rows": len(rows),
-                  "queries_per_sec": round(n_q / dt, 2)}}))
-spark.stop()
-""".format(repo=REPO)
+from search_engine_spark.sources.segments import (
+    docid_span, load_segments, load_term_stats_pdf, read_manifest)
 
 
-def run_src(src: str, *args: str) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", src, *args],
-        capture_output=True, text=True, check=True, cwd=REPO,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def timed_workload(run, stats, n_q: int, cores: int) -> dict:
+    """Warm python workers, decode kernels and page cache on a 4-query
+    slice (steady-state serving throughput is the metric), then time
+    ``run`` over the whole df-stratified workload."""
+    queries = dict(enumerate(stratified_queries(zip(stats["term"], stats["df"]), n_q)))
+    run({i: queries[i] for i in range(4)})
+    t0 = time.time()
+    rows = run(queries)
+    dt = time.time() - t0
+    return {"cores": cores, "sec": round(dt, 2), "rows": len(rows),
+            "queries_per_sec": round(n_q / dt, 2)}
 
 
-MARK_A, MARK_B = "<!-- query_scaling:auto -->", "<!-- /query_scaling:auto -->"
+def score(idx: str, cores: int, n_q: int) -> dict:
+    """The timed workload at local[cores] (run in a fresh JVM)."""
+    with local_spark(cores) as spark:
+        segs = load_segments(spark, idx)
+        # serving-process setup, done once per process: vocabulary stats local
+        # to the driver + global docId span from the manifest — per-workload
+        # scoring then launches NO auxiliary Spark jobs (idf lookup + bucket
+        # edges are local)
+        stats, span = load_term_stats_pdf(idx), docid_span(idx)
+        m = read_manifest(idx)["stats"]
+        # n_buckets is FIXED across levels so both do identical total work and
+        # the 4N level wins only by scheduling buckets across more cores —
+        # varying it with cores would change the per-(bucket, query)
+        # kernel-call overhead and confound the comparison. 32 = 4x the high
+        # level's cores: enough slack for stragglers while keeping block
+        # duplication and per-bucket overhead low (64 buckets measured ~35%
+        # slower at BOTH levels).
+        return timed_workload(lambda qs: score_queries_daat_batch(
+            spark, segs, stats, qs, m["n_docs"], m["avgdl"], Scorer(), 10,
+            n_buckets=32, docid_span=span).collect(), stats, n_q, cores)
 
 
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 120000
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    trials = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    n_q = int(sys.argv[4]) if len(sys.argv) > 4 else 64
-
-    meta = run_src(BUILD_SRC, IDX, str(n_docs))
-    nd, avg = str(meta["n_docs"]), str(meta["avgdl"])
-
-    los, his = [], []
-    for _ in range(trials):  # interleaved: both levels see the same host noise
-        los.append(run_src(QUERY_SRC, IDX, str(n), str(n_q), nd, avg))
-        his.append(run_src(QUERY_SRC, IDX, str(4 * n), str(n_q), nd, avg))
-    lo = min(los, key=lambda r: r["sec"])
-    hi = min(his, key=lambda r: r["sec"])
-    eff = round((lo["sec"] * n) / (hi["sec"] * 4 * n), 3)
-    report = {
-        "n_docs": n_docs, "n_queries": n_q, "N": n, "trials": trials,
-        "lo": lo, "hi": hi, "efficiency": eff,
-        "all_lo": [r["sec"] for r in los], "all_hi": [r["sec"] for r in his],
-    }
-    print(json.dumps(report))
-
-    rows_lo = ", ".join(f"{s:.2f}" for s in report["all_lo"])
-    rows_hi = ", ".join(f"{s:.2f}" for s in report["all_hi"])
-    block = f"""{MARK_A}
-## Query-path scaling (batched BM25 workload, N -> 4N cores)
-
-{n_q} df-stratified 1-3 term queries as ONE `score_queries_daat_batch`
-job over a {n_docs:,}-doc porter index (built once, shared read-only;
-fresh JVM per measurement, {trials} interleaved trials per level, best
-shown; all trials: N=[{rows_lo}]s, 4N=[{rows_hi}]s).
-
-| cores | sec | queries/s |
+def table(r: dict, tool: str) -> str:
+    """The table and tail of the query-series sections (shared with
+    tools/query_scaling_cached.py)."""
+    n, lo, hi = r["N"], r["lo"], r["hi"]
+    return f"""| cores | sec | queries/s |
 |---|---|---|
 | {n} | {lo['sec']} | {lo['queries_per_sec']} |
 | {4 * n} | {hi['sec']} | {hi['queries_per_sec']} |
 
-Scaling efficiency (T_N·N)/(T_4N·4N) = **{eff}**.
+Scaling efficiency (T_N·N)/(T_4N·4N) = **{r['efficiency']}**.
 
-Reproduce: `python tools/query_scaling.py {n_docs} {n} {trials} {n_q}`
-{MARK_B}"""
-    p = os.path.join(REPO, "BENCH.md")
-    text = open(p).read() if os.path.exists(p) else ""
-    if MARK_A in text and MARK_B in text:
-        text = text.split(MARK_A)[0] + block + text.split(MARK_B, 1)[1]
-    else:
-        text = text.rstrip() + "\n\n" + block + "\n"
-    with open(p, "w") as f:
-        f.write(text)
+Reproduce: `python tools/{tool}.py {r['n_docs']} {n} {r['trials']} {r['n_queries']}`"""
+
+
+def render(r: dict) -> str:
+    return f"""## Query-path scaling (batched BM25 workload, N -> 4N cores)
+
+{r['n_queries']} df-stratified 1-3 term queries as ONE `score_queries_daat_batch`
+job over a {r['n_docs']:,}-doc porter index (built once, shared read-only;
+fresh JVM per measurement, {r['trials']} interleaved trials per level, best
+shown; all trials: N=[{secs(r['all_lo'])}]s, 4N=[{secs(r['all_hi'])}]s).
+
+{table(r, "query_scaling")}"""
+
+
+def main() -> None:
+    n_docs, n, trials, n_q = cli(120000, 2, 3, 64)
+    ensure_index(QUERY_IDX, n_docs)
+    r = n_vs_4n(n, trials, lambda c: fresh(score, QUERY_IDX, c, n_q),
+                n_docs=n_docs, n_queries=n_q)
+    write_section("query_scaling:auto", render(r))
 
 
 if __name__ == "__main__":

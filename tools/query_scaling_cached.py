@@ -9,154 +9,61 @@ shuffle included). The cache prepare is index-bound, one-time, and untimed
 here for the same reason the index build itself is.
 
 Usage: python tools/query_scaling_cached.py [n_docs] [N] [trials] [n_queries]
-Defaults: 480000 2 4 16384. Reuses /tmp/query_scale_idx when it matches
+Defaults: 480000 2 4 16384. Reuses /tmp/query_scale_idx when it holds
 n_docs; writes a marked BENCH.md section.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
+from harness import (
+    QUERY_IDX, cli, ensure_index, fresh, local_spark, n_vs_4n, secs, write_section)
+from query_scaling import table, timed_workload
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-IDX = "/tmp/query_scale_idx"
-CACHE = "/tmp/query_scale_cache"
-
-BUILD_SRC = r"""
-import json, os, shutil, sys
-sys.path.insert(0, {repo!r})
-from search_engine_spark.session import get_spark
-from search_engine_spark.sources.corpus import synthetic_corpus
-from search_engine_spark.sources.segments import build_index, read_manifest
-from search_engine_spark.operators.serving import prepare_serving_cache
-
-idx, cache, n_docs = sys.argv[1], sys.argv[2], int(sys.argv[3])
-spark = get_spark(master="local[8]", shuffle_partitions=32)
-spark.sparkContext.setLogLevel("ERROR")
-m = read_manifest(idx) if os.path.exists(os.path.join(idx, "manifest.json")) else {{}}
-if (m.get("stats") or {{}}).get("n_docs") != n_docs:
-    shutil.rmtree(idx, ignore_errors=True)
-    corpus = synthetic_corpus(spark, n_docs=n_docs, vocab_size=20000, seed=42,
-                              partitions=128)
-    m = build_index(spark, corpus, idx, analyzer="porter", n_batches=1,
-                    num_segments=32, heavy_threshold=n_docs // 20, n_salts=8,
-                    heavy_sample_mod=64)
-# N_BUCKETS fixed across levels (same reasoning as tools/query_scaling.py):
-# both levels do identical total work; 4N wins only by scheduling shards
-# across more cores.
-prepare_serving_cache(spark, idx, cache, n_buckets=32)
-print(json.dumps({{"n_docs": m["stats"]["n_docs"], "avgdl": m["stats"]["avgdl"]}}))
-spark.stop()
-""".format(repo=REPO)
-
-QUERY_SRC = r"""
-import json, random, sys, time
-sys.path.insert(0, {repo!r})
-from search_engine_spark.session import get_spark
-from search_engine_spark.operators.rank import Scorer
-from search_engine_spark.operators.serving import load_serving_cache, score_queries_cached
+from search_engine_spark.operators.serving import (
+    load_serving_cache, prepare_serving_cache, score_queries_cached)
 from search_engine_spark.sources.segments import load_term_stats_pdf
 
-idx, cache_dir, cores, n_q = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
-spark = get_spark(master=f"local[{{cores}}]", shuffle_partitions=4 * cores)
-spark.sparkContext.setLogLevel("ERROR")
-cache = load_serving_cache(cache_dir)
-stats = load_term_stats_pdf(idx)
-
-terms = sorted(zip(stats["term"], (int(d) for d in stats["df"])))
-terms.sort(key=lambda td: (td[1], td[0]))
-third = max(len(terms) // 3, 1)
-pools = [terms[:third], terms[third:2 * third], terms[2 * third:]]
-rng = random.Random(221)
-queries = {{}}
-for i in range(n_q):
-    queries[i] = [rng.choice(pools[(i + j) % 3])[0] for j in range(1 + i % 3)]
-
-# warm python workers + page cache on a 4-query slice, then time the full
-# workload (steady-state serving throughput is the metric)
-score_queries_cached(spark, cache, stats,
-                     {{i: queries[i] for i in range(4)}}, k=10).collect()
-t0 = time.time()
-rows = score_queries_cached(spark, cache, stats, queries, k=10).collect()
-dt = time.time() - t0
-print(json.dumps({{"cores": cores, "sec": round(dt, 2), "rows": len(rows),
-                  "queries_per_sec": round(n_q / dt, 2)}}))
-spark.stop()
-""".format(repo=REPO)
+CACHE = "/tmp/query_scale_cache"
 
 
-def run_src(src: str, *args: str) -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", src, *args],
-        capture_output=True, text=True, check=True, cwd=REPO,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def prepare(idx: str, cache: str) -> dict:
+    with local_spark(8) as spark:
+        # N_BUCKETS fixed across levels (same reasoning as
+        # tools/query_scaling.py): both levels do identical total work; 4N
+        # wins only by scheduling shards across more cores.
+        return prepare_serving_cache(spark, idx, cache, n_buckets=32)
 
 
-MARK_A = "<!-- query_scaling_cached:auto -->"
-MARK_B = "<!-- /query_scaling_cached:auto -->"
+def score(idx: str, cache_dir: str, cores: int, n_q: int) -> dict:
+    """The timed workload at local[cores] (run in a fresh JVM)."""
+    with local_spark(cores) as spark:
+        cache, stats = load_serving_cache(cache_dir), load_term_stats_pdf(idx)
+        return timed_workload(lambda qs: score_queries_cached(
+            spark, cache, stats, qs, k=10).collect(), stats, n_q, cores)
 
 
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 480000
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    trials = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-    n_q = int(sys.argv[4]) if len(sys.argv) > 4 else 16384
+def render(r: dict) -> str:
+    return f"""## Steady-state serving scaling (prepared bucketized cache, N -> 4N cores)
 
-    run_src(BUILD_SRC, IDX, CACHE, str(n_docs))
-
-    los, his = [], []
-    for _ in range(trials):  # interleaved: both levels see the same host noise
-        los.append(run_src(QUERY_SRC, IDX, CACHE, str(n), str(n_q)))
-        his.append(run_src(QUERY_SRC, IDX, CACHE, str(4 * n), str(n_q)))
-    lo = min(los, key=lambda r: r["sec"])
-    hi = min(his, key=lambda r: r["sec"])
-    eff = round((lo["sec"] * n) / (hi["sec"] * 4 * n), 3)
-    report = {
-        "n_docs": n_docs, "n_queries": n_q, "N": n, "trials": trials,
-        "lo": lo, "hi": hi, "efficiency": eff,
-        "all_lo": [r["sec"] for r in los], "all_hi": [r["sec"] for r in his],
-    }
-    print(json.dumps(report))
-
-    rows_lo = ", ".join(f"{s:.2f}" for s in report["all_lo"])
-    rows_hi = ", ".join(f"{s:.2f}" for s in report["all_hi"])
-    block = f"""{MARK_A}
-## Steady-state serving scaling (prepared bucketized cache, N -> 4N cores)
-
-Same {n_q} df-stratified queries as the cold series, scored via
+Same {r['n_queries']} df-stratified queries as the cold series, scored via
 `score_queries_cached` over a serving cache prepared ONCE per index
-generation ({n_docs:,}-doc porter index; fresh JVM per measurement,
-{trials} interleaved trials per level, best shown; all trials:
-N=[{rows_lo}]s, 4N=[{rows_hi}]s). This is the steady-state deployment
+generation ({r['n_docs']:,}-doc porter index; fresh JVM per measurement,
+{r['trials']} interleaved trials per level, best shown; all trials:
+N=[{secs(r['all_lo'])}]s, 4N=[{secs(r['all_hi'])}]s). This is the steady-state deployment
 shape: resident index shards, per-workload cost = kernel + top-k merge
 only — the phases the controlled experiments showed scale (kernel-only
 0.988).
 
-| cores | sec | queries/s |
-|---|---|---|
-| {n} | {lo['sec']} | {lo['queries_per_sec']} |
-| {4 * n} | {hi['sec']} | {hi['queries_per_sec']} |
+{table(r, "query_scaling_cached")}"""
 
-Scaling efficiency (T_N·N)/(T_4N·4N) = **{eff}**.
 
-Reproduce: `python tools/query_scaling_cached.py {n_docs} {n} {trials} {n_q}`
-{MARK_B}"""
-    p = os.path.join(REPO, "BENCH.md")
-    text = open(p).read() if os.path.exists(p) else ""
-    if MARK_A in text and MARK_B in text:
-        text = text.split(MARK_A)[0] + block + text.split(MARK_B, 1)[1]
-    else:
-        anchor = "<!-- /query_scaling:auto -->"
-        if anchor in text:
-            head, tail = text.split(anchor, 1)
-            text = head + anchor + "\n\n" + block + tail
-        else:
-            text = text.rstrip() + "\n\n" + block + "\n"
-    with open(p, "w") as f:
-        f.write(text)
+def main() -> None:
+    n_docs, n, trials, n_q = cli(480000, 2, 4, 16384)
+    ensure_index(QUERY_IDX, n_docs)
+    fresh(prepare, QUERY_IDX, CACHE)
+    r = n_vs_4n(n, trials, lambda c: fresh(score, QUERY_IDX, CACHE, c, n_q),
+                n_docs=n_docs, n_queries=n_q)
+    write_section("query_scaling_cached:auto", render(r))
 
 
 if __name__ == "__main__":

@@ -22,13 +22,11 @@ Prints one JSON line:
 from __future__ import annotations
 
 import json
-import os
-import random
 import shutil
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from harness import stratified_queries, write_section
 
 
 def main() -> int:
@@ -58,18 +56,9 @@ def main() -> int:
     pdf = corpus.select("docId", "content").toPandas()
     oracle = OracleIndex(dict(zip(pdf.docId, pdf.content)), "porter")
 
-    # df-stratified term pools from the index's own term stats (sorted for
-    # determinism; the driver and executors see the identical query set).
-    terms = sorted((r.term, r.df) for r in stats.collect())
-    terms.sort(key=lambda td: (td[1], td[0]))
-    third = max(len(terms) // 3, 1)
-    pools = [terms[:third], terms[third : 2 * third], terms[2 * third :]]
-    rng = random.Random(221)
-    queries: list[list[str]] = []
-    for i in range(n_queries):
-        length = 1 + i % 3
-        q = [rng.choice(pools[(i + j) % 3])[0] for j in range(length)]
-        queries.append(q)
+    # df-stratified queries from the index's own term stats (deterministic:
+    # the driver and executors see the identical query set).
+    queries = stratified_queries([(r.term, r.df) for r in stats.collect()], n_queries)
 
     identical, max_err, mismatches = 0, 0.0, []
     t0 = time.time()
@@ -126,21 +115,15 @@ def main() -> int:
     }
     print(json.dumps(report))
     try:
-        _write_bench_section(report)
+        write_section("rank_identity:auto", render(report))
     except Exception as ex:  # best-effort doc update; never fail the metric
         print(f"# BENCH.md update skipped: {ex}", file=sys.stderr)
     return 0 if identical == n_queries else 1
 
 
-MARK_A, MARK_B = "<!-- rank_identity:auto -->", "<!-- /rank_identity:auto -->"
-
-
-def _write_bench_section(r: dict) -> None:
-    """Record the north-star rank-identity rate in its own marked BENCH.md
-    section (scaling_bench.py and bench.py own sibling sections)."""
-    p = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH.md")
-    block = f"""{MARK_A}
-## BM25 top-{r['k']} rank-identity rate (north-star metric)
+def render(r: dict) -> str:
+    """The north-star rank-identity section of BENCH.md."""
+    return f"""## BM25 top-{r['k']} rank-identity rate (north-star metric)
 
 Distributed DAAT (salted heavy terms, 2-batch index)
 vs the single-node numpy oracle, over {r['n_queries']} df-stratified 1-3 term
@@ -159,15 +142,7 @@ when the workload fits one bucket):
 {r['batch_queries_per_sec']} queries/s** ({r['batch_sec']}s total —
 {r['sec'] / r['batch_sec']:.0f}× the per-job throughput).
 
-Reproduce: `python tools/rank_identity.py {r['n_docs']} {r['n_queries']} {r['k']}`
-{MARK_B}"""
-    text = open(p).read() if os.path.exists(p) else ""
-    if MARK_A in text and MARK_B in text:
-        text = text.split(MARK_A)[0] + block + text.split(MARK_B, 1)[1]
-    else:
-        text = text.rstrip() + "\n\n" + block + "\n"
-    with open(p, "w") as f:
-        f.write(text)
+Reproduce: `python tools/rank_identity.py {r['n_docs']} {r['n_queries']} {r['k']}`"""
 
 
 if __name__ == "__main__":

@@ -8,100 +8,55 @@ comparison is relative; absolute numbers depend on the host window).
 
 Usage: python tools/refresh_bench.py [n_docs] [delta_docs]
 Defaults: 480000 4800 (a 1% micro-batch). Reuses /tmp/refresh_bench_base
-when it matches n_docs; writes a marked BENCH.md section.
+when it holds n_docs; writes a marked BENCH.md section.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import shutil
-import subprocess
-import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-BASE = "/tmp/refresh_bench_base"
+from harness import cli, ensure_index, fresh, local_spark, write_section
 
-SRC = r"""
-import json, os, shutil, sys, time
-sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
-from search_engine_spark.session import get_spark
+from search_engine_spark.operators.serving import prepare_serving_cache, refresh_serving_cache
 from search_engine_spark.sources.corpus import synthetic_corpus
-from search_engine_spark.sources.segments import (
-    build_index, build_one_batch, finalize_index, read_manifest)
-from search_engine_spark.operators.serving import (
-    prepare_serving_cache, refresh_serving_cache)
+from search_engine_spark.sources.segments import build_one_batch, finalize_index
 
-base, n_docs, delta_docs = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
-spark = get_spark(master="local[8]", shuffle_partitions=32)
-spark.sparkContext.setLogLevel("ERROR")
-
-m = read_manifest(base) if os.path.exists(os.path.join(base, "manifest.json")) else {{}}
-if (m.get("stats") or {{}}).get("n_docs") != n_docs:
-    shutil.rmtree(base, ignore_errors=True)
-    corpus = synthetic_corpus(spark, n_docs=n_docs, vocab_size=20000, seed=42,
-                              partitions=128)
-    build_index(spark, corpus, base, analyzer="porter", n_batches=1,
-                num_segments=32, heavy_threshold=n_docs // 20, n_salts=8,
-                heavy_sample_mod=64)
-
-# work on a copy: the base index stays immutable for reuse across runs
-idx = "/tmp/refresh_bench_run"
-shutil.rmtree(idx, ignore_errors=True)
-shutil.copytree(base, idx)
-
-cache = "/tmp/refresh_bench_cache"
-t0 = time.time()
-prepare_serving_cache(spark, idx, cache, n_buckets=32)
-t_prepare0 = time.time() - t0
-
-# commit one delta micro-batch (different seed -> disjoint hashed docIds)
-delta = synthetic_corpus(spark, n_docs=delta_docs, vocab_size=20000, seed=99,
-                         partitions=8)
-t0 = time.time()
-build_one_batch(spark, delta, idx, key="delta", analyzer="porter",
-                num_segments=32, heavy_threshold=None, n_salts=8)
-finalize_index(spark, idx)
-t_commit = time.time() - t0
-
-t0 = time.time()
-refresh_serving_cache(spark, idx, cache)
-t_refresh = time.time() - t0
-
-# the alternative the refresh replaces: full re-prepare of the grown index
-t0 = time.time()
-prepare_serving_cache(spark, idx, "/tmp/refresh_bench_cache_full", n_buckets=32)
-t_prepare1 = time.time() - t0
-
-print(json.dumps({{
-    "n_docs": n_docs, "delta_docs": delta_docs,
-    "prepare_base_sec": round(t_prepare0, 2),
-    "commit_delta_sec": round(t_commit, 2),
-    "refresh_sec": round(t_refresh, 2),
-    "full_reprepare_sec": round(t_prepare1, 2),
-    "speedup": round(t_prepare1 / t_refresh, 1) if t_refresh else None,
-}}))
-spark.stop()
-""".format(repo=REPO)
-
-MARK_A = "<!-- refresh_bench:auto -->"
-MARK_B = "<!-- /refresh_bench:auto -->"
+BASE = "/tmp/refresh_bench_base"
+RUN, CACHE, CACHE_FULL = (f"/tmp/refresh_bench_{s}" for s in ("run", "cache", "cache_full"))
 
 
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 480000
-    delta_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 4800
-    out = subprocess.run(
-        [sys.executable, "-c", SRC, BASE, str(n_docs), str(delta_docs)],
-        capture_output=True, text=True, check=True, cwd=REPO,
-    )
-    r = json.loads(out.stdout.strip().splitlines()[-1])
-    print(json.dumps(r))
+def measure(base: str, n_docs: int, delta_docs: int) -> dict:
+    """Prepare, commit one delta, refresh, re-prepare (run in a fresh JVM)."""
+    r = {"n_docs": n_docs, "delta_docs": delta_docs}
 
-    block = f"""{MARK_A}
-## Serving-cache maintenance: incremental refresh vs full re-prepare
+    def timed(name, fn, *args, **kw):
+        t0 = time.time()
+        fn(*args, **kw)
+        r[name] = round(time.time() - t0, 2)
+
+    # work on a copy: the base index stays immutable for reuse across runs
+    shutil.rmtree(RUN, ignore_errors=True)
+    shutil.copytree(base, RUN)
+    with local_spark(8) as spark:
+        timed("prepare_base_sec", prepare_serving_cache, spark, RUN, CACHE, n_buckets=32)
+        # commit one delta micro-batch (different seed -> disjoint hashed docIds)
+        delta = synthetic_corpus(spark, n_docs=delta_docs, vocab_size=20000, seed=99,
+                                 partitions=8)
+        timed("commit_delta_sec", lambda: (build_one_batch(
+            spark, delta, RUN, key="delta", analyzer="porter", num_segments=32,
+            heavy_threshold=None, n_salts=8), finalize_index(spark, RUN)))
+        timed("refresh_sec", refresh_serving_cache, spark, RUN, CACHE)
+        # the alternative the refresh replaces: full re-prepare of the grown index
+        timed("full_reprepare_sec", prepare_serving_cache, spark, RUN, CACHE_FULL,
+              n_buckets=32)
+    t_refresh, t_full = r["refresh_sec"], r["full_reprepare_sec"]
+    return {**r, "speedup": round(t_full / t_refresh, 1) if t_refresh else None}
+
+
+def render(r: dict) -> str:
+    return f"""## Serving-cache maintenance: incremental refresh vs full re-prepare
 
 {r['n_docs']:,}-doc porter index, one {r['delta_docs']:,}-doc micro-batch
 committed after the cache was prepared ({100 * r['delta_docs'] / r['n_docs']:.1f}% delta — the
@@ -119,21 +74,17 @@ Refresh is **{r['speedup']}x** cheaper than the re-prepare it replaces, and
 the gap widens linearly with index/delta size ratio — at 10^12 files a
 full re-prepare per micro-batch is not a cost, it is an outage.
 
-Reproduce: `python tools/refresh_bench.py {r['n_docs']} {r['delta_docs']}`
-{MARK_B}"""
-    p = os.path.join(REPO, "BENCH.md")
-    text = open(p).read()
-    if MARK_A in text and MARK_B in text:
-        text = text.split(MARK_A)[0] + block + text.split(MARK_B, 1)[1]
-    else:
-        anchor = "<!-- /query_scaling_cached:auto -->"
-        head, tail = text.split(anchor, 1)
-        text = head + anchor + "\n\n" + block + tail
-    with open(p, "w") as f:
-        f.write(text)
-    shutil.rmtree("/tmp/refresh_bench_run", ignore_errors=True)
-    shutil.rmtree("/tmp/refresh_bench_cache", ignore_errors=True)
-    shutil.rmtree("/tmp/refresh_bench_cache_full", ignore_errors=True)
+Reproduce: `python tools/refresh_bench.py {r['n_docs']} {r['delta_docs']}`"""
+
+
+def main() -> None:
+    n_docs, delta_docs = cli(480000, 4800)
+    ensure_index(BASE, n_docs)
+    r = fresh(measure, BASE, n_docs, delta_docs)
+    print(json.dumps(r))
+    write_section("refresh_bench:auto", render(r))
+    for p in (RUN, CACHE, CACHE_FULL):
+        shutil.rmtree(p, ignore_errors=True)
 
 
 if __name__ == "__main__":

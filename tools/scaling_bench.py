@@ -7,103 +7,66 @@ executors). Each run is a fresh JVM (subprocess) so the two measurements share
 nothing. Efficiency = (T_N * N) / (T_4N * 4N) — i.e. normalized throughput at
 4N over N.
 
-Usage: python tools/scaling_bench.py [n_docs] [N]   (defaults 60000, 8)
-Writes BENCH.md at the repo root.
+Usage: python tools/scaling_bench.py [n_docs] [N] [trials] [analyzer]
+Defaults: 240000 4 3 porter. Writes a marked BENCH.md section.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import subprocess
-import sys
+import shutil
+import tempfile
+import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from harness import cli, fresh, local_spark, n_vs_4n, write_section
+from pyspark.sql import functions as F
 
-RUN_SRC = r"""
-import json, shutil, sys, tempfile, time
-sys.path.insert(0, {repo!r})
-from search_engine_spark.session import get_spark
+from search_engine_spark.operators.build import build_postings
 from search_engine_spark.sources.corpus import synthetic_corpus
 from search_engine_spark.sources.segments import build_index
 
-cores, n_docs = int(sys.argv[1]), int(sys.argv[2])
-analyzer = sys.argv[3] if len(sys.argv) > 3 else "porter"
-# trigram (substring) indexes carry no positions — membership-only terms
-with_pos = analyzer not in ("trigram", "trigram_fold")
-# reduce partitions = 4x cores (not 1x): smaller merge kernels in ~4 waves
-# load-balance dynamically and absorb stragglers — measured 2-3x faster at
-# the 4N level than one giant reduce partition per core
-spark = get_spark(master=f"local[{{cores}}]", shuffle_partitions=4 * cores)
-spark.sparkContext.setLogLevel("ERROR")
-# identical input at both levels: same seed, same partition count; 128
-# input partitions so python workers amortize over >=4 tasks even at 4N
-corpus = synthetic_corpus(spark, n_docs=n_docs, vocab_size=20000, seed=42,
-                          partitions=128).cache()
-corpus.count()  # materialize input + warm JVM before timing
-# warm python workers + analyzer imports on every core (steady-state cluster
-# throughput is the metric; worker cold-start amortizes over job lifetime)
-from pyspark.sql import functions as F
-from search_engine_spark.operators.build import build_postings
-build_postings(corpus.where(F.pmod(F.xxhash64("docId"), F.lit(32)) == 0),
-               analyzer).write.format("noop").mode("overwrite").save()
-idx = tempfile.mkdtemp(prefix=f"scale_{{cores}}_")
-shutil.rmtree(idx, ignore_errors=True)
-t0 = time.time()
-# trigram vocab is tiny (~30k terms) with df approaching n_docs — far
-# heavier tails than word terms, so the salting knobs scale up with it
-heavy_threshold = n_docs // 100 if not with_pos else n_docs // 20
-n_salts = 16 if not with_pos else 8
-m = build_index(spark, corpus, idx, analyzer=analyzer, n_batches=1,
-                with_positions=with_pos,
-                membership=not with_pos,  # trigram: docid-only payload
-                num_segments=4 * cores,
-                heavy_threshold=heavy_threshold, n_salts=n_salts,
-                heavy_sample_mod=64)
-dt = time.time() - t0
-print(json.dumps({{"cores": cores, "sec": round(dt, 2),
-                  "docs_per_sec": round(n_docs / dt, 1),
-                  "postings": m["stats"]["npostings"],
-                  "postings_per_sec": round(m["stats"]["npostings"] / dt, 1)}}))
-shutil.rmtree(idx, ignore_errors=True)
-spark.stop()
-""".format(repo=REPO)
+
+def build(cores: int, n_docs: int, analyzer: str) -> dict:
+    """The timed build at local[cores] (run in a fresh JVM)."""
+    # trigram (substring) indexes carry no positions — membership-only terms
+    with_pos = analyzer not in ("trigram", "trigram_fold")
+    idx = tempfile.mkdtemp(prefix=f"scale_{cores}_")
+    with local_spark(cores) as spark:
+        # identical input at both levels: same seed, same partition count; 128
+        # input partitions so python workers amortize over >=4 tasks even at 4N
+        corpus = synthetic_corpus(spark, n_docs=n_docs, vocab_size=20000, seed=42,
+                                  partitions=128).cache()
+        corpus.count()  # materialize input + warm JVM before timing
+        # warm python workers + analyzer imports on every core (steady-state
+        # cluster throughput is the metric; worker cold-start amortizes over
+        # job lifetime)
+        build_postings(corpus.where(F.pmod(F.xxhash64("docId"), F.lit(32)) == 0),
+                       analyzer).write.format("noop").mode("overwrite").save()
+        shutil.rmtree(idx, ignore_errors=True)
+        t0 = time.time()
+        # trigram vocab is tiny (~30k terms) with df approaching n_docs — far
+        # heavier tails than word terms, so the salting knobs scale up with it
+        m = build_index(spark, corpus, idx, analyzer=analyzer, n_batches=1,
+                        with_positions=with_pos,
+                        membership=not with_pos,  # trigram: docid-only payload
+                        num_segments=4 * cores,  # 4x cores: see local_spark
+                        heavy_threshold=n_docs // 20 if with_pos else n_docs // 100,
+                        n_salts=8 if with_pos else 16, heavy_sample_mod=64)
+        dt = time.time() - t0
+    shutil.rmtree(idx, ignore_errors=True)
+    npost = m["stats"]["npostings"]
+    return {"cores": cores, "sec": round(dt, 2), "docs_per_sec": round(n_docs / dt, 1),
+            "postings": npost, "postings_per_sec": round(npost / dt, 1)}
 
 
-def run(cores: int, n_docs: int, analyzer: str = "porter") -> dict:
-    out = subprocess.run(
-        [sys.executable, "-c", RUN_SRC, str(cores), str(n_docs), analyzer],
-        capture_output=True, text=True, check=True, cwd=REPO,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 240000
-    n = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    trials = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    analyzer = sys.argv[4] if len(sys.argv) > 4 else "porter"
-    # the sandbox host has noisy neighbors (cpu capacity swings ~40% over
-    # minutes): interleave N/4N trials and take the best of each level
-    los, his = [], []
-    for _ in range(trials):
-        los.append(run(n, n_docs, analyzer))
-        his.append(run(4 * n, n_docs, analyzer))
-    lo = min(los, key=lambda r: r["sec"])
-    hi = min(his, key=lambda r: r["sec"])
-    eff = (lo["sec"] * n) / (hi["sec"] * 4 * n)
-    report = {
-        "n_docs": n_docs, "N": lo, "4N": hi, "efficiency": round(eff, 3),
-        "trials_N": [r["sec"] for r in los], "trials_4N": [r["sec"] for r in his],
-    }
-    print(json.dumps(report))
+def render(r: dict, analyzer: str) -> str:
+    n, lo, hi = r["N"], r["lo"], r["hi"]
     title = ("# BENCH — scaling evidence (north rule)" if analyzer == "porter"
              else f"## Trigram (substring-index) build scaling — analyzer={analyzer}")
-    block = f"""{title}
+    return f"""{title}
 
 Same index-build job ({analyzer} tokenize -> salted hash-repartition(term, salt) ->
 delta+varbyte packed segments + term stats) on the SAME input
-({n_docs:,} synthetic docs, seed 42, 128 input partitions), at two
+({r['n_docs']:,} synthetic docs, seed 42, 128 input partitions), at two
 parallelism levels standing in for N and 4N executors (no real cluster in
 this sandbox). Fresh JVM per run; each Spark task slot drives a JVM thread
 plus its Python (Arrow) worker, so local[c] exercises ~2c hardware threads —
@@ -114,7 +77,7 @@ smaller tasks balance dynamically (measured 2-3x faster at the 4N level).
 
 Methodology: the sandbox host is shared (observed ~40% CPU-capacity swings
 from neighbors over minutes), so N/4N trials are interleaved and the best of
-{trials} per level is reported (all trials listed below).
+{r['trials']} per level is reported (all trials listed below).
 
 | level | cores | wall (s) | docs/sec | postings/sec |
 |---|---|---|---|---|
@@ -122,38 +85,19 @@ from neighbors over minutes), so N/4N trials are interleaved and the best of
 | 4N | {4 * n} | {hi['sec']} | {hi['docs_per_sec']} | {hi['postings_per_sec']} |
 
 **Scaling efficiency (N -> 4N)** = `(T_N * N) / (T_4N * 4N)` =
-**{eff:.3f}** (north-rule target >= 0.8).
+**{r['efficiency']:.3f}** (north-rule target >= 0.8).
 
-All trials (s): N = {[r['sec'] for r in los]}, 4N = {[r['sec'] for r in his]}
+All trials (s): N = {r['all_lo']}, 4N = {r['all_hi']}
 
-Reproduce: `python tools/scaling_bench.py {n_docs} {n} {trials} {analyzer}`
+Reproduce: `python tools/scaling_bench.py {r['n_docs']} {n} {r['trials']} {analyzer}`
 """
-    _write_section(block, analyzer)
 
 
-MARK_A, MARK_B = "<!-- scaling:auto -->", "<!-- /scaling:auto -->"
-
-
-def _write_section(block: str, analyzer: str = "porter") -> None:
-    """Replace only this tool's marked section of BENCH.md (bench.py owns a
-    sibling section; neither writer may clobber the other's)."""
-    p = os.path.join(REPO, "BENCH.md")
-    mark_a, mark_b = MARK_A, MARK_B
-    if analyzer != "porter":
-        mark_a = f"<!-- scaling:auto:{analyzer} -->"
-        mark_b = f"<!-- /scaling:auto:{analyzer} -->"
-    block = f"{mark_a}\n{block}\n{mark_b}"
-    text = open(p).read() if os.path.exists(p) else ""
-    if mark_a in text and mark_b in text:
-        text = text.split(mark_a)[0] + block + text.split(mark_b, 1)[1]
-    elif text and analyzer == "porter":
-        text = block + "\n\n" + text  # scaling evidence leads the doc
-    elif text:
-        text = text.rstrip() + "\n\n" + block + "\n"  # variants append
-    else:
-        text = block + "\n"
-    with open(p, "w") as f:
-        f.write(text)
+def main() -> None:
+    n_docs, n, trials, analyzer = cli(240000, 4, 3, "porter")
+    r = n_vs_4n(n, trials, lambda c: fresh(build, c, n_docs, analyzer), n_docs=n_docs)
+    tag = "scaling:auto" if analyzer == "porter" else f"scaling:auto:{analyzer}"
+    write_section(tag, render(r, analyzer))
 
 
 if __name__ == "__main__":
