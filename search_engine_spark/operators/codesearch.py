@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.analyzers import trigram_tokenize
-from ..sources.segments import decode_term_docids
+from ..sources.segments import decode_term_docids, term_dfs
 
 __all__ = [
     "needle_trigrams",
@@ -64,26 +64,15 @@ def needle_trigrams(needle: str) -> list[str]:
 def probe_trigrams(trigrams: list[str], term_stats, max_probe: int = 8) -> list[str]:
     """Choose the ``max_probe`` rarest trigrams to intersect.
 
-    ``term_stats`` is either the index's term_stats DataFrame (one tiny
-    filtered collect — bounded by len(trigrams) rows) or a driver-local
-    pandas frame from ``load_term_stats_pdf`` (serving mode: zero jobs).
+    ``term_stats`` is any form ``segments.term_dfs`` takes (the index's
+    term-stats scan or the pandas frame of ``load_term_stats_pdf``: both
+    looked up on the driver, zero jobs).
     Trigrams absent from the stats have df=0 — the needle cannot match any
     indexed doc, and the caller short-circuits to an empty result.
     """
     if not trigrams:
         return []
-    if isinstance(term_stats, DataFrame):
-        from ..functions.predicates import isin_expr
-
-        rows = (
-            term_stats.where(isin_expr("term", trigrams))
-            .select("term", "df")
-            .collect()
-        )
-        dfs = {r["term"]: r["df"] for r in rows}
-    else:  # pandas frame
-        sub = term_stats[term_stats["term"].isin(trigrams)]
-        dfs = dict(zip(sub["term"], sub["df"]))
+    dfs = term_dfs(term_stats, trigrams)
     if len(dfs) < len(set(trigrams)):
         return []  # some required trigram unseen in the corpus: no match
     ranked = sorted(set(trigrams), key=lambda t: (dfs[t], t))
@@ -272,8 +261,8 @@ def explain_substring(
     allow_full_scan: bool = True,
 ) -> dict:
     """Driver-side plan report for a substring query (the ``explain`` of
-    the trigram path — zero Spark jobs when ``term_stats`` is the
-    driver-local pandas frame): which trigrams the needle requires, which
+    the trigram path — zero Spark jobs for the term-stats scan and the
+    driver-local pandas frame alike): which trigrams the needle requires, which
     ``max_probe`` rarest ones would be probed (with their df), the
     candidate upper bound (min probe df — the intersection can't exceed
     its smallest list), and the strategy the search would take."""
@@ -286,17 +275,7 @@ def explain_substring(
                           + ("" if allow_full_scan else
                              "; allow_full_scan=False gates the fallback"),
                 "trigrams": [], "probes": [], "max_candidates": None}
-    if isinstance(term_stats, DataFrame):
-        from ..functions.predicates import isin_expr
-
-        rows = (
-            term_stats.where(isin_expr("term", tris))
-            .select("term", "df").collect()
-        )
-        dfs = {r["term"]: int(r["df"]) for r in rows}
-    else:
-        sub = term_stats[term_stats["term"].isin(tris)]
-        dfs = {t: int(d) for t, d in zip(sub["term"], sub["df"])}
+    dfs = term_dfs(term_stats, tris)
     if len(dfs) < len(tris):
         missing = sorted(set(tris) - set(dfs))
         return {"needle": needle, "strategy": "empty",

@@ -377,14 +377,10 @@ def _candidate_bound(term_stats, leaves, expanded):
     it, so the bound the gate enforces is the bound explain reports.
     Returns (total_bound, has_range, {leaf: bound|None},
     {prefix_leaf: n_dictionary_terms})."""
-    from ..functions.predicates import isin_expr
+    from ..sources.segments import term_dfs
 
-    plain = sorted({l[1] for l in leaves if l[0] == "term"}
-                   | {t for l in leaves if l[0] == "phrase" for t in l[1]})
-    dfs: dict[str, int] = {}
-    if plain:
-        rows = term_stats.where(isin_expr("term", plain)).select("term", "df").collect()
-        dfs = {r.term: int(r.df) for r in rows}
+    dfs = term_dfs(term_stats, [l[1] for l in leaves if l[0] == "term"]
+                   + [t for l in leaves if l[0] == "phrase" for t in l[1]])
     per_leaf: dict = {}
     prefix_counts: dict = {}
     bound, has_range = 0, False

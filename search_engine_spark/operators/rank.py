@@ -59,6 +59,7 @@ from ..functions.codec import varbyte_decode, varbyte_encode
 from ..operators.build import BLOCK_SIZE, _byte_lens
 from ..functions.predicates import isin_expr
 from ..operators.query import analyze_query, postings_for
+from ..sources.segments import term_dfs
 
 SCORE_SCHEMA = StructType(
     [
@@ -86,33 +87,13 @@ def query_tfs(keywords: list[str], analyzer: str = "porter") -> dict[str, int]:
     return dict(Counter(analyze_query(keywords, analyzer)))
 
 
-def _term_dfs(term_stats, terms: list[str]) -> dict[str, int]:
-    """{term: df} for the given terms. ``term_stats`` is either the Spark
-    DataFrame (default — one tiny filtered collect job) or a pandas frame
-    pre-loaded once per serving process (:func:`..sources.segments.
-    load_term_stats_pdf`) — the Spark job is a fixed round-trip per
-    workload (0.12-0.14 s at local[2] on a 4-vCPU host, 2,000-doc index),
-    a large share of a short interactive query. Driver-RAM note:
-    a pandas term_stats holds the whole vocabulary; fine up to ~10^8 terms,
-    keep the Spark path beyond that."""
-    if isinstance(term_stats, pd.DataFrame):
-        sub = term_stats[term_stats["term"].isin(terms)]
-        return dict(zip(sub["term"], sub["df"].astype(int)))
-    return {
-        r.term: int(r.df)
-        for r in term_stats.where(isin_expr("term", terms))
-        .select("term", "df")
-        .collect()
-    }
-
-
 def _idf_rows(term_stats, qtfs: dict[str, float], scorer: Scorer, n_docs: int):
     """Collect (term, df, idf, qtf) for present query terms — tiny. qtf
     passes through untyped: integer query-tf counts stay ints (the
     declarative paths build an int-schema qdf from them), parser ``^W``
     boost weights stay floats (consumed by the DAAT numpy kernel)."""
     out = []
-    for term, df in _term_dfs(term_stats, list(qtfs)).items():
+    for term, df in term_dfs(term_stats, list(qtfs)).items():
         idf = float(scorer.idf(float(n_docs), np.array([df]))[0])
         out.append((term, df, idf, qtfs[term]))
     return out
@@ -343,12 +324,7 @@ def score_queries_batch(
     all_terms = sorted({t for _, qtfs in per_q for t in qtfs})
     if not all_terms:
         return spark.createDataFrame([], BATCH_SCHEMA)
-    df_rows = {
-        r.term: int(r.df)
-        for r in term_stats.where(isin_expr("term", all_terms))
-        .select("term", "df")
-        .collect()
-    }
+    df_rows = term_dfs(term_stats, all_terms)
     qrows = []
     for qid, qtfs in per_q:
         for t, qtf in qtfs.items():
@@ -912,10 +888,11 @@ def _candidate_scan(segments: DataFrame, live_terms: list[str], term_stats) -> D
     or scored. The trade is (1-coverage) extra shuffled bytes vs ~seconds
     of fixed predicate cost — at >50% coverage the bytes are cheaper at
     every level, and MORE so at high parallelism (bytes scale out, fixed
-    cost does not). The coverage
-    test needs the vocabulary size driver-side, so it only engages on the
-    serving path (``term_stats`` as a pandas frame via
-    ``load_term_stats_pdf``); Spark-DataFrame stats keep the pushdown."""
+    cost does not). The coverage test needs the vocabulary size
+    driver-side, so it only engages when ``term_stats`` is the pandas frame
+    of ``load_term_stats_pdf``; that check is the only reason to load it,
+    since the df lookup is job-free on the Spark scan too (``term_dfs``).
+    Spark-DataFrame stats keep the pushdown."""
     if isinstance(term_stats, pd.DataFrame):
         n_vocab = len(term_stats)
         if n_vocab and len(live_terms) / n_vocab > _FILTER_COVERAGE_MAX:
@@ -1152,7 +1129,7 @@ def _prep_workload(
     union_terms = sorted({t for q in per_q.values() for t in q})
     if not union_terms:
         return {}, [], 0
-    df_map = _term_dfs(term_stats, union_terms)
+    df_map = term_dfs(term_stats, union_terms)
     idf_map = {
         t: float(scorer.idf(float(n_docs), np.array([df]))[0])
         for t, df in df_map.items()
@@ -1301,7 +1278,10 @@ def score_query_daat(
     one task — the re-key is skipped: pushed scan -> ``coalesce(1)`` -> one
     kernel call over the whole packed rows -> TakeOrderedAndProject, one
     Spark job of one task with no exchange (:func:`_one_task`). It needs no
-    ``docid_span`` either, so the span-agg job never runs on that plan.
+    ``docid_span`` either, so the span-agg job never runs on that plan. The
+    query-term df lookup runs on the driver (``segments.term_dfs``) for
+    the ``load_term_stats`` scan and a pandas frame alike, so that job is
+    the whole call.
 
     ``deleted``: sorted int64 tombstone array (operators/delete.py
     ``deleted_array``) — masked inside the kernel as rows decode.
@@ -1372,8 +1352,7 @@ def mlt_seed_terms(
     tfs = Counter(get_analyzer(analyzer)(row[0][0]))
     if not tfs:
         return []
-    stats = term_stats.where(isin_expr("term", sorted(tfs))).select("term", "df").collect()
-    dfs = {r.term: float(r.df) for r in stats}
+    dfs = term_dfs(term_stats, list(tfs))
     weighted = [
         (t, tf, tf * float(scorer.idf(float(n_docs), dfs[t])))
         for t, tf in tfs.items()

@@ -544,8 +544,9 @@ def score_queries_cached(
     to ``rank.score_queries_daat_batch`` on the same index, minus the
     per-workload scan/split/shuffle (the steady-state serving path).
 
-    ``term_stats`` should be the driver-local pandas frame
-    (``load_term_stats_pdf``) so the whole job is: parallelize bucket ids
+    ``term_stats`` is the ``load_term_stats`` scan or the pandas frame of
+    ``load_term_stats_pdf``; either is looked up on the driver
+    (``segments.term_dfs``), so the whole job is: parallelize bucket ids
     (exactly one per task) -> mmap bucket file -> accumulator kernel ->
     sharded packed merge. ``n_docs``/``avgdl`` default to the cache meta.
     """

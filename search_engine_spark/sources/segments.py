@@ -19,14 +19,17 @@ Layout::
     index_dir/
       manifest.json
       segments/batch=<i>/           term-sorted packed parquet
-      term_stats/                   (term, df, cf, max_tf) parquet
+      term_stats/                   (term, df, cf, max_tf) parquet, each
+                                    file term-sorted in bounded row groups
 """
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import time
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
@@ -70,6 +73,11 @@ from ..operators.build import (
 )
 
 MANIFEST = "manifest.json"
+
+# term_stats parquet row-group bound (bytes): with each file term-sorted,
+# a df lookup of k terms reads at most k row groups per file at any
+# vocabulary size (:func:`term_dfs`)
+_TERM_STATS_ROW_GROUP_BYTES = 1 << 20
 
 DECODED_SCHEMA = StructType(
     [
@@ -362,7 +370,17 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
     finalize_index (every writer ends with one) recomputes them."""
     segs = load_segments(spark, index_dir)
     stats_dir = os.path.join(index_dir, "term_stats")
-    term_stats_from_segments(segs).coalesce(4).write.mode("overwrite").parquet(stats_dir)
+    # a sorted term dictionary: the sort runs inside the write task (no
+    # extra job), and bounded row groups give each file disjoint term
+    # ranges that the driver-side lookup (term_dfs) prunes by min/max
+    (
+        term_stats_from_segments(segs)
+        .coalesce(4)
+        .sortWithinPartitions("term")
+        .write.option("parquet.block.size", _TERM_STATS_ROW_GROUP_BYTES)
+        .mode("overwrite")
+        .parquet(stats_dir)
+    )
     # global docId bounds: lets the DAAT bucketizer skip its span-agg job
     # at query time (rank._bucketize_segments docid_span) — docIds are
     # 63-bit hashes, so the span is not derivable from n_docs
@@ -506,15 +524,90 @@ def load_term_stats(spark: SparkSession, index_dir: str) -> DataFrame:
 
 def load_term_stats_pdf(index_dir: str) -> pd.DataFrame:
     """Term stats as a driver-local pandas frame (pyarrow read, no Spark
-    job). A serving process loads this ONCE and passes it to the rank
-    entry points (`rank._term_dfs` accepts either form) — per-workload idf
-    lookup then costs a local isin instead of a Spark round-trip (0.12-0.14 s
-    at local[2] on a 4-vCPU host, 2,000-doc index).
-    Holds the whole vocabulary in driver RAM: ~24 bytes/term + strings, so
-    fine to ~10^8 terms; beyond that keep the Spark DataFrame path."""
+    job). Exact-term df lookups need no pandas frame: :func:`term_dfs` reads
+    the :func:`load_term_stats` scan on the driver too. Load this where a
+    caller needs the vocabulary size, the workload-coverage check of
+    ``rank._candidate_scan``. Holds the whole vocabulary in driver RAM:
+    ~24 bytes/term + strings, so fine to ~10^8 terms."""
     import pyarrow.parquet as pq
 
     return pq.read_table(os.path.join(index_dir, "term_stats")).to_pandas()
+
+
+def term_dfs(term_stats, terms: list[str]) -> dict[str, int]:
+    """{term: df} for those of ``terms`` in the dictionary — the one
+    exact-term df lookup (rank idf and plan sizing, parser cost model,
+    trigram probe, more-like-this seeds). ``term_stats`` may be:
+
+    - the plain parquet scan :func:`load_term_stats` returns: read on the
+      driver with pyarrow, no Spark job. The files come from the frame's
+      cached listing (``inputFiles()``); only row groups whose term min/max
+      range can hold a wanted term are read (:func:`_term_row_groups`);
+    - a pandas frame (:func:`load_term_stats_pdf`): a local ``isin``;
+    - any other Spark frame (filtered or derived, such as federation's
+      ``global_term_stats``, or not on ``file:`` storage): one filtered
+      ``collect()`` job."""
+    want = sorted(set(terms))
+    if not want:
+        return {}
+    if isinstance(term_stats, pd.DataFrame):
+        sub = term_stats[term_stats["term"].isin(want)]
+        return {t: int(d) for t, d in zip(sub["term"], sub["df"])}
+    paths = _plain_parquet_paths(term_stats)
+    if paths is None:
+        rows = term_stats.where(isin_expr("term", want)).select("term", "df").collect()
+        return {r.term: int(r.df) for r in rows}
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out: dict[str, int] = {}
+    for path in paths:
+        with pq.ParquetFile(path) as f:
+            groups = _term_row_groups(f, want)
+            if groups:
+                t = f.read_row_groups(groups, columns=["term", "df"])
+                t = t.filter(pc.is_in(t["term"], value_set=pa.array(want)))
+                out.update(zip(t["term"].to_pylist(), t["df"].to_pylist()))
+    return out
+
+
+def _plain_parquet_paths(frame: DataFrame) -> list[str] | None:
+    """Local paths of the files of ``frame`` when it is a bare unpartitioned
+    parquet scan of ``file:`` storage, else None. Reads only the driver's
+    analyzed plan and the scan's cached file listing: no Spark job."""
+    plan = frame._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().shortName() != "parquet"
+        or rel.partitionSchema().length()
+    ):
+        return None
+    uris = [urlparse(u) for u in frame.inputFiles()]
+    if any(u.scheme != "file" for u in uris):
+        return None
+    return [unquote(u.path) for u in uris]
+
+
+def _term_row_groups(f, want: list[str]) -> list[int]:
+    """Row groups of the parquet file ``f`` whose term min/max range holds a
+    term of the sorted ``want`` (a group without statistics is kept). On a
+    term-sorted file at most len(want) groups survive; an unsorted file
+    written before :func:`finalize_index` sorted it keeps most of them."""
+    col = f.schema_arrow.get_field_index("term")
+    keep = []
+    for i in range(f.metadata.num_row_groups):
+        st = f.metadata.row_group(i).column(col).statistics
+        if st is None or not st.has_min_max:
+            keep.append(i)
+            continue
+        j = bisect.bisect_left(want, st.min)
+        if j < len(want) and want[j] <= st.max:
+            keep.append(i)
+    return keep
 
 
 def docid_span(index_dir: str) -> tuple[int, int] | None:

@@ -33,3 +33,15 @@ def corpus_from_texts(spark, texts, analyzer_ids=None):
         rows, "repo string, path string, commit string, lang string, content string, docId long"
     )
     return df.withColumn("content_sha256", F.sha2(F.col("content"), 256))
+
+
+def run_jobs(spark, fn, group: str):
+    """Run ``fn()`` under its own job group -> (result, Spark job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

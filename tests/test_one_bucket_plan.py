@@ -21,6 +21,7 @@ from search_engine_spark.operators import rank as R
 from search_engine_spark.operators.query import analyze_query
 from search_engine_spark.plans.oracle import OracleIndex
 from search_engine_spark.sources import segments as S
+from tests.conftest import run_jobs
 
 QUERIES = {
     0: ["def", "import"],
@@ -65,18 +66,6 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def _run_jobs(spark, fn, group: str):
-    """Run ``fn()`` under its own job group -> (result, Spark job count)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _same(got, want):
     assert [d for d, _ in got] == [d for d, _ in want]
     assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want))
@@ -119,14 +108,14 @@ def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
     assert "Exchange" not in plan, plan
     assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 1
     assert "TakeOrderedAndProject" in plan
-    rows, jobs = _run_jobs(spark, one.collect, "one_bucket_single")
+    rows, jobs = run_jobs(spark, one.collect, "one_bucket_single")
     assert rows and jobs == 1
 
     batch = _batch(spark, idx, QUERIES, docid_span=span)
     plan = _plan(batch)
     assert "Exchange" not in plan, plan
     assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 1
-    rows, jobs = _run_jobs(spark, batch.collect, "one_bucket_batch")
+    rows, jobs = run_jobs(spark, batch.collect, "one_bucket_batch")
     assert rows and jobs == 1
 
     # an explicit multi-bucket count keeps the bucket re-key shuffle
@@ -135,13 +124,28 @@ def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
         assert "Exchange hashpartitioning(bucket" in _plan(df)
 
 
+def test_whole_call_with_spark_stats_is_one_job(spark, idx):
+    """Given the ``load_term_stats`` scan, the query-term df lookup runs on
+    the driver: building the plan and collecting it is one Spark job, for
+    the single query and for the batch."""
+    span = S.docid_span(idx[0])
+    rows, jobs = run_jobs(
+        spark, lambda: _single(spark, idx, QUERIES[1], docid_span=span).collect(),
+        "one_bucket_single_call")
+    assert rows and jobs == 1
+    rows, jobs = run_jobs(
+        spark, lambda: _batch(spark, idx, QUERIES, docid_span=span).collect(),
+        "one_bucket_batch_call")
+    assert rows and jobs == 1
+
+
 def test_build_job_count_is_pinned(spark, tmp_path_factory):
     """The fixture's build runs exactly BUILD_JOBS Spark jobs: a new
     auxiliary build job (or a removed one) fails here until the pin moves
     with it."""
     p = str(tmp_path_factory.mktemp("onebucket_build") / "idx")
-    m, jobs = _run_jobs(spark, lambda: _build(spark, _corpus(spark), p),
-                        "one_bucket_build")
+    m, jobs = run_jobs(spark, lambda: _build(spark, _corpus(spark), p),
+                       "one_bucket_build")
     assert m["stats"]["n_docs"] == 300
     assert jobs == BUILD_JOBS
 

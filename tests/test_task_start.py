@@ -94,7 +94,7 @@ def test_reused_worker_task_start_reads_no_zip_directory(spark):
 
         import pandas as pd
 
-        R._term_dfs  # unpickling this imports the package on the worker
+        R.query_tfs  # unpickling this imports the package on the worker
         calls = []
         original = zipimport._read_directory
 

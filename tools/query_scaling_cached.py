@@ -51,8 +51,8 @@ generation ({r['n_docs']:,}-doc porter index; fresh JVM per measurement,
 {r['trials']} interleaved trials per level, best shown; all trials:
 N=[{secs(r['all_lo'])}]s, 4N=[{secs(r['all_hi'])}]s). This is the steady-state deployment
 shape: resident index shards, per-workload cost = kernel + top-k merge
-only — the phases the controlled experiments showed scale (kernel-only
-0.988).
+only — the phases the controlled experiments showed scale (see the
+kernel-only series).
 
 {table(r, "query_scaling_cached")}"""
 

@@ -40,6 +40,9 @@ def measure(base: str, n_docs: int, delta_docs: int) -> dict:
     shutil.rmtree(RUN, ignore_errors=True)
     shutil.copytree(base, RUN)
     with local_spark(8) as spark:
+        # untimed warm-up: JVM and Python-worker start-up stay out of the
+        # base prepare, so every row times only its own step
+        spark.range(1).mapInPandas(lambda it: it, "id long").collect()
         timed("prepare_base_sec", prepare_serving_cache, spark, RUN, CACHE, n_buckets=32)
         # commit one delta micro-batch (different seed -> disjoint hashed docIds)
         delta = synthetic_corpus(spark, n_docs=delta_docs, vocab_size=20000, seed=99,
