@@ -50,6 +50,7 @@ from ..sources.segments import (
     decode_postings_packed,
     load_segments,
     read_manifest,
+    read_segment_dirs,
     update_manifest,
 )
 
@@ -196,7 +197,7 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
     # read the OLD batch dirs explicitly, not the segments/ root: the new
     # batch is written under the same root while this plan is still lazy,
     # and the rewrite must never list its own output
-    posts = decode_postings_packed(spark.read.parquet(*old_paths))
+    posts = decode_postings_packed(read_segment_dirs(spark, *old_paths))
     livep = posts.join(F.broadcast(tomb), "docId", "left_anti")
     packed = encode_segments(
         livep, m["num_segments"], heavy, m.get("n_salts", 8)
@@ -210,7 +211,7 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
     # recompute doc-level stats from the rewritten (smaller) batch: one
     # decode pass for (docId, dl) — the purge already paid a full rewrite,
     # this is the cheap tail of it
-    new_segs = spark.read.parquet(out)
+    new_segs = read_segment_dirs(spark, out)
     doc_dl = (
         decode_postings(new_segs)
         .groupBy("docId")

@@ -87,7 +87,7 @@ def _probe_shards_visible(spark: SparkSession, cdir: str,
         host = socket.gethostname()
         for pdf in batches:
             errs = []
-            for name, want in zip(pdf["file"], pdf["rows"]):
+            for name, want in (expect[i] for i in pdf["id"]):
                 try:
                     got = feather.read_table(
                         os.path.join(cdir, name), memory_map=True
@@ -98,12 +98,9 @@ def _probe_shards_visible(spark: SparkSession, cdir: str,
                     errs.append(f"{name}: {type(ex).__name__}: {ex}")
             yield pd.DataFrame({"host": [host], "err": ["; ".join(errs)]})
 
-    rdd = spark.sparkContext.parallelize(expect, max(len(expect), 1))
-    pdf = (
-        spark.createDataFrame(rdd, "file string, rows long")
-        .mapInPandas(probe, "host string, err string")
-        .toPandas()
-    )
+    # one task per file: task i probes expect[i] from the captured list
+    n = len(expect)
+    pdf = spark.range(n, numPartitions=n).mapInPandas(probe, "host string, err string").toPandas()
     bad = pdf[pdf["err"] != ""]
     # driver-side check too (the driver reads metas and debugging tools read
     # shards; a driver that can't see the store is equally misconfigured)
@@ -404,9 +401,9 @@ def refresh_serving_cache(
     meta["gc_pending"] = []
     delta = [k for k in live_batches if k not in set(old_batches)]
     if delta:
-        from ..sources.segments import batch_path
+        from ..sources.segments import batch_path, read_segment_dirs
 
-        seg = spark.read.parquet(*[batch_path(index_dir, k) for k in delta])
+        seg = read_segment_dirs(spark, *[batch_path(index_dir, k) for k in delta])
         bucketed = R._bucketize_segments(
             spark, seg, int(meta["n_buckets"]), tuple(meta["docid_span"])
         )

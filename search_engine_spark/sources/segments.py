@@ -21,14 +21,20 @@ Layout::
       segments/batch=<i>/           term-sorted packed parquet
       term_stats/                   (term, df, cf, max_tf) parquet, each
                                     file term-sorted in bounded row groups
+        _coverage.json              batches the dictionary sums (finalize_index)
+      term_stats.lock               flock of the one dictionary writer
 """
 
 from __future__ import annotations
 
 import bisect
+import glob
 import json
 import os
+import shutil
 import time
+import uuid
+from contextlib import contextmanager
 from urllib.parse import unquote, urlparse
 
 import numpy as np
@@ -64,6 +70,8 @@ def blockwise_delta_decode(buf: bytes, block_size: int = BLOCK_SIZE) -> np.ndarr
     lens = np.diff(np.append(bstarts, n))
     return c - np.repeat(base_per_block, lens)
 from ..operators.build import (
+    FIELD_SEP,
+    SEGMENT_SCHEMA,
     build_postings,
     build_segments_combined,
     encode_segments,
@@ -73,6 +81,20 @@ from ..operators.build import (
 )
 
 MANIFEST = "manifest.json"
+
+# packed segment rows as every batch dir stores them; reads name the schema
+# so Spark launches no footer schema-inference job (:func:`read_segment_dirs`)
+SEGMENT_DIR_SCHEMA = StructType(SEGMENT_SCHEMA.fields + [StructField("seg", IntegerType(), False)])
+
+# the term dictionary's columns (``term_stats_from_segments``)
+TERM_STATS_SCHEMA = StructType(
+    [
+        StructField("term", StringType(), False),
+        StructField("df", LongType(), False),
+        StructField("cf", LongType(), False),
+        StructField("max_tf", IntegerType(), False),
+    ]
+)
 
 # term_stats parquet row-group bound (bytes): with each file term-sorted,
 # a df lookup of k terms reads at most k row groups per file at any
@@ -113,6 +135,20 @@ def write_manifest(index_dir: str, m: dict) -> None:
     os.replace(tmp, os.path.join(index_dir, MANIFEST))  # atomic commit
 
 
+@contextmanager
+def _flock(path: str):
+    """Hold an exclusive flock on the file ``path`` (created if missing)
+    for the ``with`` block."""
+    with open(path, "w") as lf:
+        try:
+            import fcntl
+
+            fcntl.flock(lf, fcntl.LOCK_EX)
+        except ImportError:  # non-posix: atomic rename is the only guard
+            pass
+        yield
+
+
 class ManifestConflict(RuntimeError):
     """A concurrent writer changed the manifest in a way that invalidates
     this commit (e.g. a compaction's source batch was already merged away).
@@ -141,14 +177,7 @@ def update_manifest(index_dir: str, mutate) -> dict:
     with a real catalog commit (Iceberg-style optimistic swap) — the
     generation counter is exactly the token that swap would CAS on."""
     os.makedirs(index_dir, exist_ok=True)
-    lock_p = os.path.join(index_dir, MANIFEST + ".lock")
-    with open(lock_p, "w") as lf:
-        try:
-            import fcntl
-
-            fcntl.flock(lf, fcntl.LOCK_EX)
-        except ImportError:  # non-posix: atomic rename is the only guard
-            pass
+    with _flock(os.path.join(index_dir, MANIFEST + ".lock")):
         m = read_manifest(index_dir)
         mutate(m)
         m["generation"] = int(m.get("generation", 0)) + 1
@@ -258,6 +287,12 @@ def build_one_batch(
 
     Idempotent per key: a committed key is never rebuilt; a crashed attempt
     leaves an uncommitted directory that the retry overwrites.
+
+    The batch entry records the batch's docId span (``docid_lo`` /
+    ``docid_hi``, from the read-back agg that also gives the token and
+    posting counts). With it, the next :func:`finalize_index` can take its
+    incremental path: merge this batch alone into the term dictionary on
+    the driver, with no Spark job.
     """
     m = m if m is not None else read_manifest(index_dir)
     if m["batches"].get(key, {}).get("committed"):
@@ -295,18 +330,23 @@ def build_one_batch(
     out = os.path.join(index_dir, "segments", f"batch={key}")
     seg.write.mode("overwrite").parquet(out)
     # one read-back pass gives corpus stats AND the shuffle-skew metric
-    # (north rule): per reduce partition, postings handled and bytes written
+    # (north rule): per reduce partition, postings handled and bytes
+    # written; and the batch's docId span, which finalize_index unions into
+    # the index's span without reading any segment
     per_seg = (
-        spark.read.parquet(out)
+        read_segment_dirs(spark, out)
         .groupBy("seg")
         .agg(
             F.sum("sum_tf").alias("tok"),
             F.sum("ndocs").alias("post"),
             (F.sum(F.octet_length("docids") + F.octet_length("tfs") + F.octet_length("dls")
                    + F.coalesce(F.octet_length("positions"), F.lit(0)))).alias("bytes"),
+            F.min("min_docid").alias("lo"),
+            F.max(F.element_at("block_last_docid", -1)).alias("hi"),
         )
         .collect()
     )
+    lo, hi = _span_union([(r["lo"], r["hi"]) for r in per_seg])
     posts = [int(r["post"] or 0) for r in per_seg]
     npost = sum(posts)
     dt = time.time() - t0
@@ -318,6 +358,8 @@ def build_one_batch(
         "npostings": npost,
         "total_tokens": int(sum(r["tok"] or 0 for r in per_seg)),
         "heavy_terms": heavy,
+        "docid_lo": lo,
+        "docid_hi": hi,
         "build_sec": round(dt, 3),
         "metrics": {
             "docs_per_sec": round(ndocs / dt, 1) if dt else None,
@@ -360,16 +402,125 @@ def build_one_batch(
     return update_manifest(index_dir, _commit)
 
 
-def finalize_index(spark: SparkSession, index_dir: str) -> dict:
-    """Aggregate term stats + corpus stats across batches; idempotent.
+# the dictionary's coverage record: which batches (by commit timestamp) its
+# rows sum, with their docId span and per-field token sums. It sits inside
+# term_stats/, where the leading underscore hides it from parquet readers.
+# Dictionary writers serialize on the lock file beside the dictionary dir.
+_COVERAGE = "_coverage.json"
+_DICT_LOCK = "term_stats.lock"
+_TERM_COLS = [f.name for f in TERM_STATS_SCHEMA.fields]
 
-    Corpus sums come from the manifest read INSIDE the locked commit, so
-    they always match the committed batch set; the term-stats parquet and
-    docId span are computed from the segments visible at entry — if a
-    concurrent writer lands in that window, its own trailing
-    finalize_index (every writer ends with one) recomputes them."""
-    segs = load_segments(spark, index_dir)
+
+def finalize_index(spark: SparkSession, index_dir: str) -> dict:
+    """Bring the term dictionary (``term_stats``), the docId span and the
+    corpus stats up to the committed batches; idempotent.
+
+    The dictionary is updated by one of two paths, chosen by what is on
+    disk. Its coverage record (``term_stats/_coverage.json``) lists the
+    batches, with their ``committed_at``, whose rows it sums:
+
+    - **incremental** (an additive commit): every covered batch is still
+      committed with the same ``committed_at``, every new batch recorded
+      its docId span (``build_one_batch`` does), and the new batches'
+      packed rows (parquet footer counts) number no more than the
+      dictionary's. The new batches' ``(term, ndocs, sum_tf, max_tf)``
+      are read with pyarrow and merged into the dictionary on the driver
+      (df and cf summed, max_tf maxed), which is rewritten term-sorted in
+      bounded row groups; span and per-field token sums add the new
+      batches' own. No Spark job runs, and a finalize with no new batch
+      rewrites nothing.
+    - **full**: a first build, compaction, purge, an index finalized
+      before coverage records existed, or another row-group bound. The
+      dictionary is recomputed from every segment with Spark. The span is
+      the union of the batch entries' spans when every entry has one, else
+      a segment agg.
+
+    One dictionary writer runs at a time: the whole update holds a flock on
+    ``term_stats.lock``. The coverage record is removed before the
+    dictionary is written and written after it, so a crash in between
+    sends the next finalize to the full path instead of double-counting.
+
+    Corpus sums come from the manifest read INSIDE the locked manifest
+    commit, so they always match the committed batch set; the dictionary
+    and span cover the batches committed when the dictionary lock was
+    taken — if a concurrent writer lands in that window, its own trailing
+    finalize_index (every writer ends with one) adds its batch."""
     stats_dir = os.path.join(index_dir, "term_stats")
+    os.makedirs(index_dir, exist_ok=True)
+    with _flock(os.path.join(index_dir, _DICT_LOCK)):
+        m = read_manifest(index_dir)
+        live = {k: b for k, b in m.get("batches", {}).items() if b.get("committed")}
+        fields = m.get("fields") or {}
+        cov = _read_coverage(stats_dir)
+        new = _new_batches(index_dir, live, cov)
+        if new is None:
+            cov = _rebuild_dictionary(spark, index_dir, stats_dir, live, fields)
+        elif new:
+            cov = _merge_into_dictionary(index_dir, stats_dir, live, cov, new, fields)
+        m = update_manifest(index_dir, lambda fresh: _commit_stats(fresh, cov))
+    if m.get("serving_cache"):
+        # opt-in commit hook (operators.serving.attach_serving_cache): keep
+        # the attached serving cache at the committed generation so the
+        # first post-commit workload never pays a cold bucketize or a
+        # ServingCacheStale round-trip
+        from ..operators.serving import maybe_refresh_attached
+
+        maybe_refresh_attached(spark, index_dir, m)
+    return m
+
+
+def _commit_stats(fresh: dict, cov: dict) -> None:
+    """Manifest delta of :func:`finalize_index`: corpus sums over the
+    committed batches, span and field token sums from the dictionary's
+    coverage record ``cov``."""
+    bs = [b for b in fresh.get("batches", {}).values() if b.get("committed")]
+    n_docs = sum(b["ndocs"] for b in bs)
+    total_tokens = sum(b["total_tokens"] for b in bs)
+    field_tokens = cov["field_tokens"]
+    fresh["stats"] = {
+        "n_docs": n_docs,
+        "total_tokens": total_tokens,
+        "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
+        "npostings": sum(b["npostings"] for b in bs),
+        "docid_lo": cov["docid_lo"],
+        "docid_hi": cov["docid_hi"],
+    }
+    if field_tokens:
+        fresh["stats"]["field_tokens"] = field_tokens
+        if n_docs:
+            # per-field BM25 uses the FIELD's avgdl, not the global mix;
+            # content tokens = total − Σ field tokens
+            content_tokens = total_tokens - sum(field_tokens.values())
+            fresh["stats"]["avgdl_by_field"] = {
+                "": content_tokens / n_docs,
+                **{f: tok / n_docs for f, tok in sorted(field_tokens.items())},
+            }
+    fresh["finalized"] = True
+
+
+def _new_batches(index_dir: str, live: dict, cov: dict | None) -> list[str] | None:
+    """Keys of the committed batches the dictionary does not cover yet, or
+    None when it must be recomputed from every segment (see the two paths
+    of :func:`finalize_index`)."""
+    if cov is None or cov.get("row_group_bytes") != _TERM_STATS_ROW_GROUP_BYTES:
+        return None
+    if any(live.get(k, {}).get("committed_at") != at for k, at in cov["batches"].items()):
+        return None  # a covered batch was compacted, purged or re-committed
+    new = sorted(set(live) - set(cov["batches"]))
+    if any("docid_lo" not in live[k] for k in new):
+        return None
+    if sum(_footer_rows(batch_path(index_dir, k)) for k in new) > cov["rows"]:
+        return None
+    return new
+
+
+def _rebuild_dictionary(spark: SparkSession, index_dir: str, stats_dir: str,
+                        live: dict, fields: dict) -> dict:
+    """The full path: recompute the dictionary from every committed
+    segment with Spark; returns its coverage record."""
+    _clear_coverage(stats_dir)
+    paths = [batch_path(index_dir, k) for k in sorted(live)]
+    segs = read_segment_dirs(spark, *paths) if paths else load_segments(spark, index_dir)
     # a sorted term dictionary: the sort runs inside the write task (no
     # extra job), and bounded row groups give each file disjoint term
     # ranges that the driver-side lookup (term_dfs) prunes by min/max
@@ -384,57 +535,150 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
     # global docId bounds: lets the DAAT bucketizer skip its span-agg job
     # at query time (rank._bucketize_segments docid_span) — docIds are
     # 63-bit hashes, so the span is not derivable from n_docs
-    span = segs.agg(
-        F.min("min_docid").alias("lo"),
-        F.max(F.element_at("block_last_docid", -1)).alias("hi"),
-    ).collect()[0]
-    # fielded index: per-field token sums (segment-level agg — no posting
-    # decode) so per-field BM25 can use the FIELD's avgdl, not the global
-    # mix. Content tokens = total − Σ field tokens.
-    fields = read_manifest(index_dir).get("fields") or {}
+    if live and all("docid_lo" in b for b in live.values()):
+        lo, hi = _span_union([(b["docid_lo"], b["docid_hi"]) for b in live.values()])
+    else:
+        span = segs.agg(
+            F.min("min_docid").alias("lo"),
+            F.max(F.element_at("block_last_docid", -1)).alias("hi"),
+        ).collect()[0]
+        lo, hi = _span_union([(span["lo"], span["hi"])])
+    # fielded index: per-field token sums = Σ cf over each field's terms,
+    # read on the driver from the dictionary just written; its files are
+    # term-sorted, so row groups outside the fields' term ranges are skipped
     field_tokens: dict[str, int] = {}
     if fields:
-        from ..operators.build import FIELD_SEP
+        import pyarrow.parquet as pq
 
-        pref = F.split(F.col("term"), FIELD_SEP, 2).getItem(0)
-        rows = (
-            segs.where(F.col("term").contains(FIELD_SEP))
-            .groupBy(pref.alias("f"))
-            .agg(F.sum("sum_tf").alias("tok"))
-            .collect()
-        )
-        field_tokens = {r["f"]: int(r["tok"]) for r in rows if r["f"] in set(fields)}
+        ranges = [[("term", ">=", f + FIELD_SEP), ("term", "<", f + chr(ord(FIELD_SEP) + 1))]
+                  for f in sorted(fields)]
+        field_tokens = _field_tokens(
+            pq.read_table(stats_dir, columns=["term", "cf"], filters=ranges), fields)
+    cov = {
+        "batches": {k: b.get("committed_at") for k, b in sorted(live.items())},
+        "rows": _footer_rows(stats_dir),
+        "row_group_bytes": _TERM_STATS_ROW_GROUP_BYTES,
+        "docid_lo": lo,
+        "docid_hi": hi,
+        "field_tokens": field_tokens,
+    }
+    if live:  # a manifest-less raw segments/ read covers no batch
+        _write_coverage(stats_dir, cov)
+    return cov
 
-    def _commit(fresh: dict) -> None:
-        bs = [b for b in fresh.get("batches", {}).values() if b.get("committed")]
-        n_docs = sum(b["ndocs"] for b in bs)
-        total_tokens = sum(b["total_tokens"] for b in bs)
-        fresh["stats"] = {
-            "n_docs": n_docs,
-            "total_tokens": total_tokens,
-            "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
-            "npostings": sum(b["npostings"] for b in bs),
-            "docid_lo": int(span["lo"]) if span["lo"] is not None else None,
-            "docid_hi": int(span["hi"]) if span["hi"] is not None else None,
-        }
-        if field_tokens and n_docs:
-            content_tokens = total_tokens - sum(field_tokens.values())
-            fresh["stats"]["avgdl_by_field"] = {
-                "": content_tokens / n_docs,
-                **{f: tok / n_docs for f, tok in sorted(field_tokens.items())},
-            }
-        fresh["finalized"] = True
 
-    m = update_manifest(index_dir, _commit)
-    if m.get("serving_cache"):
-        # opt-in commit hook (operators.serving.attach_serving_cache): keep
-        # the attached serving cache at the committed generation so the
-        # first post-commit workload never pays a cold bucketize or a
-        # ServingCacheStale round-trip
-        from ..operators.serving import maybe_refresh_attached
+def _merge_into_dictionary(index_dir: str, stats_dir: str, live: dict, cov: dict,
+                           new: list[str], fields: dict) -> dict:
+    """The incremental path: merge the new batches' packed rows into the
+    dictionary on the driver (pyarrow, no Spark job); returns the new
+    coverage record."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        maybe_refresh_attached(spark, index_dir, m)
-    return m
+    schema = pa.schema([(c, t) for c, t in zip(
+        _TERM_COLS, (pa.string(), pa.int64(), pa.int64(), pa.int32()))])
+    delta = pa.concat_tables([
+        pq.read_table(batch_path(index_dir, k), columns=["term", "ndocs", "sum_tf", "max_tf"])
+        .rename_columns(_TERM_COLS).cast(schema)
+        for k in new
+    ])
+    old = pq.read_table(stats_dir, columns=_TERM_COLS).cast(schema)
+    merged = pa.concat_tables([old, delta]).group_by("term").aggregate(
+        [("df", "sum"), ("cf", "sum"), ("max_tf", "max")])
+    merged = merged.rename_columns(_TERM_COLS).cast(schema).sort_by("term")
+    field_tokens = dict(cov["field_tokens"])
+    for f, tok in _field_tokens(delta, fields).items():
+        field_tokens[f] = field_tokens.get(f, 0) + tok
+    lo, hi = _span_union([(cov["docid_lo"], cov["docid_hi"])]
+                         + [(live[k]["docid_lo"], live[k]["docid_hi"]) for k in new])
+    _clear_coverage(stats_dir)
+    _write_dictionary(stats_dir, merged)
+    cov = {
+        **cov,
+        "batches": {k: b.get("committed_at") for k, b in sorted(live.items())},
+        "rows": merged.num_rows,
+        "docid_lo": lo,
+        "docid_hi": hi,
+        "field_tokens": field_tokens,
+    }
+    _write_coverage(stats_dir, cov)
+    return cov
+
+
+def _field_tokens(rows, fields: dict) -> dict[str, int]:
+    """{field: Σ cf} over the ``<field><FIELD_SEP><token>`` terms of the
+    pyarrow (term, cf) table ``rows``, for the index's ``fields``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not fields:
+        return {}
+    rows = rows.filter(pc.match_substring(rows["term"], FIELD_SEP))
+    pref = pc.list_element(pc.split_pattern(rows["term"], FIELD_SEP, max_splits=1), 0)
+    g = pa.table({"f": pref, "cf": rows["cf"]}).group_by("f").aggregate([("cf", "sum")])
+    return {f: int(tok) for f, tok in zip(g["f"].to_pylist(), g["cf_sum"].to_pylist())
+            if f in fields}
+
+
+def _write_dictionary(stats_dir: str, table) -> None:
+    """Replace the dictionary's files by one parquet file of the
+    term-sorted pyarrow ``table``, in row groups of about
+    ``_TERM_STATS_ROW_GROUP_BYTES`` (the bound Spark's write gets as
+    ``parquet.block.size``). Dictionary encoding on the numeric columns
+    only (terms are unique) and no embedded Arrow schema keep the file no
+    larger than Spark's for the same rows."""
+    import pyarrow.parquet as pq
+
+    rows = max(1, _TERM_STATS_ROW_GROUP_BYTES * table.num_rows // max(table.nbytes, 1))
+    name = f"part-00000-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(stats_dir, "." + name)  # hidden until renamed
+    pq.write_table(table, tmp, row_group_size=rows, use_dictionary=_TERM_COLS[1:],
+                   store_schema=False)
+    for entry in os.scandir(stats_dir):
+        if entry.path == tmp:
+            continue
+        if entry.is_dir():
+            shutil.rmtree(entry.path)
+        else:
+            os.remove(entry.path)
+    os.replace(tmp, os.path.join(stats_dir, name))
+
+
+def _read_coverage(stats_dir: str) -> dict | None:
+    try:
+        with open(os.path.join(stats_dir, _COVERAGE)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _write_coverage(stats_dir: str, cov: dict) -> None:
+    tmp = os.path.join(stats_dir, _COVERAGE + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(cov, f, sort_keys=True)
+    os.replace(tmp, os.path.join(stats_dir, _COVERAGE))
+
+
+def _clear_coverage(stats_dir: str) -> None:
+    try:
+        os.remove(os.path.join(stats_dir, _COVERAGE))
+    except FileNotFoundError:
+        pass
+
+
+def _footer_rows(parquet_dir: str) -> int:
+    """Rows of the parquet files in ``parquet_dir``, from their footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(p).num_rows
+               for p in glob.glob(os.path.join(parquet_dir, "*.parquet")))
+
+
+def _span_union(spans) -> tuple[int | None, int | None]:
+    """(min lo, max hi) over (lo, hi) pairs, skipping None (an empty batch)."""
+    los = [int(lo) for lo, _ in spans if lo is not None]
+    his = [int(hi) for _, hi in spans if hi is not None]
+    return (min(los) if los else None, max(his) if his else None)
 
 
 def merge_all_batches(spark: SparkSession, index_dir: str) -> dict:
@@ -514,12 +758,21 @@ def load_segments(spark: SparkSession, index_dir: str) -> DataFrame:
         if b.get("committed")
     ]
     if paths:
-        return spark.read.parquet(*paths)
-    return spark.read.parquet(os.path.join(index_dir, "segments"))
+        return read_segment_dirs(spark, *paths)
+    return read_segment_dirs(spark, os.path.join(index_dir, "segments"))
+
+
+def read_segment_dirs(spark: SparkSession, *paths: str) -> DataFrame:
+    """Packed segment rows of the given batch dirs, read with their known
+    schema (:data:`SEGMENT_DIR_SCHEMA`): Spark then runs no footer
+    schema-inference job. Every read of segment dirs goes through here."""
+    return spark.read.schema(SEGMENT_DIR_SCHEMA).parquet(*paths)
 
 
 def load_term_stats(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(index_dir, "term_stats"))
+    """The term dictionary as a plain parquet scan, read with its known
+    schema (no footer schema-inference job)."""
+    return spark.read.schema(TERM_STATS_SCHEMA).parquet(os.path.join(index_dir, "term_stats"))
 
 
 def load_term_stats_pdf(index_dir: str) -> pd.DataFrame:
@@ -805,9 +1058,7 @@ def compact(spark: SparkSession, index_dir: str, batches: list[int]) -> dict:
     Commit order: write new batch, flip manifest, then drop old dirs —
     crash-safe at every step (manifest is the source of truth).
     """
-    import shutil
-
-    from ..operators.build import SEGMENT_SCHEMA, _compact_merge_encoder
+    from ..operators.build import _compact_merge_encoder
 
     m = read_manifest(index_dir)
     batches = [str(b) for b in batches]
@@ -822,7 +1073,7 @@ def compact(spark: SparkSession, index_dir: str, batches: list[int]) -> dict:
     # re-rooted like load_segments — NEVER the manifest's absolute paths
     # (a relocated index would read stale data / rmtree outside the index)
     srcs = [batch_path(index_dir, b) for b in batches]
-    segs = spark.read.parquet(*srcs)
+    segs = read_segment_dirs(spark, *srcs)
     heavy = sorted({t for b in batches for t in m["batches"][str(b)].get("heavy_terms", [])})
     out = batch_path(index_dir, new_id)
     packed = (
@@ -842,6 +1093,10 @@ def compact(spark: SparkSession, index_dir: str, batches: list[int]) -> dict:
         "merged_from": list(batches),
         "committed_at": time.time(),
     }
+    # a by-term repack keeps every posting, so the span is the sources'
+    if all("docid_lo" in m["batches"][b] for b in batches):
+        merged["docid_lo"], merged["docid_hi"] = _span_union(
+            [(m["batches"][b]["docid_lo"], m["batches"][b]["docid_hi"]) for b in batches])
     def _commit(fresh: dict) -> None:
         cur = fresh.setdefault("batches", {})
         gone = [b for b in batches if not cur.get(b, {}).get("committed")]

@@ -129,10 +129,11 @@ def test_wordbreak():
 
 def load_real_en_dict() -> dict[str, float]:
     """The committed REAL English word-frequency dictionary
-    (tests/fixtures/wordbreak_dict_real_en.txt, 82,765 entries): the public
+    (tests/fixtures/wordbreak_dict_real_en.txt, 82,763 entries): the public
     Google Web Trillion Word Corpus unigram counts (the head of Peter
-    Norvig's count_1w.txt, norvig.com/ngrams) — the exact resource the
-    reference bundles and loads (``WordBreakTokenizer.java:44-64``,
+    Norvig's count_1w.txt, norvig.com/ngrams, less two words no golden
+    uses) — the exact resource the reference bundles and loads
+    (``WordBreakTokenizer.java:44-64``,
     ``cs221_frequency_dictionary_en.txt``). Carried as behavioral contract
     data (BOM stripped), the same fixture policy as the A4/A8 stop lists —
     DP segmentation quality is asserted on real English distributions, not
@@ -153,7 +154,7 @@ def load_real_en_dict() -> dict[str, float]:
 def test_wordbreak_reference_dictionary():
     """WordBreakTokenizerTest.java:13-35 goldens on the REAL dictionary."""
     freq = load_real_en_dict()
-    assert len(freq) == 82765
+    assert len(freq) == 82763
     wb = WordBreakTokenizer(freq)
     # WordBreakTokenizerTest goldens
     assert wb.tokenize("catdog") == ["cat", "dog"]
@@ -175,7 +176,7 @@ def test_wordbreak_reference_dictionary():
 
 def test_wordbreak_real_dict_long2_and_latency():
     """WordBreakTokenizerTest.java:38-50 (longTest2) golden + the 20 s
-    latency envelope, both on the real 82,765-entry English dictionary."""
+    latency envelope, both on the real 82,763-entry English dictionary."""
     import time
 
     wb = WordBreakTokenizer(load_real_en_dict())

@@ -12,7 +12,7 @@ from search_engine_spark.operators.serving import (
 )
 from search_engine_spark.sources import segments as S
 from search_engine_spark.sources.segments import load_term_stats_pdf
-from tests.conftest import corpus_from_texts
+from tests.conftest import corpus_from_texts, run_jobs
 
 DOCS = [
     "spark scan table scan filter join",
@@ -102,6 +102,33 @@ def test_stale_cache_refuses(spark, served, tmp_path_factory):
     got2 = _rows(score_queries_cached(
         spark, cache2, stats, {0: ["scan"]}, analyzer="naive"))
     assert got2
+
+
+def test_visibility_probe_is_one_job_and_names_a_missing_shard(
+        spark, served, tmp_path_factory):
+    """The commit gate probes every shard file from a task in one Spark
+    job; a deleted shard raises ServingCacheUnreachable naming the file."""
+    import os
+    import shutil
+
+    from search_engine_spark.operators import serving as SV
+
+    _, cache, _ = served
+    cdir = str(tmp_path_factory.mktemp("probe") / "cache")
+    shutil.copytree(cache["cache_dir"], cdir)
+    rows = {d["bucket"]: d["rows"] for d in cache["buckets"]}
+    expect = [(fs[0], rows[int(b)]) for b, fs in cache["shards"].items()]
+    assert len(expect) > 1
+    _, jobs = run_jobs(spark, lambda: SV._probe_shards_visible(spark, cdir, expect),
+                       "probe_ok")
+    assert jobs == 1
+
+    victim = expect[-1][0]
+    os.remove(os.path.join(cdir, victim))
+    with pytest.raises(SV.ServingCacheUnreachable, match="not a shared store") as e:
+        SV._probe_shards_visible(spark, cdir, expect)
+    assert "task@" in str(e.value) and victim in str(e.value)
+    assert "driver@" in str(e.value)
 
 
 def test_fielded_cache_meta_uses_content_avgdl(spark, tmp_path_factory):
