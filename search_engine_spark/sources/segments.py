@@ -28,7 +28,6 @@ Layout::
 from __future__ import annotations
 
 import bisect
-import glob
 import json
 import os
 import shutil
@@ -420,20 +419,17 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
     batches, with their ``committed_at``, whose rows it sums:
 
     - **incremental** (an additive commit): every covered batch is still
-      committed with the same ``committed_at``, every new batch recorded
-      its docId span (``build_one_batch`` does), and the new batches'
-      packed rows (parquet footer counts) number no more than the
-      dictionary's. The new batches' ``(term, ndocs, sum_tf, max_tf)``
-      are read with pyarrow and merged into the dictionary on the driver
-      (df and cf summed, max_tf maxed), which is rewritten term-sorted in
-      bounded row groups; span and per-field token sums add the new
-      batches' own. No Spark job runs, and a finalize with no new batch
-      rewrites nothing.
-    - **full**: a first build, compaction, purge, an index finalized
-      before coverage records existed, or another row-group bound. The
-      dictionary is recomputed from every segment with Spark. The span is
-      the union of the batch entries' spans when every entry has one, else
-      a segment agg.
+      committed with the same ``committed_at`` and every new batch
+      recorded its docId span (``build_one_batch`` does). The new
+      batches' ``(term, ndocs, sum_tf, max_tf)`` are read with pyarrow and
+      merged into the dictionary on the driver (df and cf summed, max_tf
+      maxed), which is rewritten term-sorted in bounded row groups; span
+      and per-field token sums add the new batches' own. No Spark job
+      runs, and a finalize with no new batch rewrites nothing.
+    - **full**: a first build, compaction, purge, or an index finalized
+      before coverage records existed. The dictionary is recomputed from
+      every segment with Spark. The span is the union of the batch
+      entries' spans when every entry has one, else a segment agg.
 
     One dictionary writer runs at a time: the whole update holds a flock on
     ``term_stats.lock``. The coverage record is removed before the
@@ -452,7 +448,7 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
         live = {k: b for k, b in m.get("batches", {}).items() if b.get("committed")}
         fields = m.get("fields") or {}
         cov = _read_coverage(stats_dir)
-        new = _new_batches(index_dir, live, cov)
+        new = _new_batches(live, cov)
         if new is None:
             cov = _rebuild_dictionary(spark, index_dir, stats_dir, live, fields)
         elif new:
@@ -498,18 +494,16 @@ def _commit_stats(fresh: dict, cov: dict) -> None:
     fresh["finalized"] = True
 
 
-def _new_batches(index_dir: str, live: dict, cov: dict | None) -> list[str] | None:
+def _new_batches(live: dict, cov: dict | None) -> list[str] | None:
     """Keys of the committed batches the dictionary does not cover yet, or
     None when it must be recomputed from every segment (see the two paths
     of :func:`finalize_index`)."""
-    if cov is None or cov.get("row_group_bytes") != _TERM_STATS_ROW_GROUP_BYTES:
+    if cov is None:
         return None
     if any(live.get(k, {}).get("committed_at") != at for k, at in cov["batches"].items()):
         return None  # a covered batch was compacted, purged or re-committed
     new = sorted(set(live) - set(cov["batches"]))
     if any("docid_lo" not in live[k] for k in new):
-        return None
-    if sum(_footer_rows(batch_path(index_dir, k)) for k in new) > cov["rows"]:
         return None
     return new
 
@@ -556,8 +550,6 @@ def _rebuild_dictionary(spark: SparkSession, index_dir: str, stats_dir: str,
             pq.read_table(stats_dir, columns=["term", "cf"], filters=ranges), fields)
     cov = {
         "batches": {k: b.get("committed_at") for k, b in sorted(live.items())},
-        "rows": _footer_rows(stats_dir),
-        "row_group_bytes": _TERM_STATS_ROW_GROUP_BYTES,
         "docid_lo": lo,
         "docid_hi": hi,
         "field_tokens": field_tokens,
@@ -585,7 +577,10 @@ def _merge_into_dictionary(index_dir: str, stats_dir: str, live: dict, cov: dict
     old = pq.read_table(stats_dir, columns=_TERM_COLS).cast(schema)
     merged = pa.concat_tables([old, delta]).group_by("term").aggregate(
         [("df", "sum"), ("cf", "sum"), ("max_tf", "max")])
-    merged = merged.rename_columns(_TERM_COLS).cast(schema).sort_by("term")
+    # by name: the position of the group key among the aggregate's output
+    # columns differs across pyarrow versions
+    merged = (merged.select(["term", "df_sum", "cf_sum", "max_tf_max"])
+              .rename_columns(_TERM_COLS).cast(schema).sort_by("term"))
     field_tokens = dict(cov["field_tokens"])
     for f, tok in _field_tokens(delta, fields).items():
         field_tokens[f] = field_tokens.get(f, 0) + tok
@@ -596,7 +591,6 @@ def _merge_into_dictionary(index_dir: str, stats_dir: str, live: dict, cov: dict
     cov = {
         **cov,
         "batches": {k: b.get("committed_at") for k, b in sorted(live.items())},
-        "rows": merged.num_rows,
         "docid_lo": lo,
         "docid_hi": hi,
         "field_tokens": field_tokens,
@@ -664,14 +658,6 @@ def _clear_coverage(stats_dir: str) -> None:
         os.remove(os.path.join(stats_dir, _COVERAGE))
     except FileNotFoundError:
         pass
-
-
-def _footer_rows(parquet_dir: str) -> int:
-    """Rows of the parquet files in ``parquet_dir``, from their footers."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.read_metadata(p).num_rows
-               for p in glob.glob(os.path.join(parquet_dir, "*.parquet")))
 
 
 def _span_union(spans) -> tuple[int | None, int | None]:

@@ -114,6 +114,7 @@ def test_term_stats_is_sorted_in_disjoint_row_groups(spark, idx, tmp_path_factor
     small = str(tmp_path_factory.mktemp("termdfs_small") / "idx")
     shutil.copytree(p, small)
     monkeypatch.setattr(S, "_TERM_STATS_ROW_GROUP_BYTES", 1024)
+    S._clear_coverage(os.path.join(small, "term_stats"))  # full-path rewrite
     S.finalize_index(spark, small)
     _assert_sorted_layout(small)
     assert max(len(_ranges(f)) for f in _files(small)) > 1
