@@ -20,7 +20,7 @@ Query planning follows the public trigram-index recipe:
    count-matching shuffle at the few smallest lists instead of
    sum(df(all trigrams)) — on a 100 TB corpus the difference between
    touching ~0.1% and ~50% of the index;
-2. candidates hydrate via the broadcast semi-join (S4 shape) and a JVM
+2. candidates hydrate via a broadcast join (S4 shape) and a JVM
    ``contains``/``rlike`` verify removes false positives — results are
    byte-exact regardless of which subset was probed.
 
@@ -28,11 +28,15 @@ Regex search extracts the literal runs a match MUST contain
 (:func:`required_trigrams`, conservative: bails to a documented full-scan
 fallback on alternation/lookaround rather than ever over-pruning), probes
 their trigrams, and verifies with ``rlike``.
+
+One plan serves all four entry points (:func:`_probe_verify`): a single
+needle or pattern is the Q=1 case of its batch, so the probe choice, the
+count-matching agg, the verify and the short-query scan exist once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.analyzers import trigram_tokenize
@@ -61,6 +65,19 @@ def needle_trigrams(needle: str) -> list[str]:
     return trigram_tokenize(needle)
 
 
+def _probe_plan(
+    trigrams: list[str], term_stats, max_probe: int
+) -> tuple[list[str], dict[str, int]]:
+    """(probes, dfs): the ``max_probe`` rarest distinct trigrams, ranked by
+    (df, trigram), and the df of each indexed trigram. Probes are empty
+    when a trigram is absent from the stats: df=0, so no indexed doc can
+    match. The one probe choice of the search plans and
+    :func:`explain_substring`."""
+    dfs = term_dfs(term_stats, trigrams)
+    ranked = sorted(set(trigrams), key=lambda t: (dfs.get(t, 0), t))
+    return (ranked[:max_probe] if len(dfs) == len(ranked) else []), dfs
+
+
 def probe_trigrams(trigrams: list[str], term_stats, max_probe: int = 8) -> list[str]:
     """Choose the ``max_probe`` rarest trigrams to intersect.
 
@@ -70,26 +87,7 @@ def probe_trigrams(trigrams: list[str], term_stats, max_probe: int = 8) -> list[
     Trigrams absent from the stats have df=0 — the needle cannot match any
     indexed doc, and the caller short-circuits to an empty result.
     """
-    if not trigrams:
-        return []
-    dfs = term_dfs(term_stats, trigrams)
-    if len(dfs) < len(set(trigrams)):
-        return []  # some required trigram unseen in the corpus: no match
-    ranked = sorted(set(trigrams), key=lambda t: (dfs[t], t))
-    return ranked[:max_probe]
-
-
-def _candidates_and(segments: DataFrame, probes: list[str]) -> DataFrame:
-    """Count-matching intersection over the probe trigrams' posting lists,
-    through the membership-only decode (term + docids columns; tf/dl blobs
-    never leave disk)."""
-    p = decode_term_docids(segments, probes)
-    return (
-        p.groupBy("docId")
-        .agg(F.count_distinct("term").alias("m"))
-        .where(F.col("m") == len(set(probes)))
-        .select("docId")
-    )
+    return _probe_plan(trigrams, term_stats, max_probe)[0]
 
 
 class FullScanRefused(ValueError):
@@ -107,6 +105,117 @@ def _refuse(what: str, reason: str) -> FullScanRefused:
         f"full corpus scan required for {what} ({reason}); pass "
         "allow_full_scan=True to run it anyway, or route this query to a "
         "batch/offline tier"
+    )
+
+
+def _probe_verify(
+    segments: DataFrame,
+    corpus: DataFrame,
+    required: dict[int, list[str] | None],
+    match,
+    name,
+    reason: str,
+    term_stats,
+    max_probe: int,
+    allow_full_scan: bool,
+) -> DataFrame:
+    """THE trigram plan behind the substring and regex entry points, single
+    and batch alike -> (qid, docId) rows, two shuffles for any Q:
+
+    - ONE ``In``-pushed membership decode (term + docids columns; tf/dl
+      blobs never leave disk) over the union of every query's probe
+      trigrams (:func:`probe_trigrams`);
+    - a broadcast (term, qid) relation fans decoded postings out to the
+      queries probing that trigram; per-(qid, docId) count-matching against
+      a literal qid→n_probes map gives all candidate sets in one agg;
+    - ONE broadcast join hydrates the union of candidates, and a per-qid
+      CASE chain of literal ``match(q)`` predicates verifies each row —
+      byte-exact whatever subset was probed.
+
+    ``required[q]`` holds the trigrams every match of query q must contain.
+    A query without any (``None`` or empty) has no trigram to seek: it is
+    refused as ``name(q)`` for ``reason`` when ``allow_full_scan=False``,
+    else answered by ONE corpus scan shared by all such queries (per-qid
+    ``CASE WHEN match THEN qid`` cells, exploded and null-filtered). A
+    query with an unindexed required trigram matches nothing."""
+    probe_by_qid: dict[int, list[str]] = {}
+    scan_qids: list[int] = []
+    for qid, tris in required.items():
+        if not tris:
+            if not allow_full_scan:
+                raise _refuse(name(qid), reason)
+            scan_qids.append(qid)
+        elif term_stats is None:
+            probe_by_qid[qid] = tris[:max_probe]
+        else:
+            probes = probe_trigrams(tris, term_stats, max_probe)
+            if probes:
+                probe_by_qid[qid] = probes
+
+    spark = corpus.sparkSession
+    out = None
+    if probe_by_qid:
+        term_qid = [(t, q) for q, ps in probe_by_qid.items() for t in ps]
+        fanout = spark.createDataFrame(term_qid, "term string, qid int")
+        need_m = F.create_map(
+            *[x for q, ps in probe_by_qid.items() for x in (F.lit(q), F.lit(len(ps)))]
+        )
+        cands = (
+            decode_term_docids(segments, sorted({t for t, _ in term_qid}))
+            .join(F.broadcast(fanout), "term")
+            .groupBy("qid", "docId")
+            .agg(F.count_distinct("term").alias("m"))
+            .where(F.col("m") == need_m[F.col("qid")])
+            .select("qid", "docId")
+        )
+        verify = None
+        for q in sorted(probe_by_qid):
+            branch = match(q)
+            verify = (F.when(F.col("qid") == q, branch) if verify is None
+                      else verify.when(F.col("qid") == q, branch))
+        out = (
+            corpus.join(F.broadcast(cands), "docId")
+            .where(verify)
+            .select("qid", "docId")
+        )
+    if scan_qids:
+        cells = F.array(*[F.when(match(q), F.lit(q)) for q in sorted(scan_qids)])
+        scanned = (
+            corpus.select("docId", F.explode(cells).alias("qid"))
+            .where(F.col("qid").isNotNull())
+            .select("qid", "docId")
+        )
+        out = scanned if out is None else out.unionByName(scanned)
+    if out is None:
+        return spark.createDataFrame([], "qid int, docId long")
+    return out
+
+
+def _substring_plan(
+    segments: DataFrame,
+    corpus: DataFrame,
+    needles: dict[int, str],
+    name,
+    term_stats,
+    max_probe: int,
+    fold_case: bool,
+    field: str | None,
+    allow_full_scan: bool,
+) -> DataFrame:
+    """Needle prep for :func:`_probe_verify`: fold, trigrams (namespaced
+    when ``field`` is set), and the ``contains`` verify."""
+    from .build import FIELD_SEP
+
+    col = F.col(field) if field else F.col("content")
+    haystack = F.lower(col) if fold_case else col
+    prefix = f"{field}{FIELD_SEP}" if field else ""
+    folded = {q: (s.lower() if fold_case else s) for q, s in needles.items()}
+    return _probe_verify(
+        segments, corpus,
+        {q: [prefix + t for t in needle_trigrams(nd)] for q, nd in folded.items()},
+        lambda q: haystack.contains(F.lit(folded[q])),
+        name, "shorter than 3 chars, no trigram to seek",
+        term_stats, max_probe, allow_full_scan,
     )
 
 
@@ -135,36 +244,14 @@ def search_substring(
     both content substring and path-substring (the code-search ``file:``
     filter) queries.
 
-    The verify step makes results exact whatever ``max_probe`` pruned, so
-    the only tuning tradeoff is candidates-verified vs posting-bytes-read.
+    The Q=1 case of :func:`search_substring_batch`'s plan. The verify step
+    makes results exact whatever ``max_probe`` pruned, so the only tuning
+    tradeoff is candidates-verified vs posting-bytes-read.
     """
-    from .build import FIELD_SEP
-
-    col = F.col(field) if field else F.col("content")
-    haystack = F.lower(col) if fold_case else col
-    prefix = f"{field}{FIELD_SEP}" if field else ""
-    nd = needle.lower() if fold_case else needle
-    if len(nd) < 3:
-        if not allow_full_scan:
-            raise _refuse(f"needle {needle!r}",
-                          "shorter than 3 chars, no trigram to seek")
-        return (
-            corpus.where(haystack.contains(F.lit(nd)))
-            .select("docId")
-        )
-    tris = [prefix + t for t in needle_trigrams(nd)]
-    if term_stats is not None:
-        probes = probe_trigrams(tris, term_stats, max_probe)
-        if not probes:
-            return corpus.select("docId").limit(0)
-    else:
-        probes = tris[: max_probe]
-    cands = _candidates_and(segments, probes)
-    return (
-        corpus.join(F.broadcast(cands), "docId", "left_semi")
-        .where(haystack.contains(F.lit(nd)))
-        .select("docId")
-    )
+    return _substring_plan(
+        segments, corpus, {0: needle}, lambda q: f"needle {needle!r}",
+        term_stats, max_probe, fold_case, field, allow_full_scan,
+    ).select("docId")
 
 
 def search_substring_batch(
@@ -177,83 +264,17 @@ def search_substring_batch(
     allow_full_scan: bool = True,
 ) -> DataFrame:
     """Batch substring serving: Q needles answered in ONE job — (qid,
-    docId) rows. The per-needle plan of :func:`search_substring` is shared
-    across the workload exactly like the batched DAAT path shares its scan:
-
-    - ONE ``In``-pushed membership decode over the union of every needle's
-      probe trigrams;
-    - a broadcast (term, qid) relation fans decoded postings out to the
-      needles probing that trigram; per-(qid, docId) count-matching against
-      a literal qid→n_probes map gives all candidate sets in one agg;
-    - ONE broadcast semi-join hydrates the union of candidates, and the
-      verify resolves each row's needle from a literal qid→needle map —
-      byte-exact per needle, two shuffles total for any Q.
-
-    Needles shorter than 3 chars or with an unindexed trigram are handled
-    per the single-needle rules (full-scan / provably-empty) and unioned
-    in; term_stats pruning applies per needle."""
-    content = F.lower(F.col("content")) if fold_case else F.col("content")
-    folded = {q: (s.lower() if fold_case else s) for q, s in needles.items()}
-    probe_by_qid: dict[int, list[str]] = {}
-    scan_qids: list[int] = []  # short-needle fallbacks
-    for qid, nd in folded.items():
-        tris = needle_trigrams(nd)
-        if not tris:
-            if not allow_full_scan:
-                raise _refuse(f"qid={qid} needle {needles[qid]!r}",
-                              "shorter than 3 chars, no trigram to seek")
-            scan_qids.append(qid)
-            continue
-        if term_stats is not None:
-            probes = probe_trigrams(tris, term_stats, max_probe)
-            if not probes:
-                continue  # trigram unseen anywhere: needle matches nothing
-        else:
-            probes = tris[:max_probe]
-        probe_by_qid[qid] = probes
-
-    out = None
-    if probe_by_qid:
-        term_qid = [(t, q) for q, ps in probe_by_qid.items() for t in ps]
-        all_probes = sorted({t for t, _ in term_qid})
-        spark = SparkSession.getActiveSession()
-        fanout = spark.createDataFrame(term_qid, "term string, qid int")
-        need_m = F.create_map(
-            *[x for q, ps in probe_by_qid.items() for x in (F.lit(q), F.lit(len(ps)))]
-        )
-        needle_m = F.create_map(
-            *[x for q in probe_by_qid for x in (F.lit(q), F.lit(folded[q]))]
-        )
-        cands = (
-            decode_term_docids(segments, all_probes)
-            .join(F.broadcast(fanout), "term")
-            .groupBy("qid", "docId")
-            .agg(F.count_distinct("term").alias("m"))
-            .where(F.col("m") == need_m[F.col("qid")])
-            .select("qid", "docId")
-        )
-        out = (
-            corpus.join(F.broadcast(cands), "docId")
-            .where(content.contains(needle_m[F.col("qid")]))
-            .select("qid", "docId")
-        )
-    if scan_qids:
-        # all short-needle fallbacks share ONE corpus scan: per-qid CASE
-        # cells exploded and null-filtered (Q scans collapse to one)
-        cells = F.array(*[
-            F.when(content.contains(F.lit(folded[q])), F.lit(q))
-            for q in sorted(scan_qids)
-        ])
-        scanned = (
-            corpus.select("docId", F.explode(cells).alias("qid"))
-            .where(F.col("qid").isNotNull())
-            .select("qid", "docId")
-        )
-        out = scanned if out is None else out.unionByName(scanned)
-    if out is None:
-        spark = SparkSession.getActiveSession()
-        return spark.createDataFrame([], "qid int, docId long")
-    return out
+    docId) rows, through the same probe/count-match/verify plan as
+    :func:`search_substring` (:func:`_probe_verify`), shared across the
+    workload exactly like the batched DAAT path shares its scan: one
+    membership decode over the union of probe trigrams, one count-matching
+    agg, one hydrate. Needles shorter than 3 chars share one corpus scan;
+    a needle with an unindexed trigram matches nothing; term_stats pruning
+    applies per needle."""
+    return _substring_plan(
+        segments, corpus, needles, lambda q: f"qid={q} needle {needles[q]!r}",
+        term_stats, max_probe, fold_case, None, allow_full_scan,
+    )
 
 
 def explain_substring(
@@ -275,19 +296,18 @@ def explain_substring(
                           + ("" if allow_full_scan else
                              "; allow_full_scan=False gates the fallback"),
                 "trigrams": [], "probes": [], "max_candidates": None}
-    dfs = term_dfs(term_stats, tris)
-    if len(dfs) < len(tris):
+    probes, dfs = _probe_plan(tris, term_stats, max_probe)
+    if not probes:
         missing = sorted(set(tris) - set(dfs))
         return {"needle": needle, "strategy": "empty",
                 "reason": f"trigrams not in index: {missing[:4]}",
                 "trigrams": tris, "probes": [], "max_candidates": 0}
-    ranked = sorted(tris, key=lambda t: (dfs[t], t))[:max_probe]
     return {
         "needle": needle,
         "strategy": "probe_verify",
         "trigrams": tris,
-        "probes": [(t, dfs[t]) for t in ranked],
-        "max_candidates": min(dfs[t] for t in ranked),
+        "probes": [(t, dfs[t]) for t in probes],
+        "max_candidates": min(dfs[t] for t in probes),
     }
 
 
@@ -453,6 +473,28 @@ def required_trigrams(pattern: str) -> list[str] | None:
     return sorted(out)
 
 
+def _regex_plan(
+    segments: DataFrame,
+    corpus: DataFrame,
+    patterns: dict[int, str],
+    name,
+    term_stats,
+    max_probe: int,
+    allow_full_scan: bool,
+) -> DataFrame:
+    """Pattern prep for :func:`_probe_verify`: mandatory-literal trigrams
+    (:func:`required_trigrams`) and the ``rlike`` verify. Each CASE branch
+    keeps its pattern a foldable literal — codegen-compilable on any
+    Spark."""
+    return _probe_verify(
+        segments, corpus,
+        {q: required_trigrams(p) for q, p in patterns.items()},
+        lambda q: F.col("content").rlike(patterns[q]),
+        name, "no required literal trigrams to prune with",
+        term_stats, max_probe, allow_full_scan,
+    )
+
+
 def search_regex_content(
     segments: DataFrame,
     corpus: DataFrame,
@@ -463,28 +505,15 @@ def search_regex_content(
 ) -> DataFrame:
     """Regex search over raw content: docIds where ``rlike(content,
     pattern)``. Mandatory-literal trigrams prune via the index when the
-    pattern yields any (same probe/verify shape as substring search);
-    otherwise the documented fallback is the full ``rlike`` scan — still a
-    single predicate inside whole-stage codegen, just unpruned (refused
-    when ``allow_full_scan=False`` — see :class:`FullScanRefused`)."""
-    req = required_trigrams(pattern)
-    if not req:
-        if not allow_full_scan:
-            raise _refuse(f"pattern {pattern!r}",
-                          "no required literal trigrams to prune with")
-        return corpus.where(F.col("content").rlike(pattern)).select("docId")
-    if term_stats is not None:
-        probes = probe_trigrams(req, term_stats, max_probe)
-        if not probes:
-            return corpus.select("docId").limit(0)
-    else:
-        probes = req[:max_probe]
-    cands = _candidates_and(segments, probes)
-    return (
-        corpus.join(F.broadcast(cands), "docId", "left_semi")
-        .where(F.col("content").rlike(pattern))
-        .select("docId")
-    )
+    pattern yields any (the substring probe/verify plan, Q=1 case of
+    :func:`search_regex_batch`); otherwise the documented fallback is the
+    full ``rlike`` scan — still a single predicate inside whole-stage
+    codegen, just unpruned (refused when ``allow_full_scan=False`` — see
+    :class:`FullScanRefused`)."""
+    return _regex_plan(
+        segments, corpus, {0: pattern}, lambda q: f"pattern {pattern!r}",
+        term_stats, max_probe, allow_full_scan,
+    ).select("docId")
 
 
 def search_regex_batch(
@@ -499,74 +528,15 @@ def search_regex_batch(
     ONE shared full scan — (qid, docId) rows.
 
     Prunable patterns (those yielding required literal trigrams) share the
-    substring batch's plan: one ``In``-pushed membership decode over the
-    union of probe trigrams, broadcast (term, qid) fanout, one
-    count-matching agg, one hydrate; the verify is a literal per-qid CASE
-    chain of ``rlike`` predicates (each branch's pattern stays a foldable
-    literal — codegen-compilable on any Spark). Unprunable patterns
-    (alternation/lookaround/short literals) evaluate in ONE shared corpus
-    scan: an array of ``CASE WHEN rlike THEN qid END`` cells, exploded and
-    null-filtered — Q full scans collapse to one."""
-    probe_by_qid: dict[int, list[str]] = {}
-    scan_qids: list[int] = []
-    for qid, pat in patterns.items():
-        req = required_trigrams(pat)
-        if not req:
-            if not allow_full_scan:
-                raise _refuse(f"qid={qid} pattern {pat!r}",
-                              "no required literal trigrams to prune with")
-            scan_qids.append(qid)
-            continue
-        if term_stats is not None:
-            probes = probe_trigrams(req, term_stats, max_probe)
-            if not probes:
-                continue  # a required literal is unindexed: no match
-        else:
-            probes = req[:max_probe]
-        probe_by_qid[qid] = probes
-
-    out = None
-    if probe_by_qid:
-        term_qid = [(t, q) for q, ps in probe_by_qid.items() for t in ps]
-        all_probes = sorted({t for t, _ in term_qid})
-        spark = SparkSession.getActiveSession()
-        fanout = spark.createDataFrame(term_qid, "term string, qid int")
-        need_m = F.create_map(
-            *[x for q, ps in probe_by_qid.items() for x in (F.lit(q), F.lit(len(ps)))]
-        )
-        cands = (
-            decode_term_docids(segments, all_probes)
-            .join(F.broadcast(fanout), "term")
-            .groupBy("qid", "docId")
-            .agg(F.count_distinct("term").alias("m"))
-            .where(F.col("m") == need_m[F.col("qid")])
-            .select("qid", "docId")
-        )
-        verify = None
-        for q in sorted(probe_by_qid):
-            branch = F.col("content").rlike(patterns[q])
-            verify = (F.when(F.col("qid") == q, branch) if verify is None
-                      else verify.when(F.col("qid") == q, branch))
-        out = (
-            corpus.join(F.broadcast(cands), "docId")
-            .where(verify)
-            .select("qid", "docId")
-        )
-    if scan_qids:
-        cells = F.array(*[
-            F.when(F.col("content").rlike(patterns[q]), F.lit(q))
-            for q in sorted(scan_qids)
-        ])
-        scanned = (
-            corpus.select("docId", F.explode(cells).alias("qid"))
-            .where(F.col("qid").isNotNull())
-            .select("qid", "docId")
-        )
-        out = scanned if out is None else out.unionByName(scanned)
-    if out is None:
-        spark = SparkSession.getActiveSession()
-        return spark.createDataFrame([], "qid int, docId long")
-    return out
+    substring plan (:func:`_probe_verify`): one ``In``-pushed membership
+    decode over the union of probe trigrams, broadcast (term, qid) fanout,
+    one count-matching agg, one hydrate, a per-qid CASE chain of ``rlike``
+    verifies. Unprunable patterns (alternation/lookaround/short literals)
+    evaluate in ONE shared corpus scan — Q full scans collapse to one."""
+    return _regex_plan(
+        segments, corpus, patterns, lambda q: f"qid={q} pattern {patterns[q]!r}",
+        term_stats, max_probe, allow_full_scan,
+    )
 
 
 def grep_lines(

@@ -18,21 +18,24 @@ Tie-breaks, pinned from the reference:
 - matches-all mode (PageRank combo): score desc, docId ASC
   (``CompareResults`` IIM:1103-1114).
 
-Execution paths:
+Execution paths — each family has ONE plan builder, and a single query is
+its Q=1 case; every entry point takes its query-term dfs, idfs and qtfs
+from one driver-side prep (:func:`_prep_workload`):
 - :func:`score_query_daat` / :func:`score_queries_daat_batch` — the serving
-  paths, both running ONE DAAT kernel (:func:`_daat_rows_batch`, decode-once
-  with per-query accumulators; a single query is its Q=1 case). A workload
-  that fits one bucket (the common interactive query) runs as ONE task:
-  term-pushed segment scan -> ``coalesce(1)`` -> one kernel call over the
-  whole packed rows -> TakeOrderedAndProject. Bigger workloads re-key the
-  compressed blocks by docId-range bucket (one shuffle), score each bucket
-  with a local top-k, and merge globally — the reference's per-segment
-  top-k -> global PQ two-stage shape at cluster scale.
-- :func:`score_query` / :func:`score_queries_batch` — declarative: decoded
-  postings × broadcast idf map -> ``groupBy(docId)`` agg ->
-  ``orderBy().limit(k)`` (Catalyst's TakeOrderedAndProject ≙ the
-  reference's bounded PQ, IIM:1290-1313). The plan-audited second
-  implementation that tests compare the kernel against.
+  paths, one plan (:func:`_daat_plan`) around ONE DAAT kernel
+  (:func:`_daat_rows_batch`, decode-once with per-query accumulators). A
+  workload that fits one bucket (the common interactive query) runs as ONE
+  task: term-pushed segment scan -> ``coalesce(1)`` -> one kernel call over
+  the whole packed rows. Bigger workloads re-key the compressed blocks by
+  docId-range bucket (one shuffle), score each bucket with a local top-k,
+  and merge globally — the reference's per-segment top-k -> global PQ
+  two-stage shape at cluster scale. One query merges by
+  TakeOrderedAndProject, a workload by the packed-blob merge.
+- :func:`score_query` / :func:`score_queries_batch` — declarative, one plan
+  (:func:`_declarative_plan`): decoded postings × broadcast idf map ->
+  ``groupBy(qid, docId)`` agg -> top-k (for one query Catalyst's
+  TakeOrderedAndProject ≙ the reference's bounded PQ, IIM:1290-1313). The
+  plan-audited second implementation that tests compare the kernel against.
 """
 
 from __future__ import annotations
@@ -87,24 +90,66 @@ def query_tfs(keywords: list[str], analyzer: str = "porter") -> dict[str, int]:
     return dict(Counter(analyze_query(keywords, analyzer)))
 
 
-def _idf_rows(term_stats, qtfs: dict[str, float], scorer: Scorer, n_docs: int):
-    """Collect (term, df, idf, qtf) for present query terms — tiny. qtf
-    passes through untyped: integer query-tf counts stay ints (the
-    declarative paths build an int-schema qdf from them), parser ``^W``
-    boost weights stay floats (consumed by the DAAT numpy kernel)."""
-    out = []
-    for term, df in term_dfs(term_stats, list(qtfs)).items():
-        idf = float(scorer.idf(float(n_docs), np.array([df]))[0])
-        out.append((term, df, idf, qtfs[term]))
-    return out
+def _analyzed(queries: dict[int, list[str]], analyzer: str) -> dict[int, dict[str, int]]:
+    """Per-query token counts of a workload, keyed by int qid."""
+    return {int(qid): query_tfs(kw, analyzer) for qid, kw in queries.items()}
+
+
+def _prep_workload(
+    term_stats,
+    qtfs: dict[int, dict[str, float]],
+    scorer: Scorer,
+    n_docs: int,
+) -> tuple[dict[int, dict[str, tuple[float, float]]], dict[str, int]]:
+    """THE driver-side BM25 prep, shared by every entry point (declarative,
+    DAAT, dismax, explain, cached): one df lookup over the workload's
+    terms, then per-query (idf, qtf) metas for the terms the index holds.
+
+    ``qtfs`` maps qid -> {term: qtf}, already counted; a qtf passes through
+    as given, so the parser's ``^W`` float weights reach the kernels
+    unchanged. Returns (qmetas, dfs): ``dfs`` maps every live term to its
+    df; a query with no live term is absent from qmetas, and empty qmetas
+    means an empty result."""
+    dfs = term_dfs(term_stats, sorted({t for q in qtfs.values() for t in q}))
+    idfs = {t: float(scorer.idf(float(n_docs), np.array([df]))[0]) for t, df in dfs.items()}
+    qmetas: dict[int, dict[str, tuple[float, float]]] = {}
+    for qid, q in qtfs.items():
+        qm = {t: (idfs[t], qtf) for t, qtf in q.items() if t in idfs}
+        if qm:
+            qmetas[int(qid)] = qm
+    return qmetas, dfs
+
+
+def _order(ties: str) -> list:
+    """The (score desc, docId ``ties``) result order."""
+    return [F.desc("score"), F.desc("docId") if ties == "desc" else F.asc("docId")]
+
+
+def _single(batch: DataFrame, k: int | None, ties: str) -> DataFrame:
+    """A Q=1 batch plan as a single-query result: (docId, score) rows,
+    ordered also when ``k`` is None. With ``k`` the Q=1 plan already ends
+    in TakeOrderedAndProject, which absorbs this projection."""
+    out = batch.drop("qid")
+    return out.orderBy(*_order(ties)) if k is None else out
+
+
+def _merge_topk(local: DataFrame, n_queries: int, k: int | None, ties: str) -> DataFrame:
+    """Per-qid top-k over scored (qid, docId, score) rows. One query merges
+    by TakeOrderedAndProject (the reference's bounded PQ, IIM:1290-1313);
+    a workload by the two-stage :func:`_batch_topk`."""
+    if k is None:
+        return local
+    if n_queries == 1:
+        return local.orderBy(*_order(ties)).limit(k)
+    return _batch_topk(local, k, ties)
 
 
 def _bm25_contrib(scorer: Scorer, avgdl: float):
     """THE per-(doc, term) BM25 contribution expression, over columns
-    (qtf, idf, tf, dl) — shared by :func:`score_query` and
-    :func:`score_queries_batch` (summed) and :func:`explain_score` (exposed
-    row-wise), so explain's factor rows can never drift from the score they
-    claim to decompose."""
+    (qtf, idf, tf, dl) — shared by :func:`score_queries_batch` (summed),
+    :func:`score_query_dismax` (max + sum) and :func:`explain_score`
+    (exposed row-wise), so explain's factor rows can never drift from the
+    score they claim to decompose."""
     return (
         F.col("qtf")
         * F.col("idf")
@@ -114,6 +159,20 @@ def _bm25_contrib(scorer: Scorer, avgdl: float):
             + scorer.k1 * (1.0 - scorer.b + scorer.b * F.col("dl") / F.lit(avgdl))
         )
     )
+
+
+def _weighted_postings(
+    spark: SparkSession, decoded: DataFrame, qmetas, dfs: dict[str, int]
+) -> DataFrame:
+    """Decoded postings of the live terms (pushed term filter) joined to
+    the broadcast (qid, term, df, idf, qtf) map of :func:`_prep_workload`:
+    a term shared by several queries fans its postings out to each."""
+    qdf = spark.createDataFrame(
+        [(qid, t, dfs[t], idf, float(qtf))
+         for qid, qm in qmetas.items() for t, (idf, qtf) in qm.items()],
+        "qid long, term string, df long, idf double, qtf double",
+    )
+    return postings_for(decoded, sorted(dfs)).join(F.broadcast(qdf), "term")
 
 
 def score_query(
@@ -130,35 +189,16 @@ def score_query(
 ) -> DataFrame:
     """Declarative scoring path. `decoded` = (term, docId, tf, dl) postings.
 
-    Plan shape: pushdown term filter -> broadcast-join the (≤ m query terms)
-    idf map -> per-row contribution (JVM expressions, whole-stage codegen) ->
-    groupBy(docId) partial+final agg -> TakeOrderedAndProject(k).
+    The Q=1 case of :func:`score_queries_batch`: pushdown term filter ->
+    broadcast-join the (≤ m query terms) idf map -> per-row contribution
+    (JVM expressions, whole-stage codegen) -> groupBy partial+final agg ->
+    TakeOrderedAndProject(k).
     """
-    qtfs = query_tfs(keywords, analyzer)
-    rows = _idf_rows(term_stats, qtfs, scorer, n_docs)
-    if not rows:
-        return spark.createDataFrame([], SCORE_SCHEMA)
-    qdf = spark.createDataFrame(rows, "term string, df long, idf double, qtf int")
-    p = postings_for(decoded, [r[0] for r in rows]).join(F.broadcast(qdf), "term")
-    if scorer.kind == "bm25":
-        scores = p.groupBy("docId").agg(
-            F.sum(_bm25_contrib(scorer, avgdl)).alias("score")
-        )
-    else:
-        wd = F.col("tf") * F.col("idf")
-        scores = p.groupBy("docId").agg(
-            (F.sum(wd * F.col("qtf") * F.col("idf"))).alias("_dot"),
-            (F.sum(wd * wd)).alias("_len"),
-        )
-        scores = scores.select(
-            "docId",
-            F.when(F.col("_len") > 0, F.col("_dot") / F.sqrt(F.col("_len")))
-            .otherwise(F.lit(0.0))
-            .alias("score"),
-        )
-    order = [F.desc("score"), F.desc("docId") if ties == "desc" else F.asc("docId")]
-    scores = scores.orderBy(*order)
-    return scores.limit(k) if k is not None else scores
+    return _single(
+        _declarative_plan(spark, decoded, term_stats, {0: query_tfs(keywords, analyzer)},
+                          n_docs, avgdl, scorer, k, ties),
+        k, ties,
+    )
 
 
 def score_query_dismax(
@@ -187,12 +227,11 @@ def score_query_dismax(
     drift from the scorer it reweights), TakeOrderedAndProject(k)."""
     if not 0.0 <= tie_breaker <= 1.0:
         raise ValueError("tie_breaker must be in [0, 1]")
-    qtfs = query_tfs(keywords, analyzer)
-    rows = _idf_rows(term_stats, qtfs, scorer, n_docs)
-    if not rows:
+    qmetas, dfs = _prep_workload(term_stats, {0: query_tfs(keywords, analyzer)},
+                                 scorer, n_docs)
+    if not qmetas:
         return spark.createDataFrame([], SCORE_SCHEMA)
-    qdf = spark.createDataFrame(rows, "term string, df long, idf double, qtf int")
-    p = postings_for(decoded, [r[0] for r in rows]).join(F.broadcast(qdf), "term")
+    p = _weighted_postings(spark, decoded, qmetas, dfs)
     c = _bm25_contrib(scorer, avgdl)
     agg = p.groupBy("docId").agg(F.max(c).alias("_mx"), F.sum(c).alias("_sm"))
     scores = agg.select(
@@ -202,8 +241,7 @@ def score_query_dismax(
             + F.lit(float(tie_breaker)) * (F.col("_sm") - F.col("_mx"))
         ).alias("score"),
     )
-    order = [F.desc("score"), F.desc("docId") if ties == "desc" else F.asc("docId")]
-    scores = scores.orderBy(*order)
+    scores = scores.orderBy(*_order(ties))
     return scores.limit(k) if k is not None else scores
 
 
@@ -252,15 +290,13 @@ def explain_score(
             "explain is BM25-only: tf-idf cosine couples terms through the "
             "document norm, so per-term rows would not sum to the score"
         )
-    qtfs = query_tfs(keywords, analyzer)
-    rows = _idf_rows(term_stats, qtfs, scorer, n_docs)
-    if not rows:
+    qmetas, dfs = _prep_workload(term_stats, {0: query_tfs(keywords, analyzer)},
+                                 scorer, n_docs)
+    if not qmetas:
         return spark.createDataFrame([], EXPLAIN_SCHEMA)
-    qdf = spark.createDataFrame(rows, "term string, df long, idf double, qtf int")
-    p = postings_for(decoded, [r[0] for r in rows])
     if doc_ids is not None:
-        p = p.where(isin_expr("docId", [int(d) for d in doc_ids]))
-    p = p.join(F.broadcast(qdf), "term")
+        decoded = decoded.where(isin_expr("docId", [int(d) for d in doc_ids]))
+    p = _weighted_postings(spark, decoded, qmetas, dfs)
     contrib = _bm25_contrib(scorer, avgdl)
     return p.select(
         F.col("docId"),
@@ -297,10 +333,9 @@ def score_queries_batch(
 ) -> DataFrame:
     """Score a WHOLE QUERY WORKLOAD in one Spark job -> (qid, docId, score).
 
-    The per-query path (:func:`score_query`) launches one job per query —
-    right for latency, wrong for throughput: a 1000-executor cluster serving
-    a query log pays the scan + scheduling cost per query. This batch path
-    amortizes both across Q queries:
+    A serving process answering a query log one query at a time pays the
+    scan + scheduling cost per query. This batch path amortizes both across
+    Q queries:
 
     - ONE postings scan with ``term IN (union of all query terms)`` pushed
       into parquet (S10 seek over the batch's term set);
@@ -314,29 +349,30 @@ def score_queries_batch(
       ≤ partitions × k rows per query. No window function, so no re-shuffle
       of the full candidate set and no single-task hot spot for heavy
       queries — the generalization of TakeOrderedAndProject to Q queries.
-
-    Scores and tie-breaks are identical to :func:`score_query` (same
-    contribution expression, same (score desc, docId ``ties``) order).
+      A single query (Q=1, :func:`score_query`) takes TakeOrderedAndProject
+      itself.
     """
-    per_q: list[tuple[int, dict[str, int]]] = [
-        (int(qid), query_tfs(kw, analyzer)) for qid, kw in queries.items()
-    ]
-    all_terms = sorted({t for _, qtfs in per_q for t in qtfs})
-    if not all_terms:
+    return _declarative_plan(spark, decoded, term_stats, _analyzed(queries, analyzer),
+                             n_docs, avgdl, scorer, k, ties)
+
+
+def _declarative_plan(
+    spark: SparkSession,
+    decoded: DataFrame,
+    term_stats,
+    qtfs: dict[int, dict[str, float]],
+    n_docs: int,
+    avgdl: float,
+    scorer: Scorer,
+    k: int | None,
+    ties: str,
+) -> DataFrame:
+    """The one declarative plan builder behind :func:`score_query` and
+    :func:`score_queries_batch` -> (qid, docId, score)."""
+    qmetas, dfs = _prep_workload(term_stats, qtfs, scorer, n_docs)
+    if not qmetas:
         return spark.createDataFrame([], BATCH_SCHEMA)
-    df_rows = term_dfs(term_stats, all_terms)
-    qrows = []
-    for qid, qtfs in per_q:
-        for t, qtf in qtfs.items():
-            if t in df_rows:
-                idf = float(scorer.idf(float(n_docs), np.array([df_rows[t]]))[0])
-                qrows.append((qid, t, idf, int(qtf)))
-    if not qrows:
-        return spark.createDataFrame([], BATCH_SCHEMA)
-    qdf = spark.createDataFrame(qrows, "qid long, term string, idf double, qtf int")
-    p = postings_for(decoded, sorted({r[1] for r in qrows})).join(
-        F.broadcast(qdf), "term"
-    )
+    p = _weighted_postings(spark, decoded, qmetas, dfs)
     if scorer.kind == "bm25":
         scores = p.groupBy("qid", "docId").agg(
             F.sum(_bm25_contrib(scorer, avgdl)).alias("score")
@@ -356,9 +392,7 @@ def score_queries_batch(
         )
     else:  # pragma: no cover - Scorer only has two kinds
         raise ValueError(f"unknown scorer kind {scorer.kind!r}")
-    if k is None:
-        return scores
-    return _batch_topk(scores, k, ties)
+    return _merge_topk(scores, len(qmetas), k, ties)
 
 
 def _topk_pdf_for(pdf: pd.DataFrame, k: int, ties: str) -> pd.DataFrame:
@@ -473,7 +507,7 @@ def _decode_row_blocks(r):
 def _daat_rows_batch(
     all_rows: list,
     rows_by_term: dict[str, list[int]],
-    qmetas: dict[int, dict[str, tuple[float, int]]],
+    qmetas: dict[int, dict[str, tuple[float, float]]],
     scorer: Scorer,
     avgdl: float,
     k: int | None,
@@ -537,7 +571,7 @@ def _daat_rows_batch(
             got = decode_cache[ri] = (d, t, l)
         return got
 
-    def contribs_of(ri: int, idf: float, qtf: int):
+    def contribs_of(ri: int, idf: float, qtf: float):
         got = contrib_cache.get((ri, qtf))
         if got is None:
             d, t, l = decoded(ri)
@@ -1022,7 +1056,9 @@ def _one_task(seg: DataFrame, kernel, schema: StructType) -> DataFrame:
         if pdfs:
             yield kernel(pd.concat(pdfs, ignore_index=True))
 
-    return seg.select(*_SEG_KERNEL_COLS).coalesce(1).mapInPandas(run, schema)
+    # selectExpr ships the names in one py4j call; select() builds a Java
+    # Column per name, ~4 ms of driver time per interactive query
+    return seg.selectExpr(*_SEG_KERNEL_COLS).coalesce(1).mapInPandas(run, schema)
 
 
 def _n_merge_tasks(spark: SparkSession, blob_ceiling: int) -> int:
@@ -1040,7 +1076,7 @@ def _n_merge_tasks(spark: SparkSession, blob_ceiling: int) -> int:
 
 def _score_bucket_rows(
     pdf: pd.DataFrame,
-    qmetas: dict[int, dict[str, tuple[float, int]]],
+    qmetas: dict[int, dict[str, tuple[float, float]]],
     scorer: Scorer,
     avgdl: float,
     k: int | None,
@@ -1090,58 +1126,38 @@ def _packed_shards(
     )
 
 
-def _merge_packed(batches, k: int, ties: str):
-    """Final vectorized per-qid top-k over packed shard rows (generator for
-    mapInPandas)."""
-    qs, ds, ss = [], [], []
-    for pdf in batches:
-        for r in pdf.itertuples(index=False):
-            qs.append(np.frombuffer(r.qids, "<i8"))
-            ds.append(np.frombuffer(r.docids, "<i8"))
-            ss.append(np.frombuffer(r.scores, "<f8"))
-    if not qs:
-        return
-    flat = pd.DataFrame(
-        {
-            "qid": np.concatenate(qs),
-            "docId": np.concatenate(ds),
-            "score": np.concatenate(ss),
-        }
-    )
-    yield _topk_pdf_for(flat, k, ties)
+def _merge_blobs(blobs: DataFrame, n_merge: int, k: int, ties: str) -> DataFrame:
+    """The packed-merge tail of the batch DAAT plan and the serving cache:
+    hash-partition per-bucket packed shard rows by merge shard (all
+    candidates of a qid share one mkey, so each task's selection is exact;
+    n_merge=1 is one merge task for small workloads) and select each qid's
+    top-k in one vectorized pass per task."""
+
+    def merge(batches):
+        qs, ds, ss = [], [], []
+        for pdf in batches:
+            for r in pdf.itertuples(index=False):
+                qs.append(np.frombuffer(r.qids, "<i8"))
+                ds.append(np.frombuffer(r.docids, "<i8"))
+                ss.append(np.frombuffer(r.scores, "<f8"))
+        if qs:
+            flat = pd.DataFrame({"qid": np.concatenate(qs),
+                                 "docId": np.concatenate(ds),
+                                 "score": np.concatenate(ss)})
+            yield _topk_pdf_for(flat, k, ties)
+
+    return blobs.repartition(n_merge, "mkey").mapInPandas(merge, BATCH_SCHEMA)
 
 
-def _prep_workload(
-    term_stats,
-    queries: dict[int, list[str]],
-    scorer: Scorer,
-    n_docs: int,
-    analyzer: str,
-) -> tuple[dict[int, dict[str, tuple[float, int]]], list[str], int]:
-    """Driver-side workload prep shared by the in-plan and cached batch
-    paths: analyze queries, look up dfs, build per-query (idf, qtf) metas.
-    Returns (qmetas, live_terms, est_work); empty qmetas => empty result."""
-    per_q: dict[int, dict[str, int]] = {}
-    for qid, kw in queries.items():
-        qtfs = query_tfs(kw, analyzer)
-        if qtfs:
-            per_q[int(qid)] = qtfs
-    union_terms = sorted({t for q in per_q.values() for t in q})
-    if not union_terms:
-        return {}, [], 0
-    df_map = term_dfs(term_stats, union_terms)
-    idf_map = {
-        t: float(scorer.idf(float(n_docs), np.array([df]))[0])
-        for t, df in df_map.items()
-    }
-    qmetas: dict[int, dict[str, tuple[float, int]]] = {}
-    for qid, qtfs in per_q.items():
-        qm = {t: (idf_map[t], int(qtf)) for t, qtf in qtfs.items() if t in idf_map}
-        if qm:
-            qmetas[qid] = qm
-    live_terms = sorted({t for qm in qmetas.values() for t in qm})
-    est_work = sum(df_map[t] for qm in qmetas.values() for t in qm if t in df_map)
-    return qmetas, live_terms, est_work
+def _shipped(spark: SparkSession, value, size: int):
+    """A zero-arg getter that hands ``value`` to kernel tasks. Big workload
+    values (``size`` >= 256, e.g. a 16k-query qmetas cloudpickles to ~1 MB)
+    ship as a broadcast, fetched and cached once per python worker process;
+    a captured closure would be re-shipped and re-unpickled PER TASK."""
+    if size >= 256:
+        ref = spark.sparkContext.broadcast(value)
+        return lambda: ref.value
+    return lambda: value
 
 
 def score_queries_daat_batch(
@@ -1169,86 +1185,87 @@ def score_queries_daat_batch(
     call in one task instead (:func:`_one_task`) and the merge exchange goes
     too: that call's per-qid top-k is final. Per-bucket results merge as
     packed blobs, or past ``_BLOB_MERGE_CAP`` through the same two-stage
-    top-k as :func:`score_queries_batch`.
+    top-k as :func:`score_queries_batch`; a single query merges by
+    TakeOrderedAndProject.
 
     With ``k=None`` every (qid, docId, score) row is returned unordered
     (each docId lives in exactly one bucket, so rows are already final)."""
-    # workload work estimate (est_work): one posting-score evaluation per
-    # (query, term, posting) — drives the bucket count, driver-local (df
-    # comes from term stats, no job)
-    qmetas, live_terms, est_work = _prep_workload(
-        term_stats, queries, scorer, n_docs, analyzer
-    )
+    return _daat_plan(spark, segments, term_stats, _analyzed(queries, analyzer),
+                      n_docs, avgdl, scorer, k, ties, n_buckets, deleted, docid_span)
+
+
+def _daat_plan(
+    spark: SparkSession,
+    segments: DataFrame,
+    term_stats,
+    qtfs: dict[int, dict[str, float]],
+    n_docs: int,
+    avgdl: float,
+    scorer: Scorer,
+    k: int | None,
+    ties: str,
+    n_buckets: int | None,
+    deleted: np.ndarray | None,
+    docid_span: tuple[int, int] | None,
+) -> DataFrame:
+    """The one DAAT plan builder behind :func:`score_query_daat` (Q=1) and
+    :func:`score_queries_daat_batch` -> (qid, docId, score)."""
+    qmetas, dfs = _prep_workload(term_stats, qtfs, scorer, n_docs)
     if not qmetas:
         return spark.createDataFrame([], BATCH_SCHEMA)
+    n_q = len(qmetas)
+    # workload work estimate: one posting-score evaluation per (query, term,
+    # posting) — drives the bucket count, driver-local (df comes from term
+    # stats, no job)
+    est_work = sum(dfs[t] for qm in qmetas.values() for t in qm)
     if n_buckets is None:
         n_buckets = _auto_buckets(spark, est_work)
-    seg = _candidate_scan(segments, live_terms, term_stats)
-    # big workloads ship qmetas via broadcast, not closure capture: a
-    # 16k-query qmetas cloudpickles to ~1 MB, and a captured closure is
-    # re-shipped and re-unpickled PER TASK (48+ tasks/workload); a broadcast
-    # is fetched and cached once per python worker process
-    qmetas_ref = (
-        spark.sparkContext.broadcast(qmetas) if len(qmetas) >= 256 else None
-    )
-    qmetas_local = None if qmetas_ref is not None else qmetas
+    seg = _candidate_scan(segments, sorted(dfs), term_stats)
+    get_qmetas = _shipped(spark, qmetas, n_q)
 
     def score_rows(pdf):
-        qmetas = qmetas_local if qmetas_ref is None else qmetas_ref.value
-        return _score_bucket_rows(pdf, qmetas, scorer, avgdl, k, ties, deleted)
+        return _score_bucket_rows(pdf, get_qmetas(), scorer, avgdl, k, ties, deleted)
 
     def score_frame(pdf):
         qv, dv, sv = score_rows(pdf)
         return pd.DataFrame({"qid": qv, "docId": dv, "score": sv})
 
     if n_buckets == 1:
-        # one bucket's per-qid top-k is already final: no merge exchange,
-        # only the blob merge's (qid asc, score desc, docId tie) order
-        if k is None:
-            return _one_task(seg, score_frame, BATCH_SCHEMA)
-        return _one_task(
-            seg, lambda pdf: _topk_pdf_for(score_frame(pdf), k, ties),
-            BATCH_SCHEMA,
+        if k is not None and n_q > 1:
+            # one bucket's per-qid top-k is already final: no merge
+            # exchange, only the blob merge's (qid asc, score desc, docId
+            # tie) order
+            return _one_task(
+                seg, lambda pdf: _topk_pdf_for(score_frame(pdf), k, ties),
+                BATCH_SCHEMA,
+            )
+        local = _one_task(seg, score_frame, BATCH_SCHEMA)
+    else:
+        bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
+        if bucketed is None:
+            return spark.createDataFrame([], BATCH_SCHEMA)
+        # Merge strategy for the per-bucket top-k of a workload. The row
+        # merge shuffles every per-(bucket, query) candidate as a JVM row
+        # (2M rows for a 16k-query workload: Arrow->UnsafeRow conversion, a
+        # partial-prune python stage, a by-qid shuffle — per-row costs on
+        # both sides). When the total candidate count is bounded (Q x k x
+        # buckets, the kernel's output ceiling), emit ONE PACKED ROW PER
+        # BUCKET instead and merge the blobs in a few cheap tasks: ~32
+        # binary rows through the shuffle, one vectorized segmented top-k at
+        # the end. Selection-only — scores are untouched bytes, so results
+        # are bit-identical to the row merge.
+        blob_ceiling = n_q * (k or 0) * n_buckets
+        if n_q > 1 and 0 < blob_ceiling <= _BLOB_MERGE_CAP:
+            n_merge = _n_merge_tasks(spark, blob_ceiling)
+            blobs = bucketed.groupBy("bucket").applyInPandas(
+                lambda key, pdf: _packed_shards(*score_rows(pdf), n_merge),
+                PACKED_TOPK_SCHEMA,
+            )
+            return _merge_blobs(blobs, n_merge, k, ties)
+        local = bucketed.groupBy("bucket").applyInPandas(
+            lambda key, pdf: score_frame(pdf), BATCH_SCHEMA
         )
-    bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
-    if bucketed is None:
-        return spark.createDataFrame([], BATCH_SCHEMA)
-
-    # Merge strategy for the per-bucket top-k. The row merge shuffles every
-    # per-(bucket, query) candidate as a JVM row (2M rows for a 16k-query
-    # workload: Arrow->UnsafeRow conversion, a partial-prune python stage,
-    # a by-qid shuffle — per-row costs on both sides). When the total
-    # candidate count is bounded (Q x k x buckets, the kernel's output
-    # ceiling), emit ONE PACKED ROW PER BUCKET instead and merge the blobs
-    # in a single cheap task: ~32 binary rows through the shuffle, one
-    # vectorized segmented top-k at the end. Selection-only — scores are
-    # untouched bytes, so results are bit-identical to the row merge.
-    blob_ceiling = len(qmetas) * (k or 0) * max(int(n_buckets or 0), 1)
-    if k is not None and 0 < blob_ceiling <= _BLOB_MERGE_CAP:
-        n_merge = _n_merge_tasks(spark, blob_ceiling)
-
-        def kernel_blob(key, pdf):
-            return _packed_shards(*score_rows(pdf), n_merge)
-
-        def merge_blobs(batches):
-            yield from _merge_packed(batches, k, ties)
-
-        blobs = bucketed.groupBy("bucket").applyInPandas(
-            kernel_blob, PACKED_TOPK_SCHEMA
-        )
-        # hash-partition by merge shard: all candidates of a qid share one
-        # mkey, so each task's segmented top-k is exact; n_merge=1 keeps
-        # the old single-task merge for small workloads
-        return blobs.repartition(n_merge, "mkey").mapInPandas(
-            merge_blobs, BATCH_SCHEMA
-        )
-
-    local = bucketed.groupBy("bucket").applyInPandas(
-        lambda key, pdf: score_frame(pdf), BATCH_SCHEMA
-    )
-    if k is None:
-        return local
-    return _batch_topk(local, k, ties)
+    return _merge_topk(local, n_q, k, ties)
 
 
 def score_query_daat(
@@ -1267,11 +1284,11 @@ def score_query_daat(
     docid_span: tuple[int, int] | None = None,
     pre_analyzed: bool = False,
 ) -> DataFrame:
-    """Distributed DAAT for one query: parquet pushdown on term ->
+    """Distributed DAAT for one query, the Q=1 case of the batch plan
+    (:func:`score_queries_daat_batch`): parquet pushdown on term ->
     byte-level block re-key by docId bucket -> per-bucket kernel with local
     top-k -> global TakeOrderedAndProject (≙ the reference's per-segment
-    top-k + global PQ, IIM:1282-1313). The kernel is the batch one
-    (:func:`_daat_rows_batch`) at Q=1.
+    top-k + global PQ, IIM:1282-1313).
 
     When the bucket count (explicit ``n_buckets`` or :func:`_auto_buckets`
     over the query's Σdf) is 1 — any interactive query whose postings fit
@@ -1295,33 +1312,11 @@ def score_query_daat(
         qtfs = dict(keywords) if isinstance(keywords, dict) else dict(Counter(keywords))
     else:
         qtfs = query_tfs(keywords, analyzer)
-    rows = _idf_rows(term_stats, qtfs, scorer, n_docs)
-    if not rows:
-        return spark.createDataFrame([], SCORE_SCHEMA)
-    qmeta = {t: (idf, qtf) for t, df_, idf, qtf in rows}
-    est_work = sum(df_ for _, df_, _, _ in rows)
-    seg = segments.where(isin_expr("term", list(qmeta)))
-    if n_buckets is None:
-        n_buckets = _auto_buckets(spark, est_work)
-
-    def score_rows(pdf):
-        _, dv, sv = _score_bucket_rows(
-            pdf, {0: qmeta}, scorer, avgdl, k, ties, deleted
-        )
-        return pd.DataFrame({"docId": dv, "score": sv})
-
-    if n_buckets == 1:
-        local = _one_task(seg, score_rows, SCORE_SCHEMA)
-    else:
-        bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
-        if bucketed is None:
-            return spark.createDataFrame([], SCORE_SCHEMA)
-        local = bucketed.groupBy("bucket").applyInPandas(
-            lambda key, pdf: score_rows(pdf), SCORE_SCHEMA
-        )
-    order = [F.desc("score"), F.desc("docId") if ties == "desc" else F.asc("docId")]
-    out = local.orderBy(*order)
-    return out.limit(k) if k is not None else out
+    return _single(
+        _daat_plan(spark, segments, term_stats, {0: qtfs}, n_docs, avgdl, scorer,
+                   k, ties, n_buckets, deleted, docid_span),
+        k, ties,
+    )
 
 
 def mlt_seed_terms(
@@ -1518,25 +1513,32 @@ def rescore_phrase(
     signal's cost is O(window), not O(matches)).
 
     Scale shape: the primary pass is :func:`score_query_daat` (term-pushed,
-    pruned, TakeOrdered at ``window``); the phrase pass decodes ONLY the
-    phrase terms' postings (``In`` pushdown on L terms) and its doc set
-    joins the window via broadcast (window rows ≪ corpus); the final
-    re-sort of ``window`` rows is a TakeOrderedAndProject. Ties in the
-    rescored order break docId asc — deterministic and oracle-comparable.
+    TakeOrdered at ``window``), run once and its ≤ ``window`` rows
+    collected to the driver; the phrase pass decodes ONLY the phrase terms'
+    postings (``In`` pushdown on L terms) and semi-joins them to the
+    broadcast window before the positional intersection, so every phrase
+    join and aggregation sees window docs only; the window then joins its
+    (≤ window) phrase hits and the final re-sort of ``window`` rows is a
+    TakeOrderedAndProject. Ties in the rescored order break docId asc —
+    deterministic and oracle-comparable.
     """
     from ..sources.segments import decode_postings
     from .query import analyze_query, search_phrase
 
-    primary = score_query_daat(
-        spark, segments, term_stats, keywords, n_docs, avgdl, scorer,
-        k=window, analyzer=analyzer, ties=ties, deleted=deleted,
-        docid_span=docid_span,
+    win = spark.createDataFrame(
+        score_query_daat(
+            spark, segments, term_stats, keywords, n_docs, avgdl, scorer,
+            k=window, analyzer=analyzer, ties=ties, deleted=deleted,
+            docid_span=docid_span,
+        ).collect(),
+        SCORE_SCHEMA,
     )
     ph_terms = analyze_query(phrase, analyzer)
     dec = decode_postings(segments, sorted(set(ph_terms)), with_positions=True)
-    ph = search_phrase(dec, ph_terms).select("docId", F.lit(1).alias("_ph"))
+    in_window = dec.join(F.broadcast(win.select("docId")), "docId", "left_semi")
+    ph = search_phrase(in_window, ph_terms).select("docId", F.lit(1).alias("_ph"))
     return (
-        primary.join(F.broadcast(ph), "docId", "left")
+        win.join(F.broadcast(ph), "docId", "left")
         .select(
             "docId",
             (

@@ -561,8 +561,8 @@ def score_queries_cached(
     if k is None:
         raise ValueError("serving path is top-k only; use the in-plan batch "
                          "path for exhaustive k=None scoring")
-    qmetas, live_terms, _work = R._prep_workload(
-        term_stats, queries, scorer, n_docs, analyzer
+    qmetas, dfs = R._prep_workload(
+        term_stats, R._analyzed(queries, analyzer), scorer, n_docs
     )
     if not qmetas:
         return spark.createDataFrame([], R.BATCH_SCHEMA)
@@ -575,26 +575,16 @@ def score_queries_cached(
         int(b): list(fs)
         for b, fs in (cache.get("shards") or {}).items()
     } or {int(b): [f"bucket={int(b)}.feather"] for b in buckets}
-    blob_ceiling = len(qmetas) * k * len(buckets)
-    n_merge = R._n_merge_tasks(spark, blob_ceiling)
-    qmetas_ref = (
-        spark.sparkContext.broadcast(qmetas) if len(qmetas) >= 256 else None
-    )
-    qmetas_local = None if qmetas_ref is not None else qmetas
-    live_ref = (
-        spark.sparkContext.broadcast(live_terms)
-        if len(live_terms) >= 256
-        else None
-    )
-    live_local = None if live_ref is not None else live_terms
+    n_merge = R._n_merge_tasks(spark, len(qmetas) * k * len(buckets))
+    get_qmetas = R._shipped(spark, qmetas, len(qmetas))
+    get_live = R._shipped(spark, sorted(dfs), len(dfs))
 
     def kernel(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        qm = qmetas_local if qmetas_ref is None else qmetas_ref.value
-        lv = live_local if live_ref is None else live_ref.value
-        live_arr = pa.array(lv, type=pa.string())
+        qm = get_qmetas()
+        live_arr = pa.array(get_live(), type=pa.string())
         for pdf in batches:
             for b in pdf["bucket"]:
                 parts = []
@@ -636,13 +626,10 @@ def score_queries_cached(
                 if len(out):
                     yield out
 
-    def merge(batches):
-        yield from R._merge_packed(batches, k, ties)
-
     # exactly one bucket id per partition: every kernel task reads one shard
     rdd = spark.sparkContext.parallelize(
         [(int(b),) for b in buckets], len(buckets)
     )
     ids = spark.createDataFrame(rdd, "bucket int")
     blobs = ids.mapInPandas(kernel, R.PACKED_TOPK_SCHEMA)
-    return blobs.repartition(n_merge, "mkey").mapInPandas(merge, R.BATCH_SCHEMA)
+    return R._merge_blobs(blobs, n_merge, k, ties)

@@ -161,19 +161,24 @@ def test_substring_equals_full_scan(spark, tri_index):
 
 def test_substring_batch_equals_per_needle(spark, tri_index):
     """Batch serving returns exactly the union of per-needle single runs —
-    including a short-needle scan fallback and a no-match needle."""
+    including short-needle scan fallbacks (1 and 2 chars), a no-match
+    needle, a needle with one unseen trigram among indexed ones, and
+    fold_case."""
     corpus, segs, ts = tri_index
-    needles = {i: n for i, n in enumerate(NEEDLES)}
-    got = sorted(
-        (r.qid, r.docId)
-        for r in C.search_substring_batch(segs, corpus, needles, ts).collect()
-    )
-    want = sorted(
-        (qid, d)
-        for qid, n in needles.items()
-        for d in _ids(C.search_substring(segs, corpus, n, ts))
-    )
-    assert got == want and got
+    needles = {i: n for i, n in enumerate(NEEDLES + ["e", "public qqq"])}
+    for fold_case in (False, True):
+        got = sorted(
+            (r.qid, r.docId)
+            for r in C.search_substring_batch(
+                segs, corpus, needles, ts, fold_case=fold_case).collect()
+        )
+        want = sorted(
+            (qid, d)
+            for qid, n in needles.items()
+            for d in _ids(C.search_substring(
+                segs, corpus, n, ts, fold_case=fold_case))
+        )
+        assert got == want and got, fold_case
 
 
 def test_substring_quote_backslash_needles(spark):
@@ -211,9 +216,13 @@ def test_regex_equals_full_scan(spark, tri_index):
 
 def test_regex_batch_equals_per_pattern(spark, tri_index):
     """Batch regex == per-pattern singles across all classes: prunable,
-    full-scan fallback (alternation / short literals), and no-match."""
+    full-scan fallback (alternation / short literals / inline flags), and
+    no-match."""
     corpus, segs, ts = tri_index
-    pats = {i: p for i, (p, _) in enumerate(PATTERNS_M)}
+    # + a one-char pattern (no trigram), one whose required trigrams
+    # include an unseen one, and an inline case-fold flag (full scan)
+    pats = {i: p for i, p in enumerate(
+        [p for p, _ in PATTERNS_M] + [r"e", r"public qqq+", r"(?i)PUBLIC"])}
     got = sorted(
         (r.qid, r.docId)
         for r in C.search_regex_batch(segs, corpus, pats, ts).collect()

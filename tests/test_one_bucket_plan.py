@@ -126,6 +126,21 @@ def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
         assert "Exchange hashpartitioning(bucket" in _plan(df)
 
 
+def test_multi_bucket_single_query_plan_is_pinned(spark, idx):
+    """A single query at ``n_buckets=4`` runs the batch plan at Q=1 and keeps
+    the shape it had as its own plan: one bucket exchange, two Python
+    stages (splitter, kernel), a TakeOrderedAndProject merge (no blob
+    merge) and two Spark jobs per collect."""
+    span = S.docid_span(idx[0])
+    df = _single(spark, idx, QUERIES[1], n_buckets=4, docid_span=span)
+    plan = _plan(df)
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 2
+    assert "TakeOrderedAndProject" in plan and "mkey" not in plan
+    rows, jobs = run_jobs(spark, df.collect, "multi_bucket_single")
+    assert rows and jobs == 2
+
+
 def test_whole_call_with_spark_stats_is_one_job(spark, idx):
     """Given the ``load_term_stats`` scan, the query-term df lookup runs on
     the driver: building the plan and collecting it is one Spark job, for

@@ -40,11 +40,11 @@ def dump(idx: str, n_q: int) -> dict:
     return the bucket ids (run in a fresh JVM)."""
     stats, m = load_term_stats_pdf(idx), read_manifest(idx)["stats"]
     queries = dict(enumerate(stratified_queries(zip(stats["term"], stats["df"]), n_q)))
-    qmetas, terms, _ = R._prep_workload(stats, queries, R.Scorer(), m["n_docs"], "porter")
+    qmetas, dfs = R._prep_workload(stats, R._analyzed(queries, "porter"), R.Scorer(), m["n_docs"])
     with open(QMETAS, "wb") as f:
         pickle.dump({"qmetas": qmetas, "avgdl": m["avgdl"]}, f)
     with local_spark(8) as spark:
-        seg = load_segments(spark, idx).where(isin_expr("term", terms))
+        seg = load_segments(spark, idx).where(isin_expr("term", sorted(dfs)))
         R._bucketize_segments(spark, seg, 32, docid_span(idx)).write.mode(
             "overwrite").parquet(BUCKETED)
     buckets = pq.read_table(BUCKETED, columns=["bucket"]).column("bucket")

@@ -66,6 +66,39 @@ CHECKS = {
 }
 
 
+def _node_col(line: str) -> int:
+    """Column where a plan-tree node's name starts (children sit 3 deeper)."""
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def window_is_broadcast_side(p: str) -> bool:
+    """q27's cost contract (O(window) rescore): every LeftSemi join is a
+    broadcast hash join whose build side holds no file scan — the collected
+    rescore window is broadcast and the phrase postings stream past it."""
+    tree = p.split("\n\n")[0].splitlines()
+    semis = [i for i, l in enumerate(tree) if "LeftSemi" in l]
+    if not semis:
+        return False
+    for i in semis:
+        if "BroadcastHashJoin LeftSemi BuildRight" not in tree[i]:
+            return False
+        col = _node_col(tree[i])
+        sub = []
+        for l in tree[i + 1:]:
+            if _node_col(l) <= col:
+                break
+            sub.append(l)
+        kids = [j for j, l in enumerate(sub) if _node_col(l) == col + 3]
+        if len(kids) != 2 or "BroadcastExchange" not in sub[kids[1]]:
+            return False
+        if any("Scan parquet" in l for l in sub[kids[1]:]):
+            return False
+    return True
+
+
+CHECKS["window_is_broadcast_side"] = window_is_broadcast_side
+
+
 def audit(name: str, df, expect: list[str], out: list[str], results: list[tuple]):
     plan = fmt_plan(df)
     flags = {k: fn(plan) for k, fn in CHECKS.items()}
@@ -592,12 +625,14 @@ def main() -> int:
     from search_engine_spark.operators.rank import rescore_phrase
 
     audit(
-        "rescore window (q27: DAAT top-window + broadcast phrase join + re-sort)",
+        "rescore window (q27: DAAT top-window once -> phrase postings"
+        " semi-joined to the broadcast window -> re-sort)",
         rescore_phrase(
             spark, segs, stats, terms, ["table", "scan"], nd, avg,
             Scorer("bm25"), window=40, k=10, analyzer="naive", ties="asc",
         ),
-        ["take_ordered_topk", "broadcast_join", "no_window", "no_cartesian"],
+        ["take_ordered_topk", "broadcast_join", "window_is_broadcast_side",
+         "no_window", "no_cartesian"],
         out, results,
     )
 
