@@ -27,6 +27,13 @@ Scale notes (100 TB):
   delta codec stays valid; the query path unions salted rows.
 - dl (doc length) is denormalized into each packed row, so BM25 scoring
   needs NO join against a doclens table at query time.
+- every reduce kernel (build merge, compaction merge, posting-level S8)
+  packs its whole partition at once through ONE block encoder
+  (``_pack_blocks``): block boundaries for every (term, salt) row, one
+  varbyte pass per stream with docId delta restarts at block starts, row
+  and block byte offsets from one cumsum, Arrow columns built from those
+  offsets and buffers — no Python work per packed row. The bucket splitter
+  (``rank._split_partition``) re-encodes its exact slices with it too.
 - the build is batched by a pure function of docId (``batch_of``); each
   batch commits atomically into the manifest -> resumable (see segments.py).
 """
@@ -244,20 +251,87 @@ def _byte_lens(values: np.ndarray) -> np.ndarray:
     return lens
 
 
-def _block_encoded(values: np.ndarray, bstarts: np.ndarray, delta: bool) -> tuple[bytes, list]:
-    """Encode `values` varbyte with the delta chain restarting at each block
-    start; returns (bytes, per-block byte offsets)."""
-    if delta:
+def _varbyte_stream(values: np.ndarray, restarts: np.ndarray | None = None):
+    """One varbyte pass over a whole partition's values -> (bytes as a
+    uint8 array, cum) where value i's bytes are ``buf[cum[i]:cum[i+1]]``.
+    With ``restarts``, values are delta-coded with the chain restarting at
+    each restart index (a block start), so every block decodes on its own."""
+    if restarts is not None:
         d = values.copy()
         d[1:] -= values[:-1]
-        d[bstarts] = values[bstarts]
-    else:
-        d = values
-    buf = varbyte_encode(d)
-    blens = _byte_lens(d)
-    cum = np.zeros(len(d) + 1, dtype=np.int64)
-    cum[1:] = np.cumsum(blens)
-    return buf, [int(cum[s]) for s in bstarts]
+        d[restarts] = values[restarts]
+        values = d
+    cum = np.zeros(len(values) + 1, dtype=np.int64)
+    np.cumsum(_byte_lens(values), out=cum[1:])
+    return np.frombuffer(varbyte_encode(values), dtype=np.uint8), cum
+
+
+def _pack_blocks(docid, tf, dl, gs, block_size):
+    """THE block encoder: sorted postings in contiguous groups starting at
+    ``gs`` -> every group's packed columns, one varbyte pass per stream.
+
+    Blocks hold ``block_size`` postings (the last one of a group fewer);
+    ``block_size`` None makes each group a single block. The docId delta
+    chain restarts at every block start, and group and block byte offsets
+    are read off each stream's one cumsum of byte lengths. ``tf``/``dl``
+    None is membership mode (see ``_pack_sorted``): empty tf/dl bytes,
+    all-zero tf/dl block offsets, tf read as constant 1.
+
+    Returns a dict: per group ``min_docid``/``ndocs``/``sum_tf``/``max_tf``;
+    per stream ``docids``/``tfs``/``dls`` a (bytes, group offsets) pair;
+    per block, flat in group order with group offsets ``blocks``:
+    ``block_last_docid``, ``block_max_tf`` and the byte offsets
+    ``block_docid_off``/``block_tf_off``/``block_dl_off`` (relative to the
+    group's first byte)."""
+    n, ng = len(docid), len(gs)
+    bounds = np.append(gs, n)
+    glen = np.diff(bounds)
+    nblk = -(-glen // block_size) if block_size else np.ones(ng, dtype=np.int64)
+    blocks = np.zeros(ng + 1, dtype=np.int64)
+    np.cumsum(nblk, out=blocks[1:])
+    bgrp = np.repeat(np.arange(ng), nblk)
+    bstart = gs[bgrp]
+    if block_size:
+        bstart = bstart + (np.arange(int(blocks[-1])) - blocks[bgrp]) * block_size
+    bend = np.append(bstart[1:], n)
+    out = {
+        "min_docid": docid[gs],
+        "ndocs": glen,
+        "blocks": blocks,
+        "block_last_docid": docid[bend - 1],
+    }
+
+    def stream(name, values, restarts=None):
+        buf, cum = _varbyte_stream(values, restarts)
+        out[name] = (buf, cum[bounds])
+        out[f"block_{name[:-1]}_off"] = cum[bstart] - cum[gs[bgrp]]
+
+    stream("docids", docid, bstart)
+    if tf is None:
+        empty = (np.empty(0, dtype=np.uint8), np.zeros(ng + 1, dtype=np.int64))
+        out["tfs"] = out["dls"] = empty
+        out["block_tf_off"] = out["block_dl_off"] = np.zeros(len(bstart), dtype=np.int64)
+        out["block_max_tf"] = np.ones(len(bstart), dtype=np.int64)
+        out["sum_tf"], out["max_tf"] = glen, np.ones(ng, dtype=np.int64)
+        return out
+    stream("tfs", tf)
+    stream("dls", dl)
+    out["block_max_tf"] = np.maximum.reduceat(tf, bstart)
+    out["sum_tf"] = np.add.reduceat(tf, gs)
+    out["max_tf"] = np.maximum.reduceat(out["block_max_tf"], blocks[:-1])
+    return out
+
+
+def _binary_array(buf: np.ndarray, offs: np.ndarray, c0: int, c1: int):
+    """Arrow binary array of items c0..c1-1 of a (bytes, offsets) stream,
+    built straight from the buffers."""
+    import pyarrow as pa
+
+    o = offs[c0 : c1 + 1]
+    return pa.Array.from_buffers(
+        pa.binary(), c1 - c0,
+        [None, pa.py_buffer((o - o[0]).astype(np.int32)), pa.py_buffer(buf[o[0] : o[-1]])],
+    )
 
 
 def _pa_types():
@@ -383,7 +457,6 @@ def _segment_encoder(batches):
     newgrp[0] = True
     newgrp[1:] = (key_s[1:] != key_s[:-1]) | (salt_s[1:] != salt_s[:-1])
     gs = np.flatnonzero(newgrp)
-    ge = np.append(gs[1:], n)
 
     if has_pos:
         p_offs, p_data = _binary_offsets(pos_arr)
@@ -392,8 +465,8 @@ def _segment_encoder(batches):
     else:
         starts_s = lens_s = None
     yield from _pack_sorted(
-        vocab, codes_s, salt_s, docid_s, tf_s, dl_s,
-        (p_data if has_pos else None), starts_s, lens_s, gs, ge,
+        de.dictionary, codes_s, salt_s, docid_s, tf_s, dl_s,
+        (p_data if has_pos else None), starts_s, lens_s, gs,
     )
 
 
@@ -404,9 +477,15 @@ _PACK_FLUSH_BYTES = 256 << 20
 
 
 def _pack_sorted(vocab, codes_s, salt_s, docid_s, tf_s, dl_s,
-                 pos_data, pos_starts_s, pos_lens_s, gs, ge):
+                 pos_data, pos_starts_s, pos_lens_s, gs):
     """Sorted posting-level flat arrays -> packed-segment RecordBatches
     (a generator: output is CHUNKED by payload bytes, never one giant batch).
+
+    Whole-partition encode: :func:`_pack_blocks` block-encodes every
+    (term, salt) group at once, and the Arrow binary and list columns are
+    built from its offsets and buffers — no Python work per group.
+    ``vocab`` is the Arrow term dictionary ``codes_s`` index into; ``gs``
+    the first sorted posting of each group.
 
     ``pos_data``: byte pool holding every posting's position blob;
     ``pos_starts_s``/``pos_lens_s``: per-posting (start, len) into it, in
@@ -420,95 +499,48 @@ def _pack_sorted(vocab, codes_s, salt_s, docid_s, tf_s, dl_s,
     """
     import pyarrow as pa
 
+    ng = len(gs)
+    if ng == 0:
+        return
     types = _pa_types()
     schema = pa.schema([pa.field(f.name, types[f.name]) for f in SEGMENT_SCHEMA.fields])
-    has_pos = pos_data is not None
-    if has_pos:
+    p = _pack_blocks(docid_s, tf_s, dl_s, gs, BLOCK_SIZE)
+    streams = {k: p[k] for k in ("docids", "tfs", "dls")}
+    if pos_data is not None:
         gathered, out_offs = _gather_bytes(pos_data, pos_starts_s, pos_lens_s)
-        gbytes = gathered.tobytes()
-    out = {c.name: [] for c in SEGMENT_SCHEMA.fields}
-    pend = 0
-    for gi in range(len(gs)):
-        s, e = int(gs[gi]), int(ge[gi])
-        if has_pos:
-            pos_bin = gbytes[int(out_offs[s]) : int(out_offs[e])]
-            poslens_bin = varbyte_encode(pos_lens_s[s:e])
-            pend += len(pos_bin) + len(poslens_bin)
-        else:
-            pos_bin = None
-            poslens_bin = None
-        packed = _encode_counts(
-            docid_s[s:e],
-            tf_s[s:e] if tf_s is not None else None,
-            dl_s[s:e] if dl_s is not None else None,
-        )
-        out["term"].append(vocab[int(codes_s[s])])
-        out["salt"].append(int(salt_s[s]))
-        for name, val in zip(
-            ("min_docid", "ndocs", "sum_tf", "max_tf", "docids", "tfs", "dls"),
-            packed[:7],
-        ):
-            out[name].append(val)
-        pend += len(packed[4]) + len(packed[5]) + len(packed[6])
-        out["poslens"].append(poslens_bin)
-        out["positions"].append(pos_bin)
-        for name, val in zip(
-            ("block_last_docid", "block_max_tf", "block_docid_off", "block_tf_off", "block_dl_off"),
-            packed[7:],
-        ):
-            out[name].append(val)
-        if pend >= _PACK_FLUSH_BYTES:
-            yield pa.RecordBatch.from_pydict(out, schema=schema)
-            out = {c.name: [] for c in SEGMENT_SCHEMA.fields}
-            pend = 0
-    if out["term"]:
-        yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-
-def _encode_counts(
-    docids: np.ndarray, tfs: np.ndarray | None, dls: np.ndarray | None
-) -> tuple:
-    """Block-encode the docid/tf/dl columns of one (term, salt) group.
-    ``tfs``/``dls`` = None is membership mode: empty tf/dl blobs, all-zero
-    block offsets, tf read as constant 1 (see ``_pack_sorted``)."""
-    ndocs = len(docids)
-    nblocks = (ndocs + BLOCK_SIZE - 1) // BLOCK_SIZE
-    bstarts = np.arange(nblocks) * BLOCK_SIZE
-    block_last = docids[np.minimum(bstarts + BLOCK_SIZE - 1, ndocs - 1)]
-    docids_bin, docid_off = _block_encoded(docids, bstarts, delta=True)
-    if tfs is None:
-        zoff = [0] * nblocks
-        return (
-            int(docids[0]),
-            int(ndocs),
-            int(ndocs),  # sum_tf under the tf=1 reading
-            1,
-            docids_bin,
-            b"",
-            b"",
-            block_last.tolist(),
-            [1] * nblocks,
-            docid_off,
-            zoff,
-            list(zoff),
-        )
-    block_max_tf = np.maximum.reduceat(tfs, bstarts) if ndocs else np.zeros(0)
-    tfs_bin, tf_off = _block_encoded(tfs, bstarts, delta=False)
-    dls_bin, dl_off = _block_encoded(dls, bstarts, delta=False)
-    return (
-        int(docids[0]),
-        int(ndocs),
-        int(tfs.sum()),
-        int(tfs.max()),
-        docids_bin,
-        tfs_bin,
-        dls_bin,
-        block_last.tolist(),
-        [int(x) for x in block_max_tf],
-        docid_off,
-        tf_off,
-        dl_off,
-    )
+        pbuf, pcum = _varbyte_stream(pos_lens_s)
+        bounds = np.append(gs, len(docid_s))
+        streams["poslens"] = (pbuf, pcum[bounds])
+        streams["positions"] = (gathered, out_offs[bounds])
+    # flush a chunk once its payload reaches _PACK_FLUSH_BYTES, counting
+    # the group that crosses the threshold in (cum = payload before group g)
+    cum = np.zeros(ng + 1, dtype=np.int64)
+    for _, offs in streams.values():
+        cum += offs - offs[0]
+    codes_g = codes_s[gs]
+    c0 = 0
+    while c0 < ng:
+        c1 = min(int(np.searchsorted(cum, cum[c0] + _PACK_FLUSH_BYTES, "left")), ng)
+        cols = {
+            "term": vocab.take(pa.array(codes_g[c0:c1])).cast(pa.string()),
+            "salt": pa.array(salt_s[gs[c0:c1]].astype(np.int32)),
+        }
+        for name in ("min_docid", "ndocs", "sum_tf", "max_tf"):
+            cols[name] = pa.array(p[name][c0:c1], types[name])
+        for name in ("docids", "tfs", "dls", "poslens", "positions"):
+            cols[name] = (
+                _binary_array(*streams[name], c0, c1)
+                if name in streams else pa.nulls(c1 - c0, pa.binary())
+            )
+        b = p["blocks"][c0 : c1 + 1]
+        for name in ("block_last_docid", "block_max_tf", "block_docid_off",
+                     "block_tf_off", "block_dl_off"):
+            cols[name] = pa.ListArray.from_arrays(
+                pa.array((b - b[0]).astype(np.int32)),
+                pa.array(p[name][b[0] : b[-1]], types[name].value_type),
+            )
+        yield pa.RecordBatch.from_arrays([cols[f.name] for f in schema], schema=schema)
+        c0 = c1
 
 
 # ---------------------------------------------------------------------------
@@ -683,6 +715,32 @@ def _compact_merge_encoder(batches):
     yield from _merge_encoder_impl(batches, restarts_per_block=True)
 
 
+def _decode_docid_rows(data: np.ndarray, offs: np.ndarray, counts: np.ndarray,
+                       block_size: int | None) -> np.ndarray:
+    """DocIds of consecutive packed rows (``counts`` postings each, bytes
+    ``data[offs[0]:offs[-1]]``) in ONE varbyte pass: the delta chains,
+    which restart at every row start and, unless ``block_size`` is None,
+    every ``block_size`` postings within a row, are undone with one cumsum
+    and a per-restart base correction."""
+    start, length = int(offs[0]), int(offs[-1] - offs[0])
+    csum = np.cumsum(varbyte_decode(data[start : start + length].tobytes()))
+    vstarts = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=vstarts[1:])
+    if block_size:
+        # restart value-index of every block: row start + block_size * (block # in row)
+        nblocks = -(-counts // block_size)
+        rb_starts = np.zeros(len(counts) + 1, dtype=np.int64)
+        np.cumsum(nblocks, out=rb_starts[1:])
+        block_row = np.repeat(np.arange(len(counts)), nblocks)
+        within = np.arange(int(rb_starts[-1])) - rb_starts[block_row]
+        restarts = vstarts[block_row] + within * block_size
+    else:
+        restarts = vstarts[:-1]
+    base_per = np.zeros(len(restarts), dtype=np.int64)
+    base_per[1:] = csum[restarts[1:] - 1]
+    return csum - np.repeat(base_per, np.diff(np.append(restarts, len(csum))))
+
+
 def _merge_encoder_impl(batches, restarts_per_block: bool):
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -702,28 +760,12 @@ def _merge_encoder_impl(batches, restarts_per_block: bool):
         offs, data = _binary_offsets(tbl.column(name).chunk(0))
         return offs, data
 
-    # docids: decode every row's delta stream in one pass, then undo the
-    # chain restarts with a cumsum base-correction. Restarts sit at each row
-    # start (mini-blocks) or additionally every BLOCK_SIZE postings within a
-    # row (packed segment rows).
+    # docids: restarts sit at each row start (mini-blocks) or additionally
+    # every BLOCK_SIZE postings within a row (packed segment rows)
     d_offs, d_data = col_bytes("docids")
-    deltas = varbyte_decode(d_data.tobytes(), int(d_offs[0]), int(d_offs[-1] - d_offs[0]))
-    csum = np.cumsum(deltas)
-    if restarts_per_block:
-        nblocks = (counts + BLOCK_SIZE - 1) // BLOCK_SIZE
-        rb_starts = np.zeros(nrows + 1, dtype=np.int64)
-        np.cumsum(nblocks, out=rb_starts[1:])
-        total_blocks = int(rb_starts[-1])
-        # restart value-index of every block: row_start + 128 * (block # in row)
-        block_row = np.repeat(np.arange(nrows), nblocks)
-        within = np.arange(total_blocks) - rb_starts[block_row]
-        restarts = vstarts[block_row] + within * BLOCK_SIZE
-    else:
-        restarts = vstarts[:-1]
-    base_per = np.zeros(len(restarts), dtype=np.int64)
-    base_per[1:] = csum[restarts[1:] - 1]
-    seg_lens = np.diff(np.append(restarts, npost))
-    docid = csum - np.repeat(base_per, seg_lens)
+    docid = _decode_docid_rows(
+        d_data, d_offs, counts, BLOCK_SIZE if restarts_per_block else None
+    )
     t_offs, t_data = col_bytes("tfs")
     l_offs, l_data = col_bytes("dls")
     # membership rows (trigram/substring builds) carry EMPTY tf/dl blobs —
@@ -780,13 +822,12 @@ def _merge_encoder_impl(batches, restarts_per_block: bool):
     newgrp[0] = True
     newgrp[1:] = (key_s[1:] != key_s[:-1]) | (salt_s[1:] != salt_s[:-1])
     gs = np.flatnonzero(newgrp)
-    ge = np.append(gs[1:], npost)
     yield from _pack_sorted(
-        vocab, codes_s, salt_s, docid_s, tf_s, dl_s,
+        de.dictionary, codes_s, salt_s, docid_s, tf_s, dl_s,
         (pb_data if has_pos else None),
         (pstarts[order] if has_pos else None),
         (plens[order] if has_pos else None),
-        gs, ge,
+        gs,
     )
 
 

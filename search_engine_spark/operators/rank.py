@@ -27,7 +27,10 @@ from one driver-side prep (:func:`_prep_workload`):
   workload that fits one bucket (the common interactive query) runs as ONE
   task: term-pushed segment scan -> ``coalesce(1)`` -> one kernel call over
   the whole packed rows. Bigger workloads re-key the compressed blocks by
-  docId-range bucket (one shuffle), score each bucket with a local top-k,
+  docId-range bucket (one shuffle; the splitter, :func:`_split_partition`,
+  is one ``mapInArrow`` pass per partition with no Python work per row:
+  whole-block byte slices for dense rows, an exact re-encode through the
+  build's block encoder for sparse ones), score each bucket with a local top-k,
   and merge globally — the reference's per-segment top-k -> global PQ
   two-stage shape at cluster scale. One query merges by
   TakeOrderedAndProject, a workload by the packed-blob merge.
@@ -58,8 +61,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.codec import varbyte_decode, varbyte_encode
-from ..operators.build import BLOCK_SIZE, _byte_lens
+from ..functions.codec import varbyte_decode
+from ..operators.build import (
+    BLOCK_SIZE,
+    _binary_array,
+    _binary_offsets,
+    _combine_large,
+    _decode_docid_rows,
+    _gather_bytes,
+    _pack_blocks,
+)
 from ..functions.predicates import isin_expr
 from ..operators.query import analyze_query, postings_for
 from ..sources.segments import term_dfs
@@ -747,94 +758,140 @@ BUCKETED_SCHEMA = StructType(
 _DOCID_MIN, _DOCID_MAX = -(2**63), 2**63 - 1
 
 
-def _bucket_bounds(b: int, edges: np.ndarray, lo_global: int) -> tuple[int, int]:
-    """Inclusive [lo, hi] docId range owned by bucket b (edge buckets are
-    open-ended via sentinels — see note above)."""
-    lo = int(edges[b - 1]) + 1 if b > 0 else _DOCID_MIN
-    hi = int(edges[b]) if b < len(edges) - 1 else _DOCID_MAX
+def _bucket_bounds(edges: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Inclusive [lo, hi] docId range owned by each bucket, as two arrays
+    indexed by bucket (edge buckets are open-ended via sentinels — see note
+    above)."""
+    lo = np.concatenate(([_DOCID_MIN], edges[:-1] + 1)).astype(np.int64)
+    hi = np.concatenate((edges[:-1], [_DOCID_MAX])).astype(np.int64)
     return lo, hi
 
 
-def _split_row_exact(r, edges: np.ndarray, lo_global: int):
-    """Decode one packed row ONCE and re-encode an exact per-bucket slice —
-    the path for SPARSE rows (rare terms) whose blocks span many buckets:
-    shipping such a block whole to all ~n_buckets buckets multiplies both
-    shuffle bytes and kernel decode by the coverage (measured 2x slices,
-    3.4x wall on a 4096-query workload at 64 buckets). The re-encoded slice
-    is a single block; the dispatch condition bounds postings per covered
-    bucket to BLOCK_SIZE/2 ON AVERAGE (a skewed bucket can exceed it), so
-    slices stay well under one block in expectation."""
-    d, t, l = _decode_row_blocks(r)
-    bks = np.minimum(np.searchsorted(edges, d, "left"), len(edges) - 1)
-    starts = np.flatnonzero(np.diff(bks)) + 1
-    bnds = np.concatenate(([0], starts, [len(d)]))
-    # re-encode the WHOLE row in one vectorized pass, delta chain restarting
-    # at every slice start (the build's posbin trick) — per slice only pure
-    # byte slicing remains (per-slice varbyte calls were ~40µs of small-numpy
-    # overhead each, 30s+ over a 4096-query workload's 200k slices)
-    deltas = d.copy()
-    deltas[1:] -= d[:-1]
-    deltas[starts] = d[starts]
-    bufs, cums = [], []
-    for arr in (deltas, t, l):
-        bufs.append(varbyte_encode(arr))
-        cum = np.zeros(len(arr) + 1, dtype=np.int64)
-        np.cumsum(_byte_lens(arr), out=cum[1:])
-        cums.append(cum)
-    mts = np.maximum.reduceat(t, bnds[:-1])
-    lasts_i8 = d[bnds[1:] - 1].astype("<i8").tobytes()
-    mts_i4 = mts.astype("<i4").tobytes()
-    for j in range(len(bnds) - 1):
-        b = int(bks[bnds[j]])
-        lo_b, hi_b = _bucket_bounds(b, edges, lo_global)
-        yield (
-            b,
-            lo_b,
-            hi_b,
-            r.term,
-            int(mts[j]),
-            bufs[0][cums[0][bnds[j]] : cums[0][bnds[j + 1]]],
-            bufs[1][cums[1][bnds[j]] : cums[1][bnds[j + 1]]],
-            bufs[2][cums[2][bnds[j]] : cums[2][bnds[j + 1]]],
-            lasts_i8[j * 8 : (j + 1) * 8],
-            mts_i4[j * 4 : (j + 1) * 4],
-            _I32_ZERO,
-            _I32_ZERO,
-            _I32_ZERO,
-        )
+# block metadata lists of a packed segment row, and the little-endian
+# width each one ships with in a bucketed row
+_BLOCK_COLS = {
+    "block_last_docid": "<i8",
+    "block_max_tf": "<i4",
+    "block_docid_off": "<i4",
+    "block_tf_off": "<i4",
+    "block_dl_off": "<i4",
+}
 
 
-_I32_ZERO = np.zeros(1, "<i4").tobytes()
-
-
-def _split_row_by_bucket(r, edges: np.ndarray, lo_global: int):
-    """Yield (bucket, lo, hi, *fields) whole-block byte slices of one packed
-    segment row — one slice per bucket the row's blocks overlap, no decode.
+def _split_whole_blocks(rows, cols, nb_first, b_lo, b_hi, row_lo, covered, n_edges):
+    """(bucket, block range) slices of the rows that ship whole blocks, all
+    rows at once: a row gets one slice per bucket its blocks overlap.
 
     Blocks are docId-sorted, so the blocks overlapping bucket b form a
     contiguous run: first block whose last docId reaches b, through the last
     block that can start at or below b (bounded by the previous block's last
     docId + 1 — a conservative start, so a bucket may receive a block with
-    no postings for it; the kernel's range mask drops them).
+    no postings for it; the kernel's range mask drops them). One global
+    searchsorted finds every run: ``row * n_edges + bucket`` keys are sorted
+    over the partition's blocks because each row's bucket ids are."""
+    brow = np.repeat(np.arange(len(nb_first) - 1), np.diff(nb_first))
+    cnt = covered[rows]
+    prow = np.repeat(rows, cnt)
+    first = np.zeros(len(rows) + 1, dtype=np.int64)
+    np.cumsum(cnt, out=first[1:])
+    pb = row_lo[prow] + np.arange(int(first[-1])) - np.repeat(first[:-1], cnt)
+    key = prow * n_edges + pb
+    i0 = np.searchsorted(brow * n_edges + b_hi, key, "left")
+    i1 = np.searchsorted(brow * n_edges + b_lo, key, "right")  # one past last block
+    keep = i0 < i1
+    prow, pb, i0, nsel = prow[keep], pb[keep], i0[keep], (i1 - i0)[keep]
+    blk, boffs = _gather_bytes(np.arange(len(brow)), i0, nsel)
+    last = i0 + nsel - 1
+    out = {"row": prow, "bucket": pb, "blocks": boffs}
+    for name, stream in (("docids", "block_docid_off"), ("tfs", "block_tf_off"),
+                         ("dls", "block_dl_off")):
+        offs, data = cols[name]
+        rel = cols[stream]
+        start = offs[brow] + rel  # absolute first byte of every block
+        end = np.append(start[1:], 0)
+        end[nb_first[1:] - 1] = offs[1:]  # a row's last block ends the row
+        out[name] = _gather_bytes(data, start[i0], end[last] - start[i0])
+        out[stream] = rel[blk] - np.repeat(rel[i0], nsel)
+    out["block_last_docid"] = cols["block_last_docid"][blk]
+    out["block_max_tf"] = cols["block_max_tf"][blk]
+    out["max_tf"] = np.maximum.reduceat(out["block_max_tf"], boffs[:-1])
+    return out
 
-    Sparse rows — fewer than BLOCK_SIZE/2 postings per covered bucket —
-    dispatch to :func:`_split_row_exact` instead: duplicating a whole block
-    to every bucket a 128-posting rare term touches is pure waste, while for
-    dense rows (heavy terms, blocks spanning 2-4 buckets) byte-duplication
-    beats decode/re-encode."""
-    blast = np.asarray(r.block_last_docid, dtype=np.int64)
-    bmax = np.asarray(r.block_max_tf, dtype=np.int64)
-    offs_d = np.append(np.asarray(r.block_docid_off, np.int64), len(r.docids))
-    offs_t = np.append(np.asarray(r.block_tf_off, np.int64), len(r.tfs))
-    offs_l = np.append(np.asarray(r.block_dl_off, np.int64), len(r.dls))
-    nb = len(blast)
-    prev = np.empty(nb, dtype=np.int64)
-    prev[0] = r.min_docid - 1
+
+def _split_exact(rows, cols, ndocs, edges):
+    """Exact per-bucket slices of sparse rows (rare terms) whose blocks span
+    many buckets: shipping such a block whole to all ~n_buckets buckets
+    multiplies both shuffle bytes and kernel decode by the coverage
+    (measured 2x slices, 3.4x wall on a 4096-query workload at 64 buckets).
+
+    All rows decode in one varbyte pass per stream (delta restarts per
+    block, undone like the compaction merge); every posting gets a bucket
+    id, and each (row, bucket) run re-encodes as a single block through the
+    build's block encoder. The dispatch condition bounds postings per
+    covered bucket to BLOCK_SIZE/2 ON AVERAGE (a skewed bucket can exceed
+    it), so slices stay well under one block in expectation. Membership
+    rows (empty tf/dl bytes) read tf = dl = 1, as the kernel does, and
+    their slices carry those ones encoded."""
+    cnt = ndocs[rows]
+    npost = int(cnt.sum())
+
+    def gathered(name):
+        offs, data = cols[name]
+        lens = np.diff(offs)[rows]
+        return _gather_bytes(data, offs[rows], lens)
+
+    d = _decode_docid_rows(*gathered("docids"), cnt, BLOCK_SIZE)
+    tf_dl = []
+    for name in ("tfs", "dls"):
+        buf, offs = gathered(name)
+        vals = np.ones(npost, dtype=np.int64)
+        vals[np.repeat(np.diff(offs) > 0, cnt)] = varbyte_decode(buf.tobytes())
+        tf_dl.append(vals)
+    prow = np.repeat(rows, cnt)
+    bk = np.minimum(np.searchsorted(edges, d, "left"), len(edges) - 1)
+    new = np.ones(npost, dtype=bool)
+    new[1:] = (prow[1:] != prow[:-1]) | (bk[1:] != bk[:-1])
+    gs = np.flatnonzero(new)
+    out = _pack_blocks(d, tf_dl[0], tf_dl[1], gs, None)
+    out.update(row=prow[gs], bucket=bk[gs])
+    return out
+
+
+def _split_partition(tbl, edges: np.ndarray):
+    """Re-key one partition's packed segment rows by docId-range bucket ->
+    one Arrow table of BUCKETED_SCHEMA rows, in row order and then bucket
+    order, with no Python work per row.
+
+    A row whose blocks all fall in one bucket, and a dense row (heavy
+    terms, blocks spanning 2-4 buckets), ship whole blocks as byte slices
+    (:func:`_split_whole_blocks`). Sparse rows — fewer than BLOCK_SIZE/2
+    postings per covered bucket — take the exact split instead
+    (:func:`_split_exact`): duplicating a whole block to every bucket a
+    128-posting rare term touches is pure waste, while for dense rows
+    byte-duplication beats decode/re-encode."""
+    import pyarrow as pa
+
+    def col(name):
+        return tbl.column(name).chunk(0)
+
+    cols = {name: _binary_offsets(col(name)) for name in ("docids", "tfs", "dls")}
+    for name in _BLOCK_COLS:  # one list per row, each of the row's block count
+        lst = col(name)
+        o = lst.offsets.to_numpy()
+        cols[name] = lst.values.to_numpy()[o[0] : o[-1]].astype(np.int64)
+    o = col("block_last_docid").offsets.to_numpy()
+    nb_first = (o - o[0]).astype(np.int64)  # first block of each row
+    ndocs = col("ndocs").to_numpy().astype(np.int64)
+    blast = cols["block_last_docid"]
+    # per block: the bucket range it can hold docIds of
+    prev = np.empty(len(blast), dtype=np.int64)
     prev[1:] = blast[:-1]
+    prev[nb_first[:-1]] = col("min_docid").to_numpy() - 1
     last_b = len(edges) - 1
     b_lo = np.minimum(np.searchsorted(edges, prev + 1, "left"), last_b)
     b_hi = np.minimum(np.searchsorted(edges, blast, "left"), last_b)
-    covered = int(b_hi[-1]) - int(b_lo[0]) + 1
+    row_lo = b_lo[nb_first[:-1]]
+    covered = b_hi[nb_first[1:] - 1] - row_lo + 1
     # shipped = Σ per-block bucket coverage = (bucket, block) copies the
     # whole-block path would emit. Blocks are disjoint SORTED docId runs,
     # so Σ coverage ≤ nb + (edges inside the row's span) ≤ nb + n_buckets
@@ -846,34 +903,41 @@ def _split_row_by_bucket(r, edges: np.ndarray, lo_global: int):
     # dispatch: any boundary case above _MAX_AVG_BLOCK_DUP× falls back to
     # the exact splitter, which (sorted ids again) emits ≤ n_buckets
     # zero-duplication slices. (VERDICT r4 item 8.)
-    shipped = int((b_hi - b_lo + 1).sum())
-    if covered > 1 and (
-        r.ndocs < covered * (BLOCK_SIZE // 2)
-        or shipped > _MAX_AVG_BLOCK_DUP * nb
-    ):
-        yield from _split_row_exact(r, edges, lo_global)
-        return
-    for b in range(int(b_lo[0]), int(b_hi[-1]) + 1):
-        i0 = int(np.searchsorted(b_hi, b, "left"))
-        i1 = int(np.searchsorted(b_lo, b, "right"))  # one past last block
-        if i0 >= i1:
-            continue
-        lo_b, hi_b = _bucket_bounds(b, edges, lo_global)
-        yield (
-            b,
-            lo_b,
-            hi_b,
-            r.term,
-            int(bmax[i0:i1].max()),
-            r.docids[int(offs_d[i0]) : int(offs_d[i1])],
-            r.tfs[int(offs_t[i0]) : int(offs_t[i1])],
-            r.dls[int(offs_l[i0]) : int(offs_l[i1])],
-            blast[i0:i1].astype("<i8").tobytes(),
-            bmax[i0:i1].astype("<i4").tobytes(),
-            (offs_d[i0:i1] - offs_d[i0]).astype("<i4").tobytes(),
-            (offs_t[i0:i1] - offs_t[i0]).astype("<i4").tobytes(),
-            (offs_l[i0:i1] - offs_l[i0]).astype("<i4").tobytes(),
-        )
+    shipped = np.add.reduceat(b_hi - b_lo + 1, nb_first[:-1])
+    exact = (covered > 1) & (
+        (ndocs < covered * (BLOCK_SIZE // 2))
+        | (shipped > _MAX_AVG_BLOCK_DUP * np.diff(nb_first))
+    )
+    whole, sparse = np.flatnonzero(~exact), np.flatnonzero(exact)
+    parts = []
+    if len(whole):
+        parts.append(_split_whole_blocks(whole, cols, nb_first, b_lo, b_hi,
+                                         row_lo, covered, len(edges)))
+    if len(sparse):
+        parts.append(_split_exact(sparse, cols, ndocs, edges))
+    lo_of, hi_of = _bucket_bounds(edges)
+    tables = []
+    for p in parts:
+        n = len(p["row"])
+        arrays = {
+            "bucket": pa.array(p["bucket"].astype(np.int32)),
+            "lo_docid": pa.array(lo_of[p["bucket"]]),
+            "hi_docid": pa.array(hi_of[p["bucket"]]),
+            "term": col("term").take(pa.array(p["row"])).cast(pa.string()),
+            "max_tf": pa.array(p["max_tf"].astype(np.int32)),
+        }
+        for name in ("docids", "tfs", "dls"):
+            arrays[name] = _binary_array(*p[name], 0, n)
+        for name, dt in _BLOCK_COLS.items():
+            le = np.frombuffer(p[name].astype(dt).tobytes(), dtype=np.uint8)
+            arrays[name] = _binary_array(le, p["blocks"] * np.dtype(dt).itemsize, 0, n)
+        tables.append(pa.table([arrays[f.name] for f in BUCKETED_SCHEMA.fields],
+                               names=BUCKETED_SCHEMA.fieldNames()))
+    order = np.lexsort((
+        np.concatenate([p["bucket"] for p in parts]),
+        np.concatenate([p["row"] for p in parts]),
+    ))
+    return pa.concat_tables(tables).take(pa.array(order))
 
 
 # Target scoring work per bucket (posting-score evaluations): enough that
@@ -968,7 +1032,7 @@ def _bucketize_segments(
 ) -> DataFrame | None:
     """Re-key packed segment rows by docId-range bucket (whole-block byte
     slicing with kernel-side range masks; sparse rows take one vectorized
-    exact split — see :func:`_split_row_by_bucket`). Shared by the
+    exact split — see :func:`_split_partition`). Shared by the
     multi-bucket single-query and batch DAAT plans and by the serving
     cache, which writes these rows as its shards at any bucket count.
 
@@ -981,7 +1045,11 @@ def _bucketize_segments(
     a bucket-SIZING hint only:
     edge buckets are open-ended (see ``_bucket_bounds``), so a span that is
     narrower OR wider than the candidate docIds still scores every posting
-    exactly once; surplus buckets are empty and cost nothing."""
+    exactly once; surplus buckets are empty and cost nothing.
+
+    ``est_work``: the postings (or scoring work) the split covers. Below
+    ``2 * _WORK_PER_BUCKET`` a coarse scan is split as it comes, without
+    the rebalance shuffle; None always rebalances a coarse scan."""
     if docid_span is not None:
         lo, hi = int(docid_span[0]), int(docid_span[1])
     else:
@@ -997,18 +1065,9 @@ def _bucketize_segments(
     edges[-1] = hi
 
     def splitter(batches):
-        for pdf in batches:
-            out = [
-                tup
-                for r in pdf.itertuples(index=False)
-                for tup in _split_row_by_bucket(r, edges, lo)
-            ]
-            if out:
-                # columnar construction: pd.DataFrame(list-of-tuples) routes
-                # through a 2-D object array (row-wise) — zip keeps each
-                # column a flat tuple of scalars/bytes
-                cols = zip(BUCKETED_SCHEMA.fieldNames(), zip(*out))
-                yield pd.DataFrame(dict(cols))
+        batch_list = [b for b in batches if b.num_rows]
+        if batch_list:
+            yield from _split_partition(_combine_large(batch_list), edges).to_batches()
 
     narrowed = seg.select(*_SEG_KERNEL_COLS, "min_docid", "ndocs")
     # The parquet scan coalesces by FILE bytes (maxPartitionBytes), which
@@ -1023,7 +1082,7 @@ def _bucketize_segments(
     big_enough = est_work is None or est_work >= 2 * _WORK_PER_BUCKET
     if big_enough and narrowed.rdd.getNumPartitions() < target:
         narrowed = narrowed.repartition(target)
-    bucketed = narrowed.mapInPandas(splitter, BUCKETED_SCHEMA)
+    bucketed = narrowed.mapInArrow(splitter, BUCKETED_SCHEMA)
     # EXPLICIT repartition by bucket, one partition per bucket: the scoring
     # kernel downstream is python-CPU-heavy per group but byte-light, and
     # AQE's coalescePartitions sizes post-shuffle partitions by BYTES — left

@@ -214,7 +214,10 @@ def prepare_serving_cache(
     if docid_span is None and "docid_lo" in stats:
         docid_span = (int(stats["docid_lo"]), int(stats["docid_hi"]))
     segs = load_segments(spark, index_dir)
-    bucketed = R._bucketize_segments(spark, segs, n_buckets, docid_span)
+    # the postings to split size the splitter stage (rebalance or not)
+    bucketed = R._bucketize_segments(
+        spark, segs, n_buckets, docid_span, stats.get("npostings")
+    )
     shutil.rmtree(cache_dir, ignore_errors=True)
     os.makedirs(cache_dir)
     cdir = os.path.abspath(cache_dir)
@@ -404,8 +407,10 @@ def refresh_serving_cache(
         from ..sources.segments import batch_path, read_segment_dirs
 
         seg = read_segment_dirs(spark, *[batch_path(index_dir, k) for k in delta])
+        npost = [live[k].get("npostings") for k in delta]
         bucketed = R._bucketize_segments(
-            spark, seg, int(meta["n_buckets"]), tuple(meta["docid_span"])
+            spark, seg, int(meta["n_buckets"]), tuple(meta["docid_span"]),
+            None if None in npost else sum(int(n) for n in npost),
         )
         new = _write_bucket_shards(bucketed, cdir, f".d{live_gen}")
         shards = {str(k): list(v) for k, v in (meta.get("shards") or {}).items()}

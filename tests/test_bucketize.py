@@ -1,12 +1,13 @@
 """Bucketize invariants for the distributed DAAT shuffle.
 
 The splitter re-keys packed segment rows by docId-range bucket two ways
-(rank._split_row_by_bucket): dense rows ship whole blocks to every bucket
-they overlap (the kernel range-masks decoded docIds), sparse rows take a
-vectorized exact re-encode. These tests pin the invariant both paths share:
-masked per-bucket decodes reassemble EXACTLY the row's full posting list,
-with no posting lost, duplicated, or mis-bucketed — the property every
-downstream score depends on.
+(rank._split_partition, whole partition at once): dense rows ship whole
+blocks to every bucket they overlap (the kernel range-masks decoded
+docIds), sparse rows take a vectorized exact re-encode. These tests pin
+the invariant both paths share: masked per-bucket decodes reassemble
+EXACTLY each term's full posting lists, with no posting lost, duplicated,
+or mis-bucketed — the property every downstream score depends on — and
+the output keeps input row order, then bucket order.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import numpy as np
 import pytest
 
 from search_engine_spark.operators import rank as R
+from search_engine_spark.operators.build import BLOCK_SIZE, _combine_large
 from search_engine_spark.sources import segments as S
 
 
@@ -34,9 +36,9 @@ def packed_rows(spark, tmp_path_factory):
     cols = ["term", "max_tf", "docids", "tfs", "dls", "block_last_docid",
             "block_max_tf", "block_docid_off", "block_tf_off", "block_dl_off",
             "min_docid", "ndocs"]
-    pdf = S.load_segments(spark, p).select(*cols).toPandas()
+    tbl = S.load_segments(spark, p).select(*cols).toArrow()
     span = S.docid_span(p)
-    return list(pdf.itertuples(index=False)), span
+    return tbl, list(tbl.to_pandas().itertuples(index=False)), span
 
 
 def _edges(span, n_buckets):
@@ -44,6 +46,12 @@ def _edges(span, n_buckets):
     edges = np.unique(np.linspace(lo, hi, n_buckets + 1).astype(np.int64)[1:])
     edges[-1] = hi
     return edges
+
+
+def _split(tbl, edges) -> list:
+    """Splitter output rows as namespaces."""
+    out = R._split_partition(_combine_large(tbl.to_batches()), edges)
+    return [types.SimpleNamespace(**r) for r in out.to_pylist()]
 
 
 def _row_covered(r, edges):
@@ -55,46 +63,41 @@ def _row_covered(r, edges):
 
 
 def _takes_exact_path(r, edges):
-    from search_engine_spark.operators.build import BLOCK_SIZE
-
     covered = _row_covered(r, edges)
     return covered > 1 and r.ndocs < covered * (BLOCK_SIZE // 2)
 
 
 @pytest.mark.parametrize("n_buckets", [4, 16, 64])
 def test_split_reassembles_every_row(packed_rows, n_buckets):
-    rows, span = packed_rows
+    tbl, rows, span = packed_rows
     edges = _edges(span, n_buckets)
-    names = [f.name for f in R.BUCKETED_SCHEMA.fields]
-    n_exact = n_dup = 0
+    n_exact = sum(_takes_exact_path(r, edges) for r in rows)
+    n_dup = len(rows) - n_exact
+    # per term (salted sub-lists hold disjoint docs): the input rows' full
+    # posting lists, and the masked decodes of every bucketed row
+    full, got = {}, {}
     for r in rows:
-        if _takes_exact_path(r, edges):
-            n_exact += 1
-        else:
-            n_dup += 1
-        full_d, full_t, full_l = R._decode_row_blocks(r)
-        got = []
-        seen_docs: set[int] = set()
-        for tup in R._split_row_by_bucket(r, edges, span[0]):
-            ns = types.SimpleNamespace(**dict(zip(names, tup)))
-            d, t, l = R._decode_row_blocks(ns)
-            i0 = np.searchsorted(d, ns.lo_docid, "left")
-            i1 = np.searchsorted(d, ns.hi_docid, "right")
-            d, t, l = d[i0:i1], t[i0:i1], l[i0:i1]
-            # masked postings stay inside the bucket's owned range and the
-            # per-slice block metadata stays a valid bound
-            assert ((d >= ns.lo_docid) & (d <= ns.hi_docid)).all()
-            if len(t):
-                assert int(t.max()) <= ns.max_tf
-            # a doc appears in exactly one bucket
-            assert seen_docs.isdisjoint(d.tolist())
-            seen_docs.update(d.tolist())
-            got.append((d, t, l))
-        gd = np.concatenate([g[0] for g in got])
-        order = np.argsort(gd, kind="stable")
-        assert np.array_equal(gd[order], full_d)
-        assert np.array_equal(np.concatenate([g[1] for g in got])[order], full_t)
-        assert np.array_equal(np.concatenate([g[2] for g in got])[order], full_l)
+        full.setdefault(r.term, []).append(R._decode_row_blocks(r))
+    for ns in _split(tbl, edges):
+        d, t, l = R._decode_row_blocks(ns)
+        i0 = np.searchsorted(d, ns.lo_docid, "left")
+        i1 = np.searchsorted(d, ns.hi_docid, "right")
+        d, t, l = d[i0:i1], t[i0:i1], l[i0:i1]
+        # masked postings stay inside the bucket's owned range and the
+        # per-slice block metadata stays a valid bound
+        assert ((d >= ns.lo_docid) & (d <= ns.hi_docid)).all()
+        if len(t):
+            assert int(t.max()) <= ns.max_tf
+        got.setdefault(ns.term, []).append((d, t, l))
+    assert set(got) == set(full)
+    for term, parts in got.items():
+        want = [np.concatenate(c) for c in zip(*full[term])]
+        have = [np.concatenate(c) for c in zip(*parts)]
+        # a doc appears in exactly one bucket
+        assert len(np.unique(have[0])) == len(have[0])
+        wo, ho = np.argsort(want[0], kind="stable"), np.argsort(have[0], kind="stable")
+        for w, h in zip(want, have):
+            assert np.array_equal(w[wo], h[ho])
     # the corpus mixes heavy (salted, dense) and rare terms, so at low
     # bucket counts BOTH splitter paths fire (probed: 699/320 rows at 4
     # buckets, 977/42 at 16; at 64 every row is sparse relative to its
@@ -104,24 +107,32 @@ def test_split_reassembles_every_row(packed_rows, n_buckets):
     assert n_exact + n_dup == len(rows)
 
 
+@pytest.mark.parametrize("n_buckets", [4, 16])
+def test_split_keeps_row_then_bucket_order(packed_rows, n_buckets):
+    """The whole-partition split of a mix of dense, sparse and one-bucket
+    rows equals the row-by-row splits concatenated: input row order, then
+    bucket ascending."""
+    tbl, _, span = packed_rows
+    edges = _edges(span, n_buckets)
+    head = tbl.slice(0, 60)
+    whole = _split(head, edges)
+    per_row = [ns for i in range(head.num_rows) for ns in _split(head.slice(i, 1), edges)]
+    assert whole == per_row
+    assert len(whole) > head.num_rows  # some rows span several buckets
+
+
 def test_exact_split_block_is_small(packed_rows):
     """The exact path only fires for sparse rows: its single-block slices
     stay well under one block ON AVERAGE (the dispatch bound is per covered
     bucket in expectation; a skewed bucket can exceed it slightly)."""
-    from search_engine_spark.operators.build import BLOCK_SIZE
-
-    rows, span = packed_rows
+    tbl, rows, span = packed_rows
     edges = _edges(span, 64)
-    names = [f.name for f in R.BUCKETED_SCHEMA.fields]
+    exact = [i for i, r in enumerate(rows) if _takes_exact_path(r, edges)]
     sizes = []
-    for r in rows:
-        if not _takes_exact_path(r, edges):
-            continue
-        for tup in R._split_row_by_bucket(r, edges, span[0]):
-            ns = types.SimpleNamespace(**dict(zip(names, tup)))
-            assert len(ns.block_last_docid) // 8 == 1  # one block per slice
-            d, _, _ = R._decode_row_blocks(ns)
-            sizes.append(len(d))
+    for ns in _split(tbl.take(exact), edges):
+        assert len(ns.block_last_docid) // 8 == 1  # one block per slice
+        d, _, _ = R._decode_row_blocks(ns)
+        sizes.append(len(d))
     assert sizes
     assert float(np.mean(sizes)) < BLOCK_SIZE // 2
     assert max(sizes) < 2 * BLOCK_SIZE

@@ -143,6 +143,13 @@ def test_ensure_index_rebuilds_only_on_a_doc_count_change(tmp_path, monkeypatch)
     assert built == [(idx, 9000)]
 
 
+def test_query_index_is_one_directory_per_doc_count():
+    """A tool run at another size gets its own shared index directory, so
+    it never replaces the one the other tools reuse."""
+    assert harness.query_index(20000) != harness.query_index(480000)
+    assert harness.query_index(20000) == harness.query_index(20000)
+
+
 def test_fresh_runs_in_a_new_interpreter():
     assert harness.fresh(json.loads, '{"a": [1, 2]}') == {"a": [1, 2]}
     assert harness.fresh(os.getpid) != os.getpid()

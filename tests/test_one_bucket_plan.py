@@ -68,6 +68,12 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _python_stages(plan: str) -> int:
+    """Python map and grouped-map nodes in a physical plan."""
+    return sum(plan.count(node) for node in
+               ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas"))
+
+
 def _same(got, want):
     assert [d for d, _ in got] == [d for d, _ in want]
     assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want))
@@ -108,7 +114,7 @@ def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
     one = _single(spark, idx, QUERIES[1], docid_span=span)
     plan = _plan(one)
     assert "Exchange" not in plan, plan
-    assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 1
+    assert _python_stages(plan) == 1
     assert "TakeOrderedAndProject" in plan
     rows, jobs = run_jobs(spark, one.collect, "one_bucket_single")
     assert rows and jobs == 1
@@ -116,7 +122,7 @@ def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
     batch = _batch(spark, idx, QUERIES, docid_span=span)
     plan = _plan(batch)
     assert "Exchange" not in plan, plan
-    assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 1
+    assert _python_stages(plan) == 1
     rows, jobs = run_jobs(spark, batch.collect, "one_bucket_batch")
     assert rows and jobs == 1
 
@@ -135,7 +141,7 @@ def test_multi_bucket_single_query_plan_is_pinned(spark, idx):
     df = _single(spark, idx, QUERIES[1], n_buckets=4, docid_span=span)
     plan = _plan(df)
     assert plan.count("Exchange") == 1, plan
-    assert plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas") == 2
+    assert _python_stages(plan) == 2
     assert "TakeOrderedAndProject" in plan and "mkey" not in plan
     rows, jobs = run_jobs(spark, df.collect, "multi_bucket_single")
     assert rows and jobs == 2

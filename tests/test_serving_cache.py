@@ -264,6 +264,32 @@ def test_refresh_appends_delta_batch(spark, tmp_path_factory):
     assert got3 == want_plan
 
 
+# one additive refresh of a small delta (local[4], 4 shuffle partitions),
+# measured and stable across runs: the splitter-and-shard-write stage, its
+# adaptive-execution sub-job and the shard visibility probe. A delta below
+# 2 * rank._WORK_PER_BUCKET postings skips the splitter's rebalance shuffle.
+REFRESH_JOBS = 3
+
+
+def test_refresh_delta_job_count_is_pinned(spark, tmp_path_factory):
+    """One additive ``refresh_serving_cache`` delta runs exactly
+    REFRESH_JOBS Spark jobs."""
+    from search_engine_spark.operators.serving import refresh_serving_cache
+
+    root = tmp_path_factory.mktemp("refresh_pin")
+    idx, cdir = str(root / "idx"), str(root / "cache")
+    S.build_index(spark, corpus_from_texts(spark, DOCS), idx, analyzer="naive")
+    prepare_serving_cache(spark, idx, cdir, n_buckets=4)
+    extra = corpus_from_texts(spark, ["scan the new table", "fresh apple pie"])
+    S.build_one_batch(spark, extra.withColumn("docId", extra.docId + 100), idx,
+                      key="delta1", analyzer="naive", num_segments=4)
+    S.finalize_index(spark, idx)
+    cache, jobs = run_jobs(spark, lambda: refresh_serving_cache(spark, idx, cdir),
+                           "refresh_delta")
+    assert cache["refresh_mode"] == "delta"
+    assert jobs == REFRESH_JOBS
+
+
 def test_refresh_folds_delta_shards(spark, tmp_path_factory):
     """Repeated refreshes must not grow per-bucket read amplification
     unboundedly: at fold_threshold the bucket's files concat into one (in

@@ -18,7 +18,6 @@ import sys
 TOOLS = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(TOOLS)
 BENCH_MD = os.path.join(REPO, "BENCH.md")
-QUERY_IDX = "/tmp/query_scale_idx"  # shared by the query-side scaling tools
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
@@ -74,6 +73,13 @@ def n_vs_4n(n: int, trials: int, measure, **extra) -> dict:
               "all_hi": [r["sec"] for r in runs[4 * n]]}
     print(json.dumps(report))
     return report
+
+
+def query_index(n_docs: int) -> str:
+    """The query-side scaling tools' shared index of ``n_docs`` docs: one
+    directory per doc count, so a tool run at another size builds its own
+    index instead of replacing the one the other tools reuse."""
+    return f"/tmp/query_scale_idx_{n_docs}"
 
 
 def ensure_index(path: str, n_docs: int) -> dict:

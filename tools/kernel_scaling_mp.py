@@ -11,8 +11,8 @@ interleaved trials, fresh pool per measurement, one task per bucket, no
 JVM anywhere. Efficiency = (T_N * N) / (T_4N * 4N).
 
 Usage: python tools/kernel_scaling_mp.py [n_docs] [N] [trials] [n_queries]
-Defaults: 480000 2 3 16384. Reuses /tmp/query_scale_idx when it holds
-n_docs; writes a marked BENCH.md section.
+Defaults: 480000 2 3 16384. Reuses /tmp/query_scale_idx_<n_docs>;
+writes a marked BENCH.md section.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ import time
 
 import pyarrow.parquet as pq
 from harness import (
-    QUERY_IDX, cli, ensure_index, fresh, local_spark, n_vs_4n, secs,
+    cli, ensure_index, fresh, local_spark, n_vs_4n, query_index, secs,
     stratified_queries, write_section)
 
 from search_engine_spark.functions.predicates import isin_expr
@@ -99,8 +99,9 @@ Reproduce: `python tools/kernel_scaling_mp.py {r['n_docs']} {n} {r['trials']} {r
 
 def main() -> None:
     n_docs, n, trials, n_q = cli(480000, 2, 3, 16384)
-    ensure_index(QUERY_IDX, n_docs)
-    buckets = fresh(dump, QUERY_IDX, n_q)["buckets"]
+    idx = query_index(n_docs)
+    ensure_index(idx, n_docs)
+    buckets = fresh(dump, idx, n_q)["buckets"]
     r = n_vs_4n(n, trials, lambda p: measure(p, buckets), n_docs=n_docs,
                 n_queries=n_q, buckets=len(buckets))
     write_section("kernel_scaling_mp:auto", render(r))

@@ -8,7 +8,7 @@ is built once (untimed, deterministic) and shared read-only. Efficiency =
 (T_N * N) / (T_4N * 4N).
 
 Usage: python tools/query_scaling.py [n_docs] [N] [trials] [n_queries]
-Defaults: 120000 2 3 64. Reuses /tmp/query_scale_idx when it holds n_docs;
+Defaults: 120000 2 3 64. Reuses /tmp/query_scale_idx_<n_docs>;
 writes a marked BENCH.md section.
 """
 
@@ -17,7 +17,7 @@ from __future__ import annotations
 import time
 
 from harness import (
-    QUERY_IDX, cli, ensure_index, fresh, local_spark, n_vs_4n, secs,
+    cli, ensure_index, fresh, local_spark, n_vs_4n, query_index, secs,
     stratified_queries, write_section)
 
 from search_engine_spark.operators.rank import Scorer, score_queries_daat_batch
@@ -87,8 +87,9 @@ shown; all trials: N=[{secs(r['all_lo'])}]s, 4N=[{secs(r['all_hi'])}]s).
 
 def main() -> None:
     n_docs, n, trials, n_q = cli(120000, 2, 3, 64)
-    ensure_index(QUERY_IDX, n_docs)
-    r = n_vs_4n(n, trials, lambda c: fresh(score, QUERY_IDX, c, n_q),
+    idx = query_index(n_docs)
+    ensure_index(idx, n_docs)
+    r = n_vs_4n(n, trials, lambda c: fresh(score, idx, c, n_q),
                 n_docs=n_docs, n_queries=n_q)
     write_section("query_scaling:auto", render(r))
 

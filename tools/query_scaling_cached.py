@@ -9,14 +9,14 @@ shuffle included). The cache prepare is index-bound, one-time, and untimed
 here for the same reason the index build itself is.
 
 Usage: python tools/query_scaling_cached.py [n_docs] [N] [trials] [n_queries]
-Defaults: 480000 2 4 16384. Reuses /tmp/query_scale_idx when it holds
-n_docs; writes a marked BENCH.md section.
+Defaults: 480000 2 4 16384. Reuses /tmp/query_scale_idx_<n_docs>;
+writes a marked BENCH.md section.
 """
 
 from __future__ import annotations
 
 from harness import (
-    QUERY_IDX, cli, ensure_index, fresh, local_spark, n_vs_4n, secs, write_section)
+    cli, ensure_index, fresh, local_spark, n_vs_4n, query_index, secs, write_section)
 from query_scaling import table, timed_workload
 
 from search_engine_spark.operators.serving import (
@@ -59,9 +59,10 @@ kernel-only series).
 
 def main() -> None:
     n_docs, n, trials, n_q = cli(480000, 2, 4, 16384)
-    ensure_index(QUERY_IDX, n_docs)
-    fresh(prepare, QUERY_IDX, CACHE)
-    r = n_vs_4n(n, trials, lambda c: fresh(score, QUERY_IDX, CACHE, c, n_q),
+    idx = query_index(n_docs)
+    ensure_index(idx, n_docs)
+    fresh(prepare, idx, CACHE)
+    r = n_vs_4n(n, trials, lambda c: fresh(score, idx, CACHE, c, n_q),
                 n_docs=n_docs, n_queries=n_q)
     write_section("query_scaling_cached:auto", render(r))
 
