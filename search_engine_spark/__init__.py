@@ -9,13 +9,14 @@ Why: every Python task starts with ``importlib.invalidate_caches()``
 ``$SPARK_HOME/python/lib/pyspark.zip`` (~1,300 entries), and before 3.13
 ``zipimport.zipimporter.invalidate_caches`` re-reads the whole archive
 directory once for each importer of that zip (one per imported package
-directory, 16-30 in a worker), on every task: a no-op single-task job takes
-0.26-0.30 s with those re-reads and 0.13-0.14 s without them (p50,
-local[2], 4-vCPU host). The wrapper below keeps a per-archive
-``(st_mtime_ns, st_size)`` signature; an unchanged archive whose directory
-is already cached is not re-read, so a worker pays one read per archive
-instead of 16-30 per task. A changed or replaced archive is re-read as
-before. Every Python UDF of this package
+directory, 16-30 in a worker), on every task: over loopback TCP a no-op
+single-task job takes 0.26-0.30 s with those re-reads and 0.13-0.14 s
+without them; over the Unix domain sockets ``session.get_spark`` sets up,
+0.08-0.09 s without them (p50, local[2], 4-vCPU host). The wrapper below
+keeps a per-archive ``(st_mtime_ns, st_size)`` signature; an unchanged
+archive whose directory is already cached is not re-read, so a worker
+pays one read per archive instead of 16-30 per task. A changed or replaced
+archive is re-read as before. Every Python UDF of this package
 unpickles a package function, so a worker installs this during its first
 task and every later task on it starts without the re-reads. That relies
 on Python-worker reuse (``spark.python.worker.reuse``, Spark's default).

@@ -2,11 +2,12 @@
 
 Local mode here stands in for a multi-executor cluster; every knob is chosen
 to also be the right default at cluster scale (AQE on, Arrow on, shuffle
-partitions ~ cores).
+partitions ~ cores, JVM<->Python channels over Unix domain sockets).
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 
@@ -20,6 +21,21 @@ def _user_tag() -> str:
         return getpass.getuser()
     except Exception:  # no resolvable user (containers with stripped passwd)
         return f"uid{os.getuid()}" if hasattr(os, "getuid") else "anon"
+
+
+# sun_path is 108 bytes with its NUL; Spark names every socket it makes in
+# the socket dir ``.<uuid4>.sock`` (42 bytes, plus the separator)
+_AF_UNIX_PATH_MAX = 107
+_SOCKET_NAME_LEN = len("/.") + 36 + len(".sock")
+
+
+def _socket_dir() -> str:
+    """The temp dir when ``<dir>/.<uuid4>.sock`` fits AF_UNIX's path limit,
+    else ``/tmp``: a long ``TMPDIR`` or ``java.io.tmpdir`` (Spark's default
+    socket dir) must not fail session start-up with ``AF_UNIX path too
+    long``."""
+    d = tempfile.gettempdir()
+    return d if len(os.fsencode(d)) + _SOCKET_NAME_LEN <= _AF_UNIX_PATH_MAX else "/tmp"
 
 
 def get_spark(
@@ -43,6 +59,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
+        # Every JVM<->Python channel (UDF data, accumulators, local-data
+        # create/collect) over Unix domain sockets, not loopback TCP: on TCP
+        # a Python task waits ~42 ms from kernel entry to its first input
+        # batch (the shape of Nagle's algorithm against delayed ACKs), on a
+        # Unix socket ~1.5 ms; a no-op one-task job takes ~85 ms instead of
+        # ~125 ms (p50, local[2], 4-vCPU host).
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _socket_dir())
         # Scan granularity: the default 128 MB coalesces a mid-size segment
         # index (32 files x ~15 MB) into ~4 input partitions, so the
         # CPU-heavy scan+filter+shuffle-write stage of a serving workload
@@ -76,4 +100,10 @@ def get_spark(
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    # A process that ends without stop() leaves its accumulator server's
+    # socket file in the socket dir; stopping the context at exit removes it
+    # (a no-op on a stopped context). Registered once per context.
+    atexit.unregister(spark.sparkContext.stop)
+    atexit.register(spark.sparkContext.stop)
+    return spark

@@ -20,6 +20,12 @@ REPO = os.path.dirname(TOOLS)
 BENCH_MD = os.path.join(REPO, "BENCH.md")
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
+# Python workers start in the caller's working directory, so they find the
+# package through PYTHONPATH only (the JVM, and through it every worker,
+# inherits this environment when a tool starts its session)
+_path = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+if REPO not in _path:
+    os.environ["PYTHONPATH"] = os.pathsep.join([REPO] + _path)
 
 _CHILD = (
     "import importlib, json, sys; sys.path[:0] = sys.argv[1:3]; "

@@ -19,6 +19,7 @@ import time
 
 from harness import cli, ensure_index, fresh, local_spark, write_section
 
+from search_engine_spark.operators.rank import query_tfs
 from search_engine_spark.operators.serving import prepare_serving_cache, refresh_serving_cache
 from search_engine_spark.sources.corpus import synthetic_corpus
 from search_engine_spark.sources.segments import build_one_batch, finalize_index
@@ -39,10 +40,17 @@ def measure(base: str, n_docs: int, delta_docs: int) -> dict:
     # work on a copy: the base index stays immutable for reuse across runs
     shutil.rmtree(RUN, ignore_errors=True)
     shutil.copytree(base, RUN)
+
+    def warm(batches):
+        query_tfs(["warm"])  # imports the package on this worker
+        yield from batches
+
     with local_spark(8) as spark:
-        # untimed warm-up: JVM and Python-worker start-up stay out of the
-        # base prepare, so every row times only its own step
-        spark.range(1).mapInPandas(lambda it: it, "id long").collect()
+        # untimed warm-up, one task per core: JVM and Python-worker start-up
+        # and the workers' package import stay out of the base prepare, so
+        # every row times only its own step
+        n = spark.sparkContext.defaultParallelism
+        spark.range(n, numPartitions=n).mapInPandas(warm, "id long").collect()
         timed("prepare_base_sec", prepare_serving_cache, spark, RUN, CACHE, n_buckets=32)
         # commit one delta micro-batch (different seed -> disjoint hashed docIds)
         delta = synthetic_corpus(spark, n_docs=delta_docs, vocab_size=20000, seed=99,
