@@ -34,6 +34,12 @@ Scale notes (100 TB):
   and block byte offsets from one cumsum, Arrow columns built from those
   offsets and buffers — no Python work per packed row. The bucket splitter
   (``rank._split_partition``) re-encodes its exact slices with it too.
+- every reader of those rows decodes through ONE decoder
+  (``_decode_packed``): a whole Arrow table of packed rows in one varbyte
+  pass per stream, delta chains restarting where each row's
+  ``block_docid_off`` says — the merges, the splitter, the DAAT kernel
+  and the segment decoders. Only ``fsck`` keeps its own per-block reader,
+  as the independent check of the bytes.
 - the build is batched by a pure function of docId (``batch_of``); each
   batch commits atomically into the manifest -> resumable (see segments.py).
 """
@@ -322,6 +328,122 @@ def _pack_blocks(docid, tf, dl, gs, block_size):
     return out
 
 
+def _undo_deltas(values: np.ndarray, restarts: np.ndarray) -> np.ndarray:
+    """THE delta-undo step: running sums of ``values``, with the chain
+    restarting (the value stored absolute) at every index of ``restarts``
+    — sorted, unique, and starting at 0."""
+    csum = np.cumsum(values)
+    if not len(csum):
+        return csum
+    base = np.zeros(len(restarts), dtype=np.int64)
+    base[1:] = csum[restarts[1:] - 1]
+    return csum - np.repeat(base, np.diff(np.append(restarts, len(csum))))
+
+
+def _value_index(body: np.ndarray) -> np.ndarray:
+    """Varbyte values ending before each byte of ``body`` (one more entry
+    than bytes): maps the byte offset of a value start to its index."""
+    ends = np.zeros(len(body) + 1, dtype=np.int64)
+    np.cumsum(body < 0x80, out=ends[1:])
+    return ends
+
+
+def _column(tbl, name: str):
+    """One contiguous Arrow array of a RecordBatch or Table column."""
+    import pyarrow as pa
+
+    c = tbl.column(name)
+    if not isinstance(c, pa.ChunkedArray):
+        return c
+    return c.chunk(0) if c.num_chunks == 1 else c.combine_chunks()
+
+
+def _decode_packed(tbl, positions: str | None = None) -> dict:
+    """THE decoder of the packed posting format: every row of an Arrow
+    table (or RecordBatch) of packed rows -> flat postings, one varbyte
+    pass per stream and no Python work per row. It reads all three row
+    kinds: segment rows (``SEGMENT_SCHEMA``), bucketed rows
+    (``rank.BUCKETED_SCHEMA``) and build mini-blocks (``MINIBLOCK_SCHEMA``).
+
+    The docId delta chain restarts at every row start and at every byte
+    offset the row lists in ``block_docid_off``: a ``list<int32>`` in
+    segment rows, little-endian int32 bytes in bucketed rows, absent from
+    mini-blocks. Restarts never follow a fixed BLOCK_SIZE grid (an
+    exact-split slice is one block of any size). An EMPTY tf or dl blob
+    (a membership row) reads as all 1s.
+
+    Returns a dict: ``rows`` (row i holds postings ``rows[i]:rows[i+1]``)
+    and flat int64 ``docid``; when the table has tf/dl blobs, flat int64
+    ``tf`` and ``dl`` and ``membership``, true when no row carries tf or dl
+    bytes. ``positions="bytes"`` adds each posting's
+    position blob as a byte range of ``pos_data``: ``pos_start`` and
+    ``pos_len``, and ``pos_null``, true for rows without positions
+    (``pos_data`` is None when no row has any). ``positions="values"`` also
+    decodes them, each posting's blob its own delta chain, into flat int64
+    ``positions`` with per-posting offsets ``pos_offs``."""
+    import pyarrow as pa
+
+    names = tbl.schema.names
+    d_offs, d_data = _binary_offsets(_column(tbl, "docids"))
+    body = d_data[d_offs[0] : d_offs[-1]]
+    ends = _value_index(body)
+    rel = d_offs - d_offs[0]
+    rows = ends[rel]
+    counts = np.diff(rows)
+    starts = [rel[:-1]]
+    if "block_docid_off" in names:
+        blk = _column(tbl, "block_docid_off")
+        if pa.types.is_list(blk.type):
+            o = blk.offsets.to_numpy().astype(np.int64)
+            boff = blk.values.to_numpy()[o[0] : o[-1]]
+            nblk = np.diff(o)
+        else:
+            o, data = _binary_offsets(blk)
+            boff = data[o[0] : o[-1]].view("<i4")
+            nblk = np.diff(o) // 4
+        starts.append(np.repeat(rel[:-1], nblk) + boff)
+    docid = _undo_deltas(varbyte_decode(body), np.unique(ends[np.concatenate(starts)]))
+    npost = len(docid)
+
+    def per_posting(name, fill):
+        # a row with an empty blob reads `fill` for each of its postings
+        offs, data = _binary_offsets(_column(tbl, name))
+        vals = varbyte_decode(data[offs[0] : offs[-1]])
+        if len(vals) == npost:
+            return vals, False
+        full = np.diff(offs) > 0
+        out = np.full(npost, fill, dtype=np.int64)
+        out[np.repeat(full, counts)] = vals
+        return out, not full.any()
+
+    out = {"rows": rows, "docid": docid}
+    if "tfs" in names:
+        out["tf"], no_tf = per_posting("tfs", 1)
+        out["dl"], no_dl = per_posting("dls", 1)
+        out["membership"] = no_tf and no_dl
+    if positions is None:
+        return out
+    pcol = _column(tbl, "positions" if "positions" in names else "posbin")
+    out["pos_data"] = None
+    if pcol.null_count == len(pcol):
+        return out
+    plens, _ = per_posting("poslens", 0)
+    p_offs, p_data = _binary_offsets(pcol)
+    excl = np.zeros(npost + 1, dtype=np.int64)
+    np.cumsum(plens, out=excl[1:])
+    out.update(
+        pos_data=p_data, pos_len=plens,
+        pos_start=np.repeat(p_offs[:-1] - excl[rows[:-1]], counts) + excl[:-1],
+        pos_null=pcol.is_null().to_numpy(zero_copy_only=False),
+    )
+    if positions == "values":
+        pbody = p_data[p_offs[0] : p_offs[-1]]
+        pos_offs = _value_index(pbody)[np.append(out["pos_start"], p_offs[-1]) - p_offs[0]]
+        out["positions"] = _undo_deltas(varbyte_decode(pbody), np.unique(pos_offs[:-1]))
+        out["pos_offs"] = pos_offs
+    return out
+
+
 def _binary_array(buf: np.ndarray, offs: np.ndarray, c0: int, c1: int):
     """Arrow binary array of items c0..c1-1 of a (bytes, offsets) stream,
     built straight from the buffers."""
@@ -592,8 +714,8 @@ def build_miniblocks(
 
     ``membership`` emits EMPTY tf/dl blobs (trigram/substring indexes where
     tf==1 by construction): the shuffle then moves docid bytes only, and
-    the merge encoder auto-detects the empties and packs membership rows
-    (``_encode_counts`` with tfs=None)."""
+    the merge encoder's decode reports the empties and it packs membership
+    rows (``_pack_blocks`` with tf None)."""
     heavy_set = frozenset(heavy or [])
     do_salt = bool(heavy_set) and n_salts > 1
 
@@ -693,118 +815,26 @@ def build_miniblocks(
 
 
 def _merge_encoder(batches):
-    """Reduce kernel: (term, salt) mini-blocks -> packed segment rows.
+    """Reduce kernel: packed rows -> merged packed segment rows. The build
+    merges (term, salt) mini-blocks; compaction (``_compact_merge_encoder``)
+    merges packed segment rows, whose delta chains restart at every block
+    their ``block_docid_off`` lists.
 
-    Fully vectorized: every mini-block column decodes in ONE varbyte pass
-    over the Arrow data buffer (streams are self-delimiting; per-row delta
-    restarts are undone with a cumsum base-correction), then the flat
-    posting arrays feed the same lexsort + pack as the posting-level path.
+    Every column decodes in one pass through :func:`_decode_packed`, then
+    the flat postings feed the same lexsort + pack as the posting-level
+    path. Rows without tf/dl bytes repack as membership rows. The shuffle
+    moves packed rows (bytes), never per-posting rows, and the kernel never
+    materializes Python objects per posting.
     """
-    yield from _merge_encoder_impl(batches, restarts_per_block=False)
-
-
-def _compact_merge_encoder(batches):
-    """Compaction reduce kernel: PACKED SEGMENT rows (delta chains restart
-    every BLOCK_SIZE postings, not per row) -> merged packed segment rows.
-
-    Same vectorized whole-buffer decode as :func:`_merge_encoder`; only the
-    restart positions differ. This is B4/B5 at scale: the compaction
-    shuffle moves packed rows (bytes), never per-posting rows, and the
-    kernel never materializes Python objects per posting.
-    """
-    yield from _merge_encoder_impl(batches, restarts_per_block=True)
-
-
-def _decode_docid_rows(data: np.ndarray, offs: np.ndarray, counts: np.ndarray,
-                       block_size: int | None) -> np.ndarray:
-    """DocIds of consecutive packed rows (``counts`` postings each, bytes
-    ``data[offs[0]:offs[-1]]``) in ONE varbyte pass: the delta chains,
-    which restart at every row start and, unless ``block_size`` is None,
-    every ``block_size`` postings within a row, are undone with one cumsum
-    and a per-restart base correction."""
-    start, length = int(offs[0]), int(offs[-1] - offs[0])
-    csum = np.cumsum(varbyte_decode(data[start : start + length].tobytes()))
-    vstarts = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(counts, out=vstarts[1:])
-    if block_size:
-        # restart value-index of every block: row start + block_size * (block # in row)
-        nblocks = -(-counts // block_size)
-        rb_starts = np.zeros(len(counts) + 1, dtype=np.int64)
-        np.cumsum(nblocks, out=rb_starts[1:])
-        block_row = np.repeat(np.arange(len(counts)), nblocks)
-        within = np.arange(int(rb_starts[-1])) - rb_starts[block_row]
-        restarts = vstarts[block_row] + within * block_size
-    else:
-        restarts = vstarts[:-1]
-    base_per = np.zeros(len(restarts), dtype=np.int64)
-    base_per[1:] = csum[restarts[1:] - 1]
-    return csum - np.repeat(base_per, np.diff(np.append(restarts, len(csum))))
-
-
-def _merge_encoder_impl(batches, restarts_per_block: bool):
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     batch_list = [b for b in batches if b.num_rows]
     if not batch_list:
         return
     tbl = _combine_large(batch_list)
-    nrows = tbl.num_rows
-    counts = tbl.column("ndocs").chunk(0).to_numpy().astype(np.int64)
-    npost = int(counts.sum())
-    row_of_post = np.repeat(np.arange(nrows), counts)
-    vstarts = np.zeros(nrows + 1, dtype=np.int64)
-    np.cumsum(counts, out=vstarts[1:])
-
-    def col_bytes(name):
-        offs, data = _binary_offsets(tbl.column(name).chunk(0))
-        return offs, data
-
-    # docids: restarts sit at each row start (mini-blocks) or additionally
-    # every BLOCK_SIZE postings within a row (packed segment rows)
-    d_offs, d_data = col_bytes("docids")
-    docid = _decode_docid_rows(
-        d_data, d_offs, counts, BLOCK_SIZE if restarts_per_block else None
-    )
-    t_offs, t_data = col_bytes("tfs")
-    l_offs, l_data = col_bytes("dls")
-    # membership rows (trigram/substring builds) carry EMPTY tf/dl blobs —
-    # all-empty means skip the decode and repack membership; a mix of empty
-    # and non-empty rows would silently misalign, so it is rejected
-    membership = int(t_offs[-1] - t_offs[0]) == 0 and npost > 0
-    if membership:
-        if int(l_offs[-1] - l_offs[0]) != 0:
-            raise ValueError("mixed membership/full tf-dl rows in one merge")
-        tf = dl = None
-    else:
-        tf = varbyte_decode(
-            t_data.tobytes(), int(t_offs[0]), int(t_offs[-1] - t_offs[0])
-        )
-        dl = varbyte_decode(
-            l_data.tobytes(), int(l_offs[0]), int(l_offs[-1] - l_offs[0])
-        )
-        if len(tf) != npost:
-            raise ValueError("mixed membership/full tf-dl rows in one merge")
-
-    pos_col = tbl.column("positions" if restarts_per_block else "posbin").chunk(0)
-    has_pos = pos_col.null_count < nrows
-    if has_pos:
-        pl_offs, pl_data = col_bytes("poslens")
-        plens = varbyte_decode(
-            pl_data.tobytes(), int(pl_offs[0]), int(pl_offs[-1] - pl_offs[0])
-        )
-        pb_offs, pb_data = _binary_offsets(pos_col)
-        # per-posting start inside the posbin data pool: row start + within-row
-        # running sum of blob lengths
-        within = np.cumsum(plens) - plens
-        row_base = within[vstarts[:-1]]
-        pstarts = pb_offs[:-1][row_of_post] + (within - row_base[row_of_post])
-    else:
-        plens = pstarts = None
-        pb_data = None
-
-    term_arr = tbl.column("term").chunk(0)
-    de = pc.dictionary_encode(term_arr)
+    d = _decode_packed(tbl, positions="bytes")
+    row_of_post = np.repeat(np.arange(tbl.num_rows), np.diff(d["rows"]))
+    de = pc.dictionary_encode(tbl.column("term").chunk(0))
     rcodes = de.indices.to_numpy().astype(np.int64)
     vocab = de.dictionary.to_pylist()
     rank = np.empty(len(vocab), dtype=np.int64)
@@ -812,23 +842,27 @@ def _merge_encoder_impl(batches, restarts_per_block: bool):
     codes = rcodes[row_of_post]
     key = rank[codes]
     salt = tbl.column("salt").chunk(0).to_numpy().astype(np.int64)[row_of_post]
+    docid = d["docid"]
 
     order = np.lexsort((docid, salt, key))
     codes_s, salt_s = codes[order], salt[order]
     docid_s, key_s = docid[order], key[order]
-    tf_s = tf[order] if tf is not None else None
-    dl_s = dl[order] if dl is not None else None
-    newgrp = np.empty(npost, dtype=bool)
+    newgrp = np.empty(len(order), dtype=bool)
     newgrp[0] = True
     newgrp[1:] = (key_s[1:] != key_s[:-1]) | (salt_s[1:] != salt_s[:-1])
-    gs = np.flatnonzero(newgrp)
+    has_pos = d["pos_data"] is not None
     yield from _pack_sorted(
-        de.dictionary, codes_s, salt_s, docid_s, tf_s, dl_s,
-        (pb_data if has_pos else None),
-        (pstarts[order] if has_pos else None),
-        (plens[order] if has_pos else None),
-        gs,
+        de.dictionary, codes_s, salt_s, docid_s,
+        None if d["membership"] else d["tf"][order],
+        None if d["membership"] else d["dl"][order],
+        d["pos_data"],
+        d["pos_start"][order] if has_pos else None,
+        d["pos_len"][order] if has_pos else None,
+        np.flatnonzero(newgrp),
     )
+
+
+_compact_merge_encoder = _merge_encoder
 
 
 # Fielded-term separator: a C0 control char NO analyzer can emit from real

@@ -193,41 +193,44 @@ def phrase_offsets(terms: list[str]) -> dict[str, int]:
     return {t: i for i, t in enumerate(terms)}
 
 
+def _phrase_docs(postings_pos: DataFrame, pairs: list[tuple[str, int]]) -> DataFrame:
+    """Docs holding every (term, offset) pair of a phrase at one start: a
+    position p with each pair's term at p + offset. One pass over the
+    decoded postings, however long the phrase: each position shifts by
+    every offset of its term, and a (docId, shifted position) matches when
+    it counts every distinct pair. Terms outside the phrase map to no
+    offset and drop out. All JVM-side, no Python."""
+    offs: dict[str, list[int]] = {}
+    for t, o in pairs:
+        offs.setdefault(t, []).append(o)
+    by_term = F.create_map(
+        *[x for t, os in offs.items() for x in (F.lit(t), F.array(*map(F.lit, os)))]
+    )
+    return (
+        postings_pos.select(
+            "docId", "term", "positions", F.explode(by_term[F.col("term")]).alias("_off")
+        )
+        .select("docId", "term", "_off", F.explode("positions").alias("_p"))
+        .groupBy("docId", (F.col("_p") - F.col("_off")).alias("_s"))
+        .agg(F.countDistinct("term", "_off").alias("_n"))
+        .where(F.col("_n") == len(pairs))
+        .select("docId")
+        .distinct()
+    )
+
+
 def search_phrase(postings_pos: DataFrame, terms: list[str]) -> DataFrame:
     """Q5: docs where the analyzed terms appear consecutively.
 
-    `postings_pos` must carry `positions: array<int>`. Vectorized: for each
-    distinct term, shift its positions by -offset; a doc matches if the
-    intersection of all shifted sets is non-empty. Joins are per-docId
-    equi-joins on the (small) filtered posting lists; the fold over terms is
-    a driver-side loop over DataFrame ops, all JVM-side (`array_intersect`
-    / `transform`), no Python.
+    `postings_pos` must carry `positions: array<int>`. Each distinct term
+    keeps one offset, the reference's (:func:`phrase_offsets`); the match
+    is one shifted-position count over the decoded postings
+    (:func:`_phrase_docs`), so the postings decode once for the phrase.
     """
     offs = phrase_offsets(terms)
     if not offs:
         return postings_pos.select("docId").limit(0)
-    items = sorted(offs.items(), key=lambda kv: kv[1])
-    base = None
-    for term, off in items:
-        t = (
-            postings_pos.where(F.col("term") == term)
-            .select(
-                "docId",
-                F.transform("positions", lambda x: x - F.lit(off)).alias("_shift"),
-            )
-            # salted/multi-batch rows for one (term, doc) unioned here
-            .groupBy("docId")
-            .agg(F.flatten(F.collect_list("_shift")).alias("_shift"))
-        )
-        if base is None:
-            base = t.withColumnRenamed("_shift", "_acc")
-        else:
-            base = (
-                base.join(t, "docId")
-                .select("docId", F.array_intersect("_acc", "_shift").alias("_acc"))
-                .where(F.size("_acc") > 0)
-            )
-    return base.where(F.size("_acc") > 0).select("docId")
+    return _phrase_docs(postings_pos, list(offs.items()))
 
 
 def search_phrase_shingled(
@@ -245,14 +248,15 @@ def search_phrase_shingled(
     but the seek touches the (much rarer) bigram posting lists:
 
     - L = 2: pure membership — the docId-only decode path, ZERO position
-      bytes read (``decode_docids`` projects the single ``docids`` blob);
-    - L >= 3: the standard shifted-position intersection, but over L-1
+      bytes read (``decode_docids`` projects only ``docids`` and its block
+      offsets);
+    - L >= 3: the standard shifted-position match, but over L-1
       bigram lists whose df is ≪ the unigram df (per-bucket candidate
       volume shrinks by the bigram selectivity, typically orders of
       magnitude for common unigrams).
 
     Unlike the reference-parity :func:`search_phrase` (which mirrors the
-    TreeMap dedup quirk, IIM:966-977), a repeated bigram intersects at ALL
+    TreeMap dedup quirk, IIM:966-977), a repeated bigram must match at ALL
     its offsets — bigrams make repeats unambiguous.
 
     ``tokens`` are the ALREADY-ANALYZED phrase tokens (the same base
@@ -275,31 +279,12 @@ def search_phrase_shingled(
         hits = segments.where(F.col("term") == grams[0])
         return decode_docids(hits).distinct()
     # (term, offset) pairs — duplicates collapse, repeated bigrams at
-    # DIFFERENT offsets each constrain the intersection
-    pairs = sorted({(g, i) for i, g in enumerate(grams)}, key=lambda p: (p[1], p[0]))
+    # DIFFERENT offsets each constrain the match
+    pairs = sorted({(g, i) for i, g in enumerate(grams)})
     pos = decode_postings(
         segments, sorted({g for g, _ in pairs}), with_positions=True
     )
-    base = None
-    for term, off in pairs:
-        t = (
-            pos.where(F.col("term") == term)
-            .select(
-                "docId",
-                F.transform("positions", lambda x: x - F.lit(off)).alias("_shift"),
-            )
-            .groupBy("docId")
-            .agg(F.flatten(F.collect_list("_shift")).alias("_shift"))
-        )
-        if base is None:
-            base = t.withColumnRenamed("_shift", "_acc")
-        else:
-            base = (
-                base.join(t, "docId")
-                .select("docId", F.array_intersect("_acc", "_shift").alias("_acc"))
-                .where(F.size("_acc") > 0)
-            )
-    return base.where(F.size("_acc") > 0).select("docId")
+    return _phrase_docs(pos, pairs)
 
 
 def search_synonyms(
@@ -513,8 +498,8 @@ def search_proximity(
     token positions AFTER ``term_a`` (window=1 degenerates to the 2-term
     phrase query, Q5).
 
-    Same vectorized shape as :func:`search_phrase`: per-term position sets
-    (salted/multi-batch rows for one doc are unioned), then a per-docId
+    Per-term position sets (salted/multi-batch rows for one doc are
+    unioned), then a per-docId
     equi-join and a JVM-side set test — each ``a`` position expands to the
     admissible ``a+1..a+window`` range (``transform`` + ``sequence`` +
     ``flatten``) and matches if it intersects ``b``'s positions. All

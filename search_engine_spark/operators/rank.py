@@ -23,17 +23,21 @@ its Q=1 case; every entry point takes its query-term dfs, idfs and qtfs
 from one driver-side prep (:func:`_prep_workload`):
 - :func:`score_query_daat` / :func:`score_queries_daat_batch` — the serving
   paths, one plan (:func:`_daat_plan`) around ONE DAAT kernel
-  (:func:`_daat_rows_batch`, decode-once with per-query accumulators). A
-  workload that fits one bucket (the common interactive query) runs as ONE
-  task: term-pushed segment scan -> ``coalesce(1)`` -> one kernel call over
-  the whole packed rows. Bigger workloads re-key the compressed blocks by
+  (:func:`_daat_rows_batch`, decode-once with per-query accumulators). The
+  kernel takes an Arrow table of packed rows and decodes the rows its
+  queries use in one pass through the format's one decoder
+  (``build._decode_packed``). A workload that fits one bucket (the common
+  interactive query) runs as ONE task: term-pushed segment scan ->
+  ``coalesce(1)`` -> one ``mapInArrow`` kernel call over the whole packed
+  rows. Bigger workloads re-key the compressed blocks by
   docId-range bucket (one shuffle; the splitter, :func:`_split_partition`,
   is one ``mapInArrow`` pass per partition with no Python work per row:
   whole-block byte slices for dense rows, an exact re-encode through the
-  build's block encoder for sparse ones), score each bucket with a local top-k,
-  and merge globally — the reference's per-segment top-k -> global PQ
-  two-stage shape at cluster scale. One query merges by
-  TakeOrderedAndProject, a workload by the packed-blob merge.
+  build's block encoder for sparse ones), score each bucket with a local
+  top-k (``groupBy("bucket").applyInArrow``), and merge globally — the
+  reference's per-segment top-k -> global PQ two-stage shape at cluster
+  scale. One query merges by TakeOrderedAndProject, a workload by the
+  packed-blob merge (one ``mapInArrow`` pass per merge shard).
 - :func:`score_query` / :func:`score_queries_batch` — declarative, one plan
   (:func:`_declarative_plan`): decoded postings × broadcast idf map ->
   ``groupBy(qid, docId)`` agg -> top-k (for one query Catalyst's
@@ -49,6 +53,8 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -61,13 +67,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.codec import varbyte_decode
 from ..operators.build import (
     BLOCK_SIZE,
     _binary_array,
     _binary_offsets,
+    _column,
     _combine_large,
-    _decode_docid_rows,
+    _decode_packed,
     _gather_bytes,
     _pack_blocks,
 )
@@ -406,16 +412,12 @@ def _declarative_plan(
     return _merge_topk(scores, len(qmetas), k, ties)
 
 
-def _topk_pdf_for(pdf: pd.DataFrame, k: int, ties: str) -> pd.DataFrame:
-    """Vectorized per-qid top-k selection over a (qid, docId, score) frame —
+def _topk(qid: np.ndarray, doc: np.ndarray, score: np.ndarray, k: int, ties: str):
+    """Vectorized per-qid top-k selection over (qid, docId, score) arrays —
     the single source of the batch tie semantics (score desc, then docId
-    per ``ties``; output qid-asc). Shared by the row merge (:func:`_batch_topk`)
-    and the packed-blob merge."""
-    doc_asc = ties == "asc"
-    qid = pdf["qid"].to_numpy(np.int64)
-    doc = pdf["docId"].to_numpy(np.int64)
-    score = pdf["score"].to_numpy(np.float64)
-    tie = doc if doc_asc else -doc
+    per ``ties``; output qid-asc). Shared by the row merge (:func:`_batch_topk`),
+    the packed-blob merge and the one-task kernel."""
+    tie = doc if ties == "asc" else -doc
     order = np.lexsort((tie, -score, qid))
     q = qid[order]
     # rank within each qid run of the sorted order -> keep first k
@@ -427,9 +429,8 @@ def _topk_pdf_for(pdf: pd.DataFrame, k: int, ties: str) -> pd.DataFrame:
     start = np.maximum.accumulate(np.where(new, idx, 0))
     keep = order[(idx - start) < k]
     # deterministic output order: qid asc, then score desc + tie
-    sel = np.lexsort((tie[keep], -score[keep], qid[keep]))
-    keep = keep[sel]
-    return pd.DataFrame({"qid": qid[keep], "docId": doc[keep], "score": score[keep]})
+    keep = keep[np.lexsort((tie[keep], -score[keep], qid[keep]))]
+    return qid[keep], doc[keep], score[keep]
 
 
 def _batch_topk(scores: DataFrame, k: int, ties: str) -> DataFrame:
@@ -445,7 +446,9 @@ def _batch_topk(scores: DataFrame, k: int, ties: str) -> DataFrame:
     coalescing otherwise folds the tiny pruned rows into ONE task and
     serializes the final selection across all Q queries (1.3s at Q=256)."""
     def _topk_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _topk_pdf_for(pdf, k, ties)
+        q, d, sc = _topk(pdf["qid"].to_numpy(np.int64), pdf["docId"].to_numpy(np.int64),
+                         pdf["score"].to_numpy(np.float64), k, ties)
+        return pd.DataFrame({"qid": q, "docId": d, "score": sc})
 
     def partial(batches):
         acc: list[pd.DataFrame] = []
@@ -481,43 +484,8 @@ def _tf_upper_scalar(scorer: Scorer, mt: float) -> float:
     return mt
 
 
-def _blk_i32(v) -> np.ndarray:
-    if isinstance(v, (bytes, bytearray)):
-        return np.frombuffer(v, dtype="<i4").astype(np.int64)
-    return np.asarray(v, dtype=np.int64)
-
-
-def _decode_row_blocks(r):
-    """Byte-decode every block of one packed row -> (docIds, tfs, dls)."""
-    offs = _blk_i32(r.block_docid_off)
-    toffs = _blk_i32(r.block_tf_off)
-    dloffs = _blk_i32(r.block_dl_off)
-    ends_d = np.append(offs[1:], len(r.docids))
-    ends_t = np.append(toffs[1:], len(r.tfs))
-    ends_l = np.append(dloffs[1:], len(r.dls))
-    # membership rows (trigram/substring indexes) store EMPTY tf/dl blobs:
-    # tf and dl read as constant 1, mirroring segments._decode_batch, so
-    # ranked queries over a membership index score tf=1/dl=1 as documented.
-    memb_tf = len(r.tfs) == 0
-    memb_dl = len(r.dls) == 0
-    ds, ts, ls = [], [], []
-    for i in range(len(offs)):
-        deltas = varbyte_decode(r.docids, int(offs[i]), int(ends_d[i] - offs[i]))
-        ds.append(np.cumsum(deltas))
-        ones = np.ones(len(deltas), dtype=np.int64)
-        ts.append(ones if memb_tf else
-                  varbyte_decode(r.tfs, int(toffs[i]), int(ends_t[i] - toffs[i])))
-        ls.append(ones if memb_dl else
-                  varbyte_decode(r.dls, int(dloffs[i]), int(ends_l[i] - dloffs[i])))
-    if not ds:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, z
-    return np.concatenate(ds), np.concatenate(ts), np.concatenate(ls)
-
-
 def _daat_rows_batch(
-    all_rows: list,
-    rows_by_term: dict[str, list[int]],
+    tbl,
     qmetas: dict[int, dict[str, tuple[float, float]]],
     scorer: Scorer,
     avgdl: float,
@@ -530,7 +498,11 @@ def _daat_rows_batch(
     rows -> (qids, docIds, scores), per-qid top-k applied. A single query is
     the Q=1 case (:func:`score_query_daat`).
 
-    Each packed row decodes exactly once per bucket, each (row, qtf)
+    ``tbl`` is an Arrow table of packed rows, whole segment rows or
+    bucketed rows, with at least ``term``, ``max_tf``, the docids/tfs/dls
+    blobs and ``block_docid_off``. The rows whose term some query uses
+    decode in ONE pass (:func:`build._decode_packed`) into flat arrays; the
+    bucket-range and tombstone masks apply to those arrays. Each (row, qtf)
     contribution array is computed once and shared by every query using
     that term, and the whole bucket reduces with ONE unique/bincount + ONE
     segmented top-k pass, so work scales with total postings, not query
@@ -538,7 +510,7 @@ def _daat_rows_batch(
 
     Reduction is ACCUMULATOR-based, not sort-based: the bucket builds ONE
     dense doc dictionary (``np.unique`` over the DISTINCT decoded postings —
-    not the Q-multiplied concat), maps each row's docIds into it once, and
+    not the Q-multiplied concat), maps each posting into it once, and
     then each query reduces with per-row ``np.bincount`` adds into a
     dictionary-sized accumulator. The previous reduce sorted an 8-byte
     combined key across every (query, posting) pair — ~10 DRAM passes per
@@ -561,62 +533,63 @@ def _daat_rows_batch(
     ``bounds=(lo, hi)``: keep only decoded docIds in the inclusive range —
     bucketed rows ship whole blocks, so a bucket may receive postings that
     belong to a neighbor and MUST drop them (a doc scores in exactly one
-    bucket). ``deleted``: sorted int64 tombstones, dropped as rows decode.
+    bucket). ``deleted``: sorted int64 tombstones, dropped after decode.
     """
-    decode_cache: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
+             np.empty(0, dtype=np.float64))
+    qterms = list(dict.fromkeys(t for qm in qmetas.values() for t in qm))
+    terms = _column(tbl, "term")
+    tix = pc.fill_null(pc.index_in(terms, value_set=pa.array(qterms, terms.type)), -1)
+    tix = tix.to_numpy()
+    used = np.flatnonzero(tix >= 0)
+    if not len(used):
+        return empty
+    if len(used) < len(tix):
+        tbl, tix = tbl.take(pa.array(used)), tix[used]
+    # rows of each query term, in row order
+    by_term = np.argsort(tix, kind="stable")
+    cut = np.searchsorted(tix[by_term], np.arange(len(qterms) + 1))
+    rows_by_term = {t: by_term[cut[j] : cut[j + 1]] for j, t in enumerate(qterms)
+                    if cut[j] < cut[j + 1]}
+    max_tf = _column(tbl, "max_tf").to_numpy()
+    d = _decode_packed(tbl)
+    rows, docid, tf, dl = d["rows"], d["docid"], d["tf"], d["dl"]
+    keep = None
+    if bounds is not None:
+        keep = (docid >= bounds[0]) & (docid <= bounds[1])
+    if deleted is not None and deleted.size:
+        pos = np.searchsorted(deleted, docid)
+        pos[pos == deleted.size] = 0
+        live = deleted[pos] != docid
+        keep = live if keep is None else keep & live
+    if keep is not None:
+        kept = np.zeros(len(keep) + 1, dtype=np.int64)
+        np.cumsum(keep, out=kept[1:])
+        rows, docid, tf, dl = kept[rows], docid[keep], tf[keep], dl[keep]
+    if not len(docid):
+        return empty
+    tfs = tf.astype(np.float64)
+    if scorer.kind == "bm25":
+        norm = tfs + scorer.k1 * (1.0 - scorer.b + scorer.b * dl / avgdl)
     contrib_cache: dict[tuple[int, int], tuple[np.ndarray, np.ndarray | None]] = {}
-
-    def decoded(ri: int):
-        got = decode_cache.get(ri)
-        if got is None:
-            d, t, l = _decode_row_blocks(all_rows[ri])
-            if bounds is not None and len(d):
-                i0 = np.searchsorted(d, bounds[0], "left")
-                i1 = np.searchsorted(d, bounds[1], "right")
-                d, t, l = d[i0:i1], t[i0:i1], l[i0:i1]
-            if deleted is not None and len(d):
-                pos = np.searchsorted(deleted, d)
-                pos[pos == deleted.size] = 0
-                keep = deleted[pos] != d if deleted.size else np.ones(len(d), bool)
-                d, t, l = d[keep], t[keep], l[keep]
-            got = decode_cache[ri] = (d, t, l)
-        return got
 
     def contribs_of(ri: int, idf: float, qtf: float):
         got = contrib_cache.get((ri, qtf))
         if got is None:
-            d, t, l = decoded(ri)
-            tfs = t.astype(np.float64)
+            s = slice(rows[ri], rows[ri + 1])
             if scorer.kind == "bm25":
-                c = qtf * idf * tfs * (scorer.k1 + 1.0) / (
-                    tfs + scorer.k1 * (1.0 - scorer.b + scorer.b * l / avgdl)
-                )
-                got = (c, None)
+                got = (qtf * idf * tfs[s] * (scorer.k1 + 1.0) / norm[s], None)
             else:
-                wd = tfs * idf
+                wd = tfs[s] * idf
                 got = (wd * (qtf * idf), wd * wd)
             contrib_cache[(ri, qtf)] = got
         return got
 
-    # 1) dense doc dictionary over the DISTINCT postings any query touches
-    used_ris: list[int] = []
-    seen_ri: set[int] = set()
-    for qm in qmetas.values():
-        for t in qm:
-            for ri in rows_by_term.get(t, ()):
-                if ri not in seen_ri:
-                    seen_ri.add(ri)
-                    used_ris.append(ri)
-    d_parts = [d for d in (decoded(ri)[0] for ri in used_ris) if len(d)]
-    if not d_parts:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), np.empty(0, dtype=np.float64)
-    all_docs = np.unique(np.concatenate(d_parts) if len(d_parts) > 1 else d_parts[0])
+    # 1) dense doc dictionary over the DISTINCT postings any query touches,
+    # 2) every posting's dictionary index, shared by every query
+    all_docs = np.unique(docid)
     n_dict = len(all_docs)
-    # 2) per-row dictionary indices, computed once and shared by every query
-    idx_cache: dict[int, np.ndarray] = {
-        ri: np.searchsorted(all_docs, decoded(ri)[0]) for ri in used_ris
-    }
+    idx_all = np.searchsorted(all_docs, docid)
 
     is_tfidf = scorer.kind != "bm25"
     epoch = np.zeros(n_dict, dtype=np.int64)  # last query to touch each doc
@@ -627,7 +600,7 @@ def _daat_rows_batch(
         # fixed summation order: qm iteration order, then a STABLE sort by
         # UB desc (equal-UB rows keep their relative order)
         pairs = [
-            (qm[t][1] * qm[t][0] * _tf_upper_scalar(scorer, float(all_rows[ri].max_tf)), ri, t)
+            (qm[t][1] * qm[t][0] * _tf_upper_scalar(scorer, float(max_tf[ri])), ri, t)
             for t in qm
             if t in rows_by_term
             for ri in rows_by_term[t]
@@ -638,7 +611,7 @@ def _daat_rows_batch(
         one: tuple[np.ndarray, np.ndarray, np.ndarray | None] | None = None
         n_live = 0
         for _, ri, t in pairs:
-            idx = idx_cache[ri]
+            idx = idx_all[rows[ri] : rows[ri + 1]]
             if not len(idx):
                 continue
             idf, qtf = qm[t]
@@ -736,8 +709,8 @@ BUCKETED_SCHEMA = StructType(
         StructField("dls", BinaryType(), False),
         # block metadata packed as little-endian bytes (i64 / i32): Arrow
         # list<int> cells box every element twice (python list build at the
-        # splitter, list-array build at serialization); the kernel reads the
-        # offsets as zero-copy numpy views via _blk_i32
+        # splitter, list-array build at serialization); the decoder reads
+        # the offsets as zero-copy numpy views
         StructField("block_last_docid", BinaryType(), False),
         StructField("block_max_tf", BinaryType(), False),
         StructField("block_docid_off", BinaryType(), False),
@@ -818,41 +791,26 @@ def _split_whole_blocks(rows, cols, nb_first, b_lo, b_hi, row_lo, covered, n_edg
     return out
 
 
-def _split_exact(rows, cols, ndocs, edges):
+def _split_exact(tbl, rows, edges):
     """Exact per-bucket slices of sparse rows (rare terms) whose blocks span
     many buckets: shipping such a block whole to all ~n_buckets buckets
     multiplies both shuffle bytes and kernel decode by the coverage
     (measured 2x slices, 3.4x wall on a 4096-query workload at 64 buckets).
 
-    All rows decode in one varbyte pass per stream (delta restarts per
-    block, undone like the compaction merge); every posting gets a bucket
-    id, and each (row, bucket) run re-encodes as a single block through the
-    build's block encoder. The dispatch condition bounds postings per
-    covered bucket to BLOCK_SIZE/2 ON AVERAGE (a skewed bucket can exceed
-    it), so slices stay well under one block in expectation. Membership
-    rows (empty tf/dl bytes) read tf = dl = 1, as the kernel does, and
-    their slices carry those ones encoded."""
-    cnt = ndocs[rows]
-    npost = int(cnt.sum())
-
-    def gathered(name):
-        offs, data = cols[name]
-        lens = np.diff(offs)[rows]
-        return _gather_bytes(data, offs[rows], lens)
-
-    d = _decode_docid_rows(*gathered("docids"), cnt, BLOCK_SIZE)
-    tf_dl = []
-    for name in ("tfs", "dls"):
-        buf, offs = gathered(name)
-        vals = np.ones(npost, dtype=np.int64)
-        vals[np.repeat(np.diff(offs) > 0, cnt)] = varbyte_decode(buf.tobytes())
-        tf_dl.append(vals)
-    prow = np.repeat(rows, cnt)
-    bk = np.minimum(np.searchsorted(edges, d, "left"), len(edges) - 1)
-    new = np.ones(npost, dtype=bool)
+    All rows decode in one pass (:func:`build._decode_packed`); every
+    posting gets a bucket id, and each (row, bucket) run re-encodes as a
+    single block through the build's block encoder. The dispatch condition
+    bounds postings per covered bucket to BLOCK_SIZE/2 ON AVERAGE (a skewed
+    bucket can exceed it), so slices stay well under one block in
+    expectation. Membership rows decode tf = dl = 1, and their slices carry
+    those ones encoded."""
+    d = _decode_packed(tbl.take(pa.array(rows)))
+    prow = np.repeat(rows, np.diff(d["rows"]))
+    bk = np.minimum(np.searchsorted(edges, d["docid"], "left"), len(edges) - 1)
+    new = np.ones(len(prow), dtype=bool)
     new[1:] = (prow[1:] != prow[:-1]) | (bk[1:] != bk[:-1])
     gs = np.flatnonzero(new)
-    out = _pack_blocks(d, tf_dl[0], tf_dl[1], gs, None)
+    out = _pack_blocks(d["docid"], d["tf"], d["dl"], gs, None)
     out.update(row=prow[gs], bucket=bk[gs])
     return out
 
@@ -914,7 +872,7 @@ def _split_partition(tbl, edges: np.ndarray):
         parts.append(_split_whole_blocks(whole, cols, nb_first, b_lo, b_hi,
                                          row_lo, covered, len(edges)))
     if len(sparse):
-        parts.append(_split_exact(sparse, cols, ndocs, edges))
+        parts.append(_split_exact(tbl, sparse, edges))
     lo_of, hi_of = _bucket_bounds(edges)
     tables = []
     for p in parts:
@@ -1016,7 +974,7 @@ def _auto_buckets(spark: SparkSession, est_work: int | None) -> int:
 
 
 # Packed segment columns the splitter and the DAAT kernel read (block
-# metadata as Arrow lists here; _blk_i32 reads these and bucketed bytes).
+# metadata as Arrow lists here, as little-endian bytes in bucketed rows).
 _SEG_KERNEL_COLS = [
     "term", "max_tf", "docids", "tfs", "dls", "block_last_docid",
     "block_max_tf", "block_docid_off", "block_tf_off", "block_dl_off",
@@ -1094,30 +1052,21 @@ def _bucketize_segments(
     return bucketed.repartition(len(edges), "bucket")
 
 
-def _pdf_bounds(pdf: pd.DataFrame) -> tuple[int, int] | None:
-    """Inclusive docId range one kernel call owns. Bucketed rows carry their
-    bucket's [lo_docid, hi_docid]; whole segment rows (:func:`_one_task`)
-    own every docId, so their decoded postings need no range mask."""
-    if "lo_docid" not in pdf.columns:
-        return None
-    return int(pdf["lo_docid"].iat[0]), int(pdf["hi_docid"].iat[0])
-
-
 def _one_task(seg: DataFrame, kernel, schema: StructType) -> DataFrame:
     """The one-bucket DAAT plan: candidate segment rows -> ``coalesce(1)``
-    -> ONE ``kernel(pdf)`` call over every whole packed row. No splitter
-    stage and no bucket exchange, so the plan is a single stage of one
-    task; the kernel's local top-k is already global. Emits no rows when
-    no candidate row exists."""
+    -> ONE ``kernel(table)`` call over every whole packed row, as one Arrow
+    table. No splitter stage and no bucket exchange, so the plan is a
+    single stage of one task; the kernel's local top-k is already global.
+    Emits no rows when no candidate row exists."""
 
     def run(batches):
-        pdfs = [pdf for pdf in batches if len(pdf)]
-        if pdfs:
-            yield kernel(pd.concat(pdfs, ignore_index=True))
+        batch_list = [b for b in batches if b.num_rows]
+        if batch_list:
+            yield from kernel(pa.Table.from_batches(batch_list)).to_batches()
 
     # selectExpr ships the names in one py4j call; select() builds a Java
     # Column per name, ~4 ms of driver time per interactive query
-    return seg.selectExpr(*_SEG_KERNEL_COLS).coalesce(1).mapInPandas(run, schema)
+    return seg.selectExpr(*_SEG_KERNEL_COLS).coalesce(1).mapInArrow(run, schema)
 
 
 def _n_merge_tasks(spark: SparkSession, blob_ceiling: int) -> int:
@@ -1134,7 +1083,7 @@ def _n_merge_tasks(spark: SparkSession, blob_ceiling: int) -> int:
 
 
 def _score_bucket_rows(
-    pdf: pd.DataFrame,
+    tbl,
     qmetas: dict[int, dict[str, tuple[float, float]]],
     scorer: Scorer,
     avgdl: float,
@@ -1142,47 +1091,39 @@ def _score_bucket_rows(
     ties: str,
     deleted: np.ndarray | None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Score one bucket's packed rows for a whole workload — the shared
-    vectorized core of the in-plan kernels and the serving-cache kernel
-    (operators/serving.py). Bounds come from the rows themselves
-    (:func:`_pdf_bounds`)."""
-    all_rows = list(pdf.itertuples(index=False))
-    rows_by_term_i: dict[str, list[int]] = {}
-    for i, r in enumerate(all_rows):
-        rows_by_term_i.setdefault(r.term, []).append(i)
-    return _daat_rows_batch(
-        all_rows, rows_by_term_i, qmetas, scorer, avgdl, k, ties, deleted,
-        _pdf_bounds(pdf),
-    )
+    """Score one bucket's packed rows, an Arrow table, for a whole workload
+    — the shared vectorized core of the in-plan kernels and the
+    serving-cache kernel (operators/serving.py). Bucketed rows carry their
+    bucket's [lo_docid, hi_docid] bounds; whole segment rows
+    (:func:`_one_task`) own every docId, so they need no range mask."""
+    tbl = _combine_large(tbl.to_batches())
+    bounds = None
+    if "lo_docid" in tbl.schema.names:
+        bounds = (tbl.column("lo_docid")[0].as_py(), tbl.column("hi_docid")[0].as_py())
+    return _daat_rows_batch(tbl, qmetas, scorer, avgdl, k, ties, deleted, bounds)
+
+
+def _scored(qv: np.ndarray, dv: np.ndarray, sv: np.ndarray) -> pa.Table:
+    """(qid, docId, score) arrays as a ``BATCH_SCHEMA`` Arrow table."""
+    return pa.table({"qid": pa.array(qv, pa.int64()), "docId": pa.array(dv, pa.int64()),
+                     "score": pa.array(sv, pa.float64())})
 
 
 def _packed_shards(
     qv: np.ndarray, dv: np.ndarray, sv: np.ndarray, n_merge: int
-) -> pd.DataFrame:
+) -> pa.Table:
     """Pack per-bucket top-k arrays into PACKED_TOPK_SCHEMA rows, one per
     merge shard (qid % n_merge) — all candidates of a qid share a shard, so
     the sharded merge stays selection-exact per qid."""
-    if not len(qv):
-        return pd.DataFrame(
-            {"mkey": pd.Series(dtype="int32"),
-             "qids": pd.Series(dtype=object),
-             "docids": pd.Series(dtype=object),
-             "scores": pd.Series(dtype=object)}
-        )
-    if n_merge == 1:
-        shards = [(0, np.arange(len(qv)))]
-    else:
-        mk = (qv % n_merge).astype(np.int64)
-        shards = [(r, np.nonzero(mk == r)[0]) for r in range(n_merge)]
-        shards = [(r, ix) for r, ix in shards if len(ix)]
-    return pd.DataFrame(
-        {
-            "mkey": np.array([r for r, _ in shards], dtype="int32"),
-            "qids": [qv[ix].astype("<i8").tobytes() for _, ix in shards],
-            "docids": [dv[ix].astype("<i8").tobytes() for _, ix in shards],
-            "scores": [sv[ix].astype("<f8").tobytes() for _, ix in shards],
-        }
-    )
+    mk = qv % n_merge
+    shards = [(r, np.flatnonzero(mk == r)) for r in range(n_merge)]
+    shards = [(r, ix) for r, ix in shards if len(ix)]
+    return pa.table({
+        "mkey": pa.array([r for r, _ in shards], pa.int32()),
+        "qids": pa.array([qv[ix].astype("<i8").tobytes() for _, ix in shards], pa.binary()),
+        "docids": pa.array([dv[ix].astype("<i8").tobytes() for _, ix in shards], pa.binary()),
+        "scores": pa.array([sv[ix].astype("<f8").tobytes() for _, ix in shards], pa.binary()),
+    })
 
 
 def _merge_blobs(blobs: DataFrame, n_merge: int, k: int, ties: str) -> DataFrame:
@@ -1190,22 +1131,23 @@ def _merge_blobs(blobs: DataFrame, n_merge: int, k: int, ties: str) -> DataFrame
     hash-partition per-bucket packed shard rows by merge shard (all
     candidates of a qid share one mkey, so each task's selection is exact;
     n_merge=1 is one merge task for small workloads) and select each qid's
-    top-k in one vectorized pass per task."""
+    top-k in one vectorized pass per task. Each blob column's data buffer
+    is read once, as one array of the whole task's candidates."""
 
     def merge(batches):
-        qs, ds, ss = [], [], []
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                qs.append(np.frombuffer(r.qids, "<i8"))
-                ds.append(np.frombuffer(r.docids, "<i8"))
-                ss.append(np.frombuffer(r.scores, "<f8"))
-        if qs:
-            flat = pd.DataFrame({"qid": np.concatenate(qs),
-                                 "docId": np.concatenate(ds),
-                                 "score": np.concatenate(ss)})
-            yield _topk_pdf_for(flat, k, ties)
+        batch_list = [b for b in batches if b.num_rows]
+        if batch_list:
+            tbl = _combine_large(batch_list)
 
-    return blobs.repartition(n_merge, "mkey").mapInPandas(merge, BATCH_SCHEMA)
+            def flat(name, dt):
+                offs, data = _binary_offsets(tbl.column(name).chunk(0))
+                return data[offs[0] : offs[-1]].view(dt)
+
+            top = _topk(flat("qids", "<i8"), flat("docids", "<i8"), flat("scores", "<f8"),
+                        k, ties)
+            yield from _scored(*top).to_batches()
+
+    return blobs.repartition(n_merge, "mkey").mapInArrow(merge, BATCH_SCHEMA)
 
 
 def _shipped(spark: SparkSession, value, size: int):
@@ -1282,12 +1224,8 @@ def _daat_plan(
     seg = _candidate_scan(segments, sorted(dfs), term_stats)
     get_qmetas = _shipped(spark, qmetas, n_q)
 
-    def score_rows(pdf):
-        return _score_bucket_rows(pdf, get_qmetas(), scorer, avgdl, k, ties, deleted)
-
-    def score_frame(pdf):
-        qv, dv, sv = score_rows(pdf)
-        return pd.DataFrame({"qid": qv, "docId": dv, "score": sv})
+    def score_rows(tbl):
+        return _score_bucket_rows(tbl, get_qmetas(), scorer, avgdl, k, ties, deleted)
 
     if n_buckets == 1:
         if k is not None and n_q > 1:
@@ -1295,10 +1233,10 @@ def _daat_plan(
             # exchange, only the blob merge's (qid asc, score desc, docId
             # tie) order
             return _one_task(
-                seg, lambda pdf: _topk_pdf_for(score_frame(pdf), k, ties),
+                seg, lambda tbl: _scored(*_topk(*score_rows(tbl), k, ties)),
                 BATCH_SCHEMA,
             )
-        local = _one_task(seg, score_frame, BATCH_SCHEMA)
+        local = _one_task(seg, lambda tbl: _scored(*score_rows(tbl)), BATCH_SCHEMA)
     else:
         bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
         if bucketed is None:
@@ -1316,13 +1254,13 @@ def _daat_plan(
         blob_ceiling = n_q * (k or 0) * n_buckets
         if n_q > 1 and 0 < blob_ceiling <= _BLOB_MERGE_CAP:
             n_merge = _n_merge_tasks(spark, blob_ceiling)
-            blobs = bucketed.groupBy("bucket").applyInPandas(
-                lambda key, pdf: _packed_shards(*score_rows(pdf), n_merge),
+            blobs = bucketed.groupBy("bucket").applyInArrow(
+                lambda tbl: _packed_shards(*score_rows(tbl), n_merge),
                 PACKED_TOPK_SCHEMA,
             )
             return _merge_blobs(blobs, n_merge, k, ties)
-        local = bucketed.groupBy("bucket").applyInPandas(
-            lambda key, pdf: score_frame(pdf), BATCH_SCHEMA
+        local = bucketed.groupBy("bucket").applyInArrow(
+            lambda tbl: _scored(*score_rows(tbl)), BATCH_SCHEMA
         )
     return _merge_topk(local, n_q, k, ties)
 
@@ -1575,8 +1513,8 @@ def rescore_phrase(
     TakeOrdered at ``window``), run once and its ≤ ``window`` rows
     collected to the driver; the phrase pass decodes ONLY the phrase terms'
     postings (``In`` pushdown on L terms) and semi-joins them to the
-    broadcast window before the positional intersection, so every phrase
-    join and aggregation sees window docs only; the window then joins its
+    broadcast window before the positional match, so the phrase
+    aggregation sees window docs only; the window then joins its
     (≤ window) phrase hits and the final re-sort of ``window`` rows is a
     TakeOrderedAndProject. Ties in the rescored order break docId asc —
     deterministic and oracle-comparable.

@@ -590,8 +590,8 @@ def score_queries_cached(
 
         qm = get_qmetas()
         live_arr = pa.array(get_live(), type=pa.string())
-        for pdf in batches:
-            for b in pdf["bucket"]:
+        for batch in batches:
+            for b in batch.column("bucket").to_pylist():
                 parts = []
                 for name in files_by_bucket.get(int(b), ()):
                     try:
@@ -608,33 +608,24 @@ def score_queries_cached(
                             "prepare_serving_cache); re-run prepare on a "
                             "shared cache_dir"
                         ) from ex
-                    # prune to the workload's terms BEFORE materializing
-                    # python bytes: a small workload then touches O(its
-                    # candidates), not O(index) — the mmap'd non-matching
-                    # blobs never copy
+                    # prune to the workload's terms before the kernel: a
+                    # small workload then touches O(its candidates), not
+                    # O(index) — the mmap'd non-matching blobs never copy
                     tbl = tbl.filter(
                         pc.is_in(tbl["term"], value_set=live_arr)
                     )
                     if tbl.num_rows:
-                        parts.append(tbl.to_pandas())
-                if not parts:
-                    continue
-                bpdf = (
-                    parts[0]
-                    if len(parts) == 1
-                    else pd.concat(parts, ignore_index=True)
-                )
-                qv, dv, sv = R._score_bucket_rows(
-                    bpdf, qm, scorer, avgdl, k, ties, deleted
-                )
-                out = R._packed_shards(qv, dv, sv, n_merge)
-                if len(out):
-                    yield out
+                        parts.append(tbl)
+                if parts:
+                    qv, dv, sv = R._score_bucket_rows(
+                        pa.concat_tables(parts), qm, scorer, avgdl, k, ties, deleted
+                    )
+                    yield from R._packed_shards(qv, dv, sv, n_merge).to_batches()
 
     # exactly one bucket id per partition: every kernel task reads one shard
     rdd = spark.sparkContext.parallelize(
         [(int(b),) for b in buckets], len(buckets)
     )
     ids = spark.createDataFrame(rdd, "bucket int")
-    blobs = ids.mapInPandas(kernel, R.PACKED_TOPK_SCHEMA)
+    blobs = ids.mapInArrow(kernel, R.PACKED_TOPK_SCHEMA)
     return R._merge_blobs(blobs, n_merge, k, ties)

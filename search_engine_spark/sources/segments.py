@@ -50,27 +50,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.codec import delta_varbyte_decode, varbyte_decode
+from ..functions.codec import varbyte_decode
 from ..functions.predicates import isin_expr
-from ..operators.build import BLOCK_SIZE
-
-
-def blockwise_delta_decode(buf: bytes, block_size: int = BLOCK_SIZE) -> np.ndarray:
-    """Decode a docid column whose delta chain restarts every `block_size`
-    values (the restart value is stored absolute)."""
-    vals = varbyte_decode(buf)
-    n = len(vals)
-    if n == 0:
-        return vals
-    c = np.cumsum(vals)
-    bstarts = np.arange(0, n, block_size)
-    # amount to subtract inside block i = cumsum just before the block
-    base_per_block = np.concatenate(([np.int64(0)], c[bstarts[1:] - 1]))
-    lens = np.diff(np.append(bstarts, n))
-    return c - np.repeat(base_per_block, lens)
 from ..operators.build import (
+    BLOCK_SIZE,
     FIELD_SEP,
     SEGMENT_SCHEMA,
+    _binary_array,
+    _decode_packed,
+    _undo_deltas,
     build_postings,
     build_segments_combined,
     encode_segments,
@@ -78,6 +66,14 @@ from ..operators.build import (
     heavy_terms_sampled,
     term_stats_from_segments,
 )
+
+
+def blockwise_delta_decode(buf: bytes, block_size: int = BLOCK_SIZE) -> np.ndarray:
+    """Decode one docid blob whose delta chain restarts every `block_size`
+    values (the restart value is stored absolute): a whole segment row's
+    blocks, all full but the last."""
+    vals = varbyte_decode(buf)
+    return _undo_deltas(vals, np.arange(0, len(vals), block_size))
 
 MANIFEST = "manifest.json"
 
@@ -860,39 +856,48 @@ def docid_span(index_dir: str) -> tuple[int, int] | None:
     return int(lo), int(hi)
 
 
-def _decode_batch(pdf: pd.DataFrame, with_positions: bool):
-    """Vectorized-ish decode of packed rows -> exploded postings."""
-    outs = []
-    for r in pdf.itertuples(index=False):
-        docids = blockwise_delta_decode(r.docids)
-        # membership rows store EMPTY tf/dl blobs: tf reads as constant 1,
-        # dl as 1 (substring indexes — tf is 1 by construction)
-        ones = np.ones(len(docids), dtype=np.int64)
-        tfs = varbyte_decode(r.tfs) if len(r.tfs) else ones
-        dls = varbyte_decode(r.dls) if len(r.dls) else ones
-        d = {
-            "term": np.repeat(r.term, len(docids)),
-            "docId": docids,
-            "tf": tfs.astype("int32"),
-            "dl": dls.astype("int32"),
-        }
-        if with_positions:
-            if r.positions is not None:
-                blens = varbyte_decode(r.poslens)
-                offs = np.zeros(len(blens) + 1, dtype=np.int64)
-                offs[1:] = np.cumsum(blens)
-                d["positions"] = [
-                    delta_varbyte_decode(r.positions, int(offs[k]), int(blens[k])).astype(
-                        "int32"
-                    )
-                    for k in range(len(blens))
-                ]
-            else:
-                d["positions"] = [None] * len(docids)
-        outs.append(pd.DataFrame(d))
-    if not outs:
-        return None
-    return pd.concat(outs, ignore_index=True)
+def _decoded(batch, d: dict, columns: list[str]):
+    """One output RecordBatch of a segment decode kernel: the ``columns``
+    (term, docId, tf, dl, positions, posbin) of every decoded posting. Rows
+    stored without positions read null positions."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    npost = len(d["docid"])
+    counts = np.diff(d["rows"])
+
+    def column(name):
+        if name == "term":
+            rows = np.repeat(np.arange(batch.num_rows), counts)
+            return batch.column("term").take(pa.array(rows))
+        if name == "docId":
+            return pa.array(d["docid"])
+        if name in ("tf", "dl"):
+            return pa.array(d[name].astype(np.int32))
+        if d["pos_data"] is None:
+            return pa.nulls(npost, pa.binary() if name == "posbin" else pa.list_(pa.int32()))
+        null = pa.array(np.repeat(d["pos_null"], counts))
+        if name == "positions":
+            return pa.ListArray.from_arrays(
+                pa.array(d["pos_offs"].astype(np.int32)),
+                pa.array(d["positions"].astype(np.int32)), mask=null)
+        ends = np.append(d["pos_start"], d["pos_start"][-1] + d["pos_len"][-1])
+        blobs = _binary_array(d["pos_data"], ends, 0, npost)
+        return pc.if_else(null, pa.nulls(npost, pa.binary()), blobs)
+
+    return pa.RecordBatch.from_arrays([column(c) for c in columns], names=columns)
+
+
+def _decode_kernel(columns: list[str], positions: str | None = None):
+    """A ``mapInArrow`` kernel: every input batch of packed segment rows ->
+    one batch of decoded postings, through :func:`build._decode_packed`."""
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows:
+                yield _decoded(b, _decode_packed(b, positions), columns)
+
+    return kernel
 
 
 PACKED_POSTINGS_SCHEMA = StructType(
@@ -908,37 +913,14 @@ PACKED_POSTINGS_SCHEMA = StructType(
 
 def decode_postings_packed(segments: DataFrame) -> DataFrame:
     """Decode packed rows to posting granularity WITHOUT decoding position
-    blobs (sliced per doc via poslens). This is the compaction input shape:
-    merge = regroup by term + byte-level blob concat, no int decode."""
-
-    def kernel(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                docids = blockwise_delta_decode(r.docids)
-                n = len(docids)
-                ones = np.ones(n, dtype=np.int64)
-                d = {
-                    "term": np.repeat(r.term, n),
-                    "docId": docids,
-                    "tf": (varbyte_decode(r.tfs) if len(r.tfs) else ones).astype("int32"),
-                    "dl": (varbyte_decode(r.dls) if len(r.dls) else ones).astype("int32"),
-                }
-                if r.positions is not None:
-                    blens = varbyte_decode(r.poslens)
-                    offs = np.zeros(len(blens) + 1, dtype=np.int64)
-                    offs[1:] = np.cumsum(blens)
-                    d["posbin"] = [
-                        r.positions[int(offs[k]) : int(offs[k + 1])] for k in range(n)
-                    ]
-                else:
-                    d["posbin"] = [None] * n
-                outs.append(pd.DataFrame(d))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    cols = segments.select("term", "docids", "tfs", "dls", "poslens", "positions")
-    return cols.mapInPandas(kernel, PACKED_POSTINGS_SCHEMA)
+    blobs (each posting's blob is a byte slice of the row's). This is the
+    compaction input shape: merge = regroup by term + byte-level blob
+    concat, no int decode."""
+    cols = segments.select("term", "docids", "tfs", "dls", "block_docid_off",
+                           "poslens", "positions")
+    return cols.mapInArrow(
+        _decode_kernel(PACKED_POSTINGS_SCHEMA.fieldNames(), "bytes"), PACKED_POSTINGS_SCHEMA
+    )
 
 
 def decode_postings(
@@ -953,21 +935,12 @@ def decode_postings(
     df = segments
     if terms is not None:
         df = df.where(isin_expr("term", list(terms)))
-    cols = ["term", "docids", "tfs", "dls"] + (
+    cols = ["term", "docids", "tfs", "dls", "block_docid_off"] + (
         ["poslens", "positions"] if with_positions else []
     )
-    df = df.select(*cols)
     schema = DECODED_POS_SCHEMA if with_positions else DECODED_SCHEMA
-
-    def kernel(batches):
-        for pdf in batches:
-            if not with_positions:
-                pdf = pdf.assign(poslens=None, positions=None)
-            out = _decode_batch(pdf, with_positions)
-            if out is not None:
-                yield out
-
-    return df.mapInPandas(kernel, schema)
+    kernel = _decode_kernel(schema.fieldNames(), "values" if with_positions else None)
+    return df.select(*cols).mapInArrow(kernel, schema)
 
 
 def decode_docids(segments: DataFrame) -> DataFrame:
@@ -975,41 +948,26 @@ def decode_docids(segments: DataFrame) -> DataFrame:
 
     For membership-style queries (prefix search, boolean sets over very
     heavy terms) the tf/dl/position columns are dead weight — this path
-    projects ONLY ``docids``, so parquet column pruning keeps every other
-    blob on disk (ReadSchema shows the single binary column) and the kernel
-    runs one vectorized delta decode per row."""
-
-    def kernel(batches):
-        for pdf in batches:
-            arrs = [blockwise_delta_decode(b) for b in pdf["docids"]]
-            if arrs:
-                yield pd.DataFrame(
-                    {"docId": np.concatenate(arrs) if len(arrs) > 1 else arrs[0]}
-                )
-
-    return segments.select("docids").mapInPandas(kernel, "docId long")
+    projects only ``docids`` and its block offsets, so parquet column
+    pruning keeps every other blob on disk (ReadSchema shows the two
+    columns) and the kernel runs one delta decode per batch."""
+    return segments.select("docids", "block_docid_off").mapInArrow(
+        _decode_kernel(["docId"]), "docId long"
+    )
 
 
 def decode_term_docids(segments: DataFrame, terms: list[str]) -> DataFrame:
     """(term, docId) membership decode for count-matching set queries
     (boolean AND over heavy terms, trigram substring intersection): the
     ``terms`` filter pushes to the term-sorted parquet scan like
-    :func:`decode_postings`, but the projection reads ONLY the ``term`` and
-    ``docids`` columns — tf/dl/position blobs stay on disk entirely. On a
-    trigram index (df ~ n_docs per term) this halves the bytes read per
-    probe term vs the full posting decode."""
-    df = segments.where(isin_expr("term", list(terms))).select("term", "docids")
-
-    def kernel(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                d = blockwise_delta_decode(r.docids)
-                outs.append(pd.DataFrame({"term": np.repeat(r.term, len(d)), "docId": d}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return df.mapInPandas(kernel, "term string, docId long")
+    :func:`decode_postings`, but the projection reads only ``term``,
+    ``docids`` and its block offsets — tf/dl/position blobs stay on disk
+    entirely. On a trigram index (df ~ n_docs per term) this halves the
+    bytes read per probe term vs the full posting decode."""
+    df = segments.where(isin_expr("term", list(terms)))
+    return df.select("term", "docids", "block_docid_off").mapInArrow(
+        _decode_kernel(["term", "docId"]), "term string, docId long"
+    )
 
 
 def segment_dict(spark: SparkSession, index_dir: str, positional: bool = False) -> dict:
@@ -1063,7 +1021,8 @@ def compact(spark: SparkSession, index_dir: str, batches: list[int]) -> dict:
     heavy = sorted({t for b in batches for t in m["batches"][str(b)].get("heavy_terms", [])})
     out = batch_path(index_dir, new_id)
     packed = (
-        segs.select("term", "salt", "ndocs", "docids", "tfs", "dls", "poslens", "positions")
+        segs.select("term", "salt", "docids", "tfs", "dls", "block_docid_off",
+                    "poslens", "positions")
         .repartition(m["num_segments"], "term", "salt")
         .mapInArrow(_compact_merge_encoder, SEGMENT_SCHEMA)
         .withColumn("seg", F.spark_partition_id())

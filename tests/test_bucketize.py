@@ -18,7 +18,7 @@ import numpy as np
 import pytest
 
 from search_engine_spark.operators import rank as R
-from search_engine_spark.operators.build import BLOCK_SIZE, _combine_large
+from search_engine_spark.operators.build import BLOCK_SIZE, _combine_large, _decode_packed
 from search_engine_spark.sources import segments as S
 
 
@@ -48,10 +48,21 @@ def _edges(span, n_buckets):
     return edges
 
 
+def _split_table(tbl, edges):
+    return R._split_partition(_combine_large(tbl.to_batches()), edges)
+
+
 def _split(tbl, edges) -> list:
     """Splitter output rows as namespaces."""
-    out = R._split_partition(_combine_large(tbl.to_batches()), edges)
-    return [types.SimpleNamespace(**r) for r in out.to_pylist()]
+    return [types.SimpleNamespace(**r) for r in _split_table(tbl, edges).to_pylist()]
+
+
+def _row_postings(tbl) -> list:
+    """(docIds, tfs, dls) of every packed row of an Arrow table, decoded in
+    one pass by the format's decoder."""
+    d = _decode_packed(tbl)
+    r = d["rows"]
+    return [(d["docid"][a:b], d["tf"][a:b], d["dl"][a:b]) for a, b in zip(r[:-1], r[1:])]
 
 
 def _row_covered(r, edges):
@@ -76,10 +87,11 @@ def test_split_reassembles_every_row(packed_rows, n_buckets):
     # per term (salted sub-lists hold disjoint docs): the input rows' full
     # posting lists, and the masked decodes of every bucketed row
     full, got = {}, {}
-    for r in rows:
-        full.setdefault(r.term, []).append(R._decode_row_blocks(r))
-    for ns in _split(tbl, edges):
-        d, t, l = R._decode_row_blocks(ns)
+    for r, dtl in zip(rows, _row_postings(tbl)):
+        full.setdefault(r.term, []).append(dtl)
+    out = _split_table(tbl, edges)
+    for r, (d, t, l) in zip(out.to_pylist(), _row_postings(out)):
+        ns = types.SimpleNamespace(**r)
         i0 = np.searchsorted(d, ns.lo_docid, "left")
         i1 = np.searchsorted(d, ns.hi_docid, "right")
         d, t, l = d[i0:i1], t[i0:i1], l[i0:i1]
@@ -129,9 +141,9 @@ def test_exact_split_block_is_small(packed_rows):
     edges = _edges(span, 64)
     exact = [i for i, r in enumerate(rows) if _takes_exact_path(r, edges)]
     sizes = []
-    for ns in _split(tbl.take(exact), edges):
-        assert len(ns.block_last_docid) // 8 == 1  # one block per slice
-        d, _, _ = R._decode_row_blocks(ns)
+    out = _split_table(tbl.take(exact), edges)
+    for r, (d, _, _) in zip(out.to_pylist(), _row_postings(out)):
+        assert len(r["block_last_docid"]) // 8 == 1  # one block per slice
         sizes.append(len(d))
     assert sizes
     assert float(np.mean(sizes)) < BLOCK_SIZE // 2

@@ -3,7 +3,8 @@
 Random posting sets -> ``_segment_encoder`` -> decoded dict must equal the
 input; feeding the packed rows through ``_compact_merge_encoder`` (the
 byte-level compaction kernel, which re-derives absolute docIds from the
-per-BLOCK delta restarts) must preserve everything again. This fuzzes the
+delta restarts each row lists in ``block_docid_off``) must preserve
+everything again. This fuzzes the
 parts golden tests can't reach: block boundaries at exactly/off-by-one
 BLOCK_SIZE, empty position blobs, large docId gaps, multi-chunk output.
 """
@@ -78,7 +79,8 @@ def test_segment_encoder_roundtrip_and_compact_idempotent(posts):
     # compaction kernel over the packed rows (single partition) re-derives
     # identical content — byte-level merge is lossless
     cols = packed.select(
-        ["term", "salt", "ndocs", "docids", "tfs", "dls", "poslens", "positions"]
+        ["term", "salt", "docids", "tfs", "dls", "block_docid_off", "poslens",
+         "positions"]
     )
     merged = pa.Table.from_batches(
         list(B._compact_merge_encoder(iter(cols.to_batches())))

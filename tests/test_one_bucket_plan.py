@@ -71,7 +71,8 @@ def _plan(df) -> str:
 def _python_stages(plan: str) -> int:
     """Python map and grouped-map nodes in a physical plan."""
     return sum(plan.count(node) for node in
-               ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas"))
+               ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas",
+                "FlatMapGroupsInArrow"))
 
 
 def _same(got, want):

@@ -4,7 +4,7 @@ scale from N to 4N workers, independent of Spark?
 The Spark query-scaling series (tools/query_scaling.py) mixes the kernel
 with scan/shuffle/scheduler machinery and this shared SMT host's noise.
 This tool isolates the kernel: it materializes the EXACT bucketized kernel
-input (the rows `score_queries_daat_batch`'s applyInPandas receives) to
+input (the rows `score_queries_daat_batch`'s applyInArrow receives) to
 parquet once, then runs the ACTUAL `rank._score_bucket_rows` over those
 buckets with a plain multiprocessing pool at N and 4N processes —
 interleaved trials, fresh pool per measurement, one task per bucket, no
@@ -54,8 +54,8 @@ def dump(idx: str, n_q: int) -> dict:
 def _run_bucket(bk: int) -> int:
     with open(QMETAS, "rb") as f:
         meta = pickle.load(f)
-    pdf = pq.read_table(BUCKETED, filters=[("bucket", "=", bk)]).to_pandas()
-    qv, _, _ = R._score_bucket_rows(pdf, meta["qmetas"], R.Scorer(), meta["avgdl"],
+    tbl = pq.read_table(BUCKETED, filters=[("bucket", "=", bk)])
+    qv, _, _ = R._score_bucket_rows(tbl, meta["qmetas"], R.Scorer(), meta["avgdl"],
                                     10, "desc", None)
     return len(qv)
 

@@ -197,11 +197,11 @@ def main() -> int:
         out, results,
     )
     audit(
-        "phrase search (positional array intersection, equi-joins only)",
+        "phrase search (one positional decode -> shifted-position count agg, no joins)",
         search_phrase(
             decode_postings(segs, ["table", "scan"], with_positions=True), ["table", "scan"]
         ),
-        ["pushed_term_filter", "no_cartesian"],
+        ["pushed_term_filter", "no_cartesian", "no_join"],
         out, results,
     )
     from search_engine_spark.operators.delete import live
@@ -782,7 +782,7 @@ def main() -> int:
     )
     audit(
         "span-first (q24: positional seek + JVM exists, no joins; the Arrow"
-        " decode kernel is MapInPandas, so no codegen claim)",
+        " decode kernel is MapInArrow, so no codegen claim)",
         search_span_first(
             decode_postings(segs, ["spark"], with_positions=True), "spark", 12
         ),
