@@ -11,7 +11,7 @@ row-group pushdown (``PushedFilters: In(term, …)``, PLANS.md) is unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -23,6 +23,21 @@ def _sql_safe(v: str) -> bool:
     (a py4j call per value, but parser-mode-independent) — real-world term
     workloads are tokenizer output, so the slow path is near-empty."""
     return "'" not in v and "\\" not in v
+
+
+def _in_sql(column: str, vals: list) -> tuple[str | None, list]:
+    """(``col IN (...)`` SQL over the parser-mode-safe values or None when
+    there are none, the values that are not safe)."""
+    fast, slow = [], []
+    for v in vals:
+        if isinstance(v, str):
+            (fast if _sql_safe(v) else slow).append(v)
+        else:
+            fast.append(int(v))
+    if not fast:
+        return None, slow
+    lits = ", ".join("'" + v + "'" if isinstance(v, str) else str(v) for v in fast)
+    return f"`{column.replace('`', '``')}` IN ({lits})", slow
 
 
 def isin_expr(column: str, values) -> Column:
@@ -37,17 +52,18 @@ def isin_expr(column: str, values) -> Column:
     vals = list(values)
     if not vals:
         return F.lit(False)
-    fast, slow = [], []
-    for v in vals:
-        if isinstance(v, str):
-            (fast if _sql_safe(v) else slow).append("'" + v + "'")
-        else:
-            fast.append(str(int(v)))
-    if slow:
-        slow_vals = [v for v in vals if isinstance(v, str) and not _sql_safe(v)]
-        slow_pred = F.col(column).isin(slow_vals)
-        if not fast:
-            return slow_pred
-    col = column.replace("`", "``")
-    pred = F.expr(f"`{col}` IN ({', '.join(fast)})")
+    sql, slow = _in_sql(column, vals)
+    slow_pred = F.col(column).isin(slow) if slow else None
+    if sql is None:
+        return slow_pred
+    pred = F.expr(sql)
     return (pred | slow_pred) if slow else pred
+
+
+def isin_where(df: DataFrame, column: str, values) -> DataFrame:
+    """``df.where(col IN (values))``: ONE driver->JVM call when every value
+    is parser-mode-safe (``DataFrame.where`` takes the SQL string as is,
+    while ``F.expr`` costs three), else :func:`isin_expr`."""
+    vals = list(values)
+    sql, slow = _in_sql(column, vals)
+    return df.where(sql if sql is not None and not slow else isin_expr(column, vals))

@@ -27,17 +27,19 @@ from one driver-side prep (:func:`_prep_workload`):
   kernel takes an Arrow table of packed rows and decodes the rows its
   queries use in one pass through the format's one decoder
   (``build._decode_packed``). A workload that fits one bucket (the common
-  interactive query) runs as ONE task: term-pushed segment scan ->
-  ``coalesce(1)`` -> one ``mapInArrow`` kernel call over the whole packed
-  rows. Bigger workloads re-key the compressed blocks by
+  interactive query) runs as ONE task: term-pushed scan of the kernel's
+  columns -> ``coalesce(1)`` -> one ``mapInArrow`` kernel call over the
+  whole packed rows, whose top-k is the result, already in order. Bigger
+  workloads re-key the compressed blocks by
   docId-range bucket (one shuffle; the splitter, :func:`_split_partition`,
   is one ``mapInArrow`` pass per partition with no Python work per row:
   whole-block byte slices for dense rows, an exact re-encode through the
   build's block encoder for sparse ones), score each bucket with a local
   top-k (``groupBy("bucket").applyInArrow``), and merge globally — the
   reference's per-segment top-k -> global PQ two-stage shape at cluster
-  scale. One query merges by TakeOrderedAndProject, a workload by the
-  packed-blob merge (one ``mapInArrow`` pass per merge shard).
+  scale. Over several buckets one query merges by TakeOrderedAndProject, a
+  workload by the packed-blob merge (one ``mapInArrow`` pass per merge
+  shard).
 - :func:`score_query` / :func:`score_queries_batch` — declarative, one plan
   (:func:`_declarative_plan`): decoded postings × broadcast idf map ->
   ``groupBy(qid, docId)`` agg -> top-k (for one query Catalyst's
@@ -48,8 +50,10 @@ from one driver-side prep (:func:`_prep_workload`):
 from __future__ import annotations
 
 import math
+import weakref
 from collections import Counter
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -77,7 +81,7 @@ from ..operators.build import (
     _gather_bytes,
     _pack_blocks,
 )
-from ..functions.predicates import isin_expr
+from ..functions.predicates import isin_expr, isin_where
 from ..operators.query import analyze_query, postings_for
 from ..sources.segments import term_dfs
 
@@ -145,13 +149,16 @@ def _order(ties: str) -> list:
 def _single(batch: DataFrame, k: int | None, ties: str) -> DataFrame:
     """A Q=1 batch plan as a single-query result: (docId, score) rows,
     ordered also when ``k`` is None. With ``k`` the Q=1 plan already ends
-    in TakeOrderedAndProject, which absorbs this projection."""
+    in TakeOrderedAndProject, which absorbs this projection. The one-bucket
+    DAAT plan needs neither: its kernel emits the result rows as they are
+    (:func:`_one_task_kernel`)."""
     out = batch.drop("qid")
     return out.orderBy(*_order(ties)) if k is None else out
 
 
 def _merge_topk(local: DataFrame, n_queries: int, k: int | None, ties: str) -> DataFrame:
-    """Per-qid top-k over scored (qid, docId, score) rows. One query merges
+    """Per-qid top-k over scored (qid, docId, score) rows of the declarative
+    and the multi-bucket DAAT plans. One query merges
     by TakeOrderedAndProject (the reference's bounded PQ, IIM:1290-1313);
     a workload by the two-stage :func:`_batch_topk`."""
     if k is None:
@@ -953,7 +960,7 @@ def _candidate_scan(segments: DataFrame, live_terms: list[str], term_stats) -> D
         n_vocab = len(term_stats)
         if n_vocab and len(live_terms) / n_vocab > _FILTER_COVERAGE_MAX:
             return segments
-    return segments.where(isin_expr("term", live_terms))
+    return isin_where(segments, "term", live_terms)
 
 
 def _auto_buckets(spark: SparkSession, est_work: int | None) -> int:
@@ -973,12 +980,18 @@ def _auto_buckets(spark: SparkSession, est_work: int | None) -> int:
     return max(1, min(cap, -(-int(est_work) // _WORK_PER_BUCKET)))
 
 
-# Packed segment columns the splitter and the DAAT kernel read (block
-# metadata as Arrow lists here, as little-endian bytes in bucketed rows).
-_SEG_KERNEL_COLS = [
+# Packed segment columns the DAAT kernel reads (``build._decode_packed``
+# and :func:`_daat_rows_batch`): the one-task plan's whole scan.
+_KERNEL_COLS = ["term", "max_tf", "docids", "tfs", "dls", "block_docid_off"]
+# ... and the ones the splitter reads (block metadata as Arrow lists here,
+# as little-endian bytes in bucketed rows).
+_SPLIT_COLS = [
     "term", "max_tf", "docids", "tfs", "dls", "block_last_docid",
     "block_max_tf", "block_docid_off", "block_tf_off", "block_dl_off",
 ]
+# Per segments frame: its scan projected to _KERNEL_COLS and coalesced to
+# one partition, built once.
+_KERNEL_SCANS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _bucketize_segments(
@@ -1027,7 +1040,7 @@ def _bucketize_segments(
         if batch_list:
             yield from _split_partition(_combine_large(batch_list), edges).to_batches()
 
-    narrowed = seg.select(*_SEG_KERNEL_COLS, "min_docid", "ndocs")
+    narrowed = seg.select(*_SPLIT_COLS, "min_docid", "ndocs")
     # The parquet scan coalesces by FILE bytes (maxPartitionBytes), which
     # lands big-workload candidate scans on a handful of partitions — the
     # python splitter then runs e.g. 9 tasks on 8 cores: one full wave plus
@@ -1052,21 +1065,43 @@ def _bucketize_segments(
     return bucketed.repartition(len(edges), "bucket")
 
 
-def _one_task(seg: DataFrame, kernel, schema: StructType) -> DataFrame:
-    """The one-bucket DAAT plan: candidate segment rows -> ``coalesce(1)``
-    -> ONE ``kernel(table)`` call over every whole packed row, as one Arrow
-    table. No splitter stage and no bucket exchange, so the plan is a
-    single stage of one task; the kernel's local top-k is already global.
-    Emits no rows when no candidate row exists."""
+def _one_task(segments: DataFrame, live_terms: list[str], term_stats, kernel,
+              schema: StructType) -> DataFrame:
+    """The one-bucket DAAT plan: the segments frame's scan of
+    ``_KERNEL_COLS`` -> term filter (:func:`_candidate_scan`) ->
+    ``coalesce(1)`` -> ONE ``mapInArrow(kernel)`` task over every whole
+    packed row. No splitter stage and no bucket exchange, so the plan is a
+    single stage of one task. The projected, coalesced scan is built once
+    per segments frame; Catalyst pushes each query's filter below the
+    coalesce into the scan. ``kernel`` is :func:`_one_task_kernel` bound
+    with ``functools.partial``, so the UDF pickles a function reference
+    and its arguments, not a fresh closure."""
+    scan = _KERNEL_SCANS.get(segments)
+    if scan is None:
+        # selectExpr ships the names in one py4j call; select() builds a
+        # Java Column per name
+        scan = _KERNEL_SCANS[segments] = segments.selectExpr(*_KERNEL_COLS).coalesce(1)
+    return _candidate_scan(scan, live_terms, term_stats).mapInArrow(kernel, schema)
 
-    def run(batches):
-        batch_list = [b for b in batches if b.num_rows]
-        if batch_list:
-            yield from kernel(pa.Table.from_batches(batch_list)).to_batches()
 
-    # selectExpr ships the names in one py4j call; select() builds a Java
-    # Column per name, ~4 ms of driver time per interactive query
-    return seg.selectExpr(*_SEG_KERNEL_COLS).coalesce(1).mapInArrow(run, schema)
+def _one_task_kernel(get_qmetas, scorer: Scorer, avgdl: float, k: int | None,
+                     ties: str, deleted: np.ndarray | None, single: bool, batches):
+    """The one-task plan's ``mapInArrow`` function: ONE kernel call over the
+    task's whole packed rows, as one Arrow table. The kernel's per-qid
+    top-k is final here; with ``k`` it is also put in (qid asc, score desc,
+    docId ``ties``) order, which :func:`_daat_rows_batch` alone leaves
+    undone for a query with at most ``k`` hits. ``single`` emits a single
+    query's (docId, score) rows. Emits no rows when no candidate row
+    exists."""
+    batch_list = [b for b in batches if b.num_rows]
+    if not batch_list:
+        return
+    top = _score_bucket_rows(pa.Table.from_batches(batch_list), get_qmetas(), scorer,
+                             avgdl, k, ties, deleted)
+    if k is not None:
+        top = _topk(*top, k, ties)
+    out = _scored(*top)
+    yield from (out.select(["docId", "score"]) if single else out).to_batches()
 
 
 def _n_merge_tasks(spark: SparkSession, blob_ceiling: int) -> int:
@@ -1151,14 +1186,18 @@ def _merge_blobs(blobs: DataFrame, n_merge: int, k: int, ties: str) -> DataFrame
 
 
 def _shipped(spark: SparkSession, value, size: int):
-    """A zero-arg getter that hands ``value`` to kernel tasks. Big workload
-    values (``size`` >= 256, e.g. a 16k-query qmetas cloudpickles to ~1 MB)
-    ship as a broadcast, fetched and cached once per python worker process;
-    a captured closure would be re-shipped and re-unpickled PER TASK."""
+    """A zero-arg getter that hands ``value`` to kernel tasks, built from
+    ``functools.partial`` so it pickles by reference. Big workload values
+    (``size`` >= 256, e.g. a 16k-query qmetas cloudpickles to ~1 MB) ship
+    as a broadcast, fetched and cached once per python worker process; a
+    captured value would be re-shipped and re-unpickled PER TASK."""
     if size >= 256:
-        ref = spark.sparkContext.broadcast(value)
-        return lambda: ref.value
-    return lambda: value
+        return partial(getattr, spark.sparkContext.broadcast(value), "value")
+    return partial(_identity, value)
+
+
+def _identity(value):
+    return value
 
 
 def score_queries_daat_batch(
@@ -1184,9 +1223,10 @@ def score_queries_daat_batch(
     reduces with L2-resident accumulators. When the bucket count (explicit
     ``n_buckets`` or :func:`_auto_buckets`) is 1, the scan feeds one kernel
     call in one task instead (:func:`_one_task`) and the merge exchange goes
-    too: that call's per-qid top-k is final. Per-bucket results merge as
-    packed blobs, or past ``_BLOB_MERGE_CAP`` through the same two-stage
-    top-k as :func:`score_queries_batch`; a single query merges by
+    too: that call's per-qid top-k is final, in (qid asc, score desc, docId
+    ``ties``) order. Per-bucket results merge as packed blobs, or past
+    ``_BLOB_MERGE_CAP`` through the same two-stage top-k as
+    :func:`score_queries_batch`; a single query merges by
     TakeOrderedAndProject.
 
     With ``k=None`` every (qid, docId, score) row is returned unordered
@@ -1208,12 +1248,15 @@ def _daat_plan(
     n_buckets: int | None,
     deleted: np.ndarray | None,
     docid_span: tuple[int, int] | None,
+    single: bool = False,
 ) -> DataFrame:
-    """The one DAAT plan builder behind :func:`score_query_daat` (Q=1) and
-    :func:`score_queries_daat_batch` -> (qid, docId, score)."""
+    """The one DAAT plan builder behind :func:`score_queries_daat_batch` ->
+    (qid, docId, score) and, with ``single``, :func:`score_query_daat` ->
+    one query's (docId, score) in result order."""
+    schema = SCORE_SCHEMA if single else BATCH_SCHEMA
     qmetas, dfs = _prep_workload(term_stats, qtfs, scorer, n_docs)
     if not qmetas:
-        return spark.createDataFrame([], BATCH_SCHEMA)
+        return spark.createDataFrame([], schema)
     n_q = len(qmetas)
     # workload work estimate: one posting-score evaluation per (query, term,
     # posting) — drives the bucket count, driver-local (df comes from term
@@ -1221,48 +1264,45 @@ def _daat_plan(
     est_work = sum(dfs[t] for qm in qmetas.values() for t in qm)
     if n_buckets is None:
         n_buckets = _auto_buckets(spark, est_work)
-    seg = _candidate_scan(segments, sorted(dfs), term_stats)
     get_qmetas = _shipped(spark, qmetas, n_q)
+    if n_buckets == 1:
+        # one bucket's per-qid top-k is already final and in result order:
+        # no merge exchange and, with k, no sort
+        kernel = partial(_one_task_kernel, get_qmetas, scorer, avgdl, k, ties, deleted,
+                         single)
+        out = _one_task(segments, sorted(dfs), term_stats, kernel, schema)
+        return out.orderBy(*_order(ties)) if single and k is None else out
 
     def score_rows(tbl):
         return _score_bucket_rows(tbl, get_qmetas(), scorer, avgdl, k, ties, deleted)
 
-    if n_buckets == 1:
-        if k is not None and n_q > 1:
-            # one bucket's per-qid top-k is already final: no merge
-            # exchange, only the blob merge's (qid asc, score desc, docId
-            # tie) order
-            return _one_task(
-                seg, lambda tbl: _scored(*_topk(*score_rows(tbl), k, ties)),
-                BATCH_SCHEMA,
-            )
-        local = _one_task(seg, lambda tbl: _scored(*score_rows(tbl)), BATCH_SCHEMA)
-    else:
-        bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
-        if bucketed is None:
-            return spark.createDataFrame([], BATCH_SCHEMA)
-        # Merge strategy for the per-bucket top-k of a workload. The row
-        # merge shuffles every per-(bucket, query) candidate as a JVM row
-        # (2M rows for a 16k-query workload: Arrow->UnsafeRow conversion, a
-        # partial-prune python stage, a by-qid shuffle — per-row costs on
-        # both sides). When the total candidate count is bounded (Q x k x
-        # buckets, the kernel's output ceiling), emit ONE PACKED ROW PER
-        # BUCKET instead and merge the blobs in a few cheap tasks: ~32
-        # binary rows through the shuffle, one vectorized segmented top-k at
-        # the end. Selection-only — scores are untouched bytes, so results
-        # are bit-identical to the row merge.
-        blob_ceiling = n_q * (k or 0) * n_buckets
-        if n_q > 1 and 0 < blob_ceiling <= _BLOB_MERGE_CAP:
-            n_merge = _n_merge_tasks(spark, blob_ceiling)
-            blobs = bucketed.groupBy("bucket").applyInArrow(
-                lambda tbl: _packed_shards(*score_rows(tbl), n_merge),
-                PACKED_TOPK_SCHEMA,
-            )
-            return _merge_blobs(blobs, n_merge, k, ties)
-        local = bucketed.groupBy("bucket").applyInArrow(
-            lambda tbl: _scored(*score_rows(tbl)), BATCH_SCHEMA
+    seg = _candidate_scan(segments, sorted(dfs), term_stats)
+    bucketed = _bucketize_segments(spark, seg, n_buckets, docid_span, est_work)
+    if bucketed is None:
+        return spark.createDataFrame([], schema)
+    # Merge strategy for the per-bucket top-k of a workload. The row
+    # merge shuffles every per-(bucket, query) candidate as a JVM row
+    # (2M rows for a 16k-query workload: Arrow->UnsafeRow conversion, a
+    # partial-prune python stage, a by-qid shuffle — per-row costs on
+    # both sides). When the total candidate count is bounded (Q x k x
+    # buckets, the kernel's output ceiling), emit ONE PACKED ROW PER
+    # BUCKET instead and merge the blobs in a few cheap tasks: ~32
+    # binary rows through the shuffle, one vectorized segmented top-k at
+    # the end. Selection-only — scores are untouched bytes, so results
+    # are bit-identical to the row merge.
+    blob_ceiling = n_q * (k or 0) * n_buckets
+    if n_q > 1 and 0 < blob_ceiling <= _BLOB_MERGE_CAP:
+        n_merge = _n_merge_tasks(spark, blob_ceiling)
+        blobs = bucketed.groupBy("bucket").applyInArrow(
+            lambda tbl: _packed_shards(*score_rows(tbl), n_merge),
+            PACKED_TOPK_SCHEMA,
         )
-    return _merge_topk(local, n_q, k, ties)
+        return _merge_blobs(blobs, n_merge, k, ties)
+    local = bucketed.groupBy("bucket").applyInArrow(
+        lambda tbl: _scored(*score_rows(tbl)), BATCH_SCHEMA
+    )
+    merged = _merge_topk(local, n_q, k, ties)
+    return _single(merged, k, ties) if single else merged
 
 
 def score_query_daat(
@@ -1289,13 +1329,18 @@ def score_query_daat(
 
     When the bucket count (explicit ``n_buckets`` or :func:`_auto_buckets`
     over the query's Σdf) is 1 — any interactive query whose postings fit
-    one task — the re-key is skipped: pushed scan -> ``coalesce(1)`` -> one
-    kernel call over the whole packed rows -> TakeOrderedAndProject, one
-    Spark job of one task with no exchange (:func:`_one_task`). It needs no
-    ``docid_span`` either, so the span-agg job never runs on that plan. The
-    query-term df lookup runs on the driver (``segments.term_dfs``) for
-    the ``load_term_stats`` scan and a pandas frame alike, so that job is
-    the whole call.
+    one task — the re-key is skipped: pushed scan of the six columns the
+    kernel reads -> ``coalesce(1)`` -> one kernel call over the whole
+    packed rows, one Spark job of one task with no exchange
+    (:func:`_one_task`). With ``k`` the kernel's top-k, emitted as
+    (docId, score) in (score desc, docId ``ties``) order, is the result:
+    no sort follows it. It needs no ``docid_span`` either, so the span-agg
+    job never runs on that plan. The query-term df lookup runs on the
+    driver (``segments.term_dfs``) for the ``load_term_stats`` scan and a
+    pandas frame alike, so that job is the whole call. What a query does
+    not change is built once per frame: the projected, coalesced scan per
+    segments frame and the dictionary's footers per term-stats frame, so a
+    query's plan adds only a term filter and the kernel call.
 
     ``deleted``: sorted int64 tombstone array (operators/delete.py
     ``deleted_array``) — masked inside the kernel as rows decode.
@@ -1309,11 +1354,8 @@ def score_query_daat(
         qtfs = dict(keywords) if isinstance(keywords, dict) else dict(Counter(keywords))
     else:
         qtfs = query_tfs(keywords, analyzer)
-    return _single(
-        _daat_plan(spark, segments, term_stats, {0: qtfs}, n_docs, avgdl, scorer,
-                   k, ties, n_buckets, deleted, docid_span),
-        k, ties,
-    )
+    return _daat_plan(spark, segments, term_stats, {0: qtfs}, n_docs, avgdl, scorer,
+                      k, ties, n_buckets, deleted, docid_span, single=True)
 
 
 def mlt_seed_terms(
@@ -1377,7 +1419,7 @@ def more_like_this(
     The whole pipeline is expansion (bounded, :func:`mlt_seed_terms`) +
     the existing ranked-serving path — no new scoring machinery, so every
     100 TB property of ``score_query_daat`` (term pushdown, bucketized
-    kernel, TakeOrdered) carries over unchanged."""
+    kernel, bounded top-k) carries over unchanged."""
     seed = mlt_seed_terms(
         corpus, term_stats, doc_id, n_docs, top_terms, analyzer, scorer
     )

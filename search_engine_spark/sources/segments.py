@@ -33,6 +33,7 @@ import os
 import shutil
 import time
 import uuid
+import weakref
 from contextlib import contextmanager
 from urllib.parse import unquote, urlparse
 
@@ -769,15 +770,25 @@ def load_term_stats_pdf(index_dir: str) -> pd.DataFrame:
     return pq.read_table(os.path.join(index_dir, "term_stats")).to_pandas()
 
 
+# Per term-stats Spark frame: the local paths of its dictionary files (None
+# when the frame is not a bare parquet scan of ``file:`` storage), listed
+# once, and each file's footer with its row groups' term ranges, keyed by
+# (path, st_size, st_mtime_ns). Entries go with their frame.
+_DICT_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
 def term_dfs(term_stats, terms: list[str]) -> dict[str, int]:
     """{term: df} for those of ``terms`` in the dictionary — the one
     exact-term df lookup (rank idf and plan sizing, parser cost model,
     trigram probe, more-like-this seeds). ``term_stats`` may be:
 
     - the plain parquet scan :func:`load_term_stats` returns: read on the
-      driver with pyarrow, no Spark job. The files come from the frame's
-      cached listing (``inputFiles()``); only row groups whose term min/max
-      range can hold a wanted term are read (:func:`_term_row_groups`);
+      driver with pyarrow, no Spark job. The frame's files (its cached
+      ``inputFiles()`` listing) and each file's footer and row-group term
+      ranges are read once per frame; a lookup then stats each file, and
+      reads only the row groups whose term min/max range can hold a wanted
+      term. A file rewritten in place (new size or mtime) has its footer
+      read afresh; a deleted one raises ``FileNotFoundError``;
     - a pandas frame (:func:`load_term_stats_pdf`): a local ``isin``;
     - any other Spark frame (filtered or derived, such as federation's
       ``global_term_stats``, or not on ``file:`` storage): one filtered
@@ -788,7 +799,10 @@ def term_dfs(term_stats, terms: list[str]) -> dict[str, int]:
     if isinstance(term_stats, pd.DataFrame):
         sub = term_stats[term_stats["term"].isin(want)]
         return {t: int(d) for t, d in zip(sub["term"], sub["df"])}
-    paths = _plain_parquet_paths(term_stats)
+    cached = _DICT_CACHE.get(term_stats)
+    if cached is None:
+        cached = _DICT_CACHE[term_stats] = (_plain_parquet_paths(term_stats), {})
+    paths, footers = cached
     if paths is None:
         rows = term_stats.where(isin_expr("term", want)).select("term", "df").collect()
         return {r.term: int(r.df) for r in rows}
@@ -798,12 +812,18 @@ def term_dfs(term_stats, terms: list[str]) -> dict[str, int]:
 
     out: dict[str, int] = {}
     for path in paths:
-        with pq.ParquetFile(path) as f:
-            groups = _term_row_groups(f, want)
-            if groups:
+        st = os.stat(path)
+        key = (path, st.st_size, st.st_mtime_ns)
+        footer = footers.get(key)
+        if footer is None:
+            with pq.ParquetFile(path) as f:
+                footer = footers[key] = (f.metadata, _term_ranges(f))
+        groups = _holding(footer[1], want)
+        if groups:
+            with pq.ParquetFile(path, metadata=footer[0]) as f:
                 t = f.read_row_groups(groups, columns=["term", "df"])
-                t = t.filter(pc.is_in(t["term"], value_set=pa.array(want)))
-                out.update(zip(t["term"].to_pylist(), t["df"].to_pylist()))
+            t = t.filter(pc.is_in(t["term"], value_set=pa.array(want)))
+            out.update(zip(t["term"].to_pylist(), t["df"].to_pylist()))
     return out
 
 
@@ -827,22 +847,36 @@ def _plain_parquet_paths(frame: DataFrame) -> list[str] | None:
     return [unquote(u.path) for u in uris]
 
 
-def _term_row_groups(f, want: list[str]) -> list[int]:
-    """Row groups of the parquet file ``f`` whose term min/max range holds a
-    term of the sorted ``want`` (a group without statistics is kept). On a
-    term-sorted file at most len(want) groups survive; an unsorted file
-    written before :func:`finalize_index` sorted it keeps most of them."""
+def _term_ranges(f) -> list[tuple[str, str] | None]:
+    """(min, max) term of each row group of the parquet file ``f``; None for
+    a group without statistics."""
     col = f.schema_arrow.get_field_index("term")
-    keep = []
+    out = []
     for i in range(f.metadata.num_row_groups):
         st = f.metadata.row_group(i).column(col).statistics
-        if st is None or not st.has_min_max:
-            keep.append(i)
-            continue
-        j = bisect.bisect_left(want, st.min)
-        if j < len(want) and want[j] <= st.max:
-            keep.append(i)
+        out.append((st.min, st.max) if st is not None and st.has_min_max else None)
+    return out
+
+
+def _holding(ranges: list[tuple[str, str] | None], want: list[str]) -> list[int]:
+    """Row groups whose term range holds a term of the sorted ``want`` (a
+    group without statistics is kept). On a term-sorted file at most
+    len(want) groups survive; an unsorted file written before
+    :func:`finalize_index` sorted it keeps most of them."""
+    keep = []
+    for i, r in enumerate(ranges):
+        if r is not None:
+            j = bisect.bisect_left(want, r[0])
+            if j == len(want) or want[j] > r[1]:
+                continue
+        keep.append(i)
     return keep
+
+
+def _term_row_groups(f, want: list[str]) -> list[int]:
+    """Row groups of the parquet file ``f`` that :func:`term_dfs` reads for
+    the sorted ``want``."""
+    return _holding(_term_ranges(f), want)
 
 
 def docid_span(index_dir: str) -> tuple[int, int] | None:

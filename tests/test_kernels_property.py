@@ -89,13 +89,13 @@ def test_segment_encoder_roundtrip_and_compact_idempotent(posts):
 
 
 def test_isin_expr_matches_column_isin_under_both_parser_modes():
-    """isin_expr must select exactly Column.isin's rows for values with
+    """isin_expr and isin_where must select exactly Column.isin's rows for values with
     quotes, backslashes, unicode, and ints — under the default parser AND
     spark.sql.parser.escapedStringLiterals=true (the legacy/Hive-compat
     mode that changes backslash handling in SQL string literals)."""
     from pyspark.sql import functions as F
 
-    from search_engine_spark.functions.predicates import isin_expr
+    from search_engine_spark.functions.predicates import isin_expr, isin_where
     from search_engine_spark.session import get_spark
 
     spark = get_spark(master="local[2]", shuffle_partitions=2)
@@ -119,6 +119,8 @@ def test_isin_expr_matches_column_isin_under_both_parser_modes():
                     r.term
                     for r in df.where(df.term.isin(vals) if vals else F.lit(False)).collect()
                 )
+                assert got == exp, (mode, vals)
+                got = sorted(r.term for r in isin_where(df, "term", vals).collect())
                 assert got == exp, (mode, vals)
         finally:
             spark.conf.unset("spark.sql.parser.escapedStringLiterals")

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import io
 import os
+import re
+import threading
 from contextlib import redirect_stdout
 
 import numpy as np
@@ -75,6 +77,17 @@ def _python_stages(plan: str) -> int:
                 "FlatMapGroupsInArrow"))
 
 
+def _read_columns(plan: str) -> list[list[str]]:
+    """Top-level column names of each scan's ReadSchema in a plan."""
+    return [re.findall(r"(?:<|,)(\w+):", m)
+            for m in re.findall(r"ReadSchema: (struct<.*>)", plan)]
+
+
+def _unsorted(plan: str) -> bool:
+    """No Sort and no TakeOrderedAndProject node."""
+    return not re.search(r"\bSort\b", plan) and "TakeOrderedAndProject" not in plan
+
+
 def _same(got, want):
     assert [d for d, _ in got] == [d for d, _ in want]
     assert all(abs(a - b) < 1e-9 for (_, a), (_, b) in zip(got, want))
@@ -116,7 +129,9 @@ def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
     plan = _plan(one)
     assert "Exchange" not in plan, plan
     assert _python_stages(plan) == 1
-    assert "TakeOrderedAndProject" in plan
+    # the kernel's top-k ends the plan, over a scan of the kernel's columns
+    assert _unsorted(plan), plan
+    assert _read_columns(plan) == [R._KERNEL_COLS], plan
     rows, jobs = run_jobs(spark, one.collect, "one_bucket_single")
     assert rows and jobs == 1
 
@@ -131,6 +146,72 @@ def test_one_bucket_plan_is_one_job_without_exchange(spark, idx):
     for df in (_single(spark, idx, QUERIES[1], n_buckets=4, docid_span=span),
                _batch(spark, idx, QUERIES, n_buckets=4, docid_span=span)):
         assert "Exchange hashpartitioning(bucket" in _plan(df)
+
+
+@pytest.mark.parametrize("ties", ["asc", "desc"])
+def test_one_bucket_single_query_rows_come_in_result_order(spark, idx, ties):
+    """With ``k`` the one-task plan has no sort: the kernel's own rows are
+    the result. They come in (score desc, docId ``ties``) order, also for a
+    query with fewer than ``k`` hits, whose hits the kernel's per-query
+    selection leaves in docId order. An empty hit set is zero rows in one
+    job."""
+    p, _, _, _, oracle = idx
+    pdf = S.load_term_stats_pdf(p)
+    pdf = pdf[[analyze_query([t]) == [t] for t in pdf["term"]]]  # stem-stable
+    rare = sorted(pdf[(pdf["df"] >= 3) & (pdf["df"] < 10)]["term"])
+    assert len(rare) >= 2
+    common = pdf.sort_values(["df", "term"])["term"].iloc[-1]
+
+    def key(it):
+        return (-it[1], it[0] if ties == "asc" else -it[0])
+
+    for terms in ([rare[0]], rare[:2], [rare[0], common]):
+        for k in (3, 10):
+            df = _single(spark, idx, terms, k=k, ties=ties)
+            assert _unsorted(_plan(df))
+            got = [(r.docId, r.score) for r in df.collect()]
+            assert got == sorted(got, key=key)
+            want = sorted(oracle.score(terms).items(), key=key)[:k]
+            assert len(got) == len(want) and len(got) > 1
+            _same(got, want)
+
+    hits = np.array(sorted(oracle.score([rare[0]])), dtype=np.int64)
+    df = _single(spark, idx, [rare[0]], ties=ties, deleted=hits)
+    rows, jobs = run_jobs(spark, df.collect, f"one_bucket_empty_{ties}")
+    assert rows == [] and jobs == 1
+
+
+# py4j round trips of a warm one-bucket query, made by the calling thread
+# (py4j's finalizer thread frees earlier proxies whenever it runs, so its
+# calls are left out). Measured here: the plan build 40 (103 when each
+# query projected the scan itself and ended in a TakeOrderedAndProject),
+# the collect 7 (7 before too).
+PLAN_PY4J_MAX = 45
+COLLECT_PY4J_MAX = 10
+
+
+def test_one_bucket_query_py4j_calls_are_pinned(spark, idx, monkeypatch):
+    from py4j.clientserver import ClientServerConnection
+
+    span = S.docid_span(idx[0])
+    calls, me = [0], threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if threading.get_ident() == me:  # not py4j's proxy finalizer thread
+            calls[0] += 1
+        return send(self, command)
+
+    for kw in (QUERIES[0], QUERIES[2]):  # warm: cached scan and footers
+        _single(spark, idx, kw, docid_span=span).collect()
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    df = _single(spark, idx, QUERIES[1], docid_span=span)
+    plan_calls, calls[0] = calls[0], 0
+    rows = df.collect()
+    collect_calls = calls[0]
+    assert rows
+    assert plan_calls <= PLAN_PY4J_MAX, plan_calls
+    assert collect_calls <= COLLECT_PY4J_MAX, collect_calls
 
 
 def test_multi_bucket_single_query_plan_is_pinned(spark, idx):

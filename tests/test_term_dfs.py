@@ -155,3 +155,37 @@ def test_unsorted_term_stats_gives_same_dfs_and_top10(spark, idx, tmp_path_facto
         got = R.score_query_daat(spark, S.load_segments(spark, old), old_stats, kw,
                                  nd, avg, k=10).collect()
         assert want and got == want
+
+
+def test_dictionary_cache_follows_the_files(spark, tmp_path_factory):
+    """``term_dfs`` keeps each frame's dictionary footers, keyed by file
+    path, size and mtime. After ``finalize_index`` replaces the dictionary
+    file (a new uuid name), a frame loaded afresh in the same process
+    answers with the new dfs, and the old frame raises as an uncached read
+    would: a cached footer never serves a deleted file. A file rewritten in
+    place is read afresh."""
+    p = str(tmp_path_factory.mktemp("termdfs_fresh") / "idx")
+    corpus = synthetic_corpus(spark, n_docs=240, vocab_size=300, seed=23)
+    delta = F.col("docId") % 4 == 0
+    S.build_index(spark, corpus.where(~delta), p, analyzer="porter", n_batches=1)
+    terms = _term_lists(S.load_term_stats_pdf(p))[0] + ["appl", "tok3"]
+    old = S.load_term_stats(spark, p)
+    before = S.term_dfs(old, terms)
+    assert S.term_dfs(old, terms) == before  # served from the cached footer
+    (old_file,) = _files(p)
+
+    S.build_one_batch(spark, corpus.where(delta), p, key="delta1", analyzer="porter")
+    S.finalize_index(spark, p)
+    (new_file,) = _files(p)
+    assert new_file != old_file and not os.path.exists(old_file)
+    pdf = S.load_term_stats_pdf(p)
+    truth = dict(zip(pdf["term"], pdf["df"].astype(int)))
+    want = {t: truth[t] for t in terms if t in truth}
+    assert want != before
+    assert S.term_dfs(S.load_term_stats(spark, p), terms) == want
+    with pytest.raises(FileNotFoundError):
+        S.term_dfs(old, terms)
+
+    # the old frame's file name, rewritten with the new dictionary
+    shutil.copyfile(new_file, old_file)
+    assert S.term_dfs(old, terms) == want
