@@ -16,7 +16,9 @@ Spark-first rebuild — the whole build is ONE shuffle:
                                              # term-sorted files => row-group
                                              # min/max pushdown on `term`
 (term stats fall out of the packed rows with a cheap second-stage agg —
-no re-shuffle of raw postings.)
+no re-shuffle of raw postings. The batch's doc count rides the same job:
+one marker row per map partition, summed by an observation after the
+shuffle; see ``build_segments_combined``.)
 
 Scale notes (100 TB):
 - postings never materialize per-token rows (no posexplode): the kernel
@@ -48,7 +50,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -688,6 +690,11 @@ MINIBLOCK_SCHEMA = StructType(
 )
 
 
+# salt of the per-partition doc-count marker rows (``build_miniblocks``);
+# every real (term, salt) row has salt >= 0
+DOC_MARKER_SALT = -1
+
+
 def _slice_all(buf: bytes, gs: np.ndarray, ge: np.ndarray, bounds: np.ndarray):
     """Per-group byte slices of a whole-partition varbyte buffer, where
     ``bounds`` holds cumulative byte offsets per value."""
@@ -715,18 +722,30 @@ def build_miniblocks(
     ``membership`` emits EMPTY tf/dl blobs (trigram/substring indexes where
     tf==1 by construction): the shuffle then moves docid bytes only, and
     the merge encoder's decode reports the empties and it packs membership
-    rows (``_pack_blocks`` with tf None)."""
+    rows (``_pack_blocks`` with tf None).
+
+    The content pass (no ``term_prefix``) also yields one doc-count marker
+    row per partition, even an empty one: ``term=""``, ``salt=-1``,
+    ``ndocs`` = the partition's input rows (empty docs and docs with no
+    tokens included), empty blobs. ``build_segments_combined`` counts the
+    batch's docs from these rows and drops them before the merge."""
     heavy_set = frozenset(heavy or [])
     do_salt = bool(heavy_set) and n_salts > 1
 
     def kernel(batches):
         fn = get_analyzer(analyzer)
-        parts = []
+        parts, n_rows = [], 0
         for pdf in batches:
+            n_rows += len(pdf)
             if len(pdf):
                 out = _batch_postings(pdf, fn)
                 if out is not None:
                     parts.append(out)
+        if not term_prefix:
+            yield pd.DataFrame(
+                {"term": [""], "salt": np.int32(DOC_MARKER_SALT), "ndocs": np.int32(n_rows),
+                 "docids": [b""], "tfs": [b""], "dls": [b""], "poslens": [None],
+                 "posbin": [None]})
         if not parts:
             return
         terms = np.concatenate([p[0] for p in parts])
@@ -893,7 +912,16 @@ def build_segments_combined(
     zero extra shuffles; field dl is the FIELD's own token length, which is
     exactly what per-field BM25 wants. Field heavy lists matter at scale:
     a low-cardinality field term (``lang:en``) is the heaviest posting list
-    in the index and must salt like any skewed content term."""
+    in the index and must salt like any skewed content term.
+
+    Returns ``(segments, observation)``. After the frame's one action,
+    ``observation.get["ndocs"]`` is the number of input docs: the sum of
+    the content pass's marker rows, taken by a ``DataFrame.observe`` that
+    sits after the hash exchange, in the result stage. Spark merges a
+    result task's accumulator updates once per partition; a shuffle-map
+    task's updates can merge again when its stage is recomputed, so an
+    observation on the map side could count a doc twice. The markers are
+    dropped right after it, before the merge encoder."""
     mini = build_miniblocks(
         corpus.select("docId", "content"), analyzer, heavy, n_salts,
         with_positions, membership=membership,
@@ -909,9 +937,15 @@ def build_segments_combined(
             membership=membership,
         )
         mini = mini.unionByName(fmini)
-    mini = mini.repartition(num_segments, "term", "salt")
+    marker = F.col("salt") == DOC_MARKER_SALT
+    ndocs = Observation()
+    mini = (
+        mini.repartition(num_segments, "term", "salt")
+        .observe(ndocs, F.coalesce(F.sum(F.when(marker, F.col("ndocs"))), F.lit(0)).alias("ndocs"))
+        .where(~marker)
+    )
     packed = mini.mapInArrow(_merge_encoder, SEGMENT_SCHEMA)
-    return packed.withColumn("seg", F.spark_partition_id())
+    return packed.withColumn("seg", F.spark_partition_id()), ndocs
 
 
 def encode_segments(

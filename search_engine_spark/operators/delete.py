@@ -45,7 +45,9 @@ from ..sources.segments import (
     ManifestConflict,
     _release_rewrite_key,
     _reserve_rewrite_key,
+    _segment_file_stats,
     batch_path,
+    decode_docids,
     decode_postings,
     decode_postings_packed,
     load_segments,
@@ -208,26 +210,24 @@ def purge_deletes(spark: SparkSession, index_dir: str) -> dict:
     out = batch_path(index_dir, new_id)
     packed.write.mode("overwrite").parquet(out)
 
-    # recompute doc-level stats from the rewritten (smaller) batch: one
-    # decode pass for (docId, dl) — the purge already paid a full rewrite,
-    # this is the cheap tail of it
-    new_segs = read_segment_dirs(spark, out)
-    doc_dl = (
-        decode_postings(new_segs)
-        .groupBy("docId")
-        .agg(F.first("dl").alias("dl"))
-        .agg(F.count("*").alias("nd"), F.coalesce(F.sum("dl"), F.lit(0)).alias("tok"))
-        .collect()[0]
+    # doc count: the source batches' own counts (which include docs with no
+    # tokens) minus the tombstoned docs the source postings hold. A
+    # tombstoned doc with no tokens has no postings, so it cannot be seen
+    # here and stays counted. Postings and tokens are read on the driver
+    # from the rewritten batch's files.
+    gone = (
+        decode_docids(read_segment_dirs(spark, *old_paths))
+        .join(F.broadcast(tomb), "docId", "left_semi")
+        .distinct()
+        .count()
     )
-    npost = int(
-        new_segs.agg(F.coalesce(F.sum("ndocs"), F.lit(0))).collect()[0][0]
-    )
+    per_seg = _segment_file_stats(out)
     entry = {
         "committed": True,
         "path": out,
-        "ndocs": int(doc_dl["nd"]),
-        "npostings": npost,
-        "total_tokens": int(doc_dl["tok"]),
+        "ndocs": sum(m["batches"][k]["ndocs"] for k in old_keys) - gone,
+        "npostings": sum(r["post"] for r in per_seg),
+        "total_tokens": sum(r["tok"] for r in per_seg),
         "heavy_terms": heavy,
         "purged_from": old_keys,
         "purged_tombstones": int(tomb.count()),

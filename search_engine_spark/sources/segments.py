@@ -284,9 +284,14 @@ def build_one_batch(
     Idempotent per key: a committed key is never rebuilt; a crashed attempt
     leaves an uncommitted directory that the retry overwrites.
 
-    The batch entry records the batch's docId span (``docid_lo`` /
-    ``docid_hi``, from the read-back agg that also gives the token and
-    posting counts). With it, the next :func:`finalize_index` can take its
+    The commit runs one Spark job, the segment write (plus its own
+    adaptive-execution sub-jobs, and the heavy-term sample when
+    ``heavy_threshold`` is set). The write evaluates ``sub`` once and
+    counts its docs in its result stage (``build_segments_combined``);
+    everything else the batch entry records is read on the driver from the
+    files just written (:func:`_segment_file_stats`), with no read-back
+    job. The entry holds the batch's docId span (``docid_lo`` /
+    ``docid_hi``); with it, the next :func:`finalize_index` can take its
     incremental path: merge this batch alone into the term dictionary on
     the driver, with no Spark job.
     """
@@ -319,40 +324,30 @@ def build_one_batch(
         )
         field_specs[col] = (fanalyzer, fheavy)
     # map-side combine: the shuffle moves packed per-term mini-blocks
-    seg = build_segments_combined(
+    seg, ndocs_obs = build_segments_combined(
         corpus_cols, analyzer, num_segments, heavy, n_salts, with_positions,
         fields=field_specs or None, membership=membership,
     )
     out = os.path.join(index_dir, "segments", f"batch={key}")
     seg.write.mode("overwrite").parquet(out)
-    # one read-back pass gives corpus stats AND the shuffle-skew metric
-    # (north rule): per reduce partition, postings handled and bytes
-    # written; and the batch's docId span, which finalize_index unions into
-    # the index's span without reading any segment
-    per_seg = (
-        read_segment_dirs(spark, out)
-        .groupBy("seg")
-        .agg(
-            F.sum("sum_tf").alias("tok"),
-            F.sum("ndocs").alias("post"),
-            (F.sum(F.octet_length("docids") + F.octet_length("tfs") + F.octet_length("dls")
-                   + F.coalesce(F.octet_length("positions"), F.lit(0)))).alias("bytes"),
-            F.min("min_docid").alias("lo"),
-            F.max(F.element_at("block_last_docid", -1)).alias("hi"),
-        )
-        .collect()
-    )
+    # the write is the commit's only job: the doc count was observed in its
+    # result stage, and the corpus stats, the shuffle-skew metric (north
+    # rule: per reduce partition, postings handled and bytes written) and
+    # the batch's docId span (which finalize_index unions into the index's
+    # span without reading any segment) come from the written files' footers
+    # and small columns, read on the driver
+    ndocs = int(ndocs_obs.get["ndocs"])
+    per_seg = _segment_file_stats(out)
     lo, hi = _span_union([(r["lo"], r["hi"]) for r in per_seg])
-    posts = [int(r["post"] or 0) for r in per_seg]
+    posts = [r["post"] for r in per_seg]
     npost = sum(posts)
     dt = time.time() - t0
-    ndocs = int(sub.count())
     entry = {
         "committed": True,
         "path": out,
         "ndocs": ndocs,
         "npostings": npost,
-        "total_tokens": int(sum(r["tok"] or 0 for r in per_seg)),
+        "total_tokens": sum(r["tok"] for r in per_seg),
         "heavy_terms": heavy,
         "docid_lo": lo,
         "docid_hi": hi,
@@ -360,7 +355,7 @@ def build_one_batch(
         "metrics": {
             "docs_per_sec": round(ndocs / dt, 1) if dt else None,
             "postings_per_sec": round(npost / dt, 1) if dt else None,
-            "segment_bytes": int(sum(r["bytes"] or 0 for r in per_seg)),
+            "segment_bytes": sum(r["bytes"] for r in per_seg),
             # skew ratio of the (term, salt) shuffle: max/mean postings per
             # reduce partition — 1.0 is perfectly even. Mean is over ALL
             # num_segments reduce partitions (empty ones count: few terms
@@ -372,14 +367,10 @@ def build_one_batch(
             # this batch committed and what each holds — the unit Spark's
             # task-commit protocol checkpoints, so a resume audit can tie
             # every parquet partition back to its batch + counts
-            "per_segment": sorted(
-                (
-                    {"seg": int(r["seg"]), "postings": int(r["post"] or 0),
-                     "bytes": int(r["bytes"] or 0)}
-                    for r in per_seg
-                ),
-                key=lambda d: d["seg"],
-            ) if len(per_seg) <= 4096 else None,
+            "per_segment": [
+                {"seg": r["seg"], "postings": r["post"], "bytes": r["bytes"]}
+                for r in per_seg
+            ] if len(per_seg) <= 4096 else None,
         },
         "committed_at": time.time(),
     }
@@ -396,6 +387,42 @@ def build_one_batch(
         fresh.setdefault("batches", {})[key] = entry
 
     return update_manifest(index_dir, _commit)
+
+
+def _segment_file_stats(batch_dir: str) -> list[dict]:
+    """Per-segment stats of a written batch dir, read on the driver from
+    its parquet files: ``post`` (Σ ndocs), ``tok`` (Σ sum_tf), ``bytes``
+    (on-disk file bytes), and the docId span ``lo``/``hi`` from the
+    footers' row-group min/max of ``min_docid`` and ``block_last_docid``.
+    Only the small ``seg``/``ndocs``/``sum_tf`` columns are read, never a
+    posting blob. Sorted by ``seg``; segments that wrote no rows are
+    absent. A write task writes one reduce partition, so each file holds
+    one ``seg``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    per: dict[int, dict] = {}
+    for e in os.scandir(batch_dir):
+        if e.name.startswith(("_", ".")) or not e.name.endswith(".parquet"):
+            continue
+        with pq.ParquetFile(e.path) as f:
+            md = f.metadata
+            if not md.num_rows:
+                continue
+            t = f.read(columns=["seg", "ndocs", "sum_tf"])
+            paths = [md.schema.column(j).path for j in range(md.num_columns)]
+            lo_j = paths.index("min_docid")
+            hi_j = next(j for j, p in enumerate(paths) if p.startswith("block_last_docid."))
+            rgs = [md.row_group(i) for i in range(md.num_row_groups)]
+            r = per.setdefault(int(t["seg"][0].as_py()),
+                               {"post": 0, "tok": 0, "bytes": 0, "lo": None, "hi": None})
+            r["post"] += int(pc.sum(t["ndocs"]).as_py())
+            r["tok"] += int(pc.sum(t["sum_tf"]).as_py())
+            r["bytes"] += e.stat().st_size
+            r["lo"], r["hi"] = _span_union(
+                [(r["lo"], r["hi"])]
+                + [(g.column(lo_j).statistics.min, g.column(hi_j).statistics.max) for g in rgs])
+    return [{"seg": k, **per[k]} for k in sorted(per)]
 
 
 # the dictionary's coverage record: which batches (by commit timestamp) its

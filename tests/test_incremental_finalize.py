@@ -31,9 +31,14 @@ N_PARTS = 6  # base = parts 0-1, deltas = parts 2-5
 
 # one micro-batch commit (build_one_batch + finalize_index) of a delta onto
 # an existing index, local[4] with 4 shuffle partitions, measured and stable
-# across runs: the batch's write, its read-back agg and its doc count, with
-# their adaptive-execution sub-jobs; finalize adds none
-COMMIT_JOBS = 9
+# across runs. The segment write runs as four adaptive-execution jobs: the
+# fixture corpus's own shuffle (synthetic_corpus repartitions its row
+# ranges), ensure_parallelism's round-robin repartition, the (term, salt)
+# hash exchange, and the result stage that writes (and counts the docs).
+# The fifth is ensure_parallelism's rdd.getNumPartitions(), which under
+# adaptive execution runs the corpus's shuffle to plan it. Batch stats are
+# read from the written files, and finalize adds none.
+COMMIT_JOBS = 5
 
 
 def _parts(spark):
